@@ -31,12 +31,19 @@ object Bench {
     // state, not their first-run JIT
     run(SparkEntry.queries("q_join_agg")(spark, sfDir))
     run(SparkEntry.queries("w1_row_number_topk")(spark, sfDir))
-    PlayStore.readStore(spark).count()
-    // pre-materialize df_4 for the Part-5 measurement
+    // The Play-Store input lives outside the sf dir. When it is missing,
+    // only the ps_* rows that read it fail (as ERROR entries), not the run.
     val df4Dir = IO.scratchDir("bench_df4")
-    val df1 = PlayStore.averageSentimentByApp(PlayStore.readReviews(spark))
-    val df3 = PlayStore.standardizePerApp(PlayStore.readStore(spark))
-    PlayStore.joinSentiment(spark, df3, df1, df4Dir)
+    val df4Ready = scala.util.Try {
+      PlayStore.readStore(spark).count()
+      // pre-materialize df_4 for the Part-5 measurement
+      val df1 = PlayStore.averageSentimentByApp(PlayStore.readReviews(spark))
+      val df3 = PlayStore.standardizePerApp(PlayStore.readStore(spark))
+      PlayStore.joinSentiment(spark, df3, df1, df4Dir)
+      ()
+    }
+    df4Ready.failed.foreach(e =>
+      System.err.println(s"[bench] Play-Store warm-up failed, ps_* rows will error: $e"))
     // prime the stored artifacts the incremental/serve-path rows consume
     // (corpus cluster state, train band index) so those rows time the
     // SERVE cost — the one-time corpus build is a scheduled job in
@@ -151,8 +158,11 @@ object Bench {
       "mm_fingerprint_fast", "mm_frames")
     val allCases: Seq[(String, () => DataFrame)] =
       fromRegistry.map(n => n -> (() => SparkEntry.queries(n)(spark, sfDir))) :+
-        ("ps_part5_metrics" -> (() => PlayStore.metricsByGenre(
-          spark, IO.readParquet(spark, df4Dir), IO.scratchDir("bench_ps5"))))
+        ("ps_part5_metrics" -> (() => {
+          df4Ready.get // rethrows the warm-up's failure as this row's error
+          PlayStore.metricsByGenre(
+            spark, IO.readParquet(spark, df4Dir), IO.scratchDir("bench_ps5"))
+        }))
     // Dev loop escape hatch: SPARK_GRAFT_BENCH_ONLY=a,b,c times just those
     // queries. The driver never sets it, so the per-round number always
     // covers the full list.
@@ -165,7 +175,7 @@ object Bench {
 
     // star-contraction convergence telemetry: queries that run connected
     // components report (rounds, final contracted edges) so round-count
-    // regressions are visible in the bench payload without GRAFT_CC_DEBUG
+    // regressions are visible in the bench payload
     val ccStats = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Long)]
     // contraction action telemetry (r20): driver roundtrips per cc run,
     // the currency of the loop-fusion claim (one action per round)
@@ -323,7 +333,7 @@ object Bench {
       .mkString("{", ",", "}")
     val sccA = sccActs.map { case (k, n) => s""""$k":$n""" }
       .mkString("{", ",", "}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errors,"cc":$cc,"cc_actions":$ccActsJ,"pr_split":$pr,"scc_sweeps":$sccJ,"scc_actions":$sccA,"drift":$driftJ,"drift_mean":${msJ(driftMean)},"queries_norm":$qsNorm,"sf":"$sfDir"}"""
     // The COMPLETE payload goes to a file: the harness keeps only the last
     // ~2000 chars of output, and the full per-query map (~3 KB at 78

@@ -20,7 +20,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+  /** Local core count: `SPARK_GRAFT_CPUS` (a positive integer), default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => 4
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
 
   def build(appName: String = "graft"): SparkSession = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")

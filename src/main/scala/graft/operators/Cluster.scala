@@ -55,9 +55,8 @@ object Cluster {
     * [[componentsWithRounds]] call on this driver. Bench telemetry seam:
     * the benchmark reads it right after timing each clustering query so
     * BENCH json can carry `cc_rounds`/`cc_edges` and round-count
-    * regressions are visible without GRAFT_CC_DEBUG. Driver-local,
-    * last-writer-wins — fine for the sequential bench harness, not a
-    * public API.
+    * regressions are visible. Driver-local, last-writer-wins — fine for
+    * the sequential bench harness, not a public API.
     */
   @volatile private[graft] var lastRunStats: Option[(Int, Long)] = None
 
@@ -129,39 +128,22 @@ object Cluster {
     // (16 bytes + row overhead) per task keeps partitions comfortably
     // in-memory at any scale; the session width is the ceiling.
     val spark = edges.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // AQE reads initialPartitionNum (when set) as the pre-coalesce width,
-    // so the per-round bound must pin BOTH confs — otherwise the
-    // session-wide wide-start default would override the loop's sizing
-    val initialKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val sessionInitial = spark.conf.getOption(initialKey)
-    def roundParts(edgeCount: Long): String =
-      math.min(edgeCount / 1000000L + 1L, sessionParts.toLong).toString
-    try {
-      while (!converged && rounds < MaxRounds) {
-        val t0 = System.nanoTime()
-        spark.conf.set("spark.sql.shuffle.partitions", roundParts(edgeCount))
-        spark.conf.set(initialKey, roundParts(edgeCount))
-        val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-        val t1 = System.nanoTime()
-        // ONE fused job per round: the check's collect materializes the
-        // lazy checkpoint, refreshes the count (so the NEXT round's
-        // shuffle width tracks the contraction) AND tests convergence
-        val (conv, cnt) = starForestCheck(next)
-        actions += 1
-        converged = conv
-        edgeCount = cnt
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(f"CCROUND $rounds compute=${(t1 - t0) / 1e9}%.2f test=${(System.nanoTime() - t1) / 1e9}%.2f edges=$edgeCount converged=$converged")
-        e = next
-        rounds += 1
+    val sessionWidth = LoopWidth.sessionWidth(spark)
+    while (!converged && rounds < MaxRounds) {
+      val roundWidth = math.min(edgeCount / 1000000L + 1L, sessionWidth)
+      // ONE fused job per round, inside the round's width: the check's
+      // collect materializes the lazy checkpoint, refreshes the count (so
+      // the NEXT round's shuffle width tracks the contraction) AND tests
+      // convergence
+      val (next, (conv, cnt)) = LoopWidth.atWidth(spark, roundWidth) {
+        val n = smallStar(largeStar(e)).localCheckpoint(eager = false)
+        (n, starForestCheck(n))
       }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      sessionInitial match {
-        case Some(v) => spark.conf.set(initialKey, v)
-        case None => spark.conf.unset(initialKey)
-      }
+      actions += 1
+      converged = conv
+      edgeCount = cnt
+      e = next
+      rounds += 1
     }
     require(converged, s"star contraction did not converge in $MaxRounds rounds")
     // Converged state is a star forest: every edge is (child, root). The
@@ -335,13 +317,6 @@ object Cluster {
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component_id"))
   }
-
-  /** Near-dup clusters over the xxhash64 simhash pipeline (the fast
-    * library default; the md5 twin below is the oracle-checked shape).
-    */
-  def nearDupComponents(spark: SparkSession, sfDir: String): DataFrame =
-    documentComponents(spark, sfDir, Dedup.simHashNearDupPairsUnsorted(spark, sfDir))
-      .orderBy("doc_id")
 
   /** Near-dup clusters over the md5-prefix simhash pairs — every stage
     * (hashing, banding, Hamming verify, star contraction) replayed by the

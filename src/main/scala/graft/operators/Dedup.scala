@@ -581,16 +581,6 @@ object Dedup {
     if (sorted) pairs.orderBy("doc_a", "doc_b") else pairs
   }
 
-  /** [[simHashNearDupPairs]] without the presentation sort (cluster input). */
-  private[graft] def simHashNearDupPairsUnsorted(
-      spark: SparkSession,
-      sfDir: String,
-      maxHamming: Int = 3): DataFrame =
-    simHashPairs(
-      materializeIfLarge(simHashBanded(spark, sfDir),
-        estWindowRows(spark, sfDir)),
-      maxHamming, sorted = false)
-
   /** [[simHashNearDupPairsMd5]] without the presentation sort (cluster
     * input).
     */

@@ -76,12 +76,20 @@ object LinkGraph {
     // construction (scan + per-user window + aggregation). The stored
     // entry points skip this — their edges are already a parquet
     // artifact, re-scanned for pennies.
-    pageRankOver(
-      transitionEdges(spark, sfDir).select("src", "dst", "weight")
-        .localCheckpoint(),
-      items(spark, sfDir).select(col("item").as("node")).distinct()
-        .localCheckpoint(),
-      iters, d, buildT0 = t0)
+    val edges = transitionEdges(spark, sfDir).select("src", "dst", "weight")
+      .localCheckpoint()
+    val nodes = items(spark, sfDir).select(col("item").as("node")).distinct()
+      .localCheckpoint()
+    val nCount = nodes.count()
+    // Width estimate: the per-round contrib join shuffles EDGE-volume
+    // rows, but an edges.count() here would be one more job over the
+    // fresh edge frame, so this caller sizes by the node count — which
+    // UNDER-sizes the loop on dense graphs (avg degree >> 1); the floor
+    // at session width covers the small-graph regime, and every stored
+    // entry point sizes by the edge footer ([[withStoredGraph]]).
+    LoopWidth.pinned(spark, nCount) {
+      pageRankOver(edges, nodes, nCount, iters, d, buildT0 = t0)
+    }
   }
 
   /** (build seconds, loop seconds) of the last [[pageRankOver]] run —
@@ -100,15 +108,14 @@ object LinkGraph {
   private def pageRankOver(
       edges: DataFrame,
       nodes: DataFrame,
+      nCount: Long,
       iters: Int,
       d: Double,
       broadcastCeiling: Long = BroadcastNodeCeiling,
-      widthRows: Option[Long] = None,
       buildT0: Long = -1L): DataFrame = {
     val t0 = if (buildT0 > 0) buildT0 else System.nanoTime()
     val outw = edges.groupBy(col("src"))
       .agg(sum("weight").cast("double").as("outw"))
-    val nCount = nodes.count()
     // past the ceiling the rank vector cannot broadcast: pre-hash-
     // partition the enriched edges on src ONCE (the checkpoint pins the
     // partitioning, so edges never re-shuffle across rounds) and make
@@ -117,15 +124,6 @@ object LinkGraph {
     // arithmetic either way: the strategy changes WHERE rows meet, never
     // their values (the joinloop row reuses the broadcast row's oracle).
     val joinLoop = nCount > broadcastCeiling
-    // Width estimate: the per-round contrib join shuffles EDGE-volume
-    // rows, so artifact-backed callers pass the edge row count (parquet
-    // footer metadata — no job). Fresh-frame callers fall back to the
-    // node count — an edges.count() here would re-run the whole edge
-    // construction — which UNDER-sizes the loop on dense graphs (avg
-    // degree >> 1); the floor at session width covers the small-graph
-    // regime, and every stored/production entry point passes the edge
-    // estimate.
-    LoopWidth.pinned(edges.sparkSession, widthRows.getOrElse(nCount)) {
     val enriched = enrichedShares(edges, outw, joinLoop)
     // nodes WITH out-edges, materialized ONCE from the already-built
     // enriched frame (weights are counts >= 1, so outw's key set and
@@ -162,7 +160,6 @@ object LinkGraph {
     if (joinLoop) enriched.unpersist()
     lastBuildStats = Some((buildSec, (System.nanoTime() - tLoop) / 1e9))
     ranks.select(col("node"), col("r").as("pr")).orderBy("node")
-    }
   }
 
   /** Edge side enriched with its src's total out-weight once, before the
@@ -316,20 +313,28 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       iters: Int = 3,
-      d: Double = 0.85): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    pageRankOver(edges, nodes, iters, d,
-      widthRows = Some(storedEdgeRows(spark, sfDir)))
-  }
+      d: Double = 0.85): DataFrame =
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
+      pageRankOver(edges, nodes, nodes.count(), iters, d)
+    }
 
-  /** Edge row count of the persisted transition graph from parquet
-    * footer metadata — the no-job width estimate every artifact-backed
-    * iterative loop sizes its exchanges with (the contrib joins shuffle
+  /** The prologue every artifact-backed iterative loop shares: prime the
+    * persisted graph FIRST (the footer read needs the edge files on
+    * disk), then read the edge row count from parquet footer metadata
+    * (no job), and run `body` on (edges, nodes) with [[LoopWidth.pinned]]
+    * sized to `edgeFactor` × |edges| — the loops' joins shuffle
     * edge-volume rows, so |edges|, not |nodes|, is the honest estimate
-    * on dense graphs).
+    * on dense graphs (2 for loops over the symmetrized edges).
     */
-  private def storedEdgeRows(spark: SparkSession, sfDir: String): Long =
-    IO.parquetRowCount(spark, s"${graphArtifactPath(spark, sfDir)}/edges")
+  private def withStoredGraph[T](
+      spark: SparkSession,
+      sfDir: String,
+      edgeFactor: Long = 1L)(body: (DataFrame, DataFrame) => T): T = {
+    val (edges, nodes) = transitionGraphStored(spark, sfDir)
+    val edgeRows =
+      IO.parquetRowCount(spark, s"${graphArtifactPath(spark, sfDir)}/edges")
+    LoopWidth.pinned(spark, edgeFactor * edgeRows)(body(edges, nodes))
+  }
 
   /** [[pageRankStored]] FORCING the past-ceiling join loop (ceiling 0):
     * the code path a web-scale graph (|nodes| > ~10⁸, past the broadcast
@@ -343,11 +348,10 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       iters: Int = 3,
-      d: Double = 0.85): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    pageRankOver(edges, nodes, iters, d, broadcastCeiling = 0L,
-      widthRows = Some(storedEdgeRows(spark, sfDir)))
-  }
+      d: Double = 0.85): DataFrame =
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
+      pageRankOver(edges, nodes, nodes.count(), iters, d, broadcastCeiling = 0L)
+    }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over the transition
     * graph — the complementary centrality to [[pageRank]]: authorities
@@ -374,8 +378,7 @@ object LinkGraph {
       sfDir: String,
       iters: Int = 2,
       broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
     // Past the broadcast ceiling (|nodes| > ~10⁸) the score vector
     // cannot ship to the edge partitions; HITS pulls across the edges in
     // BOTH directions, so join-loop mode maintains TWO pinned edge
@@ -467,8 +470,7 @@ object LinkGraph {
       iters: Int = 3,
       d: Double = 0.85,
       broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame = {
-    val (edges, nodes0) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, nodes0) =>
     val outw = edges.groupBy(col("src"))
       .agg(sum("weight").cast("double").as("outw"))
     // past the ceiling: same seam as PageRank — src-pinned cached edges,
@@ -544,8 +546,7 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       length: Int = 4): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
     val wspans = Window.partitionBy("src").orderBy("dst")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val spans = edges
@@ -727,11 +728,9 @@ object LinkGraph {
       sfDir: String,
       iters: Int,
       broadcastCeiling: Long): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
     // the per-round vote join shuffles (at most) the symmetrized edge
-    // volume — 2|edges| is the honest width estimate, from footer
-    // metadata like every other artifact-backed loop
-    LoopWidth.pinned(spark, 2L * storedEdgeRows(spark, sfDir)) {
+    // volume — 2|edges| is the honest width estimate
+    withStoredGraph(spark, sfDir, edgeFactor = 2L) { (edges, nodes) =>
     val joinLoop = nodes.count() > broadcastCeiling
     val und0 = edges
       .select(col("src").as("u"), col("dst").as("v"), col("weight"))
@@ -912,8 +911,7 @@ object LinkGraph {
       sfDir: String,
       maxHops: Int = 6): DataFrame = {
     val inf = 1L << 62
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
       val e = edges.select(col("src").as("u"), col("dst").as("v"),
         col("weight"))
       var cap = nodes.filter(col("node") % 10 === 0)
@@ -935,8 +933,7 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       maxHops: Int = 6): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, 2L * storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir, edgeFactor = 2L) { (edges, nodes) =>
       val sym = edges.select(col("src").as("u"), col("dst").as("v"))
         .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
         .distinct()
@@ -983,8 +980,7 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       k: Int = 3): DataFrame = {
-    val (edges, _) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, _) =>
       kCoreOver(undirectedOf(edges), k)
     }
   }
@@ -1121,15 +1117,13 @@ object LinkGraph {
     * convention).
     */
   def sccComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
-      // build/loop telemetry (the pr_split convention): materialize the
-      // two graph inputs HERE — inside the pinned loop width, so the
-      // checkpointed frames carry the loop's exchange width — and the
-      // wall divides into "checkpointed graph builds" vs "the nested
-      // FW-BW fixpoint", the split the bench payload reports for the
-      // board's slowest graph row
-      val tBuild = System.nanoTime()
-      val (edges, nodes) = transitionGraphStored(spark, sfDir)
+    // build/loop telemetry (the pr_split convention): materialize the
+    // two graph inputs inside the pinned loop width, so the checkpointed
+    // frames carry the loop's exchange width — and the wall divides into
+    // "checkpointed graph builds" vs "the nested FW-BW fixpoint", the
+    // split the bench payload reports for the board's slowest graph row
+    val tBuild = System.nanoTime()
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
       // LAZY (r20): nn is materialized by sccOver's own nodes.count(),
       // bb by the first sweep's e2 job — two fewer standalone driver
       // roundtrips. Note the build/loop telemetry consequence: the
@@ -1159,9 +1153,8 @@ object LinkGraph {
     * pays the FW-BW loop), joined onto the backbone edge list twice.
     */
   def sccCondensation(spark: SparkSession, sfDir: String): DataFrame = {
-    val (edges, _) = transitionGraphStored(spark, sfDir)
     val scc = sccMapStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, _) =>
       backboneOf(edges)
         .join(scc.select(col("node").as("src"), col("scc_id").as("src_scc")),
           "src")
@@ -1192,8 +1185,7 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       maxHops: Int = 3): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, nodes) =>
       neighborhoodOver(backboneOf(edges).select("src", "dst"),
         nodes.select("node"), maxHops)
     }
@@ -1232,9 +1224,8 @@ object LinkGraph {
     * stored map; output is |SCCs|-bounded.
     */
   def sccProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    val (edges, _) = transitionGraphStored(spark, sfDir)
     val scc = sccMapStored(spark, sfDir)
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+    withStoredGraph(spark, sfDir) { (edges, _) =>
       val bb = backboneOf(edges)
         .join(broadcast(scc.select(col("node").as("src"),
           col("scc_id").as("s1"))), "src")
@@ -1352,12 +1343,8 @@ object LinkGraph {
     // the loop trades nothing (there is no shuffle to coalesce or skew
     // to split in these plans at ANY scale) for a per-round planning
     // constant; past the ceiling the joins shuffle and AQE stays on.
-    val spark0 = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeBefore = spark0.conf.get(aqeKey)
-    if (bcast) spark0.conf.set(aqeKey, "false")
-    try {
-    while (!done && sweeps < sweepCap) {
+    // Every sweep's certificate jobs run inside that scope.
+    def sweepLoop(): Unit = while (!done && sweeps < sweepCap) {
       // a node with f == b is RESOLVED: f is its SCC's min member
       // (f = b = x proves v ∈ SCC(x) with nothing smaller mutual, and
       // f, b are uniform across an SCC within its class, so whole SCCs
@@ -1376,12 +1363,15 @@ object LinkGraph {
         .where(col("sf") === col("tf") && col("sb") === col("tb"))
         .select("src", "dst")
       // Below the broadcast ceiling e2's checkpoint is LAZY: the
-      // fixpoint's round-1 certificate is the job that materializes it
-      // (e2 is cached-edges ⋈ two broadcast label projections — cheap
-      // map-side work, and the only consumer before the cache fills is
-      // that one job). Past the ceiling the joins shuffle, so the eager
-      // materialization stays — recomputing a shuffle per consumer
-      // would cost more than the roundtrip it saves.
+      // fixpoint's round-1 certificate is the job that materializes it.
+      // That job scans e2 TWICE (sccStep's forward and backward
+      // relaxations), so a partition both scans reach before its block
+      // is stored is computed twice — acceptable only because e2 is
+      // cached-edges ⋈ two broadcast label projections, cheap map-side
+      // work next to the standalone roundtrip an eager checkpoint pays.
+      // Past the ceiling the joins shuffle, so the eager
+      // materialization stays — recomputing a shuffle per scan would
+      // cost more than the roundtrip it saves.
       val e2ck =
         if (bcast) checkpointLazyFreshStats(e2)
         else { actions += 1; checkpointFreshStats(e2) }
@@ -1405,9 +1395,9 @@ object LinkGraph {
       done = openCnt == 0
       sweeps += 1
     }
-    } finally {
-      if (bcast) spark0.conf.set(aqeKey, aqeBefore)
-    }
+    if (bcast)
+      LoopWidth.scoped(edges.sparkSession, "spark.sql.adaptive.enabled" -> "false")(sweepLoop())
+    else sweepLoop()
     // strict (the oracled exact operator): an unconverged run must be a
     // loud failure, never silently-wrong scc_ids flowing into rollups.
     // Non-strict (exploratory/huge-corpus callers): degrade instead of
@@ -1609,9 +1599,6 @@ object LinkGraph {
       cert = (next._1, next._2)
       openCnt = next._3
       rounds += 1
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        println(s"[scc] fb round $rounds changed=$changed " +
-          s"at ${System.nanoTime() / 1000000}ms")
     }
     require(!changed,
       s"SCC min propagation did not converge in $maxRounds rounds")

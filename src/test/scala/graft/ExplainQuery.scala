@@ -1,6 +1,6 @@
 package graft
 
-/** Dev scratch main (the ClusterTimer/DecontamTimer precedent): print a
+/** Dev scratch main (the DecontamTimer precedent): print a
   * registered query's formatted physical plan and its wall time on any
   * sf dir — the `.explain`-and-iterate loop the build brief prescribes.
   *

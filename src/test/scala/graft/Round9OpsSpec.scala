@@ -232,13 +232,39 @@ class Round9OpsSpec extends SparkTestBase {
     // session's width knobs come back exactly
     val partsKey = "spark.sql.shuffle.partitions"
     val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val aqeKey = "spark.sql.adaptive.enabled"
     val parts0 = spark.conf.get(partsKey)
     val init0 = spark.conf.getOption(initKey)
+    val aqe0 = spark.conf.getOption(aqeKey)
     graft.operators.LinkGraph.pageRank(spark, Sf).collect()
     graft.operators.Cluster.connectedComponents(
       Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"), "a", "b").collect()
+    // FW-BW sweeps run with AQE off below the broadcast ceiling
+    val scc = graft.operators.LinkGraph.sccOver(
+      Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst"),
+      Seq(1L, 2L, 3L).toDF("node")).collect()
+      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("scc_id")).toMap
+    assert(scc == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
     assert(spark.conf.get(partsKey) == parts0, "shuffle.partitions leaked")
     assert(spark.conf.getOption(initKey) == init0, "initialPartitionNum leaked")
+    assert(spark.conf.getOption(aqeKey) == aqe0, "adaptive.enabled leaked")
+    // a body that throws: every key set before comes back, and a key
+    // that had no value before is unset again
+    val absentKey = "spark.graft.test.scopedAbsent"
+    assert(spark.conf.getOption(absentKey).isEmpty)
+    val boom = intercept[IllegalStateException] {
+      graft.operators.LoopWidth.scoped(spark,
+        partsKey -> "1", initKey -> "1", aqeKey -> "false", absentKey -> "x") {
+        assert(spark.conf.get(partsKey) == "1")
+        assert(spark.conf.get(absentKey) == "x")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(boom.getMessage == "body failed")
+    assert(spark.conf.get(partsKey) == parts0, "shuffle.partitions not restored")
+    assert(spark.conf.getOption(initKey) == init0, "initialPartitionNum not restored")
+    assert(spark.conf.getOption(aqeKey) == aqe0, "adaptive.enabled not restored")
+    assert(spark.conf.getOption(absentKey).isEmpty, "absent key not unset")
   }
 
   test("semantic prune: cell assignment agrees with kmeans_assign") {
