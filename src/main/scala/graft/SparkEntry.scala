@@ -37,7 +37,7 @@ object SparkEntry {
     Relational.qStarJoin(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // sources / sinks (S1-S3, K1-K3)
     "s1_csv_roundtrip" -> (Relational.s1CsvRoundTrip _),
     "s2_csv_section_delim" -> (Relational.s2CsvSectionDelim _),
@@ -2647,7 +2647,7 @@ object SparkEntry {
            USING (anchor_id)
          ORDER BY anchor_id"""
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "dedup_minhash_eval" ->
       // exact truth by the naive token-set join (integer threshold
       // algebra), caught-flag by the TOKEN-banded md5-minhash candidates

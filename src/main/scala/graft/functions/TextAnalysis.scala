@@ -454,8 +454,8 @@ object TextAnalysis {
     * BIGINT; float's 24-bit mantissa washes the ulp out, and float·1e6
     * is exact in double (24+20 bits < 53), so the round is stable.
     */
-  /** Artifact root for the persisted LM count tables — `/uni`
-    * (term, ucnt) and `/bi` (prev, cur, bcnt), both Zipf-small. The LM
+  /** The persisted LM count tables — `uni` (term, ucnt) and `bi`
+    * (prev, cur, bcnt), both Zipf-small. The LM
     * ladder's corpus-derived side: training is counting, so these
     * artifacts ARE the trained model, refreshed per corpus version; every
     * scoring row then pays only its own occurrence scan (the per-doc
@@ -463,41 +463,35 @@ object TextAnalysis {
     * construction — the artifact is the same aggregation — so stored and
     * rebuild rows share one oracle.
     */
-  private[graft] def lmArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "lmco", s"lmco_v1|$sfDir|ws")
-
-  /** Count once, persist both tables. */
-  def persistLmCounts(spark: SparkSession, sfDir: String): String = {
-    val path = lmArtifactPath(spark, sfDir)
-    val toks = widenedDocs(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
-    toks.select(explode(col("tk")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("ucnt"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/uni")
-    bigramOcc(toks)
-      .groupBy("prev", "cur").agg(count(lit(1)).as("bcnt"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/bi")
-    path
+  private[graft] def lmCountTables(sfDir: String): IO.Artifact = {
+    import org.apache.spark.sql.types._
+    IO.Artifact(sfDir, "documents", "text", "lmco", s"lmco_v1|$sfDir|ws",
+      Seq("uni" -> StructType(Seq(
+          StructField("term", StringType, nullable = false),
+          StructField("ucnt", LongType, nullable = false))),
+        "bi" -> StructType(Seq(
+          StructField("prev", StringType, nullable = false),
+          StructField("cur", StringType, nullable = false),
+          StructField("bcnt", LongType, nullable = false)))))
   }
 
-  /** Self-priming (uni, bi) count frames off the artifact. */
+  /** Self-priming (uni, bi) count frames off the artifact: count once,
+    * persist both tables.
+    */
   private def lmCounts(
       spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types._
-    val path = lmArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/bi"))
-      persistLmCounts(spark, sfDir)
-    (IO.readStamped(spark, s"$path/uni", StructType(Seq(
-        StructField("term", StringType, nullable = false),
-        StructField("ucnt", LongType, nullable = false)))),
-      IO.readStamped(spark, s"$path/bi", StructType(Seq(
-        StructField("prev", StringType, nullable = false),
-        StructField("cur", StringType, nullable = false),
-        StructField("bcnt", LongType, nullable = false)))))
+    val Seq(uni, bi) = IO.servedArtifact(spark, lmCountTables(sfDir)) { root =>
+      val toks = widenedDocs(spark, sfDir)
+        .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      toks.select(explode(col("tk")).as("term"))
+        .groupBy("term").agg(count(lit(1)).as("ucnt"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/uni")
+      bigramOcc(toks)
+        .groupBy("prev", "cur").agg(count(lit(1)).as("bcnt"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/bi")
+    }
+    (uni, bi)
   }
 
   /** Per-position (doc_id, prev, cur) bigram occurrences of a

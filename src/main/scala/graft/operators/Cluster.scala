@@ -378,40 +378,11 @@ object Cluster {
       .withColumn("keep", col("doc_id") === col("component_id"))
       .orderBy("doc_id")
 
-  /** Stable artifact path for the persisted near-dup component map (the
-    * band-index/bloom convention: pipeline tag + a footer-derived content
-    * fingerprint of the documents table, so a regenerated table misses the
-    * stale map; a scheme-version token guards pipeline changes).
-    */
-  private[graft] def componentArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "ccmap", s"ccmap_v1|$sfDir|simhash_md5") + ".parquet"
-
-  /** Run the full simhash → star-contraction pipeline ONCE and persist the
-    * (doc_id, component_id) map — the cluster analogue of the train-once
-    * codebook contract. Every consumer of the clustering (dedup decision,
-    * keep-best, leakage-safe split, audits) reads this O(corpus-rows)
-    * two-long-column table instead of re-deriving signatures, candidate
-    * pairs, and the iterative contraction; in production it is refreshed
-    * per corpus version, not per query.
-    */
-  def persistComponentMap(spark: SparkSession, sfDir: String): String = {
-    val path = componentArtifactPath(spark, sfDir)
-    nearDupComponentsMd5Unsorted(spark, sfDir)
-      .write.mode("overwrite").parquet(path)
-    path
-  }
-
-  /** The persisted component map, self-priming on first use (like the
-    * stored bloom sketch and minhash band index).
-    */
   /** Declared schemas of the persisted clustering artifacts (component
     * maps and the banded corpus index) — every column long-typed and
-    * non-null by construction, re-stamped on read through the
-    * [[IO.readStamped]] seam so the decision windows and the
-    * bit_count verifies stay branch-free off a serve.
+    * non-null by construction, re-stamped on read through
+    * [[IO.servedArtifact]] so the decision windows and the bit_count
+    * verifies stay branch-free off a serve.
     */
   private[graft] val ComponentMapSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -428,13 +399,28 @@ object Cluster {
       StructField("band_key", LongType, nullable = false)))
   }
 
+  /** The persisted near-dup (doc_id, component_id) map — the cluster
+    * analogue of the train-once codebook contract (a scheme-version token
+    * guards pipeline changes). Every consumer of the clustering (dedup
+    * decision, keep-best, leakage-safe split, audits) reads this
+    * O(corpus-rows) two-long-column table instead of re-deriving
+    * signatures, candidate pairs, and the iterative contraction; in
+    * production it is refreshed per corpus version, not per query.
+    */
+  private[graft] def componentMap(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "ccmap", s"ccmap_v1|$sfDir|simhash_md5",
+      Seq("" -> ComponentMapSchema), ".parquet")
+
+  /** The persisted component map, self-priming on first use: the full
+    * simhash → star-contraction pipeline runs only at priming.
+    */
   private[graft] def componentMapStored(
       spark: SparkSession,
       sfDir: String): DataFrame =
-    IO.servedArtifact(spark, componentArtifactPath(spark, sfDir),
-      ComponentMapSchema) {
-      persistComponentMap(spark, sfDir); ()
-    }
+    IO.servedArtifact(spark, componentMap(sfDir)) { root =>
+      nearDupComponentsMd5Unsorted(spark, sfDir)
+        .write.mode("overwrite").parquet(root)
+    }.head
 
   /** [[dedupDecisionMd5]] consuming the PERSISTED component map: repeat
     * invocations pay one scan of the (doc_id, component_id) artifact plus
@@ -466,42 +452,41 @@ object Cluster {
         sum("cluster_size").as("n_docs"))
       .orderBy("cluster_size")
 
-  /** Stable artifact root for the persisted CORPUS-CARVE cluster state
-    * (`/index`: the (doc_id, simhash, band_key) banding of the corpus
-    * side, `/map`: its (doc_id, component_id) clustering) — the state
-    * [[incrementalComponentsMd5]] extends per batch. Same
-    * footer-fingerprint convention as [[componentArtifactPath]]; a
-    * distinct scheme token because the doc set is the %10 carve, not the
-    * full table.
-    */
-  private[graft] def corpusClusterStatePath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "ccstate", s"ccstate_v1|$sfDir|simhash_md5|mod10")
-
-  /** Build the corpus-side cluster state ONCE: band the corpus carve,
-    * cluster it, persist both. In production this is the standing index +
+  /** The persisted CORPUS-CARVE cluster state (`index`: the
+    * (doc_id, simhash, band_key) banding of the corpus side, `map`: its
+    * (doc_id, component_id) clustering) — the state
+    * [[incrementalComponentsMd5]] extends per batch. A distinct scheme
+    * token from [[componentMap]] because the doc set is the %10 carve,
+    * not the full table. In production this is the standing index +
     * component map a stream of batches extends — rebuilt per corpus
     * version, never per batch.
     */
-  def persistCorpusClusterState(spark: SparkSession, sfDir: String): String = {
-    val path = corpusClusterStatePath(spark, sfDir)
-    val corpus = IO.table(spark, sfDir, "documents")
-      .filter(col("doc_id") % 10 =!= 0)
-    Dedup.simHashBandedFrom(Dedup.simHashSignaturesMd5From(corpus))
-      .write.mode("overwrite").parquet(s"$path/index")
-    val banded = IO.readStamped(spark, s"$path/index", BandIndexSchema)
-    val pairs = Dedup.simHashPairs(banded, maxHamming = 3, sorted = false)
-    val comp = connectedComponents(pairs, "doc_a", "doc_b")
-      .withColumnRenamed("node", "doc_id")
-    corpus.select("doc_id")
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("component_id"))
-      .write.mode("overwrite").parquet(s"$path/map")
-    path
-  }
+  private[graft] def corpusClusterState(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "ccstate",
+      s"ccstate_v1|$sfDir|simhash_md5|mod10",
+      Seq("index" -> BandIndexSchema, "map" -> ComponentMapSchema))
+
+  /** The served (index, map) parts, self-priming: the prime bands the
+    * corpus carve, clusters it, and persists both.
+    */
+  private[graft] def corpusClusterStateStored(
+      spark: SparkSession,
+      sfDir: String): Seq[DataFrame] =
+    IO.servedArtifact(spark, corpusClusterState(sfDir)) { root =>
+      val corpus = IO.table(spark, sfDir, "documents")
+        .filter(col("doc_id") % 10 =!= 0)
+      Dedup.simHashBandedFrom(Dedup.simHashSignaturesMd5From(corpus))
+        .write.mode("overwrite").parquet(s"$root/index")
+      val banded = spark.read.parquet(s"$root/index")
+      val pairs = Dedup.simHashPairs(banded, maxHamming = 3, sorted = false)
+      val comp = connectedComponents(pairs, "doc_a", "doc_b")
+        .withColumnRenamed("node", "doc_id")
+      corpus.select("doc_id")
+        .join(comp, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("component"), col("doc_id")).as("component_id"))
+        .write.mode("overwrite").parquet(s"$root/map")
+    }
 
   /** INCREMENTAL clustering: extend the persisted corpus cluster state
     * with a new batch (the `doc_id % 10 == 0` carve, the incremental
@@ -533,11 +518,7 @@ object Cluster {
     * document scan — everything else is batch-bounded.
     */
   def incrementalComponentsMd5(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = corpusClusterStatePath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/map"))
-      persistCorpusClusterState(spark, sfDir)
-    val corpusIdx = IO.readStamped(spark, s"$path/index", BandIndexSchema)
-    val corpusMap = IO.readStamped(spark, s"$path/map", ComponentMapSchema)
+    val Seq(corpusIdx, corpusMap) = corpusClusterStateStored(spark, sfDir)
     val batchDocs = IO.table(spark, sfDir, "documents")
       .filter(col("doc_id") % 10 === 0)
     val batchBanded = Dedup

@@ -185,51 +185,47 @@ object Curate {
     * batch-bounded:
     *
     *   - exact_dup: md5 fingerprint against the PERSISTED corpus
-    *     fingerprint set ([[ingestArtifactPath]]/fp) + the lower-id-wins
+    *     fingerprint set ([[ingestGateCorpus]] `fp`) + the lower-id-wins
     *     rule WITHIN the arriving batch;
     *   - near_dup: batch simhash banding broadcast against the PERSISTED
-    *     corpus band index ([[Cluster.corpusClusterStatePath]]/index —
+    *     corpus band index ([[Cluster.corpusClusterState]] `index` —
     *     the same artifact the incremental clustering extends);
     *   - contaminated: batch gram hashes against the PERSISTED eval gram
-    *     set ([[ingestArtifactPath]]/evalgrams, broadcast);
+    *     set ([[ingestGateCorpus]] `evalgrams`, broadcast);
     *   - passes_quality: the inline quality score, map-side.
     *
     * Cross-batch note: admitted docs are NOT folded back into the
     * fingerprint/band artifacts here — production's foreachBatch body
     * appends them (the artifact-maintenance write this library's
-    * persist* builders own), so two near-identical docs arriving in
+    * artifact writers own), so two near-identical docs arriving in
     * DIFFERENT micro-batches both gate against the pre-stream corpus.
     * Within one micro-batch the batch-internal exact rule applies.
     */
-  /** Artifact root for the gate's corpus-side inputs: the corpus
-    * fingerprint set (`/fp`) and the eval gram set (`/evalgrams`) — the
-    * two frames [[ingestGateBatch]] would otherwise re-derive from a full
-    * corpus scan on EVERY micro-batch. The band index lives separately
-    * under [[Cluster.corpusClusterStatePath]] (shared with the
-    * incremental clustering).
+  /** The gate's corpus-side inputs: the corpus fingerprint set (`fp`)
+    * and the eval gram set (`evalgrams`) — the two frames
+    * [[ingestGateBatch]] would otherwise re-derive from a full corpus
+    * scan on EVERY micro-batch. The band index lives separately in
+    * [[Cluster.corpusClusterState]] (shared with the incremental
+    * clustering).
     */
-  private[graft] def ingestArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      gramWidth: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "ingate", s"ingate_v1|$sfDir|mod10|$gramWidth")
+  private[graft] def ingestGateCorpus(sfDir: String, gramWidth: Int): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "ingate", s"ingate_v1|$sfDir|mod10|$gramWidth",
+      Seq("fp" -> CorpusFpSchema, "evalgrams" -> Decontaminate.EvalGramsSchema))
 
-  /** Build the gate's corpus-side artifacts ONCE (per corpus version). */
-  def persistIngestArtifacts(
+  /** The served (fp, evalgrams) parts, built ONCE per corpus version. */
+  private def ingestGateCorpusStored(
       spark: SparkSession,
       sfDir: String,
-      gramWidth: Int = 4): String = {
-    val path = ingestArtifactPath(spark, sfDir, gramWidth)
-    IO.table(spark, sfDir, "documents")
-      .filter(col("doc_id") % 10 =!= 0)
-      .select(md5(col("text").cast("binary")).as("fp"))
-      .distinct()
-      .coalesce(4).write.mode("overwrite").parquet(s"$path/fp")
-    Decontaminate.evalGramsOf(spark, sfDir, gramWidth)
-      .coalesce(4).write.mode("overwrite").parquet(s"$path/evalgrams")
-    path
-  }
+      gramWidth: Int): Seq[DataFrame] =
+    IO.servedArtifact(spark, ingestGateCorpus(sfDir, gramWidth)) { root =>
+      IO.table(spark, sfDir, "documents")
+        .filter(col("doc_id") % 10 =!= 0)
+        .select(md5(col("text").cast("binary")).as("fp"))
+        .distinct()
+        .coalesce(4).write.mode("overwrite").parquet(s"$root/fp")
+      Decontaminate.evalGramsOf(spark, sfDir, gramWidth)
+        .coalesce(4).write.mode("overwrite").parquet(s"$root/evalgrams")
+    }
 
   /** Declared schema of the persisted corpus-fingerprint table (md5 hex
     * of non-null text is non-null).
@@ -247,12 +243,8 @@ object Curate {
       minQuality: Double = 0.6): DataFrame = {
     val batch = arrivals.select("doc_id", "text", "n_chars")
       .localCheckpoint()
-    val artPath = ingestArtifactPath(spark, sfDir, gramWidth)
-    if (!graft.sources.IO.artifactExists(spark, s"$artPath/evalgrams"))
-      persistIngestArtifacts(spark, sfDir, gramWidth)
-    val corpusFp = graft.sources.IO.readStamped(spark, s"$artPath/fp",
-      CorpusFpSchema)
-      .withColumn("in_corpus", lit(1))
+    val Seq(storedFp, evalGrams) = ingestGateCorpusStored(spark, sfDir, gramWidth)
+    val corpusFp = storedFp.withColumn("in_corpus", lit(1))
     val batchW = Window.partitionBy("fp").orderBy("doc_id")
     val exact = batch
       .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
@@ -263,17 +255,12 @@ object Curate {
     val nearDup = Dedup.incrementalNearDupFrames(
       batch.select("doc_id"),
       Dedup.simHashBandedFrom(Dedup.simHashSignaturesMd5From(batch)),
-      graft.sources.IO.servedArtifact(spark,
-        s"${Cluster.corpusClusterStatePath(spark, sfDir)}/index",
-        Cluster.BandIndexSchema) {
-        Cluster.persistCorpusClusterState(spark, sfDir); ()
-      },
+      Cluster.corpusClusterStateStored(spark, sfDir).head,
       maxHamming = 3)
       .select(col("doc_id"), (!col("is_new")).cast("int").as("near_dup"))
     val contaminated = Decontaminate.contaminatedIdsOf(
       Decontaminate.gramsFor(batch, gramWidth),
-      graft.sources.IO.readStamped(spark, s"$artPath/evalgrams",
-        Decontaminate.EvalGramsSchema))
+      evalGrams)
       .withColumn("cont", lit(1))
     val quality = batch
       .withColumn("toks", TextAnalysis.wsTokens(col("text")))
@@ -337,12 +324,8 @@ object Curate {
     // inside micro-batch 0 (trigger-timeout risk, and re-priming on every
     // checkpoint recovery); after this the per-batch body is strictly
     // batch-bounded
-    val artPath = ingestArtifactPath(spark, sfDir, gramWidth)
-    if (!graft.sources.IO.artifactExists(spark, s"$artPath/evalgrams"))
-      persistIngestArtifacts(spark, sfDir, gramWidth)
-    val statePath = Cluster.corpusClusterStatePath(spark, sfDir)
-    if (!graft.sources.IO.artifactExists(spark, s"$statePath/index"))
-      Cluster.persistCorpusClusterState(spark, sfDir)
+    ingestGateCorpusStored(spark, sfDir, gramWidth)
+    Cluster.corpusClusterStateStored(spark, sfDir)
     arrivals.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$outDir/_checkpoint")

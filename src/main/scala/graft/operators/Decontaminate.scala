@@ -208,7 +208,7 @@ object Decontaminate {
     * benches heavier than the shingle-banded dedup rows whose candidate
     * sets are sparse. At production scale the corpus banding comes from
     * the persisted band-index artifact
-    * ([[Dedup.persistMinHashCorpusIndex]]'s convention) instead of being
+    * ([[Dedup.minHashIndex]]'s convention) instead of being
     * recomputed per eval suite.
     */
   def nearDupContaminationReport(
@@ -226,42 +226,23 @@ object Decontaminate {
       numPerms, bands, minJaccard, evalPct)
   }
 
-  /** Stable artifact path for the persisted TRAIN-side token band index
-    * (the [[Dedup.minHashIndexArtifactPath]] convention: params + a
-    * footer-derived content fingerprint, scheme-version token first).
-    * Distinct from the shingle index — the decontam banding is over
-    * distinct word tokens and carves out the eval bucket.
-    */
-  private[graft] def neardupIndexArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      numPerms: Int,
-      bands: Int,
-      evalPct: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "dcmh", s"dcmh_v1|$sfDir|$numPerms|$bands|$evalPct") + ".parquet"
-
-  /** Build the train-side token band index ONCE and persist it — the
-    * artifact [[nearDupContaminationReportStored]] consumes. At 100 TB
+  /** The persisted TRAIN-side token band index (the [[Dedup.minHashIndex]]
+    * convention) — the artifact [[nearDupContaminationReportStored]]
+    * consumes. Distinct from the shingle index: the decontam banding is
+    * over distinct word tokens and carves out the eval bucket. At 100 TB
     * this is the maintained index of the training corpus (appended per
     * admitted batch); the md5-per-token signature pass over the corpus —
     * the dominant cost of every near-dup decontamination call — runs only
-    * here, never per eval suite.
+    * at priming, never per eval suite.
     */
-  def persistNearDupTrainIndex(
-      spark: SparkSession,
+  private[graft] def nearDupTrainIndex(
       sfDir: String,
       numPerms: Int = 32,
       bands: Int = 8,
-      evalPct: Int = 5): String = {
-    val path = neardupIndexArtifactPath(spark, sfDir, numPerms, bands, evalPct)
-    val docs = withToks(IO.table(spark, sfDir, "documents"))
-      .select(col("doc_id"), col("text"), col("bucket"))
-    Dedup.minHashBandedTokensMd5From(
-      docs.filter(col("bucket") < 100 - evalPct), numPerms, bands)
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+      evalPct: Int = 5): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "dcmh",
+      s"dcmh_v1|$sfDir|$numPerms|$bands|$evalPct",
+      Seq("" -> Dedup.MinHashBandSchema), ".parquet")
 
   /** [[nearDupContaminationReport]] consuming the PERSISTED train band
     * index (self-priming on first use, like the stored bloom sketch and
@@ -280,11 +261,13 @@ object Decontaminate {
       minJaccard: Double = 0.5,
       evalPct: Int = 5): DataFrame = {
     nearDupFromTrainBanding(spark, sfDir,
-      graft.sources.IO.servedArtifact(spark,
-        neardupIndexArtifactPath(spark, sfDir, numPerms, bands, evalPct),
-        Dedup.MinHashBandSchema) {
-        persistNearDupTrainIndex(spark, sfDir, numPerms, bands, evalPct); ()
-      },
+      IO.servedArtifact(spark, nearDupTrainIndex(sfDir, numPerms, bands, evalPct)) { root =>
+        val docs = withToks(IO.table(spark, sfDir, "documents"))
+          .select(col("doc_id"), col("text"), col("bucket"))
+        Dedup.minHashBandedTokensMd5From(
+          docs.filter(col("bucket") < 100 - evalPct), numPerms, bands)
+          .write.mode("overwrite").parquet(root)
+      }.head,
       numPerms, bands, minJaccard, evalPct)
   }
 
@@ -367,7 +350,7 @@ object Decontaminate {
     * metric's hit volume. The gram-based metrics share ONE materialized
     * gram frame (the corpus tokenize+gram pass — the dominant shared
     * head — runs once, not per metric), and the near-dup leg consumes
-    * the persisted train band index ([[persistNearDupTrainIndex]]), so
+    * the persisted train band index ([[nearDupTrainIndex]]), so
     * gate wall-time tracks max(metric), not Σ(metrics).
     */
   def decontaminationGate(
@@ -471,62 +454,34 @@ object Decontaminate {
   /** Test seam: forget loaded sketches (spec isolation). */
   private[graft] def clearBloomCache(): Unit = bloomCache.clear()
 
-  /** Stable artifact path for a persisted eval-gram sketch, keyed by
-    * every parameter that shapes its contents PLUS a footer-derived
-    * content fingerprint of the source table (row count + text byte
-    * volume — no Spark job): an artifact outlives the JVM, and a
-    * regenerated table at the same path must miss the stale sketch.
-    * Lives under the JVM temp dir here; in production the sketch is
-    * written BESIDE the eval table on the same filesystem (it is derived
-    * data of that table and shares its lifecycle — rebuild on eval-set
-    * change).
+  /** The persisted eval-gram sketch: the serialized bloom as a one-row
+    * binary part (`sketch`) and, beside it, the exact distinct-gram table
+    * (`grams`) — the verify join needs it, it is eval-sized (tiny), and
+    * it shares the sketch's lifecycle, so consumers run ZERO eval-side
+    * explodes. Keyed by every parameter that shapes the contents; the
+    * gramv2 token names the token-hash-composed gram scheme, because the
+    * sketch stores gram HASHES and is invalid across a hash-scheme
+    * change. In production the sketch is written BESIDE the eval table
+    * on the same filesystem (derived data of that table, rebuilt on
+    * eval-set change) by a scheduled job.
     */
-  private[graft] def bloomArtifactPath(
-      spark: SparkSession,
+  private[graft] def evalGramBloom(
       sfDir: String,
       gramWidth: Int,
       evalPct: Int,
-      fpp: Double): String =
-    // gramv2 = token-hash-composed gram hashes: the sketch stores gram
-    // HASHES, so the artifact is invalid across a hash-scheme change and
-    // the key must name the scheme
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "bloom", s"gramv2|$sfDir|$gramWidth|$evalPct|$fpp") + ".bin"
+      fpp: Double): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "bloom",
+      s"gramv2|$sfDir|$gramWidth|$evalPct|$fpp",
+      Seq("sketch" -> BloomSketchSchema, "grams" -> EvalGramsSchema))
 
-  /** Build the eval-gram sketch and persist it at [[bloomArtifactPath]]
-    * (atomic temp-file + rename, so a concurrent reader never sees a
-    * torn artifact). Returns the path. This is the "train once" half of
-    * the stored-sketch pattern ([[contaminationReportBloomStored]] is the
-    * consumer); at 100 TB the build is a scheduled job that reruns only
-    * when the eval set changes.
-    */
-  def persistEvalGramBloom(
-      spark: SparkSession,
-      sfDir: String,
-      gramWidth: Int = 13,
-      evalPct: Int = 5,
-      fpp: Double = 0.03): String = {
-    val docs = gramDocs(spark, sfDir, gramWidth)
-    val evalGrams = evalGramsFrame(docs, evalPct)
-    val bytes = buildBloomBytes(spark, sfDir, evalGrams, evalPct, fpp)
-    val pathStr = bloomArtifactPath(spark, sfDir, gramWidth, evalPct, fpp)
-    // the exact distinct-gram table persists BESIDE the sketch: the
-    // verify join needs it, it is eval-sized (tiny), and it shares the
-    // sketch's lifecycle — consumers then run ZERO eval-side explodes
-    evalGrams.write.mode("overwrite").parquet(s"$pathStr.grams.parquet")
-    val path = java.nio.file.Paths.get(pathStr)
-    val tmp = java.nio.file.Files.createTempFile(path.getParent, "graft_bloom_", ".tmp")
-    java.nio.file.Files.write(tmp, bytes)
-    java.nio.file.Files.move(tmp, path,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    bloomCache.put(pathStr, bytes)
-    path.toString
+  private val BloomSketchSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("bytes", BinaryType, nullable = false)))
   }
 
   /** [[contaminationReportBloom]] consuming the PERSISTED artifacts:
     * loads the serialized bloom and the exact eval-gram table from
-    * [[bloomArtifactPath]] (building and persisting both on first use —
+    * [[evalGramBloom]] (building and persisting both on first use —
     * self-priming), so repeat invocations run NO eval-side work at all:
     * no gram explode, no distinct, no distributed sketch build — just
     * the map-side corpus prefilter and the broadcast verify join against
@@ -541,27 +496,21 @@ object Decontaminate {
       gramWidth: Int = 13,
       evalPct: Int = 5,
       fpp: Double = 0.03): DataFrame = {
-    // the artifact path embeds the params AND the table fingerprint, so
-    // it doubles as the memory-cache key
-    val pathStr = bloomArtifactPath(spark, sfDir, gramWidth, evalPct, fpp)
-    val bytes = {
-      val hit = bloomCache.get(pathStr)
-      if (hit != null) hit
-      else {
-        val p = java.nio.file.Paths.get(pathStr)
-        val loaded =
-          if (java.nio.file.Files.exists(p)) java.nio.file.Files.readAllBytes(p)
-          else {
-            persistEvalGramBloom(spark, sfDir, gramWidth, evalPct, fpp)
-            bloomCache.get(pathStr)
-          }
-        bloomCache.putIfAbsent(pathStr, loaded)
-        loaded
-      }
+    val artifact = evalGramBloom(sfDir, gramWidth, evalPct, fpp)
+    val Seq(sketch, grams) = IO.servedArtifact(spark, artifact) { root =>
+      import spark.implicits._
+      val evalGrams = evalGramsFrame(gramDocs(spark, sfDir, gramWidth), evalPct)
+      val bytes = buildBloomBytes(spark, sfDir, evalGrams, evalPct, fpp)
+      evalGrams.write.mode("overwrite").parquet(s"$root/grams")
+      Seq(bytes).toDF("bytes").coalesce(1)
+        .write.mode("overwrite").parquet(s"$root/sketch")
+      bloomCache.put(root, bytes)
     }
-    reportWithBloomBytes(gramDocs(spark, sfDir, gramWidth),
-      graft.sources.IO.readStamped(spark, s"$pathStr.grams.parquet",
-        EvalGramsSchema), bytes, evalPct)
+    // the root embeds the params AND the table fingerprint, so it
+    // doubles as the memory-cache key
+    val bytes = bloomCache.computeIfAbsent(artifact.root(spark),
+      _ => sketch.head().getAs[Array[Byte]](0))
+    reportWithBloomBytes(gramDocs(spark, sfDir, gramWidth), grams, bytes, evalPct)
   }
 
   /** Contaminated ids of the INCOMING-BATCH carve (doc_id % 10 == 0, the

@@ -313,7 +313,7 @@ object Dedup {
     * separately.
     */
   /** Declared schemas of the persisted dedup artifacts — the nullability
-    * every stored serve re-stamps through [[IO.readStamped]] (all
+    * every stored serve re-stamps through [[IO.servedArtifact]] (all
     * columns non-null by construction: ids and hashes from non-null
     * expressions, arrays built whole).
     */
@@ -429,37 +429,16 @@ object Dedup {
       minJaccard)
   }
 
-  /** Stable artifact path for the persisted corpus band index (the
-    * bloom-artifact convention: params + a footer-derived content
-    * fingerprint of the source table, so a regenerated table misses the
-    * stale index; a scheme-version token guards hash-function changes).
+  /** The persisted corpus-side band index — the artifact
+    * [[incrementalMinHashMd5Stored]] consumes (a scheme-version token
+    * guards hash-function changes). In production this is the bucketed
+    * index table maintained across batches (appended per admitted batch,
+    * never rebuilt); the md5-per-shingle signature pass — the dominant
+    * cost of every incremental call — runs only at priming.
     */
-  private[graft] def minHashIndexArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      numPerms: Int,
-      bands: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "mhidx", s"mhidx_v1|$sfDir|$numPerms|$bands") + ".parquet"
-
-  /** Build the corpus-side band index ONCE and persist it — the artifact
-    * [[incrementalMinHashMd5Stored]] consumes. In production this is the
-    * bucketed index table maintained across batches (appended per admitted
-    * batch, never rebuilt); the md5-per-shingle signature pass — the
-    * dominant cost of every incremental call — runs only here.
-    */
-  def persistMinHashCorpusIndex(
-      spark: SparkSession,
-      sfDir: String,
-      numPerms: Int = 32,
-      bands: Int = 8): String = {
-    val path = minHashIndexArtifactPath(spark, sfDir, numPerms, bands)
-    minHashBandedMd5From(
-      IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 =!= 0),
-      numPerms, bands)
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def minHashIndex(sfDir: String, numPerms: Int = 32, bands: Int = 8): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "mhidx",
+      s"mhidx_v1|$sfDir|$numPerms|$bands", Seq("" -> MinHashBandSchema), ".parquet")
 
   /** [[incrementalMinHashMd5]] consuming the PERSISTED corpus band index
     * (self-priming on first use, like the stored bloom sketch): repeat
@@ -479,11 +458,12 @@ object Dedup {
       minHashBandedMd5From(
         IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 === 0),
         numPerms, bands),
-      IO.servedArtifact(spark,
-        minHashIndexArtifactPath(spark, sfDir, numPerms, bands),
-        MinHashBandSchema) {
-        persistMinHashCorpusIndex(spark, sfDir, numPerms, bands); ()
-      },
+      IO.servedArtifact(spark, minHashIndex(sfDir, numPerms, bands)) { root =>
+        minHashBandedMd5From(
+          IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 =!= 0),
+          numPerms, bands)
+          .write.mode("overwrite").parquet(root)
+      }.head,
       minJaccard)
   }
 
@@ -925,7 +905,7 @@ object Dedup {
 
   /** The (doc_id, s, p, h) positional prefix index over hashed shingle
     * sets — the build half of the operator, persisted by
-    * [[persistJaccardIndex]] for the stored serve path.
+    * [[jaccardIndex]] for the stored serve path.
     */
   private[graft] def jaccardPrefixIndex(toks: DataFrame): DataFrame = {
     val df = toks.select(explode(col("toks")).as("h"))
@@ -1082,29 +1062,15 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Content-keyed artifact path for the persisted prefix-join index. */
-  private[graft] def jaccardArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet",
-      "text", "japrefix", s"japrefix_v2|$sfDir|t9of10|bigram-pairhash")
-
-  /** Build the prefix-join artifact ONCE: the sorted-hash shingle sets
-    * and the positional prefix index — exactly what the scaladoc's
-    * "persisted vocab artifact" scale note prescribes (refreshed per
-    * corpus version, not per query).
+  /** The persisted prefix-join index: the sorted-hash shingle sets
+    * (`toks`) and the positional prefix index (`prefix`) — exactly what
+    * the scaladoc's "persisted vocab artifact" scale note prescribes
+    * (refreshed per corpus version, not per query).
     */
-  def persistJaccardIndex(spark: SparkSession, sfDir: String): String = {
-    val path = jaccardArtifactPath(spark, sfDir)
-    val docs = IO.table(spark, sfDir, "documents")
-    val toks = docs.select(col("doc_id"),
-      hashedGramSet(col("text")).as("toks"))
-      .localCheckpoint() // two artifact writers below
-    toks.write.mode("overwrite").parquet(s"$path/toks")
-    jaccardPrefixIndex(toks).write.mode("overwrite")
-      .parquet(s"$path/prefix")
-    path
-  }
+  private[graft] def jaccardIndex(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "japrefix",
+      s"japrefix_v2|$sfDir|t9of10|bigram-pairhash",
+      Seq("toks" -> JaccardToksSchema, "prefix" -> JaccardPrefixSchema))
 
   /** [[jaccardPrefixPairs]] consuming the PERSISTED shingle sets and
     * prefix index (self-priming): repeat invocations pay only the
@@ -1117,13 +1083,14 @@ object Dedup {
       spark: SparkSession,
       sfDir: String,
       verifyBroadcastCeiling: Long = VerifySetBroadcastCeiling): DataFrame = {
-    val path = jaccardArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/prefix"))
-      persistJaccardIndex(spark, sfDir)
-    jaccardVerifiedFrom(
-      IO.readStamped(spark, s"$path/toks", JaccardToksSchema),
-      IO.readStamped(spark, s"$path/prefix", JaccardPrefixSchema),
-      verifyBroadcastCeiling)
+    val Seq(toks, prefix) = IO.servedArtifact(spark, jaccardIndex(sfDir)) { root =>
+      val built = IO.table(spark, sfDir, "documents")
+        .select(col("doc_id"), hashedGramSet(col("text")).as("toks"))
+        .localCheckpoint() // two artifact writers below
+      built.write.mode("overwrite").parquet(s"$root/toks")
+      jaccardPrefixIndex(built).write.mode("overwrite").parquet(s"$root/prefix")
+    }
+    jaccardVerifiedFrom(toks, prefix, verifyBroadcastCeiling)
       .localCheckpoint() // the presentation-sort sampling lesson
       .orderBy("doc_a", "doc_b")
   }
@@ -1384,105 +1351,37 @@ object Dedup {
       sorted = true)
   }
 
-  /** Stable artifact path for the persisted corpus winnow-fingerprint
-    * index (the mhidx convention: params + footer-derived content
-    * fingerprint, scheme-version token first).
-    */
-  private[graft] def winnowIndexArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int,
-      w: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "wnidx", s"wnidx_v1|$sfDir|$k|$w") + ".parquet"
-
-  /** Build the corpus-side winnow fingerprint index ONCE and persist it —
-    * the artifact [[incrementalWinnowStored]] consumes. In production
+  /** The persisted corpus-side winnow fingerprint index. In production
     * this is the fingerprint table maintained across batches (appended
     * per admitted batch); the md5-per-gram selection pass over the
-    * corpus — the dominant cost of every winnow call — runs only here.
+    * corpus — the dominant cost of every winnow call — runs only at
+    * priming.
     */
-  def persistWinnowCorpusIndex(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 3,
-      w: Int = 4): String = {
-    val path = winnowIndexArtifactPath(spark, sfDir, k, w)
-    graft.functions.TextAnalysis.winnowFingerprintFrame(
-      IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 =!= 0), k, w)
-      .withColumnRenamed("doc_id", "corpus_id")
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def winnowIndex(sfDir: String, k: Int, w: Int): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "wnidx", s"wnidx_v1|$sfDir|$k|$w",
+      Seq("" -> winnowIndexSchema("corpus_id")), ".parquet")
 
-  /** Artifact path of the DF-CAPPED corpus winnow index (keyed by maxDf
-    * on top of the raw index's params): the serve-side derivative
-    * [[incrementalWinnowStored]] reads so repeat batches skip the
-    * corpus-wide df aggregation + join-back entirely.
+  /** The DF-CAPPED corpus winnow index (keyed by maxDf on top of the raw
+    * index's params): the serve-side derivative [[incrementalWinnowStored]]
+    * reads so repeat batches skip the corpus-wide df aggregation +
+    * join-back entirely. Its prime runs those corpus-shuffling steps at
+    * index-maintenance time, over the served raw index; in production
+    * both tables are maintained together per admitted batch (the df
+    * counts are incrementable), so the per-batch query never aggregates
+    * the corpus.
     */
-  private[graft] def winnowKeepIndexArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int,
-      w: Int,
-      maxDf: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "wnkeep", s"wnkeep_v1|$sfDir|$k|$w|$maxDf") + ".parquet"
+  private[graft] def winnowKeepIndex(sfDir: String, k: Int, w: Int, maxDf: Int): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "wnkeep",
+      s"wnkeep_v1|$sfDir|$k|$w|$maxDf", Seq("" -> WinnowKeepSchema), ".parquet")
 
-  /** Derive and persist the df-capped corpus winnow index ONCE (priming
-    * the raw index first if needed): the corpus-wide df count and the
-    * join-back — the only corpus-shuffling steps of the incremental
-    * winnow serve path — run here, at index-maintenance time. In
-    * production both tables are maintained together per admitted batch
-    * (the df counts are incrementable), so the per-batch query never
-    * aggregates the corpus.
+  /** Full-corpus variant of [[winnowIndex]] (no incremental carve) — the
+    * pairs/components serve path: the md5 selection pass runs only at
+    * priming, and [[winnowPairsStored]] and any components/pairs
+    * consumer read the table.
     */
-  def persistWinnowKeepIndex(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 3,
-      w: Int = 4,
-      maxDf: Int = 50): String = {
-    val idx = IO.servedArtifact(spark,
-      winnowIndexArtifactPath(spark, sfDir, k, w),
-      winnowIndexSchema("corpus_id")) {
-      persistWinnowCorpusIndex(spark, sfDir, k, w); ()
-    }
-    val path = winnowKeepIndexArtifactPath(spark, sfDir, k, w, maxDf)
-    val keep = idx.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("fp")
-    idx.join(keep, "fp")
-      .write.mode("overwrite").parquet(path)
-    path
-  }
-
-  /** Full-corpus variant of [[winnowIndexArtifactPath]] (no incremental
-    * carve) — the pairs/components serve path.
-    */
-  private[graft] def winnowFullIndexArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int,
-      w: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "wnfull", s"wnfull_v1|$sfDir|$k|$w") + ".parquet"
-
-  /** Persist the FULL-corpus winnow fingerprint table once — the md5
-    * selection pass (the dominant cost of every winnow call) runs only
-    * here; [[winnowPairsStored]] and any components/pairs consumer read
-    * the table.
-    */
-  def persistWinnowFullIndex(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 3,
-      w: Int = 4): String = {
-    val path = winnowFullIndexArtifactPath(spark, sfDir, k, w)
-    graft.functions.TextAnalysis.winnowFingerprintFrame(
-      IO.table(spark, sfDir, "documents"), k, w)
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def winnowFullIndex(sfDir: String, k: Int, w: Int): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "wnfull", s"wnfull_v1|$sfDir|$k|$w",
+      Seq("" -> winnowIndexSchema("doc_id")), ".parquet")
 
   /** [[winnowPairs]] consuming the PERSISTED full-corpus fingerprint
     * table (self-priming on first use): repeat invocations skip the md5
@@ -1507,11 +1406,11 @@ object Dedup {
       w: Int = 4,
       maxDf: Int = 50): DataFrame = {
     spanPairsFromWindows(
-      IO.servedArtifact(spark,
-        winnowFullIndexArtifactPath(spark, sfDir, k, w),
-        winnowIndexSchema("doc_id")) {
-        persistWinnowFullIndex(spark, sfDir, k, w); ()
-      }.withColumnRenamed("fp", "wh"),
+      IO.servedArtifact(spark, winnowFullIndex(sfDir, k, w)) { root =>
+        graft.functions.TextAnalysis.winnowFingerprintFrame(
+          IO.table(spark, sfDir, "documents"), k, w)
+          .write.mode("overwrite").parquet(root)
+      }.head.withColumnRenamed("fp", "wh"),
       maxDf,
       // already materialized on disk: re-scanning parquet twice beats a
       // checkpoint, so keep the materialization gate closed
@@ -1533,7 +1432,7 @@ object Dedup {
     *
     * Scale shape: the batch winnows map-side and BROADCASTS into the fp
     * equi-join against the PERSISTED df-capped index
-    * ([[persistWinnowKeepIndex]]) — on the serve path the corpus never
+    * ([[winnowKeepIndex]]) — on the serve path the corpus never
     * shuffles and never aggregates: the df-cap (which drops hot
     * boilerplate fingerprints before they can fan out) is precomputed at
     * index-maintenance time, so a batch costs one capped-index scan;
@@ -1546,11 +1445,17 @@ object Dedup {
       k: Int = 3,
       w: Int = 4,
       maxDf: Int = 50): DataFrame = {
-    val capped = IO.servedArtifact(spark,
-      winnowKeepIndexArtifactPath(spark, sfDir, k, w, maxDf),
-      WinnowKeepSchema) {
-      persistWinnowKeepIndex(spark, sfDir, k, w, maxDf); ()
-    }
+    val capped = IO.servedArtifact(spark, winnowKeepIndex(sfDir, k, w, maxDf)) { root =>
+      val idx = IO.servedArtifact(spark, winnowIndex(sfDir, k, w)) { idxRoot =>
+        graft.functions.TextAnalysis.winnowFingerprintFrame(
+          IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 =!= 0), k, w)
+          .withColumnRenamed("doc_id", "corpus_id")
+          .write.mode("overwrite").parquet(idxRoot)
+      }.head
+      val keep = idx.groupBy("fp").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDf).select("fp")
+      idx.join(keep, "fp").write.mode("overwrite").parquet(root)
+    }.head
     val batch = IO.table(spark, sfDir, "documents")
       .filter(col("doc_id") % 10 === 0)
     val batchFps = graft.functions.TextAnalysis

@@ -104,44 +104,42 @@ object Events {
     */
   private[graft] val RetentionSplitUs = Snapshot.Scd2SplitUs
 
-  /** Stable artifact path for the persisted retention state —
-    * content-keyed like every stored artifact (a regenerated events
-    * table misses the stale state).
+  /** The persisted retention STATE of the base slice: the distinct
+    * (user_id, day) activity set (`seen`), the first-touch table
+    * (`first_touch`: user_id → cohort_day, immutable once assigned) and
+    * the base matrix cells (`cells`) — the compact state a retention
+    * matrix is a pure function of (|users|·|days| bounded, orders below
+    * event volume; the 100 TB event log never re-scans).
     */
-  private[graft] def retentionArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/events.parquet",
-      "user_id", "retention", s"retention_v2|$sfDir|split1706054400")
+  private[graft] def retentionBase(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "events", "user_id", "retention",
+      s"retention_v2|$sfDir|split1706054400",
+      Seq("seen" -> IO.longSchema("user_id", "day"),
+        "first_touch" -> IO.longSchema("user_id", "cohort_day"),
+        "cells" -> IO.longSchema("cohort_day", "offset_days", "base_users")))
 
-  /** Build and persist the retention STATE from the base slice: the
-    * first-touch table (user_id → cohort_day, immutable once assigned)
-    * and the distinct (user_id, day) activity set — the compact state a
-    * retention matrix is a pure function of (|users|·|days| bounded,
-    * orders below event volume; the 100 TB event log never re-scans).
-    */
-  def persistRetentionBase(spark: SparkSession, sfDir: String): String = {
-    val path = retentionArtifactPath(spark, sfDir)
-    val raw = IO.table(spark, sfDir, "events")
-    val seen = raw.filter(EventTime.tsBeforeUs(raw, RetentionSplitUs))
-      .withColumn("tus", EventTime.tsUs(raw))
-      .select(col("user_id"), expr("tus div 86400000000").as("day"))
-      .distinct()
-      .localCheckpoint() // feeds both halves of the artifact
-    seen.write.mode("overwrite").parquet(s"$path/seen")
-    val ft = seen.groupBy("user_id").agg(min("day").as("cohort_day"))
-      .localCheckpoint()
-    ft.write.mode("overwrite").parquet(s"$path/first_touch")
-    // the matrix cells themselves are part of the state: the serve path
-    // adds deltas to stored counts instead of re-aggregating the
-    // (user, day) set per load. count(*), not countDistinct: a cell
-    // (cohort, offset) pins day per user over the distinct pair set.
-    seen.join(ft, "user_id")
-      .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
-      .agg(count(lit(1)).as("base_users"))
-      .write.mode("overwrite").parquet(s"$path/cells")
-    path
-  }
+  /** The served (seen, first_touch, cells) state, self-priming. */
+  private def retentionBaseStored(spark: SparkSession, sfDir: String): Seq[DataFrame] =
+    IO.servedArtifact(spark, retentionBase(sfDir)) { root =>
+      val raw = IO.table(spark, sfDir, "events")
+      val seen = raw.filter(EventTime.tsBeforeUs(raw, RetentionSplitUs))
+        .withColumn("tus", EventTime.tsUs(raw))
+        .select(col("user_id"), expr("tus div 86400000000").as("day"))
+        .distinct()
+        .localCheckpoint() // feeds all three parts of the artifact
+      seen.write.mode("overwrite").parquet(s"$root/seen")
+      val ft = seen.groupBy("user_id").agg(min("day").as("cohort_day"))
+        .localCheckpoint()
+      ft.write.mode("overwrite").parquet(s"$root/first_touch")
+      // the matrix cells themselves are part of the state: the serve path
+      // adds deltas to stored counts instead of re-aggregating the
+      // (user, day) set per load. count(*), not countDistinct: a cell
+      // (cohort, offset) pins day per user over the distinct pair set.
+      seen.join(ft, "user_id")
+        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
+        .agg(count(lit(1)).as("base_users"))
+        .write.mode("overwrite").parquet(s"$root/cells")
+    }
 
   /** INCREMENTAL RETENTION — extend the persisted retention state with
     * an arriving event batch WITHOUT re-scanning history, emitting
@@ -180,13 +178,7 @@ object Events {
       spark: SparkSession,
       sfDir: String,
       batch: DataFrame): DataFrame = {
-    val path = retentionArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/seen"))
-      persistRetentionBase(spark, sfDir)
-    val storedSeen = IO.readStamped(spark, s"$path/seen",
-      IO.longSchema("user_id", "day"))
-    val storedFt = IO.readStamped(spark, s"$path/first_touch",
-      IO.longSchema("user_id", "cohort_day"))
+    val Seq(storedSeen, storedFt, storedCells) = retentionBaseStored(spark, sfDir)
     val batchDays = batch.select("user_id", "day")
       .distinct()
       .localCheckpoint() // three consumers: new-user carve, novel set
@@ -203,8 +195,6 @@ object Events {
       .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
       .agg(count(lit(1)).as("add"))
     // stored cell counts come from the artifact, never re-aggregated
-    val storedCells = IO.readStamped(spark, s"$path/cells",
-      IO.longSchema("cohort_day", "offset_days", "base_users"))
     delta.join(storedCells, Seq("cohort_day", "offset_days"), "left")
       .select(col("cohort_day"), col("offset_days"),
         (coalesce(col("base_users"), lit(0L)) + col("add")).as("active_users"))
@@ -233,7 +223,7 @@ object Events {
     * idempotent). Two batches touching the same cell, or re-cohorting
     * the same brand-new user, therefore emit OVERLAPPING
     * `active_users` values: a consumer takes the LATEST batch's value
-    * per cell, never a sum, and re-bases (persistRetentionBase) before
+    * per cell, never a sum, and re-bases ([[retentionBase]]) before
     * treating deltas from different epochs as one series.
     */
   def retentionIngestStream(
@@ -241,9 +231,7 @@ object Events {
       sfDir: String,
       arrivals: DataFrame,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val path = retentionArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/seen"))
-      persistRetentionBase(spark, sfDir)
+    retentionBaseStored(spark, sfDir)
     arrivals.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$outDir/_checkpoint")
@@ -560,22 +548,13 @@ object Events {
       .limit(topK)
   }
 
-  private[graft] def trendingArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/events.parquet",
-      "user_id", "trending", s"trending_v1|$sfDir|split1706054400")
-
-  /** Persist the trending state from the base slice: the per-(item,
-    * day) count table the score is a pure function of.
+  /** The persisted trending state of the base slice: the per-(item,
+    * day) count table (`counts`) the score is a pure function of.
     */
-  def persistTrendingBase(spark: SparkSession, sfDir: String): String = {
-    val path = trendingArtifactPath(spark, sfDir)
-    itemDayCounts(spark, sfDir,
-      Some(raw => EventTime.tsBeforeUs(raw, RetentionSplitUs)))
-      .write.mode("overwrite").parquet(s"$path/counts")
-    path
-  }
+  private[graft] def trendingBase(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "events", "user_id", "trending",
+      s"trending_v1|$sfDir|split1706054400",
+      Seq("counts" -> IO.longSchema("item", "day", "n")))
 
   /** INCREMENTAL TRENDING — extend the persisted count state with the
     * arriving batch and re-rank, WITHOUT re-scanning event history.
@@ -600,11 +579,11 @@ object Events {
       sfDir: String,
       halfLifeDays: Int = 7,
       topK: Int = 50): DataFrame = {
-    val stored = IO.servedArtifact(spark,
-      s"${trendingArtifactPath(spark, sfDir)}/counts",
-      IO.longSchema("item", "day", "n")) {
-      persistTrendingBase(spark, sfDir); ()
-    }
+    val stored = IO.servedArtifact(spark, trendingBase(sfDir)) { root =>
+      itemDayCounts(spark, sfDir,
+        Some(raw => EventTime.tsBeforeUs(raw, RetentionSplitUs)))
+        .write.mode("overwrite").parquet(s"$root/counts")
+    }.head
     val batch = itemDayCounts(spark, sfDir,
       Some(raw => EventTime.tsAtLeastUs(raw, RetentionSplitUs)))
     val merged = stored.unionByName(batch)

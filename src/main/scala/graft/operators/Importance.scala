@@ -121,23 +121,13 @@ object Importance {
       .orderBy("doc_id")
   }
 
-  /** Artifact path for the persisted 256-row estimator — the DSIR
-    * "trained model" (the codebook contract made literal: train once per
-    * corpus version, every scoring pass reads the table).
+  /** The persisted 256-row estimator — the DSIR "trained model" (the
+    * codebook contract made literal: train once per corpus version,
+    * every scoring pass reads the table).
     */
-  private[graft] def estimatorArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "dsir", s"dsir_v1|$sfDir|$NumBuckets|en") + ".parquet"
-
-  /** Train the estimator once and persist it. */
-  def persistEstimator(spark: SparkSession, sfDir: String): String = {
-    val path = estimatorArtifactPath(spark, sfDir)
-    logRatios(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def estimator(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "dsir", s"dsir_v1|$sfDir|$NumBuckets|en",
+      Seq("" -> IO.longSchema("bucket", "n_raw", "n_tgt", "logratio_fix")), ".parquet")
 
   /** The persisted estimator, self-priming on first use. Row-identical to
     * [[logRatios]] by construction, so every consumer keeps its oracle.
@@ -145,10 +135,10 @@ object Importance {
   private def estimatorStored(
       spark: SparkSession,
       sfDir: String): DataFrame =
-    IO.servedArtifact(spark, estimatorArtifactPath(spark, sfDir),
-      IO.longSchema("bucket", "n_raw", "n_tgt", "logratio_fix")) {
-      persistEstimator(spark, sfDir); ()
-    }
+    IO.servedArtifact(spark, estimator(sfDir)) { root =>
+      logRatios(spark, sfDir)
+        .coalesce(1).write.mode("overwrite").parquet(root)
+    }.head
 
   /** (doc_id, n_tokens, lw_fix) — the exact-integer weight seam
     * [[weights]] presents and [[sample]] keys on. Scores against the

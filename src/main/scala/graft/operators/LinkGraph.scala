@@ -238,29 +238,9 @@ object LinkGraph {
     contribOf(enriched, ranks, joinLoop = true)
   }
 
-  /** Content-keyed artifact location for the persisted transition graph —
-    * the [[Cluster.componentArtifactPath]] convention: the key
-    * fingerprints the events table from footer metadata (row count +
-    * uncompressed props bytes, no Spark job), so a changed corpus primes
-    * a fresh artifact instead of silently reusing a stale graph.
-    */
-  private[graft] def graphArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/events.parquet", "props",
-      "graph", s"graph_v1|$sfDir|transitions")
-
-  /** Mine the transition graph ONCE and persist both halves of the
-    * artifact — the weighted edge list and the node universe (isolated
-    * items hold rank mass, so the node list cannot be re-derived from the
-    * edges alone). Every iterative consumer (PageRank, HITS, any future
-    * walk) then reads two small parquet scans instead of re-running the
-    * event-scale sessionization window — the graph analogue of the
-    * train-once codebook contract.
-    */
   /** Declared schemas of the persisted graph artifacts — ids and counts
     * non-null by construction, re-stamped on read through
-    * [[IO.readStamped]].
+    * [[IO.servedArtifact]].
     */
   private[graft] val GraphEdgesSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -282,24 +262,31 @@ object LinkGraph {
       StructField("scc_id", LongType, nullable = false)))
   }
 
-  def persistTransitionGraph(spark: SparkSession, sfDir: String): String = {
-    val path = graphArtifactPath(spark, sfDir)
-    transitionEdges(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$path/edges")
-    items(spark, sfDir).select(col("item").as("node")).distinct()
-      .write.mode("overwrite").parquet(s"$path/nodes")
-    path
-  }
+  /** The persisted transition graph: the weighted edge list (`edges`)
+    * and the node universe (`nodes`; isolated items hold rank mass, so
+    * the node list cannot be re-derived from the edges alone). The key
+    * fingerprints the events table by its props column, so a changed
+    * corpus primes a fresh artifact instead of silently reusing a stale
+    * graph. Every iterative consumer (PageRank, HITS, any future walk)
+    * reads two small parquet scans instead of re-running the event-scale
+    * sessionization window — the graph analogue of the train-once
+    * codebook contract.
+    */
+  private[graft] def transitionGraph(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "events", "props", "graph", s"graph_v1|$sfDir|transitions",
+      Seq("edges" -> GraphEdgesSchema, "nodes" -> GraphNodesSchema))
 
   /** The persisted (edges, nodes) pair, self-priming on first use. */
   private[graft] def transitionGraphStored(
       spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) = {
-    val path = graphArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/nodes"))
-      persistTransitionGraph(spark, sfDir)
-    (IO.readStamped(spark, s"$path/edges", GraphEdgesSchema),
-      IO.readStamped(spark, s"$path/nodes", GraphNodesSchema))
+    val Seq(edges, nodes) = IO.servedArtifact(spark, transitionGraph(sfDir)) { root =>
+      transitionEdges(spark, sfDir)
+        .write.mode("overwrite").parquet(s"$root/edges")
+      items(spark, sfDir).select(col("item").as("node")).distinct()
+        .write.mode("overwrite").parquet(s"$root/nodes")
+    }
+    (edges, nodes)
   }
 
   /** [[pageRank]] consuming the PERSISTED transition graph: repeat
@@ -332,7 +319,7 @@ object LinkGraph {
       edgeFactor: Long = 1L)(body: (DataFrame, DataFrame) => T): T = {
     val (edges, nodes) = transitionGraphStored(spark, sfDir)
     val edgeRows =
-      IO.parquetRowCount(spark, s"${graphArtifactPath(spark, sfDir)}/edges")
+      IO.parquetRowCount(spark, s"${transitionGraph(sfDir).root(spark)}/edges")
     LoopWidth.pinned(spark, edgeFactor * edgeRows)(body(edges, nodes))
   }
 
@@ -1252,26 +1239,22 @@ object LinkGraph {
     }
   }
 
-  private[graft] def sccArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/events.parquet", "props",
-      "sccmap", s"scc_v1|$sfDir|backbone2")
-
-  /** The (node, scc_id) map as a persisted artifact — built by the
-    * FW-BW loop once per corpus version, re-read for pennies by every
+  /** The (node, scc_id) map as a persisted artifact (`map`) — built by
+    * the FW-BW loop once per corpus version, re-read for pennies by every
     * consumer (condensation, per-SCC rollups).
     */
+  private[graft] def sccMap(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "events", "props", "sccmap", s"scc_v1|$sfDir|backbone2",
+      Seq("map" -> SccMapSchema))
+
+  /** The served SCC map, self-priming. */
   private[graft] def sccMapStored(
       spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val path = sccArtifactPath(spark, sfDir)
-    IO.servedArtifact(spark, s"$path/map", SccMapSchema) {
+      sfDir: String): DataFrame =
+    IO.servedArtifact(spark, sccMap(sfDir)) { root =>
       sccComponents(spark, sfDir).select("node", "scc_id")
-        .write.mode("overwrite").parquet(s"$path/map")
-      ()
-    }
-  }
+        .write.mode("overwrite").parquet(s"$root/map")
+    }.head
 
   /** The DOMINANT-TRANSITION BACKBONE: each node's `k` strongest
     * out-edges (weight desc, dst asc — deterministic under count ties).

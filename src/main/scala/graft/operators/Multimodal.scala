@@ -761,7 +761,7 @@ object Multimodal {
       .toDF()
   }
 
-  /** Plan-level non-null stamp (the [[graft.sources.IO.readStamped]]
+  /** Plan-level non-null stamp (the [[graft.sources.IO.servedArtifact]]
     * idiom, locally): narrows an Option-encoded column the caller has
     * already filtered non-null, so the banded consumers' codegen stays
     * branch-free; an actually-null value fails loudly instead of
@@ -1852,34 +1852,21 @@ object Multimodal {
           .otherwise("kept").as("decision"))
   }
 
-  /** Stable artifact path for the persisted corpus-side media
-    * fingerprint face (the `Decontaminate.neardupIndexArtifactPath`
-    * convention: scheme-version token + params + a footer-derived
-    * content fingerprint of the source table). Token mmfp_v2: the media
+  /** The persisted corpus-side media fingerprint face — the artifact
+    * [[incrementalNearDupStored]] consumes. Token mmfp_v2: the media
     * payloads are SYNTHESIZED from the (unchanged) documents table, so
     * the footer fingerprint cannot see a synthesis change — the r18
     * %12==8 low-byte-rate WAV slice altered payload bytes and therefore
     * the stored sig/ffix values, which only a token bump can invalidate.
+    * At 100 TB this is the table a production pipeline maintains across
+    * crawl batches: one thin row per media (kind, n_bytes, 60-bit sig,
+    * 8-long ffix), so serving a batch never re-decodes or
+    * re-fingerprints the corpus payloads — the dominant cost of the live
+    * row.
     */
-  private[graft] def mediaIndexArtifactPath(spark: SparkSession, sfDir: String): String =
-    graft.sources.IO.contentKeyedArtifactPath(spark,
-      s"$sfDir/documents.parquet", "text",
-      "mmfp", s"mmfp_v2|$sfDir") + ".parquet"
-
-  /** Build the corpus-side fingerprint face ONCE and persist it — the
-    * artifact [[incrementalNearDupStored]] consumes. At 100 TB this is
-    * the table a production pipeline maintains across crawl batches:
-    * one thin row per media (kind, n_bytes, 60-bit sig, 8-long ffix),
-    * so serving a batch never re-decodes or re-fingerprints the corpus
-    * payloads — the dominant cost of the live row.
-    */
-  private[graft] def persistMediaIndex(spark: SparkSession, sfDir: String): String = {
-    val path = mediaIndexArtifactPath(spark, sfDir)
-    fingerprintFace(spark, sfDir)
-      .filter(col("media_id") % 10 =!= 0)
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def mediaIndex(sfDir: String): graft.sources.IO.Artifact =
+    graft.sources.IO.Artifact(sfDir, "documents", "text", "mmfp", s"mmfp_v2|$sfDir",
+      Seq("" -> MediaFaceSchema), ".parquet")
 
   /** [[incrementalNearDup]] consuming the PERSISTED corpus fingerprint
     * face (self-priming on first use — the stored-index convention of
@@ -1898,10 +1885,11 @@ object Multimodal {
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame = {
-    val corpus = graft.sources.IO.servedArtifact(spark,
-      mediaIndexArtifactPath(spark, sfDir), MediaFaceSchema) {
-      persistMediaIndex(spark, sfDir); ()
-    }
+    val corpus = graft.sources.IO.servedArtifact(spark, mediaIndex(sfDir)) { root =>
+      fingerprintFace(spark, sfDir)
+        .filter(col("media_id") % 10 =!= 0)
+        .write.mode("overwrite").parquet(root)
+    }.head
     val batch = fingerprintFaceFrom(mediaFromDocumentsFrame(
       spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(col("doc_id") % 10 === 0))).localCheckpoint()
@@ -1909,24 +1897,18 @@ object Multimodal {
       lenWindow, maxHamming, l1Window)
   }
 
-  /** Stable artifact path for the persisted FULL media fingerprint face
-    * (both the corpus and the eval carves — the %10 split is a column
-    * predicate over the stored rows, so one artifact serves every
-    * consumer). Same content-keyed convention as [[mediaIndexArtifactPath]],
-    * and the same v2 rationale: synthesis changes are invisible to the
-    * source-footer fingerprint, so the r18 WAV-slice bump rides the token.
-    */
-  private[graft] def mediaFaceArtifactPath(spark: SparkSession, sfDir: String): String =
-    graft.sources.IO.contentKeyedArtifactPath(spark,
-      s"$sfDir/documents.parquet", "text",
-      "mmface", s"mmface_v3|$sfDir") + ".parquet"
-
-  /** Build the full AUDITED face ONCE and persist it — the artifact
-    * every stored mm row consumes. Token mmface_v3 (r20): the artifact
-    * now carries the container-audit columns (fmt, rule battery, keep,
-    * fidelity) fused alongside the fingerprint face, so ONE prime pass
-    * and one artifact serve both the fingerprint consumers
-    * ([[decontamReportStored]], the streams) and the curation capstone's
+  /** The persisted FULL audited media face (both the corpus and the eval
+    * carves — the %10 split is a column predicate over the stored rows,
+    * so one artifact serves every consumer). Same token rationale as
+    * [[mediaIndex]]: synthesis changes are invisible to the source-footer
+    * fingerprint, so the r18 WAV-slice bump rides the token.
+    *
+    * Built ONCE — the artifact every stored mm row consumes. Token
+    * mmface_v3 (r20): the artifact now carries the container-audit
+    * columns (fmt, rule battery, keep, fidelity) fused alongside the
+    * fingerprint face, so ONE prime pass and one artifact serve both the
+    * fingerprint consumers ([[decontamReportStored]], the streams) and
+    * the curation capstone's
     * quality/fidelity gates — the separate mmaudit artifact and its
     * second decode pass are retired. The eval fingerprint index is
     * STATIC by definition (a benchmark suite changes on release cadence,
@@ -1934,23 +1916,17 @@ object Multimodal {
     * production pipeline maintains across crawl batches — neither should
     * be re-decoded per decontam sweep.
     */
-  private[graft] def persistMediaFace(spark: SparkSession, sfDir: String): String = {
-    val path = mediaFaceArtifactPath(spark, sfDir)
-    auditedFace(spark, sfDir)
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def mediaFace(sfDir: String): graft.sources.IO.Artifact =
+    graft.sources.IO.Artifact(sfDir, "documents", "text", "mmface", s"mmface_v3|$sfDir",
+      Seq("" -> MediaFaceSchemaV3), ".parquet")
 
   /** The full audited face served from its artifact, self-priming —
-    * the one entry every stored/streaming consumer shares (scheme-aware
-    * existence + validated stamped read via
-    * [[graft.sources.IO.servedArtifact]]).
+    * the one entry every stored/streaming consumer shares.
     */
   private[graft] def servedAuditedFace(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.IO.servedArtifact(spark,
-      mediaFaceArtifactPath(spark, sfDir), MediaFaceSchemaV3) {
-      persistMediaFace(spark, sfDir); ()
-    }
+    graft.sources.IO.servedArtifact(spark, mediaFace(sfDir)) { root =>
+      auditedFace(spark, sfDir).write.mode("overwrite").parquet(root)
+    }.head
 
   /** The fingerprint-face projection of [[servedAuditedFace]] — the
     * pre-r20 serve surface, unchanged for its consumers (the audit

@@ -115,20 +115,10 @@ object Retrieval {
     bm25ScoreOverPostings(spark, tf, k1, b, k)
   }
 
-  /** Stable artifact path for the persisted posting index (the band-index
-    * convention: pipeline tag + footer-derived content fingerprint of the
-    * documents table, so a regenerated corpus misses the stale index).
-    */
-  private[graft] def postingsArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/documents.parquet", "text",
-      "bm25", s"bm25_v2|$sfDir|ws_tokens") + ".parquet"
-
   /** Declared schemas of the persisted posting artifacts — the serve
     * path's in-plan frames ([[bm25TopKStored]] re-stamps them through
-    * [[IO.readStamped]]; the df/stats frames are driver-collected
-    * scalars, no plan to stamp).
+    * [[IO.servedArtifact]]) and the driver-collected df/stats side
+    * tables.
     */
   private[graft] val PostingsTfSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -145,38 +135,31 @@ object Retrieval {
       StructField("dlen", LongType, nullable = false)))
   }
 
-  /** Tokenize → (doc_id, term, tfreq) ONCE and persist, plus the per-doc
-    * length frame derived from it — the production posting index.
-    * Everything per query batch (query-term df, corpus stats, scoring)
-    * reads these text-free frames, never the corpus.
-    */
-  def persistPostings(spark: SparkSession, sfDir: String): String = {
-    val path = postingsArtifactPath(spark, sfDir)
-    val tf = IO.table(spark, sfDir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tfreq"))
-    // file counts sized to the artifact, not to shuffle parallelism: the
-    // side frames are vocab/doc-count-bounded (4 readable splits beat 32
-    // scheduling stubs at any scale; a 100 TB deployment would instead
-    // bucket tf by term and size these by HDFS block)
-    tf.coalesce(4).write.mode("overwrite").parquet(s"$path/tf")
-    val tfStored = spark.read.parquet(s"$path/tf")
-    // everything corpus-derived lands in the artifact: doc lengths,
-    // per-term document frequency (vocab-sized — Zipf-small), and the
-    // (N, total-length) scalar pair — the stored consumer then touches
-    // the posting frame exactly once (the hit join)
-    tfStored
-      .groupBy("doc_id").agg(sum("tfreq").as("dlen"))
-      .coalesce(4).write.mode("overwrite").parquet(s"$path/dlen")
-    tfStored
-      .groupBy("term").agg(count(lit(1)).as("dfreq"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/df")
-    spark.read.parquet(s"$path/dlen")
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum("dlen").cast("double").as("total"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    path
+  private val PostingsDfSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("term", StringType, nullable = false),
+      StructField("dfreq", LongType, nullable = false)))
   }
+
+  private val PostingsStatsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("n", DoubleType, nullable = false),
+      // sum over an empty dlen table is null
+      StructField("total", DoubleType, nullable = true)))
+  }
+
+  /** The persisted posting index: (doc_id, term, tfreq) postings (`tf`),
+    * per-doc lengths (`dlen`), per-term document frequency (`df`) and
+    * the (N, total-length) scalar pair (`stats`). Everything per query
+    * batch (query-term df, corpus stats, scoring) reads these text-free
+    * frames, never the corpus.
+    */
+  private[graft] def postings(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "documents", "text", "bm25", s"bm25_v2|$sfDir|ws_tokens",
+      Seq("tf" -> PostingsTfSchema, "dlen" -> PostingsDlenSchema,
+        "df" -> PostingsDfSchema, "stats" -> PostingsStatsSchema), ".parquet")
 
   /** Per-JVM memo of the query-side constants (term→df map, N, total
     * length) keyed by artifact path — the train-once codebook idiom. The
@@ -211,24 +194,44 @@ object Retrieval {
       k1: Double = 1.2,
       b: Double = 0.75,
       k: Int = 10): DataFrame = {
-    val path = postingsArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, s"$path/stats"))
-      persistPostings(spark, sfDir)
+    val artifact = postings(sfDir)
+    val Seq(tf, dlen, df, stats) = IO.servedArtifact(spark, artifact) { root =>
+      val built = IO.table(spark, sfDir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tfreq"))
+      // file counts sized to the artifact, not to shuffle parallelism: the
+      // side frames are vocab/doc-count-bounded (4 readable splits beat 32
+      // scheduling stubs at any scale; a 100 TB deployment would instead
+      // bucket tf by term and size these by HDFS block)
+      built.coalesce(4).write.mode("overwrite").parquet(s"$root/tf")
+      val tfStored = spark.read.parquet(s"$root/tf")
+      // everything corpus-derived lands in the artifact: doc lengths,
+      // per-term document frequency (vocab-sized — Zipf-small), and the
+      // (N, total-length) scalar pair — the stored consumer then touches
+      // the posting frame exactly once (the hit join)
+      tfStored
+        .groupBy("doc_id").agg(sum("tfreq").as("dlen"))
+        .coalesce(4).write.mode("overwrite").parquet(s"$root/dlen")
+      tfStored
+        .groupBy("term").agg(count(lit(1)).as("dfreq"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/df")
+      spark.read.parquet(s"$root/dlen")
+        .agg(count(lit(1)).cast("double").as("n"),
+          sum("dlen").cast("double").as("total"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
+    }
+    val root = artifact.root(spark)
     val side =
-      if (IO.parquetRowCount(spark, s"$path/df") > DfMapTermCeiling) None
-      else Some(sideConstantsCache.getOrElseUpdate(path, {
+      if (IO.parquetRowCount(spark, s"$root/df") > DfMapTermCeiling) None
+      else Some(sideConstantsCache.getOrElseUpdate(root, {
         // bound the memo to the most recent artifact: many corpus
         // versions in one long-lived driver must not accumulate maps
         sideConstantsCache.clear()
-        val m = spark.read.parquet(s"$path/df").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val st = spark.read.parquet(s"$path/stats").head()
+        val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val st = stats.head()
         (m, st.getDouble(0), st.getDouble(1))
       }))
-    bm25ScoreOverPostings(spark,
-      IO.readStamped(spark, s"$path/tf", PostingsTfSchema), k1, b, k,
-      dlenStored = Some(IO.readStamped(spark, s"$path/dlen", PostingsDlenSchema)),
-      side = side)
+    bm25ScoreOverPostings(spark, tf, k1, b, k, dlenStored = Some(dlen), side = side)
   }
 
   /** Scoring tail over a (doc_id, term, tfreq) posting frame — shared by

@@ -1303,7 +1303,7 @@ object Similarity {
   /** Declared schemas of the persisted ANN artifacts — vectors are dense
     * (a null element is corruption, caught loudly by the stamp), the
     * codebook rows exact by construction; served through
-    * [[IO.readStamped]] so the cosine/assign expressions stay
+    * [[IO.servedArtifact]] so the cosine/assign expressions stay
     * branch-free off a serve.
     */
   private[graft] val CellIndexSchema: org.apache.spark.sql.types.StructType = {
@@ -1322,36 +1322,31 @@ object Similarity {
       StructField("centroid_val", DoubleType, nullable = false)))
   }
 
-  /** Stable artifact path for the persisted CELL INDEX — the corpus as a
-    * (vec_id, v, cid) table under the trained codebook (the IVF index in
-    * table form; mhidx conventions).
+  /** The persisted CELL INDEX — the corpus as a (vec_id, v, cid) table
+    * under the trained codebook (the IVF index in table form; mhidx
+    * conventions), consumed by [[incrementalSemanticNearDup]],
+    * [[semanticContaminationReport]] and [[embIngestStream]]. In
+    * production this is the maintained semantic index (appended per
+    * admitted batch); the corpus-wide assignment pass runs only at
+    * priming.
     */
-  private[graft] def cellIndexArtifactPath(
+  private[graft] def cellIndex(sfDir: String, k: Int = 16, iters: Int = 2): IO.Artifact =
+    IO.Artifact(sfDir, "embeddings", "embedding", "cellidx",
+      s"cellidx_v1|$sfDir|$k|$iters", Seq("" -> CellIndexSchema), ".parquet")
+
+  /** The served cell index, self-priming. */
+  private def cellIndexStored(
       spark: SparkSession,
       sfDir: String,
       k: Int,
-      iters: Int): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/embeddings.parquet",
-      "embedding", "cellidx", s"cellidx_v1|$sfDir|$k|$iters") + ".parquet"
-
-  /** Build the corpus-side cell index ONCE and persist it — the artifact
-    * [[incrementalSemanticNearDup]] and [[embIngestStream]] consume. In
-    * production this is the maintained semantic index (appended per
-    * admitted batch); the corpus-wide assignment pass runs only here.
-    */
-  def persistCellIndex(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 16,
-      iters: Int = 2): String = {
-    val path = cellIndexArtifactPath(spark, sfDir, k, iters)
-    assignToCodebook(
-      corpus(spark, sfDir).select("vec_id", "v")
-        .filter(col("vec_id") % 10 =!= 0),
-      kmeansCodebook(spark, sfDir, k, iters))
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+      iters: Int): DataFrame =
+    IO.servedArtifact(spark, cellIndex(sfDir, k, iters)) { root =>
+      assignToCodebook(
+        corpus(spark, sfDir).select("vec_id", "v")
+          .filter(col("vec_id") % 10 =!= 0),
+        kmeansCodebook(spark, sfDir, k, iters))
+        .write.mode("overwrite").parquet(root)
+    }.head
 
   def incrementalSemanticNearDup(
       spark: SparkSession,
@@ -1376,10 +1371,7 @@ object Similarity {
       k: Int = 16,
       iters: Int = 2,
       tau: Double = 0.35): DataFrame = {
-    val corpusA = IO.servedArtifact(spark,
-      cellIndexArtifactPath(spark, sfDir, k, iters), CellIndexSchema) {
-      persistCellIndex(spark, sfDir, k, iters); ()
-    }
+    val corpusA = cellIndexStored(spark, sfDir, k, iters)
     val batchA = assignToCodebook(batch, kmeansCodebook(spark, sfDir, k, iters))
     val best = corpusA
       .join(broadcast(batchA.select(col("vec_id").as("batch_id"),
@@ -1431,10 +1423,7 @@ object Similarity {
       k: Int = 16,
       iters: Int = 2,
       tau: Double = 0.35): DataFrame = {
-    val trainA = IO.servedArtifact(spark,
-      cellIndexArtifactPath(spark, sfDir, k, iters), CellIndexSchema) {
-      persistCellIndex(spark, sfDir, k, iters); ()
-    }
+    val trainA = cellIndexStored(spark, sfDir, k, iters)
     val evalA = assignToCodebook(
       corpus(spark, sfDir).select("vec_id", "v")
         .filter(col("vec_id") % 10 === 0),
@@ -1470,9 +1459,7 @@ object Similarity {
       k: Int = 16,
       iters: Int = 2,
       tau: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery = {
-    val path = cellIndexArtifactPath(spark, sfDir, k, iters)
-    if (!IO.artifactExists(spark, path))
-      persistCellIndex(spark, sfDir, k, iters)
+    cellIndexStored(spark, sfDir, k, iters)
     arrivals.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$outDir/_checkpoint")
@@ -1652,33 +1639,12 @@ object Similarity {
   // Persisted IVF index (the train-once contract, materialized)
   // --------------------------------------------------------------------
 
-  /** Stable artifact path for a persisted IVF coarse codebook, keyed by
-    * the training parameters PLUS a footer-derived content fingerprint
-    * of the corpus (row count + embedding byte volume — no Spark job):
-    * the artifact outlives the JVM, and a regenerated corpus at the same
-    * path must miss the stale index. Same idiom as
-    * [[graft.operators.Decontaminate.bloomArtifactPath]]; in production
-    * the index lives BESIDE the corpus it derives from.
-    */
-  private[graft] def ivfArtifactPath(
-      spark: SparkSession,
-      sfDir: String,
-      nlist: Int,
-      iters: Int): String = {
-    val embPath = s"$sfDir/embeddings.parquet"
-    val fingerprint = s"${IO.parquetRowCount(spark, embPath)}:" +
-      s"${IO.parquetColumnUncompressedBytes(spark, embPath, "embedding")}"
-    val key = s"ivf_v1|$sfDir|$nlist|$iters|$fingerprint"
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_$digest"
-  }
-
-  /** Train the coarse codebook ONCE and persist it as a parquet table —
-    * the "train" half of the stored-index contract. At 100 TB this is a
-    * scheduled job that reruns only when the corpus version changes;
-    * every search after that loads k×dim rows of data instead of running
-    * Lloyd iterations over the corpus. Only the codebook persists, not
+  /** The persisted IVF coarse codebook (`codebook`), keyed by the
+    * training parameters; in production the index lives BESIDE the
+    * corpus it derives from. Training runs once — at 100 TB a scheduled
+    * job that reruns only when the corpus version changes; every search
+    * after that loads k×dim rows of data instead of running Lloyd
+    * iterations over the corpus. Only the codebook persists, not
     * per-vector cell codes: re-assignment from the loaded codebook is a
     * map-side argmax over nlist centroids (no shuffle, no join), whereas
     * stored codes would have to JOIN the corpus on vec_id — a corpus-wide
@@ -1687,16 +1653,20 @@ object Similarity {
     * huge nlist — and then they belong in the corpus table as a
     * write-time column, not a side artifact.)
     */
-  def persistIvfIndex(
+  private[graft] def ivfIndex(sfDir: String, nlist: Int = 16, iters: Int = 2): IO.Artifact =
+    IO.Artifact(sfDir, "embeddings", "embedding", "ivf", s"ivf_v1|$sfDir|$nlist|$iters",
+      Seq("codebook" -> IvfCodebookSchema))
+
+  /** The served codebook table, self-priming. */
+  private def ivfCodebookStored(
       spark: SparkSession,
       sfDir: String,
-      nlist: Int = 16,
-      iters: Int = 2): String = {
-    val path = ivfArtifactPath(spark, sfDir, nlist, iters)
-    kmeansCodebookTable(spark, sfDir, nlist, iters)
-      .write.mode("overwrite").parquet(s"$path/codebook")
-    path
-  }
+      nlist: Int,
+      iters: Int): DataFrame =
+    IO.servedArtifact(spark, ivfIndex(sfDir, nlist, iters)) { root =>
+      kmeansCodebookTable(spark, sfDir, nlist, iters)
+        .write.mode("overwrite").parquet(s"$root/codebook")
+    }.head
 
   /** IVF search against the PERSISTED codebook artifact, self-priming on
     * first use — the production query path: repeat invocations pay a
@@ -1714,11 +1684,8 @@ object Similarity {
       nlist: Int = 16,
       nprobe: Int = 4,
       iters: Int = 2): DataFrame = {
-    val path = ivfArtifactPath(spark, sfDir, nlist, iters)
     ivfCosineTopKFromTable(spark, sfDir,
-      IO.servedArtifact(spark, s"$path/codebook", IvfCodebookSchema) {
-        persistIvfIndex(spark, sfDir, nlist, iters); ()
-      }, numQueries, k, nprobe)
+      ivfCodebookStored(spark, sfDir, nlist, iters), numQueries, k, nprobe)
   }
 
   // --------------------------------------------------------------------
@@ -1994,13 +1961,9 @@ object Similarity {
       nlist: Int = 0, // 0 = corpus-size-adaptive (see adaptiveNlist)
       iters: Int = 2): DataFrame = {
     val nl = resolveNlist(spark, sfDir, nlist)
-    val path = ivfArtifactPath(spark, sfDir, nl, iters)
     tripletsFromArtifacts(spark, sfDir,
       Cluster.componentMapStored(spark, sfDir),
-      codebookFromTable(
-        IO.servedArtifact(spark, s"$path/codebook", IvfCodebookSchema) {
-          persistIvfIndex(spark, sfDir, nl, iters); ()
-        }))
+      codebookFromTable(ivfCodebookStored(spark, sfDir, nl, iters)))
   }
 
   private def tripletsFromArtifacts(

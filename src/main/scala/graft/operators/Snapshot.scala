@@ -205,46 +205,41 @@ object Snapshot {
       StructField("event_type", StringType, nullable = false)))
   }
 
-  /** Stable artifact path for the persisted BASE span table
-    * ([[eventsScd2Incremental]]'s standing state) — the content-keyed
-    * convention: a regenerated events table misses the stale history.
+  /** The persisted BASE span table ([[eventsScd2Incremental]]'s
+    * standing state): the base-slice SCD-2 history an arriving batch
+    * extends, built once per events-table version.
     */
-  private[graft] def scd2ArtifactPath(
-      spark: SparkSession,
-      sfDir: String): String =
-    IO.contentKeyedArtifactPath(spark, s"$sfDir/events.parquet",
-      "event_type", "scd2", s"scd2_v1|$sfDir|event_type|split1706054400") +
-      ".parquet"
+  private[graft] def scd2Base(sfDir: String): IO.Artifact =
+    IO.Artifact(sfDir, "events", "event_type", "scd2",
+      s"scd2_v1|$sfDir|event_type|split1706054400", Seq("" -> Scd2Schema), ".parquet")
 
-  /** Build the base-slice SCD-2 span table ONCE and persist it — the
-    * standing dimension history an arriving batch extends.
+  /** The served base span table, self-priming.
     *
     * The [[Scd2Schema]] contract (`event_type` non-null) is ENFORCED at
     * write time: a null state would otherwise slip into the artifact and
     * fail every later serve inside the stamped read's `AssertNotNull` —
     * a runtime job failure the serve seam's heal cannot fix (the
-    * re-primed artifact would carry the same null). Asserting here moves
-    * the failure to the prime, where the producer is on the stack and
-    * the message names the contract. Generated events carry no null
-    * event_type at any scale, so this is a guard, not a filter — the
-    * live row's semantics are unchanged.
+    * re-primed artifact would carry the same null). Asserting in the
+    * writer moves the failure to the prime, where the producer is on the
+    * stack and the message names the contract. Generated events carry no
+    * null event_type at any scale, so this is a guard, not a filter —
+    * the live row's semantics are unchanged.
     */
-  def persistScd2Base(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
-    val path = scd2ArtifactPath(spark, sfDir)
-    val raw = IO.table(spark, sfDir, "events")
-    val base = raw.filter(EventTime.tsBeforeUs(raw, Scd2SplitUs))
-      .withColumn("tus", EventTime.tsUs(raw))
-      .select("user_id", "tus", "event_id", "event_type")
-    scd2History(base, "user_id", "tus", "event_id", Seq("event_type"))
-      .withColumn("event_type", GraftSqlBridge.column(AssertNotNull(
-        GraftSqlBridge.expression(col("event_type")),
-        Seq("Scd2Schema declares event_type non-null; a null state " +
-          "reached persistScd2Base — fix the producer or relax the schema"))))
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  private[graft] def scd2BaseStored(spark: SparkSession, sfDir: String): DataFrame =
+    IO.servedArtifact(spark, scd2Base(sfDir)) { root =>
+      import org.apache.spark.sql.GraftSqlBridge
+      import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+      val raw = IO.table(spark, sfDir, "events")
+      val base = raw.filter(EventTime.tsBeforeUs(raw, Scd2SplitUs))
+        .withColumn("tus", EventTime.tsUs(raw))
+        .select("user_id", "tus", "event_id", "event_type")
+      scd2History(base, "user_id", "tus", "event_id", Seq("event_type"))
+        .withColumn("event_type", GraftSqlBridge.column(AssertNotNull(
+          GraftSqlBridge.expression(col("event_type")),
+          Seq("Scd2Schema declares event_type non-null; a null state " +
+            "reached the scd2 base writer — fix the producer or relax the schema"))))
+        .write.mode("overwrite").parquet(root)
+    }.head
 
   private[graft] val Scd2SplitUs = 1706054400000000L // 2024-01-24 UTC
 
@@ -289,10 +284,7 @@ object Snapshot {
       spark: SparkSession,
       sfDir: String,
       batch: DataFrame): DataFrame = {
-    val stored = IO.servedArtifact(spark, scd2ArtifactPath(spark, sfDir),
-      Scd2Schema) {
-      persistScd2Base(spark, sfDir); ()
-    }
+    val stored = scd2BaseStored(spark, sfDir)
     val bSpans = scd2History(batch, "user_id", "tus", "event_id",
       Seq("event_type")).localCheckpoint()
     val affected = bSpans.select("user_id").distinct()
@@ -343,9 +335,7 @@ object Snapshot {
       sfDir: String,
       arrivals: DataFrame,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val path = scd2ArtifactPath(spark, sfDir)
-    if (!IO.artifactExists(spark, path))
-      persistScd2Base(spark, sfDir)
+    scd2BaseStored(spark, sfDir)
     arrivals.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$outDir/_checkpoint")
@@ -413,10 +403,7 @@ object Snapshot {
     * output-sized frame.
     */
   def eventsScd2AsOf(spark: SparkSession, sfDir: String): DataFrame = {
-    val spans = IO.servedArtifact(spark, scd2ArtifactPath(spark, sfDir),
-      Scd2Schema) {
-      persistScd2Base(spark, sfDir); ()
-    }
+    val spans = scd2BaseStored(spark, sfDir)
     import spark.implicits._
     val lookups = AsOfLookupsUs.toDF("asof_us")
     spans.join(broadcast(lookups),

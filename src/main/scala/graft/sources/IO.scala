@@ -58,6 +58,13 @@ object IO {
     * NO-OP — no exchange is added; the width derives from the input,
     * not from a constant tuned to either regime (guide §2
     * "scale-adaptive partitioning").
+    *
+    * PRECONDITION: `df` is a scan, or a scan under narrow operators
+    * (filter, project, explode). The width probe `df.rdd` plans the frame
+    * physically; over a shuffle-bearing input with AQE on, that runs the
+    * upstream query stages as real jobs just to read a partition count,
+    * and the plan is then thrown away and planned again. Every call site
+    * today passes a table scan or a narrow derivative of one.
     */
   def widened(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
@@ -409,54 +416,100 @@ object IO {
       org.apache.spark.sql.types.StructField(n,
         org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** The stored-artifact serve contract in one place: prime the artifact
-    * if (and only if) it is absent — existence resolved scheme-aware via
-    * [[artifactExists]] — then serve it through the [[readStamped]]
-    * nullability seam. Every self-priming stored row threads through
-    * here.
+  /** A stored artifact, declared: the source table it derives from
+    * (`sfDir/table.parquet`) and the column whose footer volume
+    * fingerprints it, a `tag` naming it for humans, the versioned `key`
+    * (scheme-version token first, then every parameter that shapes the
+    * contents), and its PARTS as name -> schema. A part named `""` is
+    * the root directory itself, so a single-part artifact may be one
+    * parquet directory; every other part is the `root/name` directory.
+    * `ext` is a suffix on the root name (`.parquet` on the single-part
+    * artifacts that are one parquet directory).
     *
-    * SELF-HEALING on schema drift: these artifacts are pure caches of a
-    * deterministic build, so when [[readStamped]]'s validation rejects
-    * the on-disk bytes (a producer whose SCHEMA changed without a
-    * version-token bump, a foreign writer — [[ArtifactDriftException]])
-    * or the directory is unreadable outright (a half-written/empty dir
-    * that somehow carries a `_SUCCESS` marker —
-    * `AnalysisException`), the right move is delete-and-re-prime, not
-    * crash — the loud error is reserved for the re-primed artifact
-    * still failing validation, which means the DECLARED schema is out
-    * of step with the producer (a real bug at the declaration site).
-    * The heal catch is scoped to exactly those two types: any other
-    * exception (an executor OOM, an interrupted job) propagates without
-    * deleting a possibly-healthy artifact. Value drift under an
-    * unchanged schema stays invisible to validation — that class still
-    * requires the version-token bump (the mmaudit_v2 convention).
+    * Declarations are cheap values: an operator holds one `def` per
+    * family and serves it through [[servedArtifact]]; tests ask it for
+    * [[root]].
+    */
+  final case class Artifact(
+      sfDir: String,
+      table: String,
+      column: String,
+      tag: String,
+      key: String,
+      parts: Seq[(String, org.apache.spark.sql.types.StructType)],
+      ext: String = "") {
+
+    /** `graft_<tag>_<md5>` under `java.io.tmpdir` (see
+      * [[contentKeyedArtifactPath]]), plus `ext`.
+      */
+    def root(spark: SparkSession): String =
+      contentKeyedArtifactPath(spark, s"$sfDir/$table.parquet", column, tag, key) + ext
+
+    private[sources] def partPaths(root: String): Seq[String] =
+      parts.map { case (name, _) => if (name.isEmpty) root else s"$root/$name" }
+  }
+
+  /** THE stored-artifact mechanism: every persisted index in this
+    * library is named, primed, judged complete, read back and healed
+    * here, and nowhere else. Returns the artifact's parts, in declared
+    * order, each read through the [[readStamped]] nullability seam.
+    *
+    * The contract:
+    *   - ROOT LAYOUT: one directory per artifact, `graft_<tag>_<md5>`
+    *     under `java.io.tmpdir`, the digest covering the declared key
+    *     and the source table's footer fingerprint
+    *     ([[contentKeyedArtifactPath]]). Each named part is a parquet
+    *     directory `root/<name>`; a `""` part is the root itself.
+    *   - PRIME: `write(root)` builds EVERY part under the root, each by
+    *     a committing `df.write.parquet`. It runs when ANY declared part
+    *     lacks its `_SUCCESS` job marker ([[artifactExists]]) — a
+    *     writer that died after its first part leaves an artifact that
+    *     reads as absent, never one served half-built. The root is
+    *     deleted first, so a prime always starts from nothing.
+    *   - HEAL: these artifacts are pure caches of a deterministic build,
+    *     so when reading ANY part fails validation
+    *     ([[ArtifactDriftException]]: a producer whose schema changed
+    *     without a version-token bump, a foreign writer) or fails
+    *     outright (`AnalysisException`: an empty or unreadable part that
+    *     somehow carries its marker), the WHOLE root is deleted, primed
+    *     once more and read again. A re-primed artifact that still fails
+    *     is a loud error: the declared schema is out of step with its
+    *     writer, a bug at the declaration. Any other exception (an
+    *     executor OOM, an interrupted job) propagates without deleting a
+    *     possibly healthy artifact. Value drift under an unchanged
+    *     schema stays invisible to validation; that class needs a
+    *     version-token bump in the key.
     */
   def servedArtifact(
       spark: SparkSession,
-      path: String,
-      expected: org.apache.spark.sql.types.StructType)(prime: => Unit): DataFrame = {
-    if (!artifactExists(spark, path)) prime
-    try readStamped(spark, path, expected)
+      artifact: Artifact)(write: String => Unit): Seq[DataFrame] = {
+    val root = artifact.root(spark)
+    val paths = artifact.partPaths(root)
+    def delete(): Unit = {
+      val p = new org.apache.hadoop.fs.Path(root)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
+    def read(): Seq[DataFrame] =
+      paths.zip(artifact.parts).map { case (p, (_, schema)) => readStamped(spark, p, schema) }
+    if (!paths.forall(artifactExists(spark, _))) { delete(); write(root) }
+    try read()
     catch {
       case drift @ (_: ArtifactDriftException |
                     _: org.apache.spark.sql.AnalysisException) =>
-        System.err.println(s"[graft] stale/foreign artifact at $path — " +
+        System.err.println(s"[graft] stale/foreign artifact at $root — " +
           s"re-priming (${drift.getMessage.take(200)})")
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-        prime
-        readStamped(spark, path, expected)
+        delete()
+        write(root)
+        read()
     }
   }
 
-  /** Stable tmpdir path for a content-keyed persisted artifact — THE
-    * convention every stored artifact in this library shares (band
-    * indexes, component maps, bloom sketches, posting indexes, click
-    * graphs): the digest covers the caller's scheme/params `key` PLUS a
-    * footer-derived fingerprint (row count + uncompressed bytes of
-    * `column`) of the source table, so a regenerated table misses the
-    * stale artifact; `tag` names the file for humans. Callers append
-    * their own extension/subdirs.
+  /** Stable tmpdir path for a content-keyed persisted artifact — the
+    * root naming rule of [[Artifact]]: the digest covers the caller's
+    * scheme/params `key` PLUS a footer-derived fingerprint (row count +
+    * uncompressed bytes of `column`) of the source table, so a
+    * regenerated table misses the stale artifact; `tag` names the
+    * directory for humans.
     */
   def contentKeyedArtifactPath(
       spark: SparkSession,

@@ -34,7 +34,7 @@ object GraftSqlBridge {
 
   /** `DataType.sameType` (equality ignoring nullability at every level) is
     * `private[spark]`; the stored-artifact schema validation in
-    * `graft.sources.IO.readStamped` needs exactly that comparison.
+    * `graft.sources.IO` needs exactly that comparison.
     */
   def sameTypeIgnoreNullability(
       a: org.apache.spark.sql.types.DataType,

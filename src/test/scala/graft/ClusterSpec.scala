@@ -182,7 +182,7 @@ class ClusterSpec extends SparkTestBase {
   }
 
   test("stored component map: persists once, stored rows identical to on-the-fly") {
-    val path = java.nio.file.Paths.get(Cluster.componentArtifactPath(spark, Sf))
+    val path = java.nio.file.Paths.get(Cluster.componentMap(Sf).root(spark))
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path.toString, "_SUCCESS"))
     // cold: primes the artifact
     val cold = Cluster.dedupDecisionMd5Stored(spark, Sf).collect()

@@ -235,7 +235,7 @@ class CorpusOpsSpec extends SparkTestBase {
   test("stored-index neardup decontam: self-primes, reloads, stays row-identical") {
     val live = Decontaminate.nearDupContaminationReport(spark, Sf)
     val artifact = java.nio.file.Paths.get(
-      Decontaminate.neardupIndexArtifactPath(spark, Sf, 32, 8, 5))
+      Decontaminate.nearDupTrainIndex(Sf, 32, 8, 5).root(spark))
     org.apache.commons.io.FileUtils.deleteQuietly(artifact.toFile)
     val cold = Decontaminate.nearDupContaminationReportStored(spark, Sf)
     assert(cold.exceptAll(live).isEmpty && live.exceptAll(cold).isEmpty,
@@ -251,14 +251,13 @@ class CorpusOpsSpec extends SparkTestBase {
     // cold: no memory cache, no artifact on disk → builds and persists
     Decontaminate.clearBloomCache()
     val artifact = java.nio.file.Paths.get(
-      Decontaminate.bloomArtifactPath(spark, Sf, 4, 5, 0.03))
-    java.nio.file.Files.deleteIfExists(artifact)
+      Decontaminate.evalGramBloom(Sf, 4, 5, 0.03).root(spark))
+    org.apache.commons.io.FileUtils.deleteQuietly(artifact.toFile)
     val cold = Decontaminate.contaminationReportBloomStored(spark, Sf, gramWidth = 4)
     assert(cold.exceptAll(exact).isEmpty && exact.exceptAll(cold).isEmpty,
       "self-priming first run must equal the exact report")
-    assert(java.nio.file.Files.exists(artifact), "sketch artifact must persist")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$artifact.grams.parquet")),
+    assert(java.nio.file.Files.exists(artifact.resolve("sketch")), "sketch artifact must persist")
+    assert(java.nio.file.Files.exists(artifact.resolve("grams")),
       "eval-gram table must persist beside the sketch")
     // warm from DISK only (fresh memory cache): must reload, not rebuild —
     // and still match

@@ -83,7 +83,7 @@ class IncrementalSpec extends SparkTestBase {
     val full = Cluster.nearDupComponentsMd5(spark, Sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val corpusOnly = spark.read
-      .parquet(s"${Cluster.corpusClusterStatePath(spark, Sf)}/map")
+      .parquet(s"${Cluster.corpusClusterState(Sf).root(spark)}/map")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = full.filter { case (id, comp) =>
       id % 10 == 0 || corpusOnly(id) != comp
@@ -97,7 +97,7 @@ class IncrementalSpec extends SparkTestBase {
 
   test("stored minhash index: persists once, reloads, verdicts row-identical") {
     val path = java.nio.file.Paths.get(
-      Dedup.minHashIndexArtifactPath(spark, Sf, numPerms = 32, bands = 8))
+      Dedup.minHashIndex(Sf, numPerms = 32, bands = 8).root(spark))
     java.nio.file.Files.deleteIfExists(path.resolve("_SUCCESS"))
     if (java.nio.file.Files.exists(path)) {
       // wipe any artifact from an earlier run so this exercises the cold path

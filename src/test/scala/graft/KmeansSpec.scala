@@ -115,7 +115,7 @@ class KmeansSpec extends SparkTestBase {
 
   test("stored IVF index self-primes a persisted artifact and equals the trained path") {
     val artifact = java.nio.file.Paths.get(
-      Similarity.ivfArtifactPath(spark, Sf, nlist = 16, iters = 2), "codebook")
+      Similarity.ivfIndex(Sf, nlist = 16, iters = 2).root(spark), "codebook")
     // force a cold start: delete the artifact if an earlier run left one
     if (java.nio.file.Files.exists(artifact)) {
       import scala.jdk.CollectionConverters._

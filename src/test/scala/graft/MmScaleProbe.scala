@@ -29,7 +29,7 @@ object MmScaleProbe {
     // session (the full probe holds ~15 checkpointed frames by the time
     // the capstone runs — session aging contaminates its wall there)
     if (args.contains("curation")) {
-      Multimodal.persistMediaFace(spark, sfDir)
+      Multimodal.servedAuditedFace(spark, sfDir)
       val s1 = time("curation_stored")(
         Multimodal.curationDecisionsStored(spark, sfDir).localCheckpoint())
       println(s"MMSCALE curation_stored rows ${s1.count()}")
@@ -43,7 +43,7 @@ object MmScaleProbe {
     // stream reads the persisted face — stream (re)start must cost a
     // thin artifact scan, not the corpus decode it used to pay)
     if (args.contains("stream")) {
-      Multimodal.persistMediaFace(spark, sfDir)
+      Multimodal.servedAuditedFace(spark, sfDir)
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val arrivals = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -67,7 +67,8 @@ object MmScaleProbe {
     // createDataFrame(rdd, schema) round-trip, (c) the r18 plan-level
     // stamped read — each feeding the identical decontam serve core
     if (args.contains("readmodes")) {
-      val path = Multimodal.persistMediaFace(spark, sfDir)
+      Multimodal.servedAuditedFace(spark, sfDir)
+      val path = Multimodal.mediaFace(sfDir).root(spark)
       def serve(face: org.apache.spark.sql.DataFrame, label: String): Unit = {
         val d = time(s"decontam_over_$label")(
           Multimodal.decontamReportOver(face, Multimodal.NearDupLenWindow,
@@ -87,11 +88,11 @@ object MmScaleProbe {
     }
     // stage-level dissection of the stored-vs-live curation gap
     if (args.contains("curstages")) {
-      Multimodal.persistMediaFace(spark, sfDir)
+      Multimodal.servedAuditedFace(spark, sfDir)
       val liveFace = time("face_live_build")(
         Multimodal.fingerprintFace(spark, sfDir).localCheckpoint())
       println(s"MMSCALE live_face parts ${liveFace.rdd.getNumPartitions} rows ${liveFace.count()}")
-      val rawRead = spark.read.parquet(Multimodal.mediaFaceArtifactPath(spark, sfDir))
+      val rawRead = spark.read.parquet(Multimodal.mediaFace(sfDir).root(spark))
       println(s"MMSCALE stored_schema ${rawRead.schema.map(f => s"${f.name}:${f.nullable}").mkString(",")}")
       println(s"MMSCALE live_schema ${liveFace.schema.map(f => s"${f.name}:${f.nullable}").mkString(",")}")
       val storedFace = time("face_stored_read")(
@@ -191,7 +192,7 @@ object MmScaleProbe {
     println(s"MMSCALE decontam flagged ${dcr.count()}")
     // stored-face serve: prime the artifact untimed (the scheduled-job
     // cost), then time the pure serve path
-    Multimodal.persistMediaFace(spark, sfDir)
+    Multimodal.servedAuditedFace(spark, sfDir)
     val dcs = time("decontam_stored")(
       Multimodal.decontamReportStored(spark, sfDir).localCheckpoint())
     println(s"MMSCALE decontam_stored flagged ${dcs.count()}")
@@ -201,7 +202,7 @@ object MmScaleProbe {
       .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" "))
     // stored-face re-curation: prime the audited face untimed, then
     // time the decode-free sweep
-    Multimodal.persistMediaFace(spark, sfDir)
+    Multimodal.servedAuditedFace(spark, sfDir)
     val curS = time("curation_stored")(
       Multimodal.curationDecisionsStored(spark, sfDir).localCheckpoint())
     println(s"MMSCALE curation_stored rows ${curS.count()} kept " +

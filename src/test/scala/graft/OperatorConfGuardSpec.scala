@@ -6,17 +6,19 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard for the operators package: session-conf overrides go
-  * through `LoopWidth` only, and no operator reads the environment, so a
-  * query plans the same way whatever ran before it and whatever the
-  * shell exports.
+/** Source guard for the operators and functions packages: session-conf
+  * overrides go through `LoopWidth` only, and no operator reads the
+  * environment, so a query plans the same way whatever ran before it and
+  * whatever the shell exports. Stored artifacts are reached only through
+  * `IO.servedArtifact`, so every one is keyed, primed, checked and healed
+  * the same way.
   */
 class OperatorConfGuardSpec extends AnyFunSuite {
 
-  private val dir = Paths.get("src/main/scala/graft/operators")
+  private val dirs = Seq("operators", "functions").map(d => Paths.get(s"src/main/scala/graft/$d"))
 
-  private def sources: Seq[Path] = {
-    assert(Files.isDirectory(dir), s"operators sources not found at ${dir.toAbsolutePath}")
+  private def sources: Seq[Path] = dirs.flatMap { dir =>
+    assert(Files.isDirectory(dir), s"sources not found at ${dir.toAbsolutePath}")
     val s = Files.list(dir)
     try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
     finally s.close()
@@ -39,5 +41,11 @@ class OperatorConfGuardSpec extends AnyFunSuite {
   test("no operator reads the environment") {
     val bad = offenders("""sys\.env|System\.getenv""", Set.empty)
     assert(bad.isEmpty, bad.mkString("environment reads in operators:\n", "\n", ""))
+  }
+
+  test("stored artifacts are reached only through IO.servedArtifact") {
+    val bad = offenders(
+      """contentKeyedArtifactPath|artifactExists|readStamped|java\.nio\.file""", Set.empty)
+    assert(bad.isEmpty, bad.mkString("artifact access outside IO.servedArtifact:\n", "\n", ""))
   }
 }

@@ -422,7 +422,7 @@ class PlanAuditSpec extends SparkTestBase {
     // through a columnar FileScan (an ExistingRDD leaf would mean the
     // Row-deserialization pass is back), with the non-null stamp
     // visible as nullable=false output attributes
-    operators.Multimodal.persistMediaFace(spark, Sf)
+    operators.Multimodal.servedAuditedFace(spark, Sf)
     val face = operators.Multimodal.servedMediaFace(spark, Sf)
     assert(!face.schema("sig").nullable && !face.schema("media_id").nullable,
       face.schema.treeString)
@@ -569,7 +569,7 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("incremental components consume the stored index: batch broadcasts, no corpus re-sign") {
     // prime the artifact so the audited plan is the steady-state one
-    operators.Cluster.persistCorpusClusterState(spark, Sf)
+    operators.Cluster.corpusClusterStateStored(spark, Sf)
     val df = operators.Cluster.incrementalComponentsMd5(spark, Sf)
     val plan = df.queryExecution.executedPlan.toString
     // the corpus side must arrive from the persisted parquet state

@@ -362,7 +362,7 @@ class Round10OpsSpec extends SparkTestBase {
         r.getBoolean(3), r.getString(4))).toSet
     val delta = rows(Snapshot.eventsScd2Incremental(spark, Sf))
     assert(delta.nonEmpty, "the batch slice must change some spans")
-    val stored = rows(spark.read.parquet(Snapshot.scd2ArtifactPath(spark, Sf)))
+    val stored = rows(spark.read.parquet(Snapshot.scd2Base(Sf).root(spark)))
     // merge: delta rows replace same-(user, valid_from) stored rows
     val deltaKeys = delta.map(r => (r._1, r._2))
     val merged = stored.filterNot(r => deltaKeys.contains((r._1, r._2))) ++ delta

@@ -131,7 +131,7 @@ class Round11LateOpsSpec extends SparkTestBase {
 
   test("trendingIncremental: batch-extended state equals from-scratch") {
     // clear any stale artifact so the test exercises the prime+extend path
-    val path = Events.trendingArtifactPath(spark, Sf)
+    val path = Events.trendingBase(Sf).root(spark)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     val inc = Events.trendingIncremental(spark, Sf).localCheckpoint()
     val scratch = Events.trendingItems(spark, Sf)

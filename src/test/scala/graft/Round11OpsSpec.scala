@@ -90,7 +90,7 @@ class Round11OpsSpec extends SparkTestBase {
     val full = operators.Events.retention(spark, Sf)
       .select("cohort_day", "offset_days", "active_users")
     // base-only matrix from the persisted compact state
-    val path = operators.Events.retentionArtifactPath(spark, Sf)
+    val path = operators.Events.retentionBase(Sf).root(spark)
     val seen = spark.read.parquet(s"$path/seen")
     val ft = spark.read.parquet(s"$path/first_touch")
     val base = seen.join(ft, "user_id")

@@ -200,7 +200,7 @@ class Round16OpsSpec extends SparkTestBase {
     assert(stored.length === live.length && stored.toSet === live.toSet,
       "the artifact-backed serve must reproduce the live verdicts exactly")
     // the self-primed artifact is the corpus-slice fingerprint face
-    val path = Multimodal.mediaIndexArtifactPath(spark, Sf)
+    val path = Multimodal.mediaIndex(Sf).root(spark)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
     val idx = spark.read.parquet(path)
     assert(idx.columns.toSet === Set("media_id", "kind", "n_bytes", "sig", "ffix"))

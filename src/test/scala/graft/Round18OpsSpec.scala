@@ -15,6 +15,10 @@ class Round18OpsSpec extends SparkTestBase {
 
   private def freshDir(): String = IO.scratchDir("r18stamp")
 
+  /** A single-part declared artifact with a root no other test shares. */
+  private def seamArtifact(schema: StructType): IO.Artifact =
+    IO.Artifact(Sf, "documents", "text", "r18seam", s"r18seam|${freshDir()}", Seq("" -> schema))
+
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("tag", StringType, nullable = true),
@@ -102,23 +106,25 @@ class Round18OpsSpec extends SparkTestBase {
 
   test("servedArtifact self-heals a stale-schema artifact by re-priming") {
     import spark.implicits._
-    val dir = freshDir() + "/heal.parquet"
+    val expected = StructType(Seq(StructField("id", LongType, nullable = false)))
+    val artifact = seamArtifact(expected)
+    val dir = artifact.root(spark)
     // plant a FOREIGN artifact (wrong schema) at the serve path
     Seq(("junk", 1.5)).toDF("a", "b").write.mode("overwrite").parquet(dir)
     var primes = 0
-    val expected = StructType(Seq(StructField("id", LongType, nullable = false)))
-    val served = IO.servedArtifact(spark, dir, expected) {
+    val served = IO.servedArtifact(spark, artifact) { root =>
       primes += 1
-      Seq(7L, 8L).toDF("id").write.mode("overwrite").parquet(dir)
-    }
+      Seq(7L, 8L).toDF("id").write.mode("overwrite").parquet(root)
+    }.head
     // the cache property: drift is deleted and re-primed, not fatal
     assert(primes === 1 && served.collect().map(_.getLong(0)).sorted.toSeq === Seq(7L, 8L))
     // but a PRIME that produces the wrong schema is a real bug at the
     // declaration site and must stay loud (one heal attempt, no loop)
-    val bad = freshDir() + "/bad.parquet"
+    val badArtifact = seamArtifact(expected)
+    val bad = badArtifact.root(spark)
     val e = intercept[IllegalStateException] {
-      IO.servedArtifact(spark, bad, expected) {
-        Seq(("x", 1)).toDF("s", "i").write.mode("overwrite").parquet(bad)
+      IO.servedArtifact(spark, badArtifact) { root =>
+        Seq(("x", 1)).toDF("s", "i").write.mode("overwrite").parquet(root)
       }
     }
     assert(e.getMessage.contains(bad))
@@ -126,13 +132,14 @@ class Round18OpsSpec extends SparkTestBase {
 
   test("servedArtifact primes exactly once and resolves existence scheme-aware") {
     import spark.implicits._
-    val dir = freshDir() + "/d.parquet"
     var primes = 0
     val expected = StructType(Seq(StructField("id", LongType, nullable = false)))
-    def serve() = IO.servedArtifact(spark, dir, expected) {
+    val artifact = seamArtifact(expected)
+    val dir = artifact.root(spark)
+    def serve() = IO.servedArtifact(spark, artifact) { root =>
       primes += 1
-      Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(dir)
-    }
+      Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(root)
+    }.head
     assert(serve().count() === 3L && primes === 1)
     assert(serve().count() === 3L && primes === 1, "second serve must not re-prime")
     assert(IO.artifactExists(spark, dir) && !IO.artifactExists(spark, dir + ".nope"))

@@ -17,7 +17,7 @@ class StoredGraphSpec extends SparkTestBase {
     // memoized its footer row count
     val cold: Path = Files.createTempDirectory("graft_cold_sf")
     FileUtils.copyDirectory(new java.io.File(Sf), cold.toFile)
-    val artifact = LinkGraph.graphArtifactPath(spark, cold.toString)
+    val artifact = LinkGraph.transitionGraph(cold.toString).root(spark)
     try {
       assert(!Files.exists(java.nio.file.Paths.get(artifact)))
       val coldRows = SparkEntry.queries("graph_scc")(spark, cold.toString).collect()
