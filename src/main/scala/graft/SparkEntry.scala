@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat_ws, lit, posexplode, round, sort_array, when}
 
-import graft.functions.{TextAnalysis, VectorCentroidAggregator}
+import graft.functions.{HashFamily, TextAnalysis, VectorCentroidAggregator}
 import graft.operators.{Cluster, CorpusPrep, Curate, DataQuality, Decontaminate, Dedup, Events, Importance, Layout, LinkGraph, Multimodal, Pca, PlayStore, QualityModel, Relational, Retrieval, Similarity, Snapshot, Tokenize}
 import graft.sources.IO
 
@@ -224,14 +224,14 @@ object SparkEntry {
     "txt_normalize" -> (TextAnalysis.normalize _),
     "dedup_exact_normalized" -> (Dedup.exactByNormalizedText _),
     "dedup_exact_hash" -> (Dedup.exactByHash _),
-    "dedup_minhash_pairs" -> ((s, d) => Dedup.minHashNearDupPairs(s, d)),
-    "dedup_simhash_pairs" -> ((s, d) => Dedup.simHashNearDupPairs(s, d)),
-    // oracled twins over 60-bit md5-prefix hashes (DuckDB cannot reproduce
+    "dedup_minhash_pairs" -> ((s, d) => Dedup.minHashNearDupPairs(s, d, HashFamily.Xx)),
+    "dedup_simhash_pairs" -> ((s, d) => Dedup.simHashNearDupPairs(s, d, HashFamily.Xx)),
+    // the same pipelines under the Md5 family (DuckDB cannot reproduce
     // xxhash64; it CAN reproduce md5 plus the bit-majority / permutation /
     // banding / verification pipelines, so these rows hash-verify the whole
     // near-dup machinery end to end)
-    "dedup_simhash_md5" -> ((s, d) => Dedup.simHashNearDupPairsMd5(s, d)),
-    "dedup_minhash_md5" -> ((s, d) => Dedup.minHashNearDupPairsMd5(s, d)),
+    "dedup_simhash_md5" -> ((s, d) => Dedup.simHashNearDupPairs(s, d, HashFamily.Md5)),
+    "dedup_minhash_md5" -> ((s, d) => Dedup.minHashNearDupPairs(s, d, HashFamily.Md5)),
     // LSH banding recall vs exact token-set ground truth at J >= 0.9
     "dedup_minhash_eval" -> (Dedup.minhashRecallEval _),
     "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(s, d)),
@@ -699,34 +699,34 @@ object SparkEntry {
     "mm_face_segments" -> (Multimodal.faceSegmentsQuery _),
     // the 60-bit shingle-simhash media fingerprint itself, hash-pinned
     // against the DuckDB hex/md5/majority replay
-    "mm_fingerprint" -> (Multimodal.fingerprintQuery _),
+    "mm_fingerprint" -> ((s, d) => Multimodal.fingerprintQuery(s, d, HashFamily.Md5)),
     // the xxhash64 production fast path of the fingerprint (rows-only:
     // DuckDB cannot replay xxhash64; Round17OpsSpec pins its near-dup
     // pair set EXACTLY equal to the oracled md5 face's on the spec
     // corpus, and the xN probe bounds the corpus-scale divergence to
     // Hamming-boundary pairs — the dedup_minhash_pairs twin convention)
-    "mm_fingerprint_fast" -> (Multimodal.fingerprintFastQuery _),
+    "mm_fingerprint_fast" -> ((s, d) => Multimodal.fingerprintQuery(s, d, HashFamily.Xx)),
     // near-dup over the media fingerprint: same byte size up to a small
     // window, Hamming ≤ 7 on the 60-bit simhash, segment-face L1 as the
     // retained secondary check; candidates from the lossless 4×15-bit
     // band-plus-flip blocking; the oracle is the NAIVE all-pairs
     // definition, so the hash match re-proves the blocking lossless
     // every round
-    "mm_neardup_pairs" -> ((s, d) => Multimodal.nearDupPairs(s, d)),
+    "mm_neardup_pairs" -> ((s, d) => Multimodal.nearDupPairs(s, d, HashFamily.Md5)),
     // the fast family's SERVE surface (r18): pairs and the full
     // dedup decision over the xxhash64 face — rows-only under the
     // mm_fingerprint_fast justification (DuckDB cannot replay
     // xxhash64); Round18OpsSpec pins both frames IDENTICAL to their
-    // oracled md5 twins on the spec corpus, MmScaleProbe bounds the
+    // Md5-family rows on the spec corpus, MmScaleProbe bounds the
     // xN divergence to the characterized margin band
-    "mm_neardup_pairs_fast" -> ((s, d) => Multimodal.nearDupPairsFast(s, d)),
-    "mm_dedup_decision_fast" -> ((s, d) => Multimodal.nearDupDecisionFast(s, d)),
+    "mm_neardup_pairs_fast" -> ((s, d) => Multimodal.nearDupPairs(s, d, HashFamily.Xx)),
+    "mm_dedup_decision_fast" -> ((s, d) => Multimodal.nearDupDecision(s, d, HashFamily.Xx)),
     // components over the media pair graph + the media-specific keep
     // rule (highest fidelity read off the REAL parsed headers —
     // width×height / sample_rate×channels — ties to lowest id);
     // oracle = naive pairs into a recursive-CTE closure with the
     // analytic fidelity
-    "mm_dedup_decision" -> ((s, d) => Multimodal.nearDupDecision(s, d)),
+    "mm_dedup_decision" -> ((s, d) => Multimodal.nearDupDecision(s, d, HashFamily.Md5)),
     // the %10 batch carve vs the corpus slice: best corpus match within
     // all three windows (smallest Hamming, then L1, then id) or is_new
     "mm_incremental_neardup" -> ((s, d) => Multimodal.incrementalNearDup(s, d)),
@@ -6142,7 +6142,7 @@ object SparkEntry {
          FROM scored QUALIFY "rank" <= 5 ORDER BY qid, "rank"""",
     // full simhash pipeline on md5-prefix hashes: majority vote per bit
     // (ties set, empty -> 0), 4 x 16-bit packed band keys, bucket self-join,
-    // bit_count(xor) Hamming verify — mirrors Dedup.simHashNearDupPairsMd5
+    // bit_count(xor) Hamming verify — mirrors Dedup.simHashNearDupPairs(Md5)
     "dedup_simhash_md5" ->
       """WITH t AS (
            SELECT doc_id, list_transform(list_distinct(string_split(text, ' ')),

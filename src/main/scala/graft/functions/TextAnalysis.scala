@@ -659,16 +659,16 @@ object TextAnalysis {
     // the truncated window produced); position 1 always exists, so an
     // all-null least can't arise. The md5-gram VALUES are unchanged —
     // same oracle.
-    val gram = (0 until k).map(o => s"element_at(toks, i + $o)").mkString(", ")
     val win = (0 until w).map(o => s"element_at(gh, i + $o)").mkString(", ")
     // widen-if-narrow: the md5-per-gram pass is the winnow family's
     // dominant map cost and the single-row-group testdata scan would run
     // it in ONE task (IO.widened — no-op at production scan widths)
     IO.widened(docs.select("doc_id", "text"))
       .withColumn("toks", split(col("text"), " "))
-      .withColumn("gh", expr(
-        s"""transform(sequence(1, greatest(size(toks) - ${k - 1}, 1)),
-            i -> cast(conv(substring(md5(cast(concat_ws(' ', $gram) as binary)), 1, 15), 16, 10) as bigint))"""))
+      .withColumn("gh",
+        transform(sequence(lit(1), greatest(size(col("toks")) - (k - 1), lit(1))),
+          i => HashFamily.Md5.feature(
+            concat_ws(" ", (0 until k).map(o => element_at(col("toks"), i + o)): _*))))
       .select(col("doc_id"),
         explode(array_distinct(expr(
           s"""transform(sequence(1, greatest(size(gh) - ${w - 1}, 1)),

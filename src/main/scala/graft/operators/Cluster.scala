@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextAnalysis
+import graft.functions.{HashFamily, TextAnalysis}
 import graft.sources.IO
 
 /** Near-duplicate CLUSTERING: the step after pair generation that near-dup
@@ -333,7 +333,7 @@ object Cluster {
   private[graft] def nearDupComponentsMd5Unsorted(
       spark: SparkSession,
       sfDir: String): DataFrame =
-    documentComponents(spark, sfDir, Dedup.simHashNearDupPairsMd5Unsorted(spark, sfDir))
+    documentComponents(spark, sfDir, Dedup.simHashNearDupPairsUnsorted(spark, sfDir, HashFamily.Md5))
 
   /** Near-dup clusters over the EXACT-SUBSTRING span graph (md5 twin):
     * documents sharing any verbatim width-8 token window land in one
@@ -369,7 +369,7 @@ object Cluster {
     */
   def dedupDecisionMd5(spark: SparkSession, sfDir: String): DataFrame =
     decisionOverComponents(
-      documentComponents(spark, sfDir, Dedup.simHashNearDupPairsMd5Unsorted(spark, sfDir)))
+      documentComponents(spark, sfDir, Dedup.simHashNearDupPairsUnsorted(spark, sfDir, HashFamily.Md5)))
 
   private def decisionOverComponents(comp: DataFrame): DataFrame =
     comp
@@ -475,10 +475,10 @@ object Cluster {
     IO.servedArtifact(spark, corpusClusterState(sfDir)) { root =>
       val corpus = IO.table(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 =!= 0)
-      Dedup.simHashBandedFrom(Dedup.simHashSignaturesMd5From(corpus))
+      Dedup.simHashBandedFrom(Dedup.simHashSignatures(corpus, HashFamily.Md5))
         .write.mode("overwrite").parquet(s"$root/index")
       val banded = spark.read.parquet(s"$root/index")
-      val pairs = Dedup.simHashPairs(banded, maxHamming = 3, sorted = false)
+      val pairs = Dedup.simHashPairs(banded, maxHamming = 3)
       val comp = connectedComponents(pairs, "doc_a", "doc_b")
         .withColumnRenamed("node", "doc_id")
       corpus.select("doc_id")
@@ -522,7 +522,7 @@ object Cluster {
     val batchDocs = IO.table(spark, sfDir, "documents")
       .filter(col("doc_id") % 10 === 0)
     val batchBanded = Dedup
-      .simHashBandedFrom(Dedup.simHashSignaturesMd5From(batchDocs))
+      .simHashBandedFrom(Dedup.simHashSignatures(batchDocs, HashFamily.Md5))
       .localCheckpoint()
     // FUSED candidate generation: batch×corpus and batch×batch band
     // collisions come from ONE broadcast join of the batch banding
@@ -629,7 +629,7 @@ object Cluster {
   def dedupKeepBestMd5(spark: SparkSession, sfDir: String): DataFrame = {
     val quality = TextAnalysis.qualityScores(spark, sfDir)
       .select("doc_id", "quality_score")
-    documentComponents(spark, sfDir, Dedup.simHashNearDupPairsMd5Unsorted(spark, sfDir))
+    documentComponents(spark, sfDir, Dedup.simHashNearDupPairsUnsorted(spark, sfDir, HashFamily.Md5))
       .join(quality, "doc_id")
       .withColumn("rn", row_number().over(
         Window.partitionBy("component_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextAnalysis
+import graft.functions.{HashFamily, TextAnalysis}
 import graft.sources.IO
 
 /** Corpus-preparation operators for a training-data pipeline: sequence
@@ -639,10 +639,8 @@ object CorpusPrep {
       sfDir: String,
       seed: Long = 42L,
       numBuckets: Int = 64): DataFrame = {
-    val key = conv(
-      substring(md5(concat(lit(seed.toString), lit(":"),
-        col("doc_id").cast("string")).cast("binary")), 1, 15), 16, 10)
-      .cast("long")
+    val key = HashFamily.Md5.feature(
+      concat(lit(seed.toString), lit(":"), col("doc_id").cast("string")))
     val w = Window.partitionBy("bucket").orderBy("shuffle_key", "doc_id")
     IO.table(spark, sfDir, "documents")
       .select(col("doc_id"), key.as("shuffle_key"))
@@ -674,24 +672,19 @@ object CorpusPrep {
       sfDir: String,
       seed: Long = 42L,
       numBuckets: Int = 64): DataFrame = {
-    val skey = conv(
-      substring(md5(concat(lit(seed.toString), lit(":"),
-        col("doc_id").cast("string")).cast("binary")), 1, 15), 16, 10)
-      .cast("long")
+    val skey = HashFamily.Md5.feature(
+      concat(lit(seed.toString), lit(":"), col("doc_id").cast("string")))
     val w = Window.partitionBy("bucket").orderBy("shuffle_key", "doc_id")
     IO.table(spark, sfDir, "documents")
       .select(col("doc_id"),
         skey.as("shuffle_key"),
-        conv(substring(md5(col("text").cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("dh"),
+        HashFamily.Md5.feature(col("text")).as("dh"),
         size(split(col("text"), " ")).cast("long").as("ntok"))
       .withColumn("bucket", pmod(col("shuffle_key"), lit(numBuckets.toLong)))
       .withColumn("pos", row_number().over(w).cast("long"))
-      .withColumn("slot", conv(
-        substring(md5(concat_ws(":",
-          col("bucket").cast("string"), col("pos").cast("string"),
-          col("dh").cast("string")).cast("binary")), 1, 15), 16, 10)
-        .cast("long"))
+      .withColumn("slot", HashFamily.Md5.feature(concat_ws(":",
+        col("bucket").cast("string"), col("pos").cast("string"),
+        col("dh").cast("string"))))
       .groupBy("bucket")
       .agg(
         count(lit(1)).as("n_docs"),

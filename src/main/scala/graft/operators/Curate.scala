@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextAnalysis
+import graft.functions.{HashFamily, TextAnalysis}
 import graft.sources.IO
 
 /** End-to-end corpus curation: the composed pipeline a training-data run
@@ -254,7 +254,7 @@ object Curate {
         (col("in_corpus").isNotNull || col("rn") > 1).cast("int").as("exact_dup"))
     val nearDup = Dedup.incrementalNearDupFrames(
       batch.select("doc_id"),
-      Dedup.simHashBandedFrom(Dedup.simHashSignaturesMd5From(batch)),
+      Dedup.simHashBandedFrom(Dedup.simHashSignatures(batch, HashFamily.Md5)),
       Cluster.corpusClusterStateStored(spark, sfDir).head,
       maxHamming = 3)
       .select(col("doc_id"), (!col("is_new")).cast("int").as("near_dup"))
@@ -407,10 +407,8 @@ object Curate {
     // epoch shuffle ([[CorpusPrep.shuffleOrder]]'s key), then packing in
     // SHUFFLED order — shard is the shuffle bucket, offsets accumulate
     // along the training read order
-    val shuffleKey = conv(
-      substring(md5(concat(lit(seed.toString), lit(":"),
-        col("doc_id").cast("string")).cast("binary")), 1, 15), 16, 10)
-      .cast("long")
+    val shuffleKey = HashFamily.Md5.feature(
+      concat(lit(seed.toString), lit(":"), col("doc_id").cast("string")))
     val wPos = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     val wOff = Window.partitionBy("shard").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

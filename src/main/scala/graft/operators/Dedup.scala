@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.sources.IO
 
 /** Deduplication operators for a large-scale training-data pipeline, over the
@@ -19,11 +20,11 @@ import graft.sources.IO
   *     banding is what makes the problem tractable, and the band count is
   *     the recall/cost dial (8 bands × 4 rows ⇒ collision prob.
   *     1-(1-j^4)^8, ≈0.97 at j=0.8, ≈0.06 at j=0.3);
-  *   - feature hashes are xxhash64 (codegen'd Catalyst expression, no
-  *     UDFs); each near-dup pipeline also ships an md5-prefix twin
-  *     (`...Md5`) whose hashing the DuckDB oracle can replay, so the
-  *     banding/verification machinery is hash-compared end to end while
-  *     xxhash64 stays the fast default.
+  *   - every near-dup builder takes a [[graft.functions.HashFamily]] for
+  *     its feature and band-key hashes (codegen'd Catalyst expressions, no
+  *     UDFs): `Xx` (xxhash64) is the production cost, `Md5` (a 60-bit md5
+  *     prefix) is what the DuckDB oracle replays, so one pipeline is
+  *     hash-compared end to end under Md5 and runs unchanged under Xx.
   */
 object Dedup {
 
@@ -104,87 +105,130 @@ object Dedup {
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("copies"))
       .orderBy("fp")
 
-  /** Word tokens + 3-word shingles of a text column. Documents shorter than
-    * the shingle width fall back to a single whole-text shingle.
+  /** Word 3-shingles of a text column as the minhash feature column
+    * `feats`. Documents shorter than the shingle width fall back to a
+    * single whole-text shingle.
     */
-  private def withShingles(docs: DataFrame): DataFrame = {
+  private def shingleFeats(docs: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
     // widen-if-narrow: shingling + the downstream minhash fold are the
     // dominant map cost and the single-row-group testdata scan would
     // run them in ONE task (IO.widened — no-op at production widths)
     IO.widened(docs)
       .withColumn("toks", toks)
-      .withColumn("shingles",
+      .withColumn("feats",
         when(size(col("toks")) >= 3,
           transform(sequence(lit(0), size(col("toks")) - 3),
             i => concat_ws(" ", slice(col("toks"), i + 1, lit(3)))))
           .otherwise(array(col("text"))))
   }
 
-  /** Per-document minhash signatures — SHUFFLE-FREE (plan-audited): each
-    * shingle is string-hashed once and the native minhash_sig expression
-    * folds all numPerms affine-permutation minima in a single per-row pass
-    * (see [[graft.functions.MinHashSigExpr]]); no explode, no per-(doc,
-    * shingle) exchange. Only the small (doc_id, band-key) rows derived
-    * downstream ever cross the wire.
+  /** Per-document minhash signatures of a `feats` frame — SHUFFLE-FREE
+    * (plan-audited): each feature is hashed once and the native
+    * minhash_sig expression folds all numPerms affine-permutation minima
+    * in a single per-row pass (see [[graft.functions.MinHashSigExpr]]);
+    * no explode, no per-(doc, feature) exchange. Only the small
+    * (doc_id, band-key) rows derived downstream ever cross the wire.
     */
+  private def minHashSigs(withFeats: DataFrame, family: HashFamily, numPerms: Int): DataFrame =
+    withFeats.select(col("doc_id"),
+      call_function("minhash_sig",
+        transform(col("feats"), f => family.feature(f)), lit(numPerms)).as("sig"))
+
+  /** [[minHashSigs]] over the 3-shingles of the documents table. */
   def minHashSignatures(
       spark: SparkSession,
       sfDir: String,
+      family: HashFamily,
       numPerms: Int = 32): DataFrame =
-    withShingles(IO.table(spark, sfDir, "documents"))
-      .select(col("doc_id"),
-        expr(s"minhash_sig(transform(shingles, s -> xxhash64(s)), $numPerms)")
-          .as("sig"))
+    minHashSigs(shingleFeats(IO.table(spark, sfDir, "documents")), family, numPerms)
 
   /** Per-document simhash signatures — SHUFFLE-FREE (plan-audited); see
-    * [[graft.functions.SimHash64Expr]].
+    * [[graft.functions.SimHash64Expr]]. Under Md5 bits 60-63 of every
+    * token hash are zero, so those signature bits are zero in both
+    * engines (majority over all-zero).
     */
-  def simHashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    IO.widened(IO.table(spark, sfDir, "documents").select("doc_id", "text"))
+  def simHashSignatures(docs: DataFrame, family: HashFamily): DataFrame =
+    // widen-if-narrow: the per-token signature fold is the family's
+    // dominant map cost and the single-row-group testdata scan would run
+    // it in ONE task (IO.widened — no-op at production scan widths)
+    IO.widened(docs.select("doc_id", "text"))
       .select(col("doc_id"),
-        expr("simhash64(transform(array_distinct(split(text, ' ')), t -> xxhash64(t)))")
+        call_function("simhash64",
+          transform(array_distinct(split(col("text"), " ")), t => family.feature(t)))
           .as("simhash"))
 
-  /** MinHash+LSH near-duplicate pairs.
-    *
-    * Pipeline: shingle → `numPerms` min-hashes (seeded xxhash64) → group the
-    * signature into `bands` bands of `numPerms/bands` rows → explode to one
-    * 64-bit band key per band (band index hashed in) → self-join per band
-    * bucket → exact token-set Jaccard on the candidates only → threshold.
-    *
-    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+  /** The (doc_id, band_key) banding of a `feats` frame: minhash
+    * signatures, then `bands` bands of `numPerms/bands` rows, each
+    * hashed into ONE long key ([[graft.functions.HashFamily.bandKey]])
+    * with the band index hashed in, so rows from different bands cannot
+    * equi-join short of a 64-bit collision — the same risk class the
+    * banding already accepts. A separate (pos, band) pair would shuffle
+    * 12 bytes of key where 8 suffice; at 100 TB the banded frame is the
+    * highest-volume intermediate and its key width is the exchange cost.
     */
-  /** The (doc_id, band_key) banded frame of [[minHashNearDupPairs]],
-    * pre-checkpoint — package-private so PlanAuditSpec can assert the
-    * candidate join's exchange keys on the live lineage (the checkpoint in
-    * the public path hides the join plan from the returned frame).
-    *
-    * ONE long key per band: the band index is hashed into the key (first
-    * xxhash64 argument), so rows from different bands cannot equi-join
-    * short of a 64-bit collision — the same risk class the banding already
-    * accepts. A separate (pos, band) pair would shuffle 12 bytes of key
-    * where 8 suffice; at 100 TB the banded frame is the highest-volume
-    * intermediate and its key width is the exchange cost.
-    */
-  private[graft] def minHashBanded(
-      spark: SparkSession,
-      sfDir: String,
+  private def minHashBands(
+      withFeats: DataFrame,
+      family: HashFamily,
       numPerms: Int,
       bands: Int): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val rows = numPerms / bands
-    val bandHashes = array((0 until bands).map { b =>
-      xxhash64(lit(b) +: (b * rows until (b + 1) * rows)
-        .map(j => element_at(col("sig"), j + 1)): _*)
+    val bandKeys = array((0 until bands).map { b =>
+      family.bandKey(b, (b * rows until (b + 1) * rows)
+        .map(j => element_at(col("sig"), j + 1)))
     }: _*)
-    minHashSignatures(spark, sfDir, numPerms)
-      .select(col("doc_id"), explode(bandHashes).as("band_key"))
+    minHashSigs(withFeats, family, numPerms)
+      .select(col("doc_id"), explode(bandKeys).as("band_key"))
   }
 
+  /** The (doc_id, band_key) shingle banding of a documents frame,
+    * pre-checkpoint: [[minHashNearDupPairs]]' head, the incremental
+    * rows' corpus and batch sides, and the PlanAuditSpec seam for the
+    * candidate join's exchange keys (the checkpoint in the public path
+    * hides the join plan from the returned frame).
+    */
+  private[graft] def minHashBanded(
+      docs: DataFrame,
+      family: HashFamily,
+      numPerms: Int = 32,
+      bands: Int = 8): DataFrame =
+    minHashBands(shingleFeats(docs), family, numPerms, bands)
+
+  /** Md5-minhash banding over DISTINCT WORD TOKENS instead of shingles —
+    * the feature choice for the decontamination gate, where the verify
+    * metric is token-set Jaccard and the candidate generator must fire
+    * with the same probability structure (shingle-minhash bands catch
+    * verbatim passage reuse; unigram-set bands catch reordered /
+    * paraphrase-shaped overlap, which IS the decontam threat model).
+    */
+  private[graft] def minHashBandedTokensMd5From(
+      docs: DataFrame,
+      numPerms: Int = 32,
+      bands: Int = 8): DataFrame =
+    minHashBands(
+      IO.widened(docs)
+        .withColumn("feats", array_distinct(split(col("text"), " "))),
+      HashFamily.Md5, numPerms, bands)
+
+  /** MinHash+LSH near-duplicate pairs.
+    *
+    * Pipeline: shingle → `numPerms` min-hashes → group the signature into
+    * `bands` bands of `numPerms/bands` rows → explode to one 64-bit band
+    * key per band (band index hashed in) → self-join per band bucket →
+    * exact token-set Jaccard on the candidates only → threshold. Under
+    * [[graft.functions.HashFamily.Md5]] every hash is reproducible in
+    * DuckDB SQL (the affine permutation mixing is replayed there in
+    * HUGEINT mod-2^64 arithmetic), so the whole pipeline is
+    * hash-compared (`dedup_minhash_md5`); `dedup_minhash_pairs` runs it
+    * under Xx.
+    *
+    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    */
   def minHashNearDupPairs(
       spark: SparkSession,
       sfDir: String,
+      family: HashFamily,
       numPerms: Int = 32,
       bands: Int = 8,
       minJaccard: Double = 0.5): DataFrame = {
@@ -203,7 +247,8 @@ object Dedup {
     // blocks are not fault-tolerant to executor loss — a production
     // pipeline that needs recovery would persist to reliable storage
     // instead (SCALING.md).
-    val docs = minHashBanded(spark, sfDir, numPerms, bands).localCheckpoint()
+    val docs = minHashBanded(IO.table(spark, sfDir, "documents"), family, numPerms, bands)
+      .localCheckpoint()
     verifyTokenJaccard(spark, sfDir, bandedCandidates(docs), minJaccard)
   }
 
@@ -279,39 +324,6 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** md5-hashed twin of [[minHashNearDupPairs]]: shingles are hashed with
-    * the 60-bit md5 prefix and bands keyed by md5 of the signature slice —
-    * both reproducible in DuckDB SQL (the affine permutation mixing is
-    * replayed there in HUGEINT mod-2^64 arithmetic), so the ENTIRE
-    * minhash pipeline — shingling, permutation minima, banding, candidate
-    * join, exact Jaccard verify — gets a hash-compared correctness row.
-    * xxhash64 stays the library default (one cheap hash vs a cryptographic
-    * digest per shingle).
-    */
-  def minHashNearDupPairsMd5(
-      spark: SparkSession,
-      sfDir: String,
-      numPerms: Int = 32,
-      bands: Int = 8,
-      minJaccard: Double = 0.5): DataFrame = {
-    val docs = minHashBandedMd5(spark, sfDir, numPerms, bands).localCheckpoint()
-    verifyTokenJaccard(spark, sfDir, bandedCandidates(docs), minJaccard)
-  }
-
-  /** The (doc_id, band_key) md5-minhash banding ([[minHashNearDupPairsMd5]]'s
-    * head, factored so the incremental path shares it).
-    */
-  private[graft] def minHashBandedMd5(
-      spark: SparkSession,
-      sfDir: String,
-      numPerms: Int = 32,
-      bands: Int = 8): DataFrame =
-    minHashBandedMd5From(IO.table(spark, sfDir, "documents"), numPerms, bands)
-
-  /** [[minHashBandedMd5]] over an explicit documents frame — the seam the
-    * persisted-index path uses to band the corpus and the batch
-    * separately.
-    */
   /** Declared schemas of the persisted dedup artifacts — the nullability
     * every stored serve re-stamps through [[IO.servedArtifact]] (all
     * columns non-null by construction: ids and hashes from non-null
@@ -354,54 +366,6 @@ object Dedup {
       StructField("corpus_id", LongType, nullable = false)))
   }
 
-  private[graft] def minHashBandedMd5From(
-      docs: DataFrame,
-      numPerms: Int = 32,
-      bands: Int = 8): DataFrame =
-    bandMd5Sigs(
-      withShingles(docs).withColumn("feats", col("shingles")),
-      numPerms, bands)
-
-  /** Md5-minhash banding over DISTINCT WORD TOKENS instead of shingles —
-    * the feature choice for the decontamination gate, where the verify
-    * metric is token-set Jaccard and the candidate generator must fire
-    * with the same probability structure (shingle-minhash bands catch
-    * verbatim passage reuse; unigram-set bands catch reordered /
-    * paraphrase-shaped overlap, which IS the decontam threat model).
-    */
-  private[graft] def minHashBandedTokensMd5From(
-      docs: DataFrame,
-      numPerms: Int = 32,
-      bands: Int = 8): DataFrame =
-    bandMd5Sigs(
-      IO.widened(docs)
-        .withColumn("feats", array_distinct(split(col("text"), " "))),
-      numPerms, bands)
-
-  /** Shared banding tail: md5-prefix hash each feature string, fold the
-    * numPerms affine minima in one per-row pass, md5-pack each band of
-    * signature rows into a single 8-byte join key.
-    */
-  private def bandMd5Sigs(
-      withFeats: DataFrame,
-      numPerms: Int,
-      bands: Int): DataFrame = {
-    require(numPerms % bands == 0, "bands must divide numPerms")
-    val rows = numPerms / bands
-    val sigs = withFeats
-      .select(col("doc_id"),
-        expr(s"""minhash_sig(transform(feats,
-                 s -> cast(conv(substring(md5(cast(s as binary)), 1, 15), 16, 10) as bigint)),
-                 $numPerms)""").as("sig"))
-    val bandKeys = array((0 until bands).map { b =>
-      val elems = (b * rows until (b + 1) * rows)
-        .map(j => s"element_at(sig, ${j + 1})").mkString(", ")
-      expr(s"""cast(conv(substring(md5(cast(concat_ws(',', $b, $elems) as binary)),
-               1, 15), 16, 10) as bigint)""")
-    }: _*)
-    sigs.select(col("doc_id"), explode(bandKeys).as("band_key"))
-  }
-
   /** Incremental MINHASH dedup verdicts (the token-set member of the
     * incremental family beside [[incrementalExact]] and
     * [[incrementalNearDupMd5]]): every batch doc (doc_id % 10 == 0 —
@@ -422,7 +386,8 @@ object Dedup {
       numPerms: Int = 32,
       bands: Int = 8,
       minJaccard: Double = 0.5): DataFrame = {
-    val banded = minHashBandedMd5(spark, sfDir, numPerms, bands).localCheckpoint()
+    val banded = minHashBanded(IO.table(spark, sfDir, "documents"), HashFamily.Md5,
+      numPerms, bands).localCheckpoint()
     incrementalMinHashFrames(spark, sfDir,
       banded.filter(col("doc_id") % 10 === 0),
       banded.filter(col("doc_id") % 10 =!= 0),
@@ -455,13 +420,13 @@ object Dedup {
       bands: Int = 8,
       minJaccard: Double = 0.5): DataFrame = {
     incrementalMinHashFrames(spark, sfDir,
-      minHashBandedMd5From(
+      minHashBanded(
         IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 === 0),
-        numPerms, bands),
+        HashFamily.Md5, numPerms, bands),
       IO.servedArtifact(spark, minHashIndex(sfDir, numPerms, bands)) { root =>
-        minHashBandedMd5From(
+        minHashBanded(
           IO.table(spark, sfDir, "documents").filter(col("doc_id") % 10 =!= 0),
-          numPerms, bands)
+          HashFamily.Md5, numPerms, bands)
           .write.mode("overwrite").parquet(root)
       }.head,
       minJaccard)
@@ -514,15 +479,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** SimHash near-duplicate pairs.
-    *
-    * 64-bit SimHash over distinct word tokens (bit b set iff the majority of
-    * token hashes have bit b set), bucketed on 4 × 16-bit bands (two docs
-    * within Hamming distance 3 of each other must agree on at least one
-    * 16-bit band — pigeonhole, so recall is exact up to distance 3; beyond
-    * that the banding is best-effort), then exact Hamming verification via
-    * bit_count(xor).
-    */
   /** The (doc_id, simhash, band_key) banding of a signatures frame. Band
     * position and 16-bit band value packed into ONE long join key
     * (pos << 16 | band): a single 8-byte key crosses the exchange instead
@@ -535,22 +491,13 @@ object Dedup {
         expr(s"${b.toLong << 16} | (shiftright(simhash, ${b * 16}) & 65535)")
       }: _*)).as("band_key"))
 
-  /** Banded xxhash64 signatures, pre-materialization (test seam — see
-    * [[minHashBanded]]).
+  /** Band self-join + exact Hamming verify over a banded signatures
+    * frame, unsorted: consumers that immediately re-shuffle the pairs
+    * (the clustering loop) would pay a range exchange for an ordering the
+    * next stage destroys.
     */
-  private[graft] def simHashBanded(spark: SparkSession, sfDir: String): DataFrame =
-    simHashBandedFrom(simHashSignatures(spark, sfDir))
-
-  /** Band self-join + exact Hamming verify over a banded signatures frame.
-    * `sorted = false` skips the presentation sort — consumers that
-    * immediately re-shuffle the pairs (the clustering loop) would pay a
-    * range exchange for an ordering the next stage destroys.
-    */
-  private[graft] def simHashPairs(
-      banded: DataFrame,
-      maxHamming: Int,
-      sorted: Boolean = true): DataFrame = {
-    val pairs = banded.as("a")
+  private[graft] def simHashPairs(banded: DataFrame, maxHamming: Int): DataFrame =
+    banded.as("a")
       .join(banded.as("b"),
         col("a.band_key") === col("b.band_key")
           && col("a.doc_id") < col("b.doc_id"))
@@ -558,24 +505,14 @@ object Dedup {
         expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    if (sorted) pairs.orderBy("doc_a", "doc_b") else pairs
-  }
 
-  /** [[simHashNearDupPairsMd5]] without the presentation sort (cluster
+  /** [[simHashNearDupPairs]] without the presentation sort (cluster
     * input).
     */
-  private[graft] def simHashNearDupPairsMd5Unsorted(
+  private[graft] def simHashNearDupPairsUnsorted(
       spark: SparkSession,
       sfDir: String,
-      maxHamming: Int = 3): DataFrame =
-    simHashPairs(
-      materializeIfLarge(simHashBandedFrom(simHashSignaturesMd5(spark, sfDir)),
-        estWindowRows(spark, sfDir)),
-      maxHamming, sorted = false)
-
-  def simHashNearDupPairs(
-      spark: SparkSession,
-      sfDir: String,
+      family: HashFamily,
       maxHamming: Int = 3): DataFrame =
     // size-adaptive localCheckpoint: both sides of the band self-join read
     // the banded frame; without materialization the signature stage runs
@@ -586,44 +523,29 @@ object Dedup {
     // output — rowCount undersized the gate 50× right at the sf0.1 cut
     // and every clustering consumer paid the signature pass twice.
     simHashPairs(
-      materializeIfLarge(simHashBanded(spark, sfDir),
+      materializeIfLarge(
+        simHashBandedFrom(simHashSignatures(IO.table(spark, sfDir, "documents"), family)),
         estWindowRows(spark, sfDir)),
       maxHamming)
 
-  /** md5-prefix signatures: the token hash is the first 60 bits of
-    * md5(token) instead of xxhash64 — slower (md5 is cryptographic) but
-    * reproducible by the DuckDB oracle, so the WHOLE simhash pipeline
-    * (majority vote, 16-bit banding, Hamming verify) gets a hash-compared
-    * correctness row. Bits 60-63 of every feature hash are zero, so those
-    * signature bits are zero in both engines (majority over all-zero).
-    * xxhash64 stays the library default.
+  /** SimHash near-duplicate pairs.
+    *
+    * 64-bit SimHash over distinct word tokens (bit b set iff the majority of
+    * token hashes have bit b set), bucketed on 4 × 16-bit bands (two docs
+    * within Hamming distance 3 of each other must agree on at least one
+    * 16-bit band — pigeonhole, so recall is exact up to distance 3; beyond
+    * that the banding is best-effort), then exact Hamming verification via
+    * bit_count(xor). Under Md5 the whole pipeline (majority vote, 16-bit
+    * banding, Hamming verify) is hash-compared (`dedup_simhash_md5`);
+    * `dedup_simhash_pairs` runs it under Xx.
     */
-  def simHashSignaturesMd5(spark: SparkSession, sfDir: String): DataFrame =
-    simHashSignaturesMd5From(IO.table(spark, sfDir, "documents"))
-
-  /** [[simHashSignaturesMd5]] over an explicit documents frame — the seam
-    * the incremental clustering path uses to sign the batch and the
-    * corpus carve separately.
-    */
-  private[graft] def simHashSignaturesMd5From(docs: DataFrame): DataFrame =
-    // widen-if-narrow: the md5-per-token signature fold is the family's
-    // dominant map cost and the single-row-group testdata scan would run
-    // it in ONE task (IO.widened — no-op at production scan widths)
-    IO.widened(docs.select("doc_id", "text"))
-      .select(col("doc_id"),
-        expr("""simhash64(transform(array_distinct(split(text, ' ')),
-                t -> cast(conv(substring(md5(cast(t as binary)), 1, 15), 16, 10) as bigint)))""")
-          .as("simhash"))
-
-  /** [[simHashNearDupPairs]] over the md5-prefix signatures (oracled twin). */
-  def simHashNearDupPairsMd5(
+  def simHashNearDupPairs(
       spark: SparkSession,
       sfDir: String,
+      family: HashFamily,
       maxHamming: Int = 3): DataFrame =
-    simHashPairs(
-      materializeIfLarge(simHashBandedFrom(simHashSignaturesMd5(spark, sfDir)),
-        estWindowRows(spark, sfDir)),
-      maxHamming)
+    simHashNearDupPairsUnsorted(spark, sfDir, family, maxHamming)
+      .orderBy("doc_a", "doc_b")
 
   // --------------------------------------------------------------------
   // Incremental dedup: new batch vs existing corpus.
@@ -687,7 +609,7 @@ object Dedup {
   }
 
   /** Near-dup incremental dedup over md5-prefix simhash (the oracled
-    * shape; swap in [[simHashSignatures]] for the xxhash64 fast path).
+    * shape).
     * Every batch doc gets a verdict row: `is_new` = no corpus doc within
     * `maxHamming`; duplicates carry their nearest corpus doc (min
     * hamming, ties to the lowest corpus doc_id — deterministic).
@@ -702,7 +624,7 @@ object Dedup {
       spark: SparkSession,
       sfDir: String,
       maxHamming: Int = 3): DataFrame = {
-    val sigs = simHashSignaturesMd5(spark, sfDir)
+    val sigs = simHashSignatures(IO.table(spark, sfDir, "documents"), HashFamily.Md5)
     val corpusBanded = simHashBandedFrom(sigs.filter(col("doc_id") % 10 =!= 0))
     val batchBanded = simHashBandedFrom(sigs.filter(col("doc_id") % 10 === 0))
     val batchIds = sigs.filter(col("doc_id") % 10 === 0).select("doc_id")
@@ -1114,6 +1036,15 @@ object Dedup {
     */
   private[graft] val VerifySetBroadcastCeiling = 1000000L
 
+  /** The verify-join gate over a lookup side of `rows` rows: BROADCAST at
+    * or below [[VerifySetBroadcastCeiling]] (the streamed side then runs
+    * its lookups map-side and the fat columns never cross an exchange),
+    * shuffle-hash past it (never sort-merge: sorting the candidates buys
+    * nothing).
+    */
+  private[operators] def broadcastIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= VerifySetBroadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
+
   /** Fuzzy near-dup pairs by EDIT DISTANCE: blocked candidate generation,
     * then an exact Levenshtein verify — the entity-resolution-style
     * complement to the token-set (MinHash/Jaccard) and bit-sketch (SimHash)
@@ -1321,8 +1252,7 @@ object Dedup {
       w: Int = 8,
       maxDf: Int = 50): DataFrame =
     substringSpanPairsBy(IO.table(spark, sfDir, "documents"),
-      win => conv(substring(md5(win.cast("binary")), 1, 15), 16, 10)
-        .cast("long"),
+      win => HashFamily.Md5.feature(win),
       w, maxDf, estWindowRows(spark, sfDir), sorted = false)
 
   /** [[substringSpanPairsBy]] with xxhash64 window hashes — the library
@@ -1476,9 +1406,10 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** [[substringSpanPairsBy]] with 60-bit md5-prefix window hashes — the
-    * DuckDB-replayable twin (same convention as the other md5 twins);
-    * spec-pinned to emit the identical pair set as the xxhash64 path.
+  /** [[substringSpanPairsBy]] with 60-bit md5-prefix window hashes
+    * ([[graft.functions.HashFamily.Md5]]'s feature hash), which DuckDB
+    * replays; spec-pinned to emit the identical pair set as the
+    * xxhash64 rolling path ([[substringSpanPairs]]).
     */
   def substringSpanPairsMd5(
       spark: SparkSession,
@@ -1486,8 +1417,7 @@ object Dedup {
       w: Int = 8,
       maxDf: Int = 50): DataFrame =
     substringSpanPairsBy(IO.table(spark, sfDir, "documents"),
-      win => conv(substring(md5(win.cast("binary")), 1, 15), 16, 10)
-        .cast("long"),
+      win => HashFamily.Md5.feature(win),
       w, maxDf, estWindowRows(spark, sfDir))
 
   /** WINNOWING-based near-dup pairs — [[substringSpanPairs]]'s criterion

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.HashFamily
 
 /** Multimodal-column plumbing: media payloads are opaque BINARY columns with
   * a typed metadata struct riding next to them. The Spark-side contract —
@@ -119,16 +121,34 @@ object Multimodal {
   private[graft] def mediaFromDocumentsFrame(docs: DataFrame): Dataset[MediaRecord] = {
     import docs.sparkSession.implicits._
     rawDecodeBuilds.incrementAndGet()
-    docs
-      .select(col("doc_id"), col("text"), col("n_chars"))
-      .as[(Long, String, Long)]
-      .map { case (id, text, nChars) =>
-        val bytes = text.getBytes("UTF-8")
-        val kind = if (id % 3 == 0) "image" else if (id % 3 == 1) "audio" else "video"
-        MediaRecord(id, bytes, MediaMeta(kind, bytes.length.toLong,
-          (nChars % 640).toInt + 1, (nChars % 480).toInt + 1))
-      }
+    decodeDocs(docs)(_.map { case (id, bytes, nChars) =>
+      MediaRecord(id, bytes, MediaMeta(rawKind(id), bytes.length.toLong,
+        (nChars % 640).toInt + 1, (nChars % 480).toInt + 1))
+    })
   }
+
+  /** The documents-to-media row decode every media pass shares: each
+    * (doc_id, text, n_chars) row reaches the per-partition `body` as its
+    * doc_id, the UTF-8 bytes of its text and its n_chars. A null `text`
+    * or `n_chars` fails with an error naming the doc_id; unboxed, it
+    * would be a bare NullPointerException that names no row.
+    */
+  private def decodeDocs[T: Encoder](docs: DataFrame)(
+      body: Iterator[(Long, Array[Byte], Long)] => Iterator[T]): Dataset[T] =
+    docs.select(col("doc_id"), col("text"), col("n_chars"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.LONG))
+      .mapPartitions { it =>
+        body(it.map { case (id, text, nChars) =>
+          if (text == null || nChars == null)
+            throw new IllegalArgumentException(s"media decode: document doc_id $id " +
+              s"has a null ${if (text == null) "text" else "n_chars"}")
+          (id, text.getBytes("UTF-8"), nChars.longValue)
+        })
+      }
+
+  /** The modality of a raw-text media payload (the %3 map). */
+  private def rawKind(id: Long): String =
+    if (id % 3 == 0) "image" else if (id % 3 == 1) "audio" else "video"
 
   /** ========== STUB ==========
     * Real implementation would decode the payload with an image/audio codec
@@ -209,21 +229,17 @@ object Multimodal {
   private[graft] def mediaWithHeadersFrame(docs: DataFrame): Dataset[MediaRecord] = {
     import docs.sparkSession.implicits._
     containerDecodeBuilds.incrementAndGet()
-    docs
-      .select(col("doc_id"), col("text"), col("n_chars"))
-      .as[(Long, String, Long)]
-      .map { case (id, text, nChars) =>
-        val data = text.getBytes("UTF-8")
-        val w = (nChars % 640).toInt + 1
-        val h = (nChars % 480).toInt + 1
-        val payload = encodeContainer(id, nChars, data)
-        val kind = (id % 6) match {
-          case 0 | 1 | 3 | 4 => "image"
-          case 2 => "audio"
-          case _ => "video"
-        }
-        MediaRecord(id, payload, MediaMeta(kind, payload.length.toLong, w, h))
+    decodeDocs(docs)(_.map { case (id, data, nChars) =>
+      val w = (nChars % 640).toInt + 1
+      val h = (nChars % 480).toInt + 1
+      val payload = encodeContainer(id, nChars, data)
+      val kind = (id % 6) match {
+        case 0 | 1 | 3 | 4 => "image"
+        case 2 => "audio"
+        case _ => "video"
       }
+      MediaRecord(id, payload, MediaMeta(kind, payload.length.toLong, w, h))
+    })
   }
 
   /** The container SYNTHESIS kernel — the single definition of how a
@@ -713,11 +729,11 @@ object Multimodal {
     mediaWithHeadersFrame(graft.sources.IO.widened(
       spark.read.parquet(s"$sfDir/documents.parquet")))
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+        val wh = HashFamily.Md5.windowHash()
         it.flatMap { r =>
           val (fmt, _, _, _, _) = parseMediaDims(r.payload)
           extractContent(r.payload).map { c =>
-            (r.media_id, fmt, c.length.toLong, mediaSimHash(c, md), segmentFix(c))
+            (r.media_id, fmt, c.length.toLong, mediaSimHash(c, wh), segmentFix(c))
           }
         }
       }
@@ -748,13 +764,13 @@ object Multimodal {
     mediaWithHeadersFrame(graft.sources.IO.widened(
       spark.read.parquet(s"$sfDir/documents.parquet")))
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+        val wh = HashFamily.Md5.windowHash()
         it.map { r =>
           val (fmt, w, h, sr, ch) = parseMediaDims(r.payload)
           val c = extractContent(r.payload)
           ContentAuditedRow(r.media_id, fmt,
             fidelityOf(fmt, w, h, sr, ch, r.meta.sizeBytes),
-            c.map(_.length.toLong), c.map(mediaSimHash(_, md)),
+            c.map(_.length.toLong), c.map(mediaSimHash(_, wh)),
             c.map(segmentFix))
         }
       }
@@ -799,19 +815,20 @@ object Multimodal {
 
   /** The cross-format content DEDUP DECISION: connected components over
     * the [[contentNearDupPairs]] graph — which spans container formats —
-    * plus the media keep rule: keep the HIGHEST-FIDELITY container of
-    * the content ([[fidelityFrame]]'s real header parse: pixels for
-    * image/video, rate×channels for audio; the units are modality
-    * priorities, not a common scale — a deterministic curation
-    * preference, ties to the lowest id). This is the multimodal
-    * curation shape: the same content wrapped as PNG and JPEG keeps
-    * the container whose parse reports the most signal. Media whose
-    * extraction fails never enter the pair graph and decide as
-    * self-rooted singletons (their keep is trivially true).
+    * plus the media keep rule ([[fidelityKeep]]): keep the
+    * HIGHEST-FIDELITY container of the content (the real header parse:
+    * pixels for image/video, rate×channels for audio; the units are
+    * modality priorities, not a common scale — a deterministic curation
+    * preference, ties to the lowest id). This is the multimodal curation
+    * shape: the same content wrapped as PNG and JPEG keeps the container
+    * whose parse reports the most signal. Media whose extraction fails
+    * never enter the pair graph and decide as self-rooted singletons
+    * (their keep is trivially true).
     *
-    * Scale shape: identical to [[nearDupDecision]] — the lossless pair
-    * core feeds the star contraction ((long, long) edges only),
-    * decision windows partition by component, fidelity joins by id.
+    * ONE container pass (r20): the fused content face
+    * ([[contentAuditedFace]], checkpointed) carries the content
+    * fingerprint AND the dims-derived fidelity per media; extraction
+    * failures ride the same frame with null face columns.
     */
   def contentNearDupDecision(
       spark: SparkSession,
@@ -819,37 +836,14 @@ object Multimodal {
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame = {
-    // ONE container pass (r20): the fused content face carries the
-    // content fingerprint AND the dims-derived fidelity per media (the
-    // old shape re-synthesized and re-walked every container a second
-    // time through fidelityFrame just for its fidelity column, then
-    // re-attached it by a media_id join). Extraction failures ride the
-    // same frame with null face columns — exactly the rows the old left
-    // join produced.
     val fused = contentAuditedFace(spark, sfDir).localCheckpoint()
     val face = fused.where(col("sig").isNotNull)
       .select(col("media_id"), col("fmt").as("kind"),
         assertNN(col("content_bytes"), "content face n_bytes").as("n_bytes"),
         assertNN(col("sig"), "content face sig").as("sig"),
         assertNN(col("ffix"), "content face ffix").as("ffix"))
-    val pairs = nearDupPairsOver(face, lenWindow, maxHamming, l1Window,
-      kindBlocked = false)
-    val comp = Cluster.connectedComponents(pairs, "media_a", "media_b")
-      .withColumnRenamed("node", "media_id")
-    val base = fused
-      .join(comp, Seq("media_id"), "left")
-      .select(col("media_id"), col("fmt"),
-        coalesce(col("component"), col("media_id")).as("component_id"),
-        col("content_bytes"), col("fidelity"))
-    val wC = Window.partitionBy("component_id")
-    val wK = Window.partitionBy("component_id")
-      .orderBy(desc("fidelity"), asc("media_id"))
-    base
-      .withColumn("cluster_size", count(lit(1)).over(wC))
-      .withColumn("keep", row_number().over(wK) === 1)
-      .select("media_id", "component_id", "cluster_size", "fmt",
-        "content_bytes", "fidelity", "keep")
-      .orderBy("media_id")
+    fidelityKeep(face, fused.select("media_id", "fmt", "content_bytes", "fidelity"),
+      kindBlocked = false, lenWindow, maxHamming, l1Window)
   }
 
   /** Header-metadata extraction as a registered query: synthesize real
@@ -932,120 +926,54 @@ object Multimodal {
     }
   }
 
-  private val HexDigits = "0123456789ABCDEF".getBytes("US-ASCII")
-
   /** The 60-bit HIGH-ENTROPY media fingerprint: simhash over the
     * DISTINCT 8-byte sliding windows of the payload (stride 1), each
-    * window hashed through md5 of its uppercase-hex image — bit b of
-    * the result is set iff at least half the distinct window hashes
-    * have bit b set. This is what the segment-mean face could not be:
-    * positional AND high-entropy. Consecutive-byte windows encode local
-    * order (two payloads with equal byte statistics but different
-    * arrangements share no windows), the majority vote tolerates small
-    * edits (an edit perturbs ~8 of ~n windows), and stride 1 makes the
-    * window multiset invariant under content shifts of any offset —
-    * the r15 face's measured failure was exactly a low-entropy signal
-    * whose cross-copy coincidence rate grew ~5×/corpus-decade.
+    * window hashed by the family's window hash
+    * ([[graft.functions.HashFamily.windowHash]]) — bit b of the result is
+    * set iff at least half the distinct window hashes have bit b set.
+    * This is what the segment-mean face could not be: positional AND
+    * high-entropy. Consecutive-byte windows encode local order (two
+    * payloads with equal byte statistics but different arrangements
+    * share no windows), the majority vote tolerates small edits (an edit
+    * perturbs ~8 of ~n windows), and stride 1 makes the window multiset
+    * invariant under content shifts of any offset — the r15 face's
+    * measured failure was exactly a low-entropy signal whose cross-copy
+    * coincidence rate grew ~5×/corpus-decade.
     *
-    * md5-prefix hashing (first 60 bits of md5 of the hex image) is the
-    * repo's standing oracle-twin convention (`Dedup.simHashSignaturesMd5`):
-    * DuckDB replays the identical chain with hex()/md5()/substr, so the
-    * fingerprint is hash-certifiable end to end. A production swap-in
-    * point for a perceptual hash (pHash/chromaprint) keeps every join
-    * downstream unchanged.
+    * Under Md5 (md5 of each window's uppercase-hex image) DuckDB replays
+    * the identical chain with hex()/md5()/substr, so the fingerprint is
+    * hash-certifiable end to end; one md5 per payload byte, ~0.5 µs/byte
+    * single-thread. Under Xx (XXH64 of the packed window) the same
+    * structure costs ~20× less per byte — the honest production
+    * fingerprint cost at 100 TB, where decode+hash IS the dominant pass.
+    * A production swap-in point for a perceptual hash (pHash/chromaprint)
+    * keeps every join downstream unchanged.
     *
-    * Cost shape: one md5 per payload byte, map-side in the scan task —
-    * embarrassingly parallel, no exchange; ~0.5 µs/byte single-thread.
-    */
-  private[graft] def mediaSimHash(payload: Array[Byte]): Long =
-    mediaSimHash(payload, java.security.MessageDigest.getInstance("MD5"))
-
-  /** [[mediaSimHash]] with a caller-owned digest — the per-partition
-    * loops hoist the `getInstance` provider lookup out of the per-row
-    * path (one digest per task, reset per shingle).
-    */
-  private[graft] def mediaSimHash(
-      payload: Array[Byte],
-      md: java.security.MessageDigest): Long = {
-    val n = payload.length
-    val hx = new Array[Byte](2 * n)
-    var i = 0
-    while (i < n) {
-      val v = payload(i) & 0xff
-      hx(2 * i) = HexDigits(v >> 4)
-      hx(2 * i + 1) = HexDigits(v & 15)
-      i += 1
-    }
-    val m = math.max(n - 7, 1)
-    val seen = new java.util.HashSet[java.lang.Long]()
-    val cnt = new Array[Int](60)
-    var distinct = 0
-    i = 0
-    while (i < m) {
-      val off = 2 * i
-      val len = math.min(16, 2 * n - off)
-      md.reset()
-      md.update(hx, off, len)
-      val d = md.digest()
-      var h = 0L
-      var j = 0
-      while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-      h = h >>> 4 // first 15 hex chars of the digest = top 60 bits
-      if (seen.add(h)) {
-        distinct += 1
-        var b = 0
-        while (b < 60) { cnt(b) += ((h >>> b) & 1L).toInt; b += 1 }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 60) {
-      if (2 * cnt(b) >= distinct) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
-
-  /** PRODUCTION FAST-PATH twin of [[mediaSimHash]]: the same distinct
-    * stride-1 8-byte-window / per-bit-majority structure, but each
-    * window hashes through Spark's own XXH64 of the window bytes packed
-    * big-endian into a long (seed 42 — the codegen'd `xxhash64` column
-    * function's seed) instead of md5 of its uppercase-hex image. No hex
-    * expansion, no cryptographic digest: ~20× cheaper per byte, the
-    * honest production fingerprint cost at 100 TB where decode+hash IS
-    * the dominant pass. xxhash64 is not replayable in the DuckDB
-    * oracle, so the registered row is rows-only (the
-    * `dedup_minhash_pairs` convention: fast row for production shape,
-    * md5 twin for hash certification). Equivalence contract: on the
-    * spec corpus the two faces emit the EXACT same near-dup pair set
-    * (Round17OpsSpec); at ×N both are 60-bit majority-vote estimators
-    * of the same window-set resemblance, so genuinely-near pairs whose
+    * The two families agree on the spec corpus's EXACT near-dup pair set
+    * (Round17OpsSpec). At ×N both are 60-bit majority-vote estimators of
+    * the same window-set resemblance, so genuinely-near pairs whose
     * per-bit majorities sit at small margins can project differently
     * under a different window hash — the probes measure ~98% pair-set
     * agreement (16/863 divergent at ×10, 197/8.6k at ×100), every
-    * divergent pair inside [0,7] under its accepting face and [8,31]
+    * divergent pair inside [0,7] under its accepting family and [8,31]
     * under the rejecting one. Byte-identical payloads have identical
     * window sets, hence identical sigs under BOTH families — exact
     * duplicates can never diverge — and solid background (≥ 12 under
-    * the certified face) never enters either accept set. A deployment
-    * picks ONE family and calibrates the threshold against it; the md5
-    * face remains the certifiable reference.
+    * Md5) never enters either accept set. A deployment picks ONE family
+    * and calibrates the threshold against it; Md5 remains the certifiable
+    * reference.
+    *
+    * `wh` is the caller's per-partition window hasher, reused across rows.
     */
-  private[graft] def mediaSimHashFast(payload: Array[Byte]): Long = {
-    val n = payload.length
-    val m = math.max(n - 7, 1)
+  private[graft] def mediaSimHash(payload: Array[Byte], wh: HashFamily.WindowHash): Long = {
+    wh.load(payload)
+    val m = math.max(payload.length - 7, 1)
     val seen = new java.util.HashSet[java.lang.Long]()
     val cnt = new Array[Int](60)
     var distinct = 0
     var i = 0
     while (i < m) {
-      var w = 0L
-      val len = math.min(8, n - i)
-      var j = 0
-      while (j < len) { w = (w << 8) | (payload(i + j) & 0xffL); j += 1 }
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashLong(w, 42L) >>> 4
+      val h = wh(i)
       if (seen.add(h)) {
         distinct += 1
         var b = 0
@@ -1062,33 +990,9 @@ object Multimodal {
     sig
   }
 
-  /** [[fingerprintFace]] over the fast-path signature — identical shape
-    * (media_id, kind, n_bytes, sig, ffix), drop-in for every banded
-    * consumer.
-    */
-  private[graft] def fingerprintFaceFast(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // widened like the md5 face — the xx window hash is still the pass's
-    // dominant cost
-    mediaFromDocumentsFrame(graft.sources.IO.widened(
-      spark.read.parquet(s"$sfDir/documents.parquet")))
-      .mapPartitions { it =>
-        it.map { r =>
-          (r.media_id, r.meta.kind, r.payload.length.toLong,
-            mediaSimHashFast(r.payload), segmentFix(r.payload))
-        }
-      }
-      .toDF("media_id", "kind", "n_bytes", "sig", "ffix")
-  }
-
-  /** The fast fingerprint as a registered row (rows-only — see
-    * [[mediaSimHashFast]]; Round17OpsSpec pins its pair set identical
-    * to the md5 face's).
-    */
-  def fingerprintFastQuery(spark: SparkSession, sfDir: String): DataFrame =
-    fingerprintFaceFast(spark, sfDir)
-      .select(col("media_id"), col("kind"), col("n_bytes"), col("sig"))
-      .orderBy("media_id")
+  /** [[mediaSimHash]] of one payload with a fresh window hasher. */
+  private[graft] def mediaSimHash(payload: Array[Byte], family: HashFamily): Long =
+    mediaSimHash(payload, family.windowHash())
 
   private[graft] def featureFace(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -1103,31 +1007,37 @@ object Multimodal {
 
   /** The fingerprint face — the shared input of the near-dup operators
     * since round 16: one decode pass emitting (media_id, kind, n_bytes,
-    * sig, ffix) where sig is [[mediaSimHash]] and ffix the segment-mean
-    * face ([[segmentFix]]) retained as the secondary verify.
+    * sig, ffix) where sig is [[mediaSimHash]] under `family` and ffix the
+    * segment-mean face ([[segmentFix]]) retained as the secondary verify.
     */
-  private[graft] def fingerprintFace(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def fingerprintFace(
+      spark: SparkSession,
+      sfDir: String,
+      family: HashFamily): DataFrame =
     // widen-if-narrow at the HEAVY entry point only (IO.widened): the
-    // md5-per-byte fingerprint kernel dominates this pass; the light
+    // per-byte fingerprint kernel dominates this pass; the light
     // mm rows (dims/extent/quality/segments) keep the plain scan — the
     // round-close bench measured the blanket widen as a 1.5-2x
     // regression on exactly those rows (trivial kernels, the exchange
     // is pure overhead — the txt explode-row lesson)
     fingerprintFaceFrom(
       mediaFromDocumentsFrame(graft.sources.IO.widened(
-        spark.read.parquet(s"$sfDir/documents.parquet"))))
+        spark.read.parquet(s"$sfDir/documents.parquet"))),
+      family)
 
   /** [[fingerprintFace]] over an explicit media dataset (the stored-
     * index serve path decodes only the batch slice through this).
     */
-  private[graft] def fingerprintFaceFrom(records: Dataset[MediaRecord]): DataFrame = {
+  private[graft] def fingerprintFaceFrom(
+      records: Dataset[MediaRecord],
+      family: HashFamily): DataFrame = {
     import records.sparkSession.implicits._
     records
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+        val wh = family.windowHash()
         it.map { r =>
           (r.media_id, r.meta.kind, r.payload.length.toLong,
-            mediaSimHash(r.payload, md), segmentFix(r.payload))
+            mediaSimHash(r.payload, wh), segmentFix(r.payload))
         }
       }
       .toDF("media_id", "kind", "n_bytes", "sig", "ffix")
@@ -1174,39 +1084,33 @@ object Multimodal {
   private[graft] def auditedFace(
       spark: SparkSession,
       sfDir: String,
-      fast: Boolean = false): DataFrame = {
+      family: HashFamily): DataFrame = {
     import spark.implicits._
     fusedDecodeBuilds.incrementAndGet()
     // widen-if-narrow BEFORE the fused decode kernel (IO.widened)
-    graft.sources.IO.widened(
+    decodeDocs(graft.sources.IO.widened(
       spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"), col("n_chars")))
-      .as[(Long, String, Long)]
-      .mapPartitions { it =>
-        val md =
-          if (fast) null else java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, text, nChars) =>
-          val data = text.getBytes("UTF-8")
-          val kind =
-            if (id % 3 == 0) "image" else if (id % 3 == 1) "audio" else "video"
-          val payload = encodeContainer(id, nChars, data)
-          val a = auditOf(payload, payload.length.toLong)
-          AuditedFaceRow(id, kind, data.length.toLong,
-            if (fast) mediaSimHashFast(data) else mediaSimHash(data, md),
-            segmentFix(data), a.fmt, a.rParse, a.rPixels, a.rAspect,
-            a.rRate, a.rShort, a.rDom, a.keep, a.fidelity)
-        }
+        .select(col("doc_id"), col("text"), col("n_chars")))) { it =>
+      val wh = family.windowHash()
+      it.map { case (id, data, nChars) =>
+        val payload = encodeContainer(id, nChars, data)
+        val a = auditOf(payload, payload.length.toLong)
+        AuditedFaceRow(id, rawKind(id), data.length.toLong,
+          mediaSimHash(data, wh), segmentFix(data), a.fmt, a.rParse,
+          a.rPixels, a.rAspect, a.rRate, a.rShort, a.rDom, a.keep, a.fidelity)
       }
-      .toDF()
+    }.toDF()
   }
 
-  /** The fingerprint itself as an oracled row: the DuckDB replay walks
-    * the same hex/md5/majority chain, so a hash match certifies the
-    * whole signature path — the mm_face_segments convention applied to
-    * the signal the near-dup family now actually blocks on.
+  /** The fingerprint itself as a registered row. Under Md5 the DuckDB
+    * replay walks the same hex/md5/majority chain, so a hash match
+    * certifies the whole signature path — the mm_face_segments
+    * convention applied to the signal the near-dup family actually
+    * blocks on (`mm_fingerprint`); under Xx it is rows-only
+    * (`mm_fingerprint_fast`).
     */
-  def fingerprintQuery(spark: SparkSession, sfDir: String): DataFrame =
-    fingerprintFace(spark, sfDir)
+  def fingerprintQuery(spark: SparkSession, sfDir: String, family: HashFamily): DataFrame =
+    fingerprintFace(spark, sfDir, family)
       .select(col("media_id"), col("kind"), col("n_bytes"), col("sig"))
       .orderBy("media_id")
 
@@ -1257,36 +1161,21 @@ object Multimodal {
     * bytes per key row, never the feature arrays. Verify-first: only
     * the in-join survivors (output-scale, multiplicity ≤ 4) pay the
     * ceiling-gated ffix joins for the L1 secondary and the distinct.
+    *
+    * Under Md5 the all-pairs oracle certifies the rows
+    * (`mm_neardup_pairs`); under Xx they are rows-only
+    * (`mm_neardup_pairs_fast`), equal to the Md5 pairs on the spec corpus
+    * (Round17OpsSpec).
     */
   def nearDupPairs(
       spark: SparkSession,
       sfDir: String,
+      family: HashFamily,
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame =
     nearDupPairsOver(
-      fingerprintFace(spark, sfDir).localCheckpoint(),
-      lenWindow, maxHamming, l1Window, kindBlocked = true)
-      .select(col("media_a"), col("media_b"), col("kind_a").as("kind"),
-        col("len_delta"), col("hamming"), col("l1_fix"))
-      .orderBy("media_a", "media_b")
-
-  /** [[nearDupPairs]] over the FAST face ([[mediaSimHashFast]]) — the
-    * production path a deployment actually runs, certified by producing
-    * exactly the pairs the oracled md5 face produces on the spec corpus
-    * (Round17OpsSpec). Registered rows-only since r18 (the
-    * `mm_fingerprint_fast` justification: DuckDB cannot replay
-    * xxhash64; the md5 twin `mm_neardup_pairs` carries the hash
-    * certification).
-    */
-  def nearDupPairsFast(
-      spark: SparkSession,
-      sfDir: String,
-      lenWindow: Long = NearDupLenWindow,
-      maxHamming: Int = MediaFpMaxHamming,
-      l1Window: Long = MediaFpL1Window): DataFrame =
-    nearDupPairsOver(
-      fingerprintFaceFast(spark, sfDir).localCheckpoint(),
+      fingerprintFace(spark, sfDir, family).localCheckpoint(),
       lenWindow, maxHamming, l1Window, kindBlocked = true)
       .select(col("media_a"), col("media_b"), col("kind_a").as("kind"),
         col("len_delta"), col("hamming"), col("l1_fix"))
@@ -1355,21 +1244,31 @@ object Multimodal {
         col("x.kind").as("kind_a"), col("y.kind").as("kind_b"),
         abs(col("x.n_bytes") - col("y.n_bytes")).as("len_delta"),
         expr("cast(bit_count(x.sig ^ y.sig) as int)").as("hamming"))
-    def gate(df: DataFrame): DataFrame =
-      if (nFace <= Dedup.VerifySetBroadcastCeiling) broadcast(df)
-      else df.hint("shuffle_hash")
-    cand
-      .join(gate(face.select(col("media_id").as("media_a"),
-        col("ffix").as("fa"))), "media_a")
-      .join(gate(face.select(col("media_id").as("media_b"),
-        col("ffix").as("fb"))), "media_b")
-      .select(col("media_a"), col("media_b"), col("kind_a"), col("kind_b"),
-        col("len_delta"), col("hamming"),
-        aggregate(zip_with(col("fa"), col("fb"), (a, b) => abs(a - b)),
-          lit(0L), (acc, x) => acc + x).as("l1_fix"))
-      .filter(col("l1_fix") <= l1Window)
-      .distinct()
+    val ffix = Dedup.broadcastIfSmall(face, nFace)
+    l1Verified(cand, "media_a", ffix, "media_b", ffix, l1Window).distinct()
   }
+
+  /** The ffix-L1 secondary verify every banded consumer shares: each
+    * candidate row fetches the segment faces of its two endpoints (`aKey`
+    * from `aFace`, `bKey` from `bFace`; the callers pass them through
+    * their join-strategy gate), sums the positional |fa − fb| into
+    * `l1_fix` and drops rows past `l1Window`. Only in-join survivors
+    * reach it, so the ffix arrays cross output-scale rows only.
+    */
+  private def l1Verified(
+      cand: DataFrame,
+      aKey: String,
+      aFace: DataFrame,
+      bKey: String,
+      bFace: DataFrame,
+      l1Window: Long): DataFrame =
+    cand
+      .join(aFace.select(col("media_id").as(aKey), col("ffix").as("fa")), aKey)
+      .join(bFace.select(col("media_id").as(bKey), col("ffix").as("fb")), bKey)
+      .select(cand.columns.toSeq.map(col) :+
+        aggregate(zip_with(col("fa"), col("fb"), (a, b) => abs(a - b)),
+          lit(0L), (acc, x) => acc + x).as("l1_fix"): _*)
+      .filter(col("l1_fix") <= l1Window)
 
   /** The FIDELITY of each media item, read off the REAL parsed headers:
     * the media corpus is re-synthesized with genuine PNG/JPEG/WAV/MP4
@@ -1481,85 +1380,70 @@ object Multimodal {
   }
 
   /** The media DEDUP DECISION: connected components over the near-dup
-    * pair graph (the Cluster star-contraction — singletons self-rooted,
-    * component id = smallest member), cluster size, and the keep flag.
+    * pair graph, cluster size, and the keep flag ([[fidelityKeep]]).
     * Unlike text dedup (which keeps the lowest id / best quality
-    * score), media dedup keeps the HIGHEST-FIDELITY copy — fidelity
-    * comes from [[fidelityFrame]]'s REAL header parse (width×height
-    * for images, sample-rate×channels for audio, payload bytes as the
-    * parser-reject fallback), ties to the lowest id. `filter(keep)` is
-    * the deduplicated media corpus; the drop list stays auditable, the
-    * text-dedup convention.
+    * score), media dedup keeps the HIGHEST-FIDELITY copy — fidelity is
+    * read off the REAL header parse of the synthesized container
+    * (width×height for images, sample-rate×channels for audio, payload
+    * bytes as the parser-reject fallback), ties to the lowest id.
+    * `filter(keep)` is the deduplicated media corpus; the drop list
+    * stays auditable, the text-dedup convention.
     *
-    * Scale shape: the pair core above (lossless blocking, never
-    * all-pairs) feeds the same star-contraction loop the text
-    * components use ((long, long) edges only); the decision windows
-    * partition BY COMPONENT — never single-partition; the fidelity
-    * join is by media_id on two aggregate-thin frames.
+    * One decode pass ([[auditedFace]], checkpointed) carries both the
+    * fingerprint face the pair core reads and the fidelity column the
+    * keep rule ranks by, so no second decode or re-attach join runs.
+    * Under Md5 the recursive-CTE oracle certifies the rows
+    * (`mm_dedup_decision`); under Xx they are rows-only
+    * (`mm_dedup_decision_fast`), identical to the Md5 decision on the
+    * spec corpus (Round18OpsSpec), and at ×N the divergence is the
+    * characterized ~2% margin-band pair set (MmScaleProbe).
     */
   def nearDupDecision(
       spark: SparkSession,
       sfDir: String,
+      family: HashFamily,
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame = {
-    nearDupDecisionFrom(spark, sfDir,
-      auditedFace(spark, sfDir).localCheckpoint(),
-      lenWindow, maxHamming, l1Window)
+    val face = auditedFace(spark, sfDir, family).localCheckpoint()
+    fidelityKeep(face, face.select("media_id", "n_bytes", "fidelity"),
+      kindBlocked = true, lenWindow, maxHamming, l1Window)
   }
 
-  /** The decision tail over an explicit (already-checkpointed) AUDITED
-    * face — shared by the md5 row and its fast-family twin. The face
-    * carries its own fidelity column (the r20 fused pass), so the old
-    * second decode pass and its media_id re-attach join are gone.
+  /** The decision tail [[nearDupDecision]] and [[contentNearDupDecision]]
+    * share: the pair core over the (already-checkpointed) `face` feeds
+    * the Cluster star contraction (singletons self-rooted, component id
+    * = smallest member), then per component the cluster size and keep =
+    * highest fidelity, ties to the lowest id. `base` holds one row per
+    * media — media_id, fidelity and the presentation columns, which the
+    * decision carries in order — including media that never enter the
+    * pair graph.
+    *
+    * Scale shape: the pair core (lossless blocking, never all-pairs)
+    * feeds the star contraction ((long, long) edges only); the decision
+    * windows partition BY COMPONENT — never single-partition.
     */
-  private def nearDupDecisionFrom(
-      spark: SparkSession,
-      sfDir: String,
+  private def fidelityKeep(
       face: DataFrame,
+      base: DataFrame,
+      kindBlocked: Boolean,
       lenWindow: Long,
       maxHamming: Int,
       l1Window: Long): DataFrame = {
-    val pairs = nearDupPairsOver(face, lenWindow, maxHamming, l1Window,
-      kindBlocked = true)
+    val pairs = nearDupPairsOver(face, lenWindow, maxHamming, l1Window, kindBlocked)
     val comp = Cluster.connectedComponents(pairs, "media_a", "media_b")
       .withColumnRenamed("node", "media_id")
-    val base = face.select("media_id", "n_bytes", "fidelity")
-      .join(comp, Seq("media_id"), "left")
-      .select(col("media_id"),
-        coalesce(col("component"), col("media_id")).as("component_id"),
-        col("n_bytes"), col("fidelity"))
     val wC = Window.partitionBy("component_id")
-    val wK = Window.partitionBy("component_id")
-      .orderBy(desc("fidelity"), asc("media_id"))
     base
+      .join(comp, Seq("media_id"), "left")
+      .withColumn("component_id", coalesce(col("component"), col("media_id")))
       .withColumn("cluster_size", count(lit(1)).over(wC))
-      .withColumn("keep", row_number().over(wK) === 1)
-      .select("media_id", "component_id", "cluster_size", "n_bytes",
-        "fidelity", "keep")
+      .withColumn("keep",
+        row_number().over(wC.orderBy(desc("fidelity"), asc("media_id"))) === 1)
+      .select((Seq("media_id", "component_id", "cluster_size") ++
+        base.columns.filter(_ != "media_id") :+ "keep").map(col): _*)
       .orderBy("media_id")
   }
-
-  /** [[nearDupDecision]] over the FAST face — the serve surface of the
-    * xxhash64 family: a deployment that picks the fast family (the
-    * honest production fingerprint cost at 100 TB) gets the full
-    * pairs → components → fidelity-keep decision through the registry,
-    * not just the probe-only face. Rows-only registered (the
-    * [[mediaSimHashFast]] oracle boundary: DuckDB cannot replay
-    * xxhash64); on the spec corpus the decision frame is pinned
-    * IDENTICAL to the oracled md5 decision (Round18OpsSpec), and at ×N
-    * the divergence is the characterized ~2% margin-band pair set
-    * (MmScaleProbe).
-    */
-  def nearDupDecisionFast(
-      spark: SparkSession,
-      sfDir: String,
-      lenWindow: Long = NearDupLenWindow,
-      maxHamming: Int = MediaFpMaxHamming,
-      l1Window: Long = MediaFpL1Window): DataFrame =
-    nearDupDecisionFrom(spark, sfDir,
-      auditedFace(spark, sfDir, fast = true).localCheckpoint(),
-      lenWindow, maxHamming, l1Window)
 
   /** INCREMENTAL media near-dup — the per-batch serve shape every other
     * dedup family already has (the %10 carve convention): each batch
@@ -1578,7 +1462,7 @@ object Multimodal {
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame = {
-    val face = fingerprintFace(spark, sfDir).localCheckpoint()
+    val face = fingerprintFace(spark, sfDir, HashFamily.Md5).localCheckpoint()
     val batch = face.filter(col("media_id") % 10 === 0)
     val corpus = face.filter(col("media_id") % 10 =!= 0)
     incrementalNearDupFrames(batch, corpus, face, lenWindow, maxHamming, l1Window)
@@ -1671,7 +1555,7 @@ object Multimodal {
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame =
-    decontamReportOver(fingerprintFace(spark, sfDir).localCheckpoint(),
+    decontamReportOver(fingerprintFace(spark, sfDir, HashFamily.Md5).localCheckpoint(),
       lenWindow, maxHamming, l1Window)
 
   /** [[decontamReport]] over an already-materialized fingerprint face —
@@ -1698,18 +1582,9 @@ object Multimodal {
         expr("bit_count(csig ^ esig)") <= maxHamming)
       .select(col("media_id"), col("eval_id"),
         expr("cast(bit_count(csig ^ esig) as int)").as("hamming"))
-    val nFace = face.count()
-    def gate(df: DataFrame): DataFrame =
-      if (nFace <= Dedup.VerifySetBroadcastCeiling) broadcast(df)
-      else df.hint("shuffle_hash")
-    val scored = cand
-      .join(gate(face.select(col("media_id"), col("ffix").as("fa"))), "media_id")
-      .join(broadcast(evalSide.select(col("media_id").as("eval_id"),
-        col("ffix").as("fb"))), "eval_id")
-      .select(col("media_id"), col("eval_id"), col("hamming"),
-        aggregate(zip_with(col("fa"), col("fb"), (a, b) => abs(a - b)),
-          lit(0L), (acc, x) => acc + x).as("l1_fix"))
-      .filter(col("l1_fix") <= l1Window)
+    val scored = l1Verified(cand,
+      "media_id", Dedup.broadcastIfSmall(face, face.count()),
+      "eval_id", broadcast(evalSide), l1Window)
     val wB = Window.partitionBy("media_id")
       .orderBy(asc("hamming"), asc("l1_fix"), asc("eval_id"))
     scored.withColumn("rn", row_number().over(wB))
@@ -1746,14 +1621,13 @@ object Multimodal {
     * keeps every drop auditable.
     *
     * DECODE-ONCE scale shape (the r16 lesson): the corpus payloads are
-    * decoded exactly TWICE in total — one raw fingerprint pass
-    * ([[fingerprintFace]], checkpointed, shared by the pair core and
-    * the decontam gate) and one container pass ([[containerAudit]],
-    * checkpointed, quality rules + fidelity off the same header walk).
-    * At 100 TB decode+fingerprint IS the dominant cost; the r16 shape
-    * paid it ~4× by letting each gate rebuild its own face. Everything
-    * downstream joins aggregate-thin frames by media_id — no new
-    * exchange shapes.
+    * decoded exactly ONCE — one fused pass ([[auditedFace]],
+    * checkpointed) emits the fingerprint face the pair core and the
+    * decontam gate read AND the quality rules + fidelity off the same
+    * container walk. At 100 TB decode+fingerprint IS the dominant cost;
+    * the r16 shape paid it ~4× by letting each gate rebuild its own face.
+    * Everything downstream joins aggregate-thin frames by media_id — no
+    * new exchange shapes.
     */
   def curationDecisions(
       spark: SparkSession,
@@ -1764,7 +1638,7 @@ object Multimodal {
     // ONE fused decode pass (r20) where the r17 shape paid two: the
     // audited face carries fingerprint AND audit columns, checkpointed
     // once and projected per gate
-    val fused = auditedFace(spark, sfDir).localCheckpoint()
+    val fused = auditedFace(spark, sfDir, HashFamily.Md5).localCheckpoint()
     curationFrom(
       fused,
       fused.select(col("media_id"), col("fmt"), col("keep").as("quality_ok"),
@@ -1886,13 +1760,13 @@ object Multimodal {
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame = {
     val corpus = graft.sources.IO.servedArtifact(spark, mediaIndex(sfDir)) { root =>
-      fingerprintFace(spark, sfDir)
+      fingerprintFace(spark, sfDir, HashFamily.Md5)
         .filter(col("media_id") % 10 =!= 0)
         .write.mode("overwrite").parquet(root)
     }.head
     val batch = fingerprintFaceFrom(mediaFromDocumentsFrame(
       spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 10 === 0))).localCheckpoint()
+        .filter(col("doc_id") % 10 === 0)), HashFamily.Md5).localCheckpoint()
     incrementalNearDupFrames(batch, corpus, batch.unionByName(corpus),
       lenWindow, maxHamming, l1Window)
   }
@@ -1925,7 +1799,7 @@ object Multimodal {
     */
   private[graft] def servedAuditedFace(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.IO.servedArtifact(spark, mediaFace(sfDir)) { root =>
-      auditedFace(spark, sfDir).write.mode("overwrite").parquet(root)
+      auditedFace(spark, sfDir, HashFamily.Md5).write.mode("overwrite").parquet(root)
     }.head
 
   /** The fingerprint-face projection of [[servedAuditedFace]] — the
@@ -2011,7 +1885,6 @@ object Multimodal {
       l1Window: Long): DataFrame = {
     requireLosslessWindow(maxHamming)
     val nFace = full.count()
-    val face = full
     // verify-first like the pairs core: the length window and Hamming
     // verify apply inside the band join off the carried 16 bytes (the
     // row_number best-match below is multiplicity-blind, so candidates
@@ -2027,19 +1900,9 @@ object Multimodal {
       .filter(abs(col("nb") - col("nc")) <= lenWindow &&
         expr("bit_count(bsig ^ csig)") <= maxHamming)
       .select(col("media_id"), col("corpus_id"),
-        abs(col("nb") - col("nc")).as("len_delta"),
         expr("cast(bit_count(bsig ^ csig) as int)").as("hamming"))
-    def gate(df: DataFrame): DataFrame =
-      if (nFace <= Dedup.VerifySetBroadcastCeiling) broadcast(df)
-      else df.hint("shuffle_hash")
-    val scored = cand
-      .join(gate(face.select(col("media_id"), col("ffix").as("fa"))), "media_id")
-      .join(gate(face.select(col("media_id").as("corpus_id"),
-        col("ffix").as("fb"))), "corpus_id")
-      .select(col("media_id"), col("corpus_id"), col("hamming"),
-        aggregate(zip_with(col("fa"), col("fb"), (a, b) => abs(a - b)),
-          lit(0L), (acc, x) => acc + x).as("l1_fix"))
-      .filter(col("l1_fix") <= l1Window)
+    val ffix = Dedup.broadcastIfSmall(full, nFace)
+    val scored = l1Verified(cand, "media_id", ffix, "corpus_id", ffix, l1Window)
     val wB = Window.partitionBy("media_id")
       .orderBy(asc("hamming"), asc("l1_fix"), asc("corpus_id"))
     val best = scored.withColumn("rn", row_number().over(wB))
@@ -2070,7 +1933,7 @@ object Multimodal {
       lenWindow: Long = NearDupLenWindow,
       maxHamming: Int = MediaFpMaxHamming,
       l1Window: Long = MediaFpL1Window): DataFrame = {
-    val face = fingerprintFace(spark, sfDir).localCheckpoint()
+    val face = fingerprintFace(spark, sfDir, HashFamily.Md5).localCheckpoint()
     ingestDecisionsFromDocs(
       spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(col("doc_id") % 10 === 0),
@@ -2101,7 +1964,7 @@ object Multimodal {
     val face = servedMediaFace(spark, sfDir)
     val batchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 10 === 0)
-    val batchFace = fingerprintFaceFrom(mediaFromDocumentsFrame(batchDocs))
+    val batchFace = fingerprintFaceFrom(mediaFromDocumentsFrame(batchDocs), HashFamily.Md5)
       .localCheckpoint()
     ingestDecisionsFromDocs(
       batchDocs,

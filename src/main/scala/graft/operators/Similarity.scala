@@ -2097,9 +2097,6 @@ object Similarity {
     // fat embedding rows out of any sort) and cosine runs once per
     // UNIQUE pair
     val emb = sides.select(col("vec_id"), col("v"))
-    val embSmall = nSides <= Dedup.VerifySetBroadcastCeiling
-    def gate(df: DataFrame): DataFrame =
-      if (embSmall) broadcast(df) else df.hint("shuffle_hash")
     val srcProbesAll = probes.filter(col("is_en"))
       .select(col("vec_id").as("src_id"), col("cid"))
     val tgtCellsAll = assigned.filter(!col("is_en"))
@@ -2153,10 +2150,10 @@ object Similarity {
       .select("src_id", "tgt_id")
       .distinct()
     val sims = pairs
-      .join(gate(emb.select(col("vec_id").as("src_id"),
-        col("v").as("src_v"))), "src_id")
-      .join(gate(emb.select(col("vec_id").as("tgt_id"),
-        col("v").as("tgt_v"))), "tgt_id")
+      .join(Dedup.broadcastIfSmall(emb.select(col("vec_id").as("src_id"),
+        col("v").as("src_v")), nSides), "src_id")
+      .join(Dedup.broadcastIfSmall(emb.select(col("vec_id").as("tgt_id"),
+        col("v").as("tgt_v")), nSides), "tgt_id")
       .select(col("src_id"), col("tgt_id"),
         expr("cosine_sim(src_v, tgt_v)").cast("float").as("sim"))
     marginFromScoredPairs(sims, k, threshold)

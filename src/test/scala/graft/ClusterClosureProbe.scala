@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
+
 /** ×N-cut Spark-side closure validation for the CLUSTER-DECISION family
   * (not a test — a main invoked manually; kept out of src/main so it
   * never ships). The TripletsProbe convention, applied to components.
@@ -96,9 +98,9 @@ object ClusterClosureProbe {
     import graft.operators.{Cluster, Dedup, Multimodal}
 
     if (which == "mm" || which == "both") {
-      val pairs = Multimodal.nearDupPairs(spark, sfDir)
+      val pairs = Multimodal.nearDupPairs(spark, sfDir, HashFamily.Md5)
         .select(col("media_a").as("u"), col("media_b").as("v"))
-      val decision = Multimodal.nearDupDecision(spark, sfDir)
+      val decision = Multimodal.nearDupDecision(spark, sfDir, HashFamily.Md5)
       check("mm_dedup_decision", pairs, decision, d =>
         d.groupBy("component_id")
           .agg(sum(when(col("keep"), 1L).otherwise(0L)).as("keepers"),
@@ -124,7 +126,7 @@ object ClusterClosureProbe {
           .count())
     }
     if (which == "text" || which == "both") {
-      val pairs = Dedup.simHashNearDupPairsMd5Unsorted(spark, sfDir)
+      val pairs = Dedup.simHashNearDupPairsUnsorted(spark, sfDir, HashFamily.Md5)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
       val decision = Cluster.dedupDecisionMd5(spark, sfDir)
       check("dedup_cluster_decision", pairs, decision, d =>

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.operators.{Cluster, Dedup}
 
 /** Behavior specs for near-dup clustering (star-contraction connected
@@ -147,7 +148,7 @@ class ClusterSpec extends SparkTestBase {
   }
 
   test("near-dup components agree with the pair list (both endpoints co-labeled)") {
-    val pairs = Dedup.simHashNearDupPairsMd5(spark, Sf)
+    val pairs = Dedup.simHashNearDupPairs(spark, Sf, HashFamily.Md5)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "testdata plants near-duplicates")

@@ -165,7 +165,7 @@ class CorpusOpsSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
     // (1) every near-dup pair lands on ONE side — the property the
     // content-hash split cannot give
-    val pairs = graft.operators.Dedup.simHashNearDupPairsMd5(spark, Sf)
+    val pairs = graft.operators.Dedup.simHashNearDupPairs(spark, Sf, graft.functions.HashFamily.Md5)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "fixture must contain near-dup pairs")
     pairs.foreach { case (a, b) =>

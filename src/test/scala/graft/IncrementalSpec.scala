@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.operators.{CorpusPrep, Dedup}
 
 /** Behavior specs for the incremental-dedup, line-dedup, and per-source
@@ -55,7 +56,7 @@ class IncrementalSpec extends SparkTestBase {
     assert(verdicts.length == batchCount, "one verdict per batch doc")
     // the full pair list restricted to batch x corpus pairs must flag
     // exactly the non-new batch docs
-    val crossPairs = Dedup.simHashNearDupPairsMd5(spark, Sf)
+    val crossPairs = Dedup.simHashNearDupPairs(spark, Sf, HashFamily.Md5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect()
       .flatMap { case (a, b) =>
         if (a % 10 == 0 && b % 10 != 0) Some(a)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextAnalysis
+import graft.functions.{HashFamily, TextAnalysis}
 import graft.operators.{Dedup, Multimodal, Similarity}
 
 /** Behavior specs for the LLM-pipeline operators over the sf0.001 testdata. */
@@ -22,7 +22,7 @@ class LlmOpsSpec extends SparkTestBase {
   }
 
   test("minhash candidates verify against exact jaccard (no false positives in output)") {
-    val pairs = Dedup.minHashNearDupPairs(spark, Sf, minJaccard = 0.5).collect()
+    val pairs = Dedup.minHashNearDupPairs(spark, Sf, HashFamily.Xx, minJaccard = 0.5).collect()
     assert(pairs.nonEmpty, "testdata plants near-duplicate documents")
     pairs.foreach { r =>
       assert(r.getLong(0) < r.getLong(1), "pairs must be ordered, no self-pairs")
@@ -34,7 +34,7 @@ class LlmOpsSpec extends SparkTestBase {
     // exact jaccard over a bounded range as ground truth
     val exact = Dedup.ngramJaccardPairs(spark, Sf, maxDocId = 200, minJaccard = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mh = Dedup.minHashNearDupPairs(spark, Sf, minJaccard = 0.5)
+    val mh = Dedup.minHashNearDupPairs(spark, Sf, HashFamily.Xx, minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val missed = exact -- mh
     assert(missed.isEmpty,
@@ -84,7 +84,7 @@ class LlmOpsSpec extends SparkTestBase {
   }
 
   test("simhash pairs are symmetric-free and within the hamming bound") {
-    val pairs = Dedup.simHashNearDupPairs(spark, Sf, maxHamming = 3).collect()
+    val pairs = Dedup.simHashNearDupPairs(spark, Sf, HashFamily.Xx, maxHamming = 3).collect()
     pairs.foreach { r =>
       assert(r.getLong(0) < r.getLong(1))
       assert(r.getInt(2) <= 3)

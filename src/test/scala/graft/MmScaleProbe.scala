@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
+
 /** ×N wall/mass probe for the media near-dup family (scratch main, test
   * scope — never ships). The naive DuckDB replay is the per-round
   * correctness anchor up to ×10; past that the all-pairs oracle is the
@@ -90,7 +92,7 @@ object MmScaleProbe {
     if (args.contains("curstages")) {
       Multimodal.servedAuditedFace(spark, sfDir)
       val liveFace = time("face_live_build")(
-        Multimodal.fingerprintFace(spark, sfDir).localCheckpoint())
+        Multimodal.fingerprintFace(spark, sfDir, HashFamily.Md5).localCheckpoint())
       println(s"MMSCALE live_face parts ${liveFace.rdd.getNumPartitions} rows ${liveFace.count()}")
       val rawRead = spark.read.parquet(Multimodal.mediaFace(sfDir).root(spark))
       println(s"MMSCALE stored_schema ${rawRead.schema.map(f => s"${f.name}:${f.nullable}").mkString(",")}")
@@ -121,7 +123,7 @@ object MmScaleProbe {
     }
     val nMedia = spark.read.parquet(s"$sfDir/documents.parquet").count()
     val pairs = time("neardup_pairs")(
-      Multimodal.nearDupPairs(spark, sfDir).localCheckpoint())
+      Multimodal.nearDupPairs(spark, sfDir, HashFamily.Md5).localCheckpoint())
     val nPairs = pairs.count()
     println(f"MMSCALE media $nMedia pairs $nPairs " +
       f"neighbors_per_media ${2.0 * nPairs / nMedia}%.4f")
@@ -129,7 +131,7 @@ object MmScaleProbe {
     // pair-set equality; here the overlap is quantified (~98% at x10)
     // and the symmetric difference characterized below
     val fast = time("neardup_pairs_fast")(
-      Multimodal.nearDupPairsFast(spark, sfDir).localCheckpoint())
+      Multimodal.nearDupPairs(spark, sfDir, HashFamily.Xx).localCheckpoint())
     val pairIds = pairs.select("media_a", "media_b")
     val fastIds = fast.select("media_a", "media_b")
     val pairsetDiff = pairIds.exceptAll(fastIds).count() +
@@ -140,7 +142,7 @@ object MmScaleProbe {
     // projection differs by hash family — measured 8..31 under the
     // rejecting face, 0..7 under the accepting one, ~2% of the accept
     // set at xN; byte-identical payloads can never diverge
-    val fastFace = Multimodal.fingerprintFaceFast(spark, sfDir).localCheckpoint()
+    val fastFace = Multimodal.fingerprintFace(spark, sfDir, HashFamily.Xx).localCheckpoint()
     // (rejHam = the REJECTING face's Hamming over the divergent pairs —
     // must sit >= 8, i.e. just outside the accept window; accHam = the
     // ACCEPTING face's — where in [0,7] the flipping pairs live. A
@@ -158,7 +160,7 @@ object MmScaleProbe {
           expr("cast(bit_count(xa ^ xb) as int)").as("ah"), col("na"))
         .agg(min("h"), max("h"), min("ah"), max("ah"),
           min("na"), max("na"), count(lit(1))).collect()(0)
-    val md5Face = Multimodal.fingerprintFace(spark, sfDir).localCheckpoint()
+    val md5Face = Multimodal.fingerprintFace(spark, sfDir, HashFamily.Md5).localCheckpoint()
     if (pairsetDiff > 0) {
       println(s"MMSCALE fast_divergence (rejHamMin,rejHamMax,accHamMin,accHamMax,nMin,nMax,count) " +
         s"md5only ${crossHam(pairIds.exceptAll(fastIds), fastFace, md5Face)} " +
@@ -166,7 +168,7 @@ object MmScaleProbe {
     }
     if (args.contains("pairs")) { spark.stop(); return }
     val dec = time("dedup_decision")(
-      Multimodal.nearDupDecision(spark, sfDir).localCheckpoint())
+      Multimodal.nearDupDecision(spark, sfDir, HashFamily.Md5).localCheckpoint())
     val drop = dec.filter(!col("keep")).count()
     val maxC = dec.agg(max("cluster_size")).head.getLong(0)
     println(s"MMSCALE decision rows ${dec.count()} dropped $drop max_cluster $maxC")

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * environment, so a query plans the same way whatever ran before it and
   * whatever the shell exports. Stored artifacts are reached only through
   * `IO.servedArtifact`, so every one is keyed, primed, checked and healed
-  * the same way.
+  * the same way. The near-dup hash families are spelled in `HashFamily`
+  * only, so an oracled row and its production twin cannot hash apart.
   */
 class OperatorConfGuardSpec extends AnyFunSuite {
 
@@ -41,6 +42,11 @@ class OperatorConfGuardSpec extends AnyFunSuite {
   test("no operator reads the environment") {
     val bad = offenders("""sys\.env|System\.getenv""", Set.empty)
     assert(bad.isEmpty, bad.mkString("environment reads in operators:\n", "\n", ""))
+  }
+
+  test("the 60-bit md5 prefix is spelled only in HashFamily") {
+    val bad = offenders("""1,\s*15\),\s*16,\s*10""", Set("HashFamily.scala"))
+    assert(bad.isEmpty, bad.mkString("md5-prefix hashes outside HashFamily:\n", "\n", ""))
   }
 
   test("stored artifacts are reached only through IO.servedArtifact") {

@@ -1,7 +1,8 @@
 package graft
 
-import graft.functions.VectorCentroidAggregator
+import graft.functions.{HashFamily, VectorCentroidAggregator}
 import graft.operators.{Dedup, Relational, Similarity}
+import graft.sources.IO
 
 /** Physical-plan audits — the 100 TB posture claims, asserted on explain
   * output so a regression (lost pushdown, lost broadcast, surprise global
@@ -145,9 +146,9 @@ class PlanAuditSpec extends SparkTestBase {
             if !e.outputPartitioning.toString.contains("RoundRobinPartitioning") => e
       }
     }
-    assert(keyedExchanges(Dedup.minHashSignatures(spark, Sf)).isEmpty,
+    assert(keyedExchanges(Dedup.minHashSignatures(spark, Sf, HashFamily.Xx)).isEmpty,
       "minhash signatures must not shuffle by key")
-    assert(keyedExchanges(Dedup.simHashSignatures(spark, Sf)).isEmpty,
+    assert(keyedExchanges(Dedup.simHashSignatures(IO.table(spark, Sf, "documents"), HashFamily.Xx)).isEmpty,
       "simhash signatures must not shuffle by key")
   }
 
@@ -186,11 +187,12 @@ class PlanAuditSpec extends SparkTestBase {
       }
     }
     val minhash = selfJoinExchangeWidths(
-      Dedup.minHashBanded(spark, Sf, 32, 8), "doc_id", "band_key")
+      Dedup.minHashBanded(IO.table(spark, Sf, "documents"), HashFamily.Xx, 32, 8), "doc_id", "band_key")
     assert(minhash.nonEmpty && minhash.forall(_ == 1),
       s"minhash band exchange must key on the single band_key: $minhash")
     val simhash = selfJoinExchangeWidths(
-      Dedup.simHashBanded(spark, Sf), "doc_id", "band_key")
+      Dedup.simHashBandedFrom(
+        Dedup.simHashSignatures(IO.table(spark, Sf, "documents"), HashFamily.Xx)), "doc_id", "band_key")
     assert(simhash.nonEmpty && simhash.forall(_ == 1),
       s"simhash band exchange must key on the single band_key: $simhash")
     val lsh = selfJoinExchangeWidths(
@@ -203,7 +205,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("minhash LSH candidate join is an equi-join on band keys, never a cross join") {
-    val p = plan(Dedup.minHashNearDupPairs(spark, Sf))
+    val p = plan(Dedup.minHashNearDupPairs(spark, Sf, HashFamily.Xx))
     assert(!p.contains("CartesianProduct"),
       s"LSH banding must produce an equi-join:\n$p")
   }
@@ -344,7 +346,7 @@ class PlanAuditSpec extends SparkTestBase {
     // the L1 verify, i.e. group on the VERIFIED row (its hash
     // partitioning includes l1_fix) — a candidate-first distinct groups
     // on ids alone and was the 97 s x10 exchange
-    val p = plan(operators.Multimodal.nearDupPairs(spark, Sf))
+    val p = plan(operators.Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5))
     assert(p.contains("ShuffledHashJoin"),
       s"band key join must be shuffle-hash:\n${p.take(2000)}")
     assert(!p.contains("SortMergeJoin"),
@@ -364,7 +366,7 @@ class PlanAuditSpec extends SparkTestBase {
     // dominant shuffle ~5× at every scale; checked on the exchange
     // NODE's output attributes (the one-line tree rendering never lists
     // them, the exact-dedup audit convention below)
-    val root = operators.Multimodal.nearDupPairs(spark, Sf)
+    val root = operators.Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5)
       .queryExecution.executedPlan
     val exec = root match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.Standardizers
+import graft.functions.{HashFamily, Standardizers}
 import graft.sources.IO
 
 /** Property-based tests (SURVEY.md §5.3#4): parsers never throw under
@@ -225,7 +225,7 @@ class PropertySpec extends SparkTestBase {
         Multimodal.parseMediaExtent(payload)
         Multimodal.extractContent(payload)
         // and the fingerprint is total with a 60-bit image
-        assert((Multimodal.mediaSimHash(payload) >>> 60) == 0L,
+        assert((Multimodal.mediaSimHash(payload, HashFamily.Md5) >>> 60) == 0L,
           s"sample $i: sig must live in 60 bits")
       }
     }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.operators.{Multimodal, QualityModel, Similarity}
 
 /** Behavior specs for the round-13 hardening: the IVF margin row's pair
@@ -49,9 +50,9 @@ class Round13OpsSpec extends SparkTestBase {
   }
 
   test("mm near-dup: the band+flip blocking is lossless against naive all-pairs") {
-    val banded = Multimodal.nearDupPairs(spark, Sf).localCheckpoint()
+    val banded = Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5).localCheckpoint()
     // naive truth: every ordered pair, all three bounds applied directly
-    val face = Multimodal.fingerprintFace(spark, Sf).localCheckpoint()
+    val face = Multimodal.fingerprintFace(spark, Sf, HashFamily.Md5).localCheckpoint()
     val naive = face.select(col("media_id").as("media_a"),
         col("kind").as("ka"), col("n_bytes").as("la"),
         col("sig").as("sa"), col("ffix").as("fa"))
@@ -77,7 +78,7 @@ class Round13OpsSpec extends SparkTestBase {
   }
 
   test("mm dedup decision: one keeper per component, highest fidelity wins") {
-    val d = Multimodal.nearDupDecision(spark, Sf).localCheckpoint()
+    val d = Multimodal.nearDupDecision(spark, Sf, HashFamily.Md5).localCheckpoint()
     val perComp = d.groupBy("component_id")
       .agg(sum(when(col("keep"), 1L).otherwise(0L)).as("keepers"),
         count(lit(1)).as("n"),
@@ -110,7 +111,7 @@ class Round13OpsSpec extends SparkTestBase {
 
   test("mm incremental: asymmetric blocking is lossless vs naive batch x corpus") {
     val inc = Multimodal.incrementalNearDup(spark, Sf).localCheckpoint()
-    val face = Multimodal.fingerprintFace(spark, Sf).localCheckpoint()
+    val face = Multimodal.fingerprintFace(spark, Sf, HashFamily.Md5).localCheckpoint()
     val naive = face.filter(col("media_id") % 10 === 0)
       .select(col("media_id"), col("kind").as("ka"),
         col("n_bytes").as("la"), col("sig").as("sa"), col("ffix").as("fa"))

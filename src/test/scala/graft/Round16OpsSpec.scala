@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.operators.Multimodal
 
 /** Behavior specs for the round-16 rebuild: the 60-bit media
@@ -17,13 +18,44 @@ class Round16OpsSpec extends SparkTestBase {
     // independently computed in DuckDB from the mediaSigCtes chain —
     // a drift in hex casing, shingle bounds, distinctness, or the
     // majority rule breaks these exact values
-    assert(Multimodal.mediaSimHash("abc".getBytes("UTF-8"))
+    assert(Multimodal.mediaSimHash("abc".getBytes("UTF-8"), HashFamily.Md5)
       === 63121079495258754L)
-    assert(Multimodal.mediaSimHash("the quick brown fox".getBytes("UTF-8"))
+    assert(Multimodal.mediaSimHash("the quick brown fox".getBytes("UTF-8"), HashFamily.Md5)
       === 828081226031225917L)
     // 60-bit contract: the top 4 bits are always clear (md5 15-hex-char
     // prefix), which is what makes the 4×15 banding cover the signal
-    assert((Multimodal.mediaSimHash("any payload at all".getBytes) >>> 60) === 0L)
+    assert((Multimodal.mediaSimHash("any payload at all".getBytes, HashFamily.Md5) >>> 60) === 0L)
+  }
+
+  test("mediaSimHash: both window kernels pinned, including empty and sub-window payloads") {
+    // a drift in window bounds, byte packing order, hex casing or the
+    // seed breaks these exact values; an empty payload hashes one empty
+    // window, a payload shorter than 8 bytes one clipped window
+    val pins = Seq(
+      ("abc", HashFamily.Xx, 1144316487776788402L),
+      ("the quick brown fox", HashFamily.Xx, 826955604788280327L),
+      ("", HashFamily.Xx, 824638663225857862L),
+      ("abcdefg", HashFamily.Xx, 358257939323549184L),
+      ("", HashFamily.Md5, 955282973525019424L),
+      ("abcdefg", HashFamily.Md5, 332491430689568088L))
+    for ((text, family, sig) <- pins)
+      assert(Multimodal.mediaSimHash(text.getBytes("UTF-8"), family) === sig,
+        s"$family on '$text'")
+  }
+
+  test("media decode: a null text fails with an error naming its doc_id") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = true),
+      StructField("n_chars", LongType, nullable = true)))
+    val docs = spark.createDataFrame(
+      java.util.Arrays.asList(Row(987654321L, null, 12L)), schema)
+    val e = intercept[Exception](Multimodal.mediaFromDocumentsFrame(docs).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(String.valueOf).mkString("\n")
+    assert(chain.contains("doc_id 987654321"), chain)
   }
 
   test("mediaSimHash: edit tolerance vs same-histogram divergence") {
@@ -34,8 +66,8 @@ class Round16OpsSpec extends SparkTestBase {
     // a small suffix variant — the corpus's planted near-dup shape —
     // perturbs only the boundary shingles
     val hamEdit = java.lang.Long.bitCount(
-      Multimodal.mediaSimHash(base) ^
-        Multimodal.mediaSimHash(base ++ " dup".getBytes("UTF-8")))
+      Multimodal.mediaSimHash(base, HashFamily.Md5) ^
+        Multimodal.mediaSimHash(base ++ " dup".getBytes("UTF-8"), HashFamily.Md5))
     assert(hamEdit <= Multimodal.MediaFpMaxHamming,
       s"a suffix variant must stay inside the near-dup window ($hamEdit)")
     // IDENTICAL byte histogram and length, different arrangement (the
@@ -43,7 +75,7 @@ class Round16OpsSpec extends SparkTestBase {
     // the fingerprint must, because consecutive-byte windows encode
     // local order
     val hamRev = java.lang.Long.bitCount(
-      Multimodal.mediaSimHash(base) ^ Multimodal.mediaSimHash(base.reverse))
+      Multimodal.mediaSimHash(base, HashFamily.Md5) ^ Multimodal.mediaSimHash(base.reverse, HashFamily.Md5))
     assert(hamRev > Multimodal.MediaFpMaxHamming,
       s"a byte permutation must NOT fingerprint as a near-dup ($hamRev)")
   }
@@ -138,7 +170,7 @@ class Round16OpsSpec extends SparkTestBase {
     val cb = Multimodal.extractContent(mp4).get
     assert(math.abs(ca.length - cb.length) <= Multimodal.NearDupLenWindow)
     val ham = java.lang.Long.bitCount(
-      Multimodal.mediaSimHash(ca) ^ Multimodal.mediaSimHash(cb))
+      Multimodal.mediaSimHash(ca, HashFamily.Md5) ^ Multimodal.mediaSimHash(cb, HashFamily.Md5))
     assert(ham <= Multimodal.MediaFpMaxHamming,
       s"near-identical re-containered content must fingerprint close ($ham)")
   }
@@ -218,7 +250,7 @@ class Round16OpsSpec extends SparkTestBase {
       "every match must point into the eval carve")
     // lossless vs naive truth: all eval x corpus pairs under the three
     // windows, best per corpus id
-    val face = Multimodal.fingerprintFace(spark, Sf).localCheckpoint()
+    val face = Multimodal.fingerprintFace(spark, Sf, HashFamily.Md5).localCheckpoint()
     val naive = face.filter(col("media_id") % 10 =!= 7)
       .select(col("media_id"), col("kind").as("ka"),
         col("n_bytes").as("la"), col("sig").as("sa"), col("ffix").as("fa"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.operators.Multimodal
 
 /** Round-17 behavior pins: the lossless-window guard, the stored
@@ -15,15 +16,15 @@ class Round17OpsSpec extends SparkTestBase {
     // Hamming <= 7 (pigeonhole); a wider window used to SILENTLY drop
     // qualifying pairs — now every banded entry point fails fast
     for (thunk <- Seq(
-      () => Multimodal.nearDupPairs(spark, Sf, maxHamming = 8),
+      () => Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5, maxHamming = 8),
       () => Multimodal.contentNearDupPairs(spark, Sf, maxHamming = 8),
-      () => Multimodal.nearDupDecision(spark, Sf, maxHamming = 8),
+      () => Multimodal.nearDupDecision(spark, Sf, HashFamily.Md5, maxHamming = 8),
       () => Multimodal.incrementalNearDup(spark, Sf, maxHamming = 8),
       () => Multimodal.decontamReport(spark, Sf, maxHamming = 8),
       () => Multimodal.ingestDecisions(spark, Sf, maxHamming = 8)))
       assertThrows[IllegalArgumentException](thunk())
     // the boundary itself stays accepted
-    assert(Multimodal.nearDupPairs(spark, Sf, maxHamming = 7).columns.nonEmpty)
+    assert(Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5, maxHamming = 7).columns.nonEmpty)
   }
 
   test("fast fingerprint: xxhash64 and md5 faces emit the identical near-dup pair set") {
@@ -35,9 +36,9 @@ class Round17OpsSpec extends SparkTestBase {
     // spec corpus; at xN ~2% of genuinely-near pairs project across
     // the threshold differently per family (byte-identical dups never
     // can) — MmScaleProbe measures and characterizes that divergence.
-    val md5Pairs = Multimodal.nearDupPairs(spark, Sf)
+    val md5Pairs = Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5)
       .select("media_a", "media_b")
-    val fastPairs = Multimodal.nearDupPairsFast(spark, Sf)
+    val fastPairs = Multimodal.nearDupPairs(spark, Sf, HashFamily.Xx)
       .select("media_a", "media_b")
     assert(md5Pairs.exceptAll(fastPairs).isEmpty &&
       fastPairs.exceptAll(md5Pairs).isEmpty,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.HashFamily
 import graft.sources.IO
 
 /** Round-18 behavior pins, part 1: the stored-artifact serve seam
@@ -87,15 +88,15 @@ class Round18OpsSpec extends SparkTestBase {
     // xxhash64) — their certification is EXACT frame equality with the
     // oracled md5 twins on the spec corpus (pairs was pinned in r17;
     // the r18 serve surface adds the decision row)
-    val md5Pairs = Multimodal.nearDupPairs(spark, Sf).collect().map(_.toString)
-    val fastPairs = Multimodal.nearDupPairsFast(spark, Sf).collect().map(_.toString)
+    val md5Pairs = Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5).collect().map(_.toString)
+    val fastPairs = Multimodal.nearDupPairs(spark, Sf, HashFamily.Xx).collect().map(_.toString)
     // full-row equality (not just ids): hamming/l1 carried values may
     // legitimately differ between families — the registered fast row
     // carries the FAST face's measurements, so only assert the id set
     val ids = (rows: Array[String]) => rows.map(_.split(",").take(2).mkString(","))
     assert(ids(md5Pairs).toSet === ids(fastPairs).toSet)
-    val md5Dec = Multimodal.nearDupDecision(spark, Sf).collect().map(_.toString)
-    val fastDec = Multimodal.nearDupDecisionFast(spark, Sf).collect().map(_.toString)
+    val md5Dec = Multimodal.nearDupDecision(spark, Sf, HashFamily.Md5).collect().map(_.toString)
+    val fastDec = Multimodal.nearDupDecision(spark, Sf, HashFamily.Xx).collect().map(_.toString)
     // the decision frame carries no per-pair hash measurements (ids,
     // components, sizes, fidelity, keep) — byte-identical across
     // families when the pair sets agree

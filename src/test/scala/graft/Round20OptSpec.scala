@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
 import graft.operators.Multimodal
 
 /** Round-20 OPTIMIZATION pins — every fusion this round must be
@@ -22,14 +23,14 @@ class Round20OptSpec extends SparkTestBase {
     df.collect().map(_.toString).sorted.toSeq
 
   test("fused audited face: face projection equals fingerprintFace") {
-    val fused = Multimodal.auditedFace(spark, Sf)
+    val fused = Multimodal.auditedFace(spark, Sf, HashFamily.Md5)
       .select("media_id", "kind", "n_bytes", "sig", "ffix")
-    val ref = Multimodal.fingerprintFace(spark, Sf)
+    val ref = Multimodal.fingerprintFace(spark, Sf, HashFamily.Md5)
     assert(rowsOf(fused) == rowsOf(ref))
   }
 
   test("fused audited face: audit projection equals containerAudit") {
-    val fused = Multimodal.auditedFace(spark, Sf)
+    val fused = Multimodal.auditedFace(spark, Sf, HashFamily.Md5)
       .select("media_id", "fmt", "r_parse", "r_min_pixels", "r_aspect",
         "r_rate", "r_short", "r_dominant", "keep", "fidelity")
     val ref = Multimodal.containerAudit(Multimodal.mediaWithHeaders(spark, Sf))
@@ -37,9 +38,9 @@ class Round20OptSpec extends SparkTestBase {
   }
 
   test("fused fast face equals fingerprintFaceFast") {
-    val fused = Multimodal.auditedFace(spark, Sf, fast = true)
+    val fused = Multimodal.auditedFace(spark, Sf, HashFamily.Xx)
       .select("media_id", "kind", "n_bytes", "sig", "ffix")
-    val ref = Multimodal.fingerprintFaceFast(spark, Sf)
+    val ref = Multimodal.fingerprintFace(spark, Sf, HashFamily.Xx)
     assert(rowsOf(fused) == rowsOf(ref))
   }
 
@@ -66,7 +67,7 @@ class Round20OptSpec extends SparkTestBase {
     val raw0 = Multimodal.rawDecodeBuilds.get
     val cont0 = Multimodal.containerDecodeBuilds.get
     val fused0 = Multimodal.fusedDecodeBuilds.get
-    val df = Multimodal.nearDupDecision(spark, Sf)
+    val df = Multimodal.nearDupDecision(spark, Sf, HashFamily.Md5)
     assert(df.count() > 0)
     assert(Multimodal.fusedDecodeBuilds.get - fused0 == 1)
     assert(Multimodal.rawDecodeBuilds.get - raw0 == 0)
