@@ -440,22 +440,22 @@ object SparkEntry {
     // edge construction + iteration, timed as its own explicit row
     "graph_pagerank_rebuild" -> ((s, d) => LinkGraph.pageRank(s, d)),
     // the past-broadcast-ceiling code path, forced at test scale
-    "graph_pagerank_joinloop" -> ((s, d) => LinkGraph.pageRankJoinLoop(s, d)),
+    "graph_pagerank_joinloop" -> ((s, d) => LinkGraph.pageRankStored(s, d, broadcastCeiling = 0L)),
     // HITS hubs/authorities, every half-step unrolled in the oracle
     "graph_hits" -> ((s, d) => LinkGraph.hits(s, d)),
     // HITS past the broadcast ceiling: two pinned edge layouts
     // (forward/reverse adjacency), score frame as shuffle-hash build side
-    "graph_hits_joinloop" -> ((s, d) => LinkGraph.hitsJoinLoop(s, d)),
+    "graph_hits_joinloop" -> ((s, d) => LinkGraph.hits(s, d, broadcastCeiling = 0L)),
     // personalized PageRank from the pinned seed set (node % 10 = 0)
     "graph_ppr" -> ((s, d) => LinkGraph.personalizedPageRank(s, d)),
     // PPR past the broadcast ceiling (shared contrib-join seam)
-    "graph_ppr_joinloop" -> ((s, d) => LinkGraph.personalizedPageRankJoinLoop(s, d)),
+    "graph_ppr_joinloop" -> ((s, d) => LinkGraph.personalizedPageRank(s, d, broadcastCeiling = 0L)),
     // synchronous label propagation communities (integer-exact argmax,
     // min-label tie-break), every round unrolled in the oracle
     "graph_label_prop" -> ((s, d) => LinkGraph.labelPropagation(s, d)),
     // label propagation past the broadcast ceiling: v-pinned cached
     // symmetrized edges, label frame as shuffle-hash build side
-    "graph_label_prop_joinloop" -> ((s, d) => LinkGraph.labelPropagationJoinLoop(s, d)),
+    "graph_label_prop_joinloop" -> ((s, d) => LinkGraph.labelPropagation(s, d, broadcastCeiling = 0L)),
     // the community-size profile a curation planner consumes
     "graph_label_prop_sizes" -> ((s, d) => LinkGraph.labelCommunitySizes(s, d)),
     // Newman modularity profile of the converged partition — exact

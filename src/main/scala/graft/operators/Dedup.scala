@@ -777,7 +777,7 @@ object Dedup {
   /** [[jaccardPrefixPairs]] minus the final checkpoint + presentation
     * sort — the verify-join PLAN stays visible on the returned frame, so
     * PlanAuditSpec can pin the strategy on BOTH sides of the broadcast
-    * ceiling (the hitsJoinLoopRoundSeam precedent).
+    * ceiling (the LinkGraph.hitsRoundSeam precedent).
     */
   private[graft] def jaccardVerifiedSeam(
       spark: SparkSession,

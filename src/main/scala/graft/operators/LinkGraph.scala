@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -105,6 +105,86 @@ object LinkGraph {
     */
   private val BroadcastNodeCeiling = 100000000L
 
+  /** Where a propagation loop's |nodes|-row state (ranks, scores,
+    * labels) meets its edges, chosen ONCE per run by [[Pull.over]] from
+    * the node count. Below the broadcast ceiling ([[Pull.Broadcast]])
+    * the edge frame is checkpointed once and the state broadcasts to the
+    * edge partitions every round, so EDGES NEVER SHUFFLE inside the
+    * loop. Past it ([[Pull.JoinLoop]]) the state cannot broadcast: each
+    * edge layout is cached hash-partitioned on its pull key, and every
+    * round is a shuffle-hash join whose build side is the state — only
+    * |nodes|-row state moves. The strategy changes WHERE rows meet,
+    * never their values, so every join-loop row reuses its broadcast
+    * row's oracle.
+    */
+  private[graft] sealed trait Pull {
+
+    /** The loop's edge frame laid out, materialized, for pulls keyed on
+      * each of `keys` in turn (below the ceiling one checkpoint serves
+      * every key).
+      */
+    def layout(e: DataFrame, keys: String*): Seq[DataFrame]
+
+    /** The state side of a per-round pull join. */
+    def state(df: DataFrame): DataFrame
+
+    /** A |nodes|-row side of a node-keyed join outside the pull
+      * (presentation, label update): broadcast below the ceiling, a
+      * plain co-keyed join past it.
+      */
+    def side(df: DataFrame): DataFrame
+  }
+
+  private[graft] object Pull {
+
+    /** Run `body` with the strategy `nCount` selects; every layout the
+      * body pinned is released when it returns OR throws — the pinned
+      * layouts live in the session-shared cache, so a failed round must
+      * not leave them behind for later queries. `body` must end in an
+      * eager checkpoint: the frame it returns may not read a layout.
+      */
+    def over[T](nCount: Long, broadcastCeiling: Long)(body: Pull => T): T =
+      if (nCount <= broadcastCeiling) body(Broadcast)
+      else {
+        val pull = new JoinLoop
+        try body(pull) finally pull.release()
+      }
+
+    object Broadcast extends Pull {
+      def layout(e: DataFrame, keys: String*): Seq[DataFrame] = {
+        val ck = e.localCheckpoint()
+        keys.map(_ => ck)
+      }
+      def state(df: DataFrame): DataFrame = broadcast(df)
+      def side(df: DataFrame): DataFrame = broadcast(df)
+    }
+
+    /** Layouts are cached hash-partitioned on their key and materialized
+      * EAGERLY: an unexecuted cached plan reports unknown partitioning
+      * under AQE and the loop would re-shuffle it every round; once
+      * final, the scan exposes HashPartitioning(key). persist, not
+      * localCheckpoint: the checkpoint's LogicalRDD forgets its
+      * partitioning under AQE, while InMemoryRelation pins the
+      * exchange's output partitioning (and
+      * `canChangeCachedPlanOutputPartitioning` defaults false). On a real
+      * cluster the production form of the same contract is a bucketed
+      * edge TABLE (partitioning pinned on disk across jobs).
+      */
+    final class JoinLoop extends Pull {
+      private val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def layout(e: DataFrame, keys: String*): Seq[DataFrame] =
+        keys.map { key =>
+          val cached = e.repartition(col(key)).persist()
+          pinned += cached
+          cached.count()
+          cached
+        }
+      def state(df: DataFrame): DataFrame = df.hint("shuffle_hash")
+      def side(df: DataFrame): DataFrame = df
+      private[LinkGraph] def release(): Unit = pinned.foreach(_.unpersist())
+    }
+  }
+
   private def pageRankOver(
       edges: DataFrame,
       nodes: DataFrame,
@@ -114,128 +194,107 @@ object LinkGraph {
       broadcastCeiling: Long = BroadcastNodeCeiling,
       buildT0: Long = -1L): DataFrame = {
     val t0 = if (buildT0 > 0) buildT0 else System.nanoTime()
-    val outw = edges.groupBy(col("src"))
-      .agg(sum("weight").cast("double").as("outw"))
-    // past the ceiling the rank vector cannot broadcast: pre-hash-
-    // partition the enriched edges on src ONCE (the checkpoint pins the
-    // partitioning, so edges never re-shuffle across rounds) and make
-    // each round a shuffle-hash join whose build side is the |nodes|-row
-    // rank frame — only (node, rank) pairs move per iteration. Identical
-    // arithmetic either way: the strategy changes WHERE rows meet, never
-    // their values (the joinloop row reuses the broadcast row's oracle).
-    val joinLoop = nCount > broadcastCeiling
-    val enriched = enrichedShares(edges, outw, joinLoop)
-    // nodes WITH out-edges, materialized ONCE from the already-built
-    // enriched frame (weights are counts >= 1, so outw's key set and
-    // enriched's src set are the same set): the per-round dangling-mass
-    // anti-join previously re-derived `outw` from the RAW edge frame,
-    // replaying the entire edge construction every iteration on a
-    // fresh-build caller
+    val n = nCount.toDouble
+    Pull.over(nCount, broadcastCeiling) { pull =>
+      val (ranks, tLoop) = rankLoop(edges, pull, iters,
+        start = (nodes, nodes.withColumn("r", lit(1.0) / lit(n)).localCheckpoint())) {
+        (pulled, dang) => lit((1.0 - d) / n) + lit(d) * (pulled + lit(dang / n))
+      }
+      lastBuildStats = Some(((tLoop - t0) / 1e9, (System.nanoTime() - tLoop) / 1e9))
+      ranks.select(col("node"), col("r").as("pr")).orderBy("node")
+    }
+  }
+
+  /** The power-iteration loop [[pageRank]] and [[personalizedPageRank]]
+    * share. Prologue: the edges enriched with their src's out-weight
+    * share ([[enrichedShares]]) and the set of nodes WITH out-edges,
+    * each materialized once (weights are counts >= 1, so the enriched
+    * src set is exactly the out-weight key set — no per-round
+    * re-aggregation of the raw edges). `start` (by-name, evaluated once
+    * after the prologue) yields the node frame the update joins and the
+    * initial ranks. Each round: the dst-keyed contribution sum
+    * ([[contribOf]]), the dangling mass — ranks of nodes without
+    * out-edges — as one exact fixed-point collect, and a checkpointed
+    * left join of the node frame onto the contributions through the
+    * operator's `update(pulled, dang)`. Returns the final rank
+    * checkpoint and the nanoTime the loop began (PageRank's build/loop
+    * telemetry split).
+    */
+  private def rankLoop(
+      edges: DataFrame,
+      pull: Pull,
+      iters: Int,
+      start: => (DataFrame, DataFrame))(
+      update: (Column, Double) => Column): (DataFrame, Long) = {
+    val enriched = enrichedShares(edges, pull)
     val srcNodes = enriched.select(col("src").as("node")).distinct()
       .localCheckpoint()
-    val buildSec = (System.nanoTime() - t0) / 1e9
     val tLoop = System.nanoTime()
-    val n = nCount.toDouble
-    var ranks = nodes.withColumn("r", lit(1.0) / lit(n)).localCheckpoint()
+    val (nodes, ranks0) = start
+    var ranks = ranks0
     for (_ <- 0 until iters) {
-      val contrib = contribOf(enriched, ranks, joinLoop)
+      val contrib = contribOf(enriched, ranks, pull)
       // dangling mass: ranks of nodes with no out-edges, as exact fix-point
-      val dangRow = ranks
+      val dang = ranks
         .join(srcNodes, Seq("node"), "left_anti")
         .agg(coalesce(sum(round(col("r") * lit(1000000000.0), 0).cast("long")),
           lit(0L)).as("dfix"))
-        .collect()(0)
-      val dang = dangRow.getLong(0).toDouble / 1000000000.0
+        .collect()(0).getLong(0).toDouble / 1000000000.0
       ranks = nodes
         .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"),
-          (lit((1.0 - d) / n) + lit(d) *
-            ((coalesce(col("sfix"), lit(0L)).cast("double") / lit(1000000000.0))
-              + lit(dang / n))).as("r"))
+          update(coalesce(col("sfix"), lit(0L)).cast("double") / lit(1000000000.0),
+            dang).as("r"))
         .localCheckpoint()
     }
-    // the final ranks checkpoint is eager, so the cached edge frame is no
-    // longer needed (broadcast mode's localCheckpoint is cleaned by the
-    // ContextCleaner instead)
-    if (joinLoop) enriched.unpersist()
-    lastBuildStats = Some((buildSec, (System.nanoTime() - tLoop) / 1e9))
-    ranks.select(col("node"), col("r").as("pr")).orderBy("node")
+    (ranks, tLoop)
   }
 
   /** Edge side enriched with its src's total out-weight once, before the
-    * loop — w/outw is then a per-edge constant across iterations. In
-    * join-loop mode the frame is hash-partitioned on src and CACHED
-    * (persist, not localCheckpoint: the checkpoint's LogicalRDD forgets
-    * its partitioning under AQE, while InMemoryRelation pins the
-    * exchange's output partitioning — and
-    * `canChangeCachedPlanOutputPartitioning` defaults false), so every
-    * round's contrib join sees edges already partitioned on src and
-    * never re-shuffles them; [[pageRankOver]] unpersists after the loop.
-    * On a real cluster the production form of the same contract is the
-    * src-bucketed edge TABLE (partitioning pinned on disk across jobs).
+    * loop — w/outw is then a per-edge constant across iterations — and
+    * laid out for src-keyed pulls.
     */
-  private def enrichedShares(
-      edges: DataFrame,
-      outw: DataFrame,
-      joinLoop: Boolean): DataFrame = {
-    val e = edges
+  private def enrichedShares(edges: DataFrame, pull: Pull): DataFrame = {
+    val outw = edges.groupBy(col("src"))
+      .agg(sum("weight").cast("double").as("outw"))
+    val Seq(enriched) = pull.layout(edges
       .join(outw, "src")
       .select(col("src"), col("dst"),
-        (col("weight").cast("double") / col("outw")).as("share"))
-    if (joinLoop) pinnedPartitioned(e, "src") else e.localCheckpoint()
+        (col("weight").cast("double") / col("outw")).as("share")), "src")
+    enriched
   }
 
-  /** Cache a frame hash-partitioned on `key`, materialized EAGERLY: an
-    * unexecuted cached plan reports unknown partitioning under AQE and a
-    * loop would re-shuffle it every round; once final, the scan exposes
-    * HashPartitioning(key). persist, not localCheckpoint: the
-    * checkpoint's LogicalRDD forgets its partitioning under AQE, while
-    * InMemoryRelation pins the exchange's output partitioning (and
-    * `canChangeCachedPlanOutputPartitioning` defaults false). Callers
-    * unpersist after their loop.
-    */
-  private def pinnedPartitioned(df: DataFrame, key: String): DataFrame = {
-    val cached = df.repartition(col(key)).persist()
-    cached.count()
-    cached
-  }
-
-  /** One round's dst-keyed fixed-point contribution sum. Broadcast mode
-    * ships the rank vector to the edge partitions; join-loop mode makes
-    * it the BUILD side of a shuffle-hash join against the pre-partitioned
-    * edges (only the |nodes|-row rank frame moves). Same arithmetic, same
-    * values — only where the rows meet changes.
+  /** One round's dst-keyed fixed-point contribution sum: the rank vector
+    * pulled onto the src-keyed enriched edges. Same arithmetic, same
+    * values under either [[Pull]] — only where the rows meet changes.
     */
   private def contribOf(
       enriched: DataFrame,
       ranks: DataFrame,
-      joinLoop: Boolean): DataFrame = {
-    val rankSide = ranks.withColumnRenamed("node", "src")
-    val pulled =
-      if (joinLoop) enriched.join(rankSide.hint("shuffle_hash"), "src")
-      else enriched.join(broadcast(rankSide), "src")
-    pulled
+      pull: Pull): DataFrame =
+    enriched.join(pull.state(ranks.withColumnRenamed("node", "src")), "src")
       .select(col("dst"),
         round((col("r") * col("share")).cast("float") * lit(1000000000.0), 0)
           .cast("long").as("cfix"))
       .groupBy("dst")
       .agg(sum("cfix").as("sfix"))
-  }
 
-  /** First-iteration contribution frame in FORCED join-loop mode — plan-
-    * audit seam (the loop's per-round checkpoints hide iteration plans
-    * from the returned rank frame).
+  /** The PageRank loop's first-round contribution frame over the stored
+    * graph, un-materialized, handed to `audit` while the loop's edge
+    * layout is live — the plan-audit seam (the per-round checkpoints
+    * hide iteration plans from the returned rank frame). A ceiling of 0
+    * shows the join loop.
     */
-  private[graft] def joinLoopRoundSeam(
+  private[graft] def pageRankRoundSeam[T](
       spark: SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String,
+      broadcastCeiling: Long = BroadcastNodeCeiling)(audit: DataFrame => T): T = {
     val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    val outw = edges.groupBy(col("src"))
-      .agg(sum("weight").cast("double").as("outw"))
-    val enriched = enrichedShares(edges, outw, joinLoop = true)
-    val n = nodes.count().toDouble
-    val ranks = nodes.withColumn("r", lit(1.0) / lit(n)).localCheckpoint()
-    contribOf(enriched, ranks, joinLoop = true)
+    val nCount = nodes.count()
+    Pull.over(nCount, broadcastCeiling) { pull =>
+      val ranks = nodes.withColumn("r", lit(1.0) / lit(nCount.toDouble)).localCheckpoint()
+      audit(contribOf(enrichedShares(edges, pull), ranks, pull))
+    }
   }
 
   /** Declared schemas of the persisted graph artifacts — ids and counts
@@ -294,15 +353,18 @@ object LinkGraph {
     * |nodes|-bounded iteration loop — the event-scale window and edge
     * aggregation run only at priming. Row-identical by construction (the
     * artifact IS the graph), so the registered row keeps [[pageRank]]'s
-    * oracle.
+    * oracle. A `broadcastCeiling` of 0 forces the past-ceiling join loop
+    * ([[Pull]]) a web-scale graph selects automatically — bit-identical
+    * ranks, so `graph_pagerank_joinloop` reuses this row's oracle.
     */
   def pageRankStored(
       spark: SparkSession,
       sfDir: String,
       iters: Int = 3,
-      d: Double = 0.85): DataFrame =
+      d: Double = 0.85,
+      broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame =
     withStoredGraph(spark, sfDir) { (edges, nodes) =>
-      pageRankOver(edges, nodes, nodes.count(), iters, d)
+      pageRankOver(edges, nodes, nodes.count(), iters, d, broadcastCeiling)
     }
 
   /** The prologue every artifact-backed iterative loop shares: prime the
@@ -322,23 +384,6 @@ object LinkGraph {
       IO.parquetRowCount(spark, s"${transitionGraph(sfDir).root(spark)}/edges")
     LoopWidth.pinned(spark, edgeFactor * edgeRows)(body(edges, nodes))
   }
-
-  /** [[pageRankStored]] FORCING the past-ceiling join loop (ceiling 0):
-    * the code path a web-scale graph (|nodes| > ~10⁸, past the broadcast
-    * ceiling) selects automatically. Bit-identical ranks — the strategy
-    * changes where rows meet, not their values — so the registered row
-    * reuses the broadcast loop's oracle; the plan contract (edges never
-    * re-shuffle across rounds, only the |nodes|-row rank frame moves) is
-    * asserted in PlanAuditSpec.
-    */
-  def pageRankJoinLoop(
-      spark: SparkSession,
-      sfDir: String,
-      iters: Int = 3,
-      d: Double = 0.85): DataFrame =
-    withStoredGraph(spark, sfDir) { (edges, nodes) =>
-      pageRankOver(edges, nodes, nodes.count(), iters, d, broadcastCeiling = 0L)
-    }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over the transition
     * graph — the complementary centrality to [[pageRank]]: authorities
@@ -364,72 +409,52 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String,
       iters: Int = 2,
-      broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame = {
+      broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame =
     withStoredGraph(spark, sfDir) { (edges, nodes) =>
-    // Past the broadcast ceiling (|nodes| > ~10⁸) the score vector
-    // cannot ship to the edge partitions; HITS pulls across the edges in
-    // BOTH directions, so join-loop mode maintains TWO pinned edge
-    // layouts — forward (src-partitioned) and reverse (dst-partitioned)
-    // adjacency, the standard pair a web-scale graph store keeps on disk
-    // — and each half-step is a shuffle-hash join whose build side is
-    // the |nodes|-row score frame. Identical arithmetic either way (the
-    // strategy changes where rows meet, never their values), so the
-    // join-loop row reuses this row's oracle.
-    val joinLoop = nodes.count() > broadcastCeiling
-    val eRaw = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-    val eBySrc =
-      if (joinLoop) pinnedPartitioned(eRaw, "src") else eRaw.localCheckpoint()
-    val eByDst =
-      if (joinLoop) pinnedPartitioned(eRaw, "dst") else eBySrc
-    // h₀ = 1 for every node; each half-step ends L1-normalized, so the
-    // init scale cancels after the first authority update
-    var hubs = nodes.withColumn("s", lit(1.0)).localCheckpoint()
-    var auths = nodes.withColumn("s", lit(0.0))
-    for (_ <- 0 until iters) {
-      auths = halfStep(eBySrc, nodes, hubs, "src", "dst", joinLoop)
-      hubs = halfStep(eByDst, nodes, auths, "dst", "src", joinLoop)
+      // HITS pulls across the edges in BOTH directions, so past the
+      // broadcast ceiling it keeps TWO pinned edge layouts — forward
+      // (src-partitioned) and reverse (dst-partitioned) adjacency, the
+      // standard pair a web-scale graph store keeps on disk; below it one
+      // checkpoint serves both directions. A ceiling of 0 forces the join
+      // loop (`graph_hits_joinloop`, same oracle).
+      Pull.over(nodes.count(), broadcastCeiling) { pull =>
+        val Seq(eBySrc, eByDst) = pull.layout(weightedEdges(edges), "src", "dst")
+        // h₀ = 1 for every node; each half-step ends L1-normalized, so the
+        // init scale cancels after the first authority update
+        var hubs = nodes.withColumn("s", lit(1.0)).localCheckpoint()
+        var auths = nodes.withColumn("s", lit(0.0))
+        for (_ <- 0 until iters) {
+          auths = halfStep(eBySrc, nodes, hubs, "src", "dst", pull)
+          hubs = halfStep(eByDst, nodes, auths, "dst", "src", pull)
+        }
+        val hsel = hubs.select(col("node"), col("s").as("hub"))
+        val asel = auths.select(col("node"), col("s").as("authority"))
+        nodes.join(pull.side(hsel), Seq("node"), "left")
+          .join(pull.side(asel), Seq("node"), "left")
+          .select(col("node"), col("hub"), col("authority")).orderBy("node")
+      }
     }
-    if (joinLoop) { eBySrc.unpersist(); eByDst.unpersist() }
-    val hsel = hubs.select(col("node"), col("s").as("hub"))
-    val asel = auths.select(col("node"), col("s").as("authority"))
-    // presentation join: |nodes|-row sides — broadcastable below the
-    // ceiling, plain co-keyed joins past it
-    val joined =
-      if (joinLoop)
-        nodes.join(hsel, Seq("node"), "left").join(asel, Seq("node"), "left")
-      else
-        nodes.join(broadcast(hsel), Seq("node"), "left")
-          .join(broadcast(asel), Seq("node"), "left")
-    joined.select(col("node"), col("hub"), col("authority")).orderBy("node")
-    }
-  }
 
-  /** [[hits]] FORCING the past-ceiling join loop (ceiling 0) — the code
-    * path a web-scale graph selects automatically, bit-identical scores
-    * (same oracle); the per-round plan contract (edges keep their two
-    * pinned layouts, only score rows shuffle) is asserted in
-    * PlanAuditSpec via [[hitsJoinLoopRoundSeam]].
+  /** The stored edges as (src, dst, w: double) — the HITS pull frame. */
+  private def weightedEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), col("weight").cast("double").as("w"))
+
+  /** The first HITS half-step's pre-normalization aggregation over the
+    * stored graph, handed to `audit` while the loop's edge layout is
+    * live — the plan-audit seam (the per-round checkpoints and the norm
+    * collect hide iteration plans from the returned frame). A ceiling of
+    * 0 shows the join loop.
     */
-  def hitsJoinLoop(
+  private[graft] def hitsRoundSeam[T](
       spark: SparkSession,
       sfDir: String,
-      iters: Int = 2): DataFrame =
-    hits(spark, sfDir, iters, broadcastCeiling = 0L)
-
-  /** First HITS half-step's pre-normalization aggregation in FORCED
-    * join-loop mode — plan-audit seam (the loop's per-round checkpoints
-    * and the norm collect hide iteration plans from the returned frame).
-    */
-  private[graft] def hitsJoinLoopRoundSeam(
-      spark: SparkSession,
-      sfDir: String): DataFrame = {
+      broadcastCeiling: Long = BroadcastNodeCeiling)(audit: DataFrame => T): T = {
     val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    val eBySrc = pinnedPartitioned(
-      edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w")), "src")
-    val hubs = nodes.withColumn("s", lit(1.0)).localCheckpoint()
-    pulledSums(eBySrc, hubs, "src", "dst", joinLoop = true)
+    Pull.over(nodes.count(), broadcastCeiling) { pull =>
+      val Seq(eBySrc) = pull.layout(weightedEdges(edges), "src")
+      val hubs = nodes.withColumn("s", lit(1.0)).localCheckpoint()
+      audit(pulledSums(eBySrc, hubs, "src", "dst", pull))
+    }
   }
 
   /** Personalized PageRank (random walk with restart): identical power
@@ -444,68 +469,35 @@ object LinkGraph {
     * deterministic, data-independent selection the oracle replays); a
     * production caller passes any seed table into the same shape.
     *
-    * Scale shape and determinism: exactly [[pageRank]] — edges never
-    * shuffle in the loop, contributions and dangling mass are
-    * fixed-point BIGINT sums, and the PPR-specific teleport arithmetic
-    * runs in its own pinned operation order (this loop does NOT reuse
-    * [[pageRank]]'s scalar constants, whose driver-folded (1−d)/n would
-    * round differently from (1−d)·tele(v)).
+    * Scale shape and determinism: exactly [[pageRank]] — the same
+    * [[rankLoop]], so edges never shuffle in the loop and contributions
+    * and dangling mass are fixed-point BIGINT sums; only the update
+    * expression is PPR's own, in its own pinned operation order (it
+    * does NOT reuse [[pageRank]]'s scalar constants, whose driver-folded
+    * (1−d)/n would round differently from (1−d)·tele(v)). A ceiling of 0
+    * forces the join loop (`graph_ppr_joinloop`, same oracle).
     */
   def personalizedPageRank(
       spark: SparkSession,
       sfDir: String,
       iters: Int = 3,
       d: Double = 0.85,
-      broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame = {
+      broadcastCeiling: Long = BroadcastNodeCeiling): DataFrame =
     withStoredGraph(spark, sfDir) { (edges, nodes0) =>
-    val outw = edges.groupBy(col("src"))
-      .agg(sum("weight").cast("double").as("outw"))
-    // past the ceiling: same seam as PageRank — src-pinned cached edges,
-    // per-round shuffle-hash contrib join with the rank frame as build
-    // side ([[enrichedShares]]/[[contribOf]]); same arithmetic either
-    // way, so the join-loop row reuses this row's oracle
-    val joinLoop = nodes0.count() > broadcastCeiling
-    val enriched = enrichedShares(edges, outw, joinLoop)
-    // dangling-set seam: one distinct over the materialized enriched
-    // frame instead of re-aggregating outw from the edge scan per round
-    // (the pageRankOver srcNodes fix)
-    val srcNodes = enriched.select(col("src").as("node")).distinct()
-      .localCheckpoint()
-    val nSeeds = nodes0.filter(col("node") % 10 === 0).count().toDouble
-    val nodes = nodes0
-      .withColumn("tele",
-        when(col("node") % 10 === 0, lit(1.0) / lit(nSeeds)).otherwise(lit(0.0)))
-      .localCheckpoint()
-    var ranks = nodes.select(col("node"), col("tele").as("r")).localCheckpoint()
-    for (_ <- 0 until iters) {
-      val contrib = contribOf(enriched, ranks, joinLoop)
-      val dang = ranks
-        .join(srcNodes, Seq("node"), "left_anti")
-        .agg(coalesce(sum(round(col("r") * lit(1000000000.0), 0).cast("long")),
-          lit(0L)).as("dfix"))
-        .collect()(0).getLong(0).toDouble / 1000000000.0
-      ranks = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - d) * col("tele") + lit(d) *
-            ((coalesce(col("sfix"), lit(0L)).cast("double") / lit(1000000000.0))
-              + lit(dang) * col("tele"))).as("r"))
-        .localCheckpoint()
+      Pull.over(nodes0.count(), broadcastCeiling) { pull =>
+        val (ranks, _) = rankLoop(edges, pull, iters, start = {
+          val nSeeds = nodes0.filter(col("node") % 10 === 0).count().toDouble
+          val nodes = nodes0
+            .withColumn("tele",
+              when(col("node") % 10 === 0, lit(1.0) / lit(nSeeds)).otherwise(lit(0.0)))
+            .localCheckpoint()
+          (nodes, nodes.select(col("node"), col("tele").as("r")).localCheckpoint())
+        }) { (pulled, dang) =>
+          lit(1.0 - d) * col("tele") + lit(d) * (pulled + lit(dang) * col("tele"))
+        }
+        ranks.select(col("node"), col("r").as("ppr")).orderBy("node")
+      }
     }
-    if (joinLoop) enriched.unpersist()
-    ranks.select(col("node"), col("r").as("ppr")).orderBy("node")
-    }
-  }
-
-  /** [[personalizedPageRank]] FORCING the past-ceiling join loop (ceiling
-    * 0) — bit-identical scores (strategy, not values), same oracle.
-    */
-  def personalizedPageRankJoinLoop(
-      spark: SparkSession,
-      sfDir: String,
-      iters: Int = 3,
-      d: Double = 0.85): DataFrame =
-    personalizedPageRank(spark, sfDir, iters, d, broadcastCeiling = 0L)
 
   /** Deterministic weighted random walks over the stored transition
     * graph — the DeepWalk/node2vec corpus generator: one walk per start
@@ -610,8 +602,8 @@ object LinkGraph {
       scores: DataFrame,
       from: String,
       to: String,
-      joinLoop: Boolean): DataFrame = {
-    val pulled = pulledSums(e, scores, from, to, joinLoop)
+      pull: Pull): DataFrame = {
+    val pulled = pulledSums(e, scores, from, to, pull)
     val norm = pulled.agg(coalesce(sum("sfix"), lit(0L)))
       .collect()(0).getLong(0)
     nodes
@@ -622,29 +614,22 @@ object LinkGraph {
       .localCheckpoint()
   }
 
-  /** The half-step's node-keyed fixed-point sum: broadcast mode ships the
-    * score vector to the (checkpointed) edge partitions; join-loop mode
-    * makes it the BUILD side of a shuffle-hash join against an edge
-    * frame pre-partitioned on `from`, so edges never re-shuffle — only
-    * the |nodes|-row score frame moves. Same arithmetic, same values.
+  /** The half-step's node-keyed fixed-point sum: the score vector
+    * pulled onto the edge layout keyed on `from`. Same arithmetic, same
+    * values under either [[Pull]].
     */
   private def pulledSums(
       e: DataFrame,
       scores: DataFrame,
       from: String,
       to: String,
-      joinLoop: Boolean): DataFrame = {
-    val scoreSide = scores.withColumnRenamed("node", from)
-    val joined =
-      if (joinLoop) e.join(scoreSide.hint("shuffle_hash"), Seq(from))
-      else e.join(broadcast(scoreSide), Seq(from))
-    joined
+      pull: Pull): DataFrame =
+    e.join(pull.state(scores.withColumnRenamed("node", from)), Seq(from))
       .select(col(to).as("node"),
         round((col("s") * col("w")).cast("float") * lit(1000000000.0), 0)
           .cast("long").as("cfix"))
       .groupBy("node")
       .agg(sum("cfix").as("sfix"))
-  }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over the
     * UNDIRECTED transition graph — community detection for the click
@@ -662,7 +647,8 @@ object LinkGraph {
     * rows); inside the loop edges never shuffle — the |nodes|-row label
     * frame broadcasts to the edge side (or, past the broadcast ceiling,
     * becomes the build side of a shuffle-hash join against the v-pinned
-    * cached edge layout, the [[pageRankOver]] seam), the per-round
+    * cached edge layout — [[Pull]]; a ceiling of 0 forces it,
+    * `graph_label_prop_joinloop`, same oracle), the per-round
     * exchange is the (u,label)-keyed weight sum (map-side combined,
     * bounded by distinct incident labels ≤ 2|E|), and the argmax is the
     * two-phase TopKPerKey rn=1 rewrite. O(iters) plan depth via
@@ -682,16 +668,6 @@ object LinkGraph {
     labelsAfter(spark, sfDir, iters, broadcastCeiling)
       .select(col("node"), col("l").as("community"))
       .orderBy("node")
-
-  /** [[labelPropagation]] FORCING the past-ceiling join loop (ceiling 0)
-    * — the code path a web-scale graph selects automatically,
-    * bit-identical labels (strategy, not values), same oracle.
-    */
-  def labelPropagationJoinLoop(
-      spark: SparkSession,
-      sfDir: String,
-      iters: Int = 3): DataFrame =
-    labelPropagation(spark, sfDir, iters, broadcastCeiling = 0L)
 
   /** Community-size profile over the converged labels — the row a
     * curation planner actually consumes (per-community caps/mixture
@@ -718,38 +694,59 @@ object LinkGraph {
     // the per-round vote join shuffles (at most) the symmetrized edge
     // volume — 2|edges| is the honest width estimate
     withStoredGraph(spark, sfDir, edgeFactor = 2L) { (edges, nodes) =>
-    val joinLoop = nodes.count() > broadcastCeiling
-    val und0 = edges
+      Pull.over(nodes.count(), broadcastCeiling) { pull =>
+        val Seq(und) = pull.layout(symmetrized(edges), "v")
+        var labels = nodes.withColumn("l", col("node")).localCheckpoint()
+        for (_ <- 0 until iters) {
+          val win = Window.partitionBy("u").orderBy(col("sw").desc, col("l").asc)
+          val top = votes(und, labels, pull)
+            .withColumn("rn", row_number().over(win))
+            .where(col("rn") === 1)
+            .select(col("u").as("node"), col("l").as("nl"))
+          // label update: |nodes|-row sides both ways (the HITS
+          // presentation-join convention)
+          labels = labels
+            .join(pull.side(top), Seq("node"), "left")
+            .select(col("node"), coalesce(col("nl"), col("l")).as("l"))
+            .localCheckpoint()
+        }
+        labels
+      }
+    }
+  }
+
+  /** The directed edge artifact symmetrized and weight-merged once:
+    * (u, v, w) with (u,v)+(v,u) collapsed, at most 2|E| rows.
+    */
+  private def symmetrized(edges: DataFrame): DataFrame =
+    edges
       .select(col("src").as("u"), col("dst").as("v"), col("weight"))
       .unionByName(
         edges.select(col("dst").as("u"), col("src").as("v"), col("weight")))
       .groupBy("u", "v")
       .agg(sum("weight").as("w"))
-    val und =
-      if (joinLoop) pinnedPartitioned(und0, "v") else und0.localCheckpoint()
-    var labels = nodes.withColumn("l", col("node")).localCheckpoint()
-    for (_ <- 0 until iters) {
-      val lblSide = labels.select(col("node").as("v"), col("l"))
-      val pulled =
-        if (joinLoop) und.join(lblSide.hint("shuffle_hash"), Seq("v"))
-        else und.join(broadcast(lblSide), Seq("v"))
-      val votes = pulled.groupBy(col("u"), col("l")).agg(sum("w").as("sw"))
-      val win = Window.partitionBy("u").orderBy(col("sw").desc, col("l").asc)
-      val top = votes
-        .withColumn("rn", row_number().over(win))
-        .where(col("rn") === 1)
-        .select(col("u").as("node"), col("l").as("nl"))
-      // label update: |nodes|-row sides both ways — broadcastable below
-      // the ceiling, plain co-keyed join past it (the HITS presentation-
-      // join convention)
-      val topSide = if (joinLoop) top else broadcast(top)
-      labels = labels
-        .join(topSide, Seq("node"), "left")
-        .select(col("node"), coalesce(col("nl"), col("l")).as("l"))
-        .localCheckpoint()
-    }
-    if (joinLoop) und.unpersist()
-    labels
+
+  /** One round's (u, l)-keyed vote sums: the label frame pulled onto the
+    * v-keyed symmetrized edges.
+    */
+  private def votes(und: DataFrame, labels: DataFrame, pull: Pull): DataFrame =
+    und.join(pull.state(labels.select(col("node").as("v"), col("l"))), Seq("v"))
+      .groupBy(col("u"), col("l")).agg(sum("w").as("sw"))
+
+  /** The label-propagation loop's first-round pre-argmax vote sums over
+    * the stored graph, handed to `audit` while the loop's edge layout is
+    * live — the plan-audit seam (the per-round checkpoints hide
+    * iteration plans from the returned label frame). A ceiling of 0
+    * shows the join loop.
+    */
+  private[graft] def labelPropRoundSeam[T](
+      spark: SparkSession,
+      sfDir: String,
+      broadcastCeiling: Long = BroadcastNodeCeiling)(audit: DataFrame => T): T = {
+    val (edges, nodes) = transitionGraphStored(spark, sfDir)
+    Pull.over(nodes.count(), broadcastCeiling) { pull =>
+      val Seq(und) = pull.layout(symmetrized(edges), "v")
+      audit(votes(und, nodes.withColumn("l", col("node")).localCheckpoint(), pull))
     }
   }
 
@@ -858,25 +855,8 @@ object LinkGraph {
       .orderBy("node")
   }
 
-  /** BOUNDED-HOP BFS DISTANCES from the pinned seed set (node % 10 = 0,
-    * the PPR seed convention): every node's hop distance to the nearest
-    * seed over the UNDIRECTED click graph, up to `maxHops` — the
-    * reachability primitive under seed-proximity curation ("how many
-    * clicks from a trusted domain is this item?"), and the exact-
-    * distance complement to PPR's probability mass. The hop bound is
-    * part of the CONTRACT (rows stop at maxHops), so the result is
-    * well-defined with a fixed round count — no convergence test, no
-    * data-dependent unroll hazard for the oracle.
-    *
-    * Scale shape: the frontier loop is the standard distributed BFS —
-    * per round one frontier⋈edges equi-join plus a min-aggregation
-    * bounded by |reached nodes|, checkpointed per round with LoopWidth
-    * pinned to the symmetrized edge estimate; edges never carry more
-    * than (long, long) rows. Integer hop counts, min-relaxation —
-    * order-independent and engine-exact.
-    */
   /** WIDEST-PATH (max-bottleneck) capacities from the pinned seed set
-    * (node %% 10 == 0) over the DIRECTED stored transition graph, bounded
+    * (node % 10 == 0) over the DIRECTED stored transition graph, bounded
     * at `maxHops` relaxation rounds: cap(v) = max over <=maxHops-hop
     * paths from any seed of the MINIMUM edge weight along the path — the
     * "how much traffic can this route carry" rank of a click path, the
@@ -916,6 +896,23 @@ object LinkGraph {
     }
   }
 
+  /** BOUNDED-HOP BFS DISTANCES from the pinned seed set (node % 10 = 0,
+    * the PPR seed convention): every node's hop distance to the nearest
+    * seed over the UNDIRECTED click graph, up to `maxHops` — the
+    * reachability primitive under seed-proximity curation ("how many
+    * clicks from a trusted domain is this item?"), and the exact-
+    * distance complement to PPR's probability mass. The hop bound is
+    * part of the CONTRACT (rows stop at maxHops), so the result is
+    * well-defined with a fixed round count — no convergence test, no
+    * data-dependent unroll hazard for the oracle.
+    *
+    * Scale shape: the frontier loop is the standard distributed BFS —
+    * per round one frontier⋈edges equi-join plus a min-aggregation
+    * bounded by |reached nodes|, checkpointed per round with LoopWidth
+    * pinned to the symmetrized edge estimate; edges never carry more
+    * than (long, long) rows. Integer hop counts, min-relaxation —
+    * order-independent and engine-exact.
+    */
   def bfsDistances(
       spark: SparkSession,
       sfDir: String,
@@ -973,9 +970,8 @@ object LinkGraph {
   }
 
   /** Peeling core over an explicit distinct undirected (u, v) frame —
-    * the synthetic-graph test seam. Records (rounds, final edge count)
-    * in [[Cluster.lastRunStats]]-style telemetry via the return path
-    * of [[lastKCoreRounds]].
+    * the synthetic-graph test seam. Records its round count in
+    * [[lastKCoreRounds]].
     */
   private[graft] def kCoreOver(und0: DataFrame, k: Int): DataFrame = {
     var und = und0.localCheckpoint()
@@ -1421,18 +1417,6 @@ object LinkGraph {
       .orderBy("node")
   }
 
-  /** Joint forward/backward min-label fixpoint along `e`:
-    * f(v) = min id with a directed path to v, b(v) = min id v has a
-    * directed path to (both including v). The two labels are
-    * independent given the edge set, so they advance in LOCKSTEP — one
-    * action per round instead of two sequential fixpoints. Each round
-    * relaxes one edge hop AND pointer-jumps (f ← f(f(v)), valid because
-    * label values are themselves class members whose reach composes
-    * transitively), so convergence is O(log diameter) rounds, not
-    * O(diameter) — the difference between ~8 and ~40 driver round-trips
-    * on a deep cycle, and the standard shortcutting trick from parallel
-    * connectivity (Shiloach-Vishkin).
-    */
   /** Materialize AND reset stats. `localCheckpoint` carries the child
     * plan's ESTIMATED sizeInBytes into the LogicalRDD leaf; a join loop
     * whose per-round plan joins the state frame k times then
@@ -1528,7 +1512,19 @@ object LinkGraph {
     sccStep(bb, broadcast)(m)
   }
 
-  /** Returns the converged label frame, the number of Spark ACTIONS it
+  /** Joint forward/backward min-label fixpoint along `e`:
+    * f(v) = min id with a directed path to v, b(v) = min id v has a
+    * directed path to (both including v). The two labels are
+    * independent given the edge set, so they advance in LOCKSTEP — one
+    * action per round instead of two sequential fixpoints. Each round
+    * relaxes one edge hop AND pointer-jumps (f ← f(f(v)), valid because
+    * label values are themselves class members whose reach composes
+    * transitively), so convergence is O(log diameter) rounds, not
+    * O(diameter) — the difference between ~8 and ~40 driver round-trips
+    * on a deep cycle, and the standard shortcutting trick from parallel
+    * connectivity (Shiloach-Vishkin).
+    *
+    * Returns the converged label frame, the number of Spark ACTIONS it
     * ran (the driver-roundtrip currency the sweep telemetry reports),
     * and the final count of OPEN (f ≠ b) rows — ridden on the same
     * 1-row certificate aggregate so the caller's convergence check and
@@ -1603,23 +1599,4 @@ object LinkGraph {
     * slow scc row is attributable to data or to roundtrips by reading
     * the artifact alone. */
   @volatile private[graft] var lastSccActions: Option[Int] = None
-
-  /** First round's pre-argmax vote aggregation in FORCED join-loop mode —
-    * plan-audit seam (per-round checkpoints hide iteration plans from
-    * the returned label frame).
-    */
-  private[graft] def labelPropJoinLoopRoundSeam(
-      spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    val und = pinnedPartitioned(
-      edges.select(col("src").as("u"), col("dst").as("v"), col("weight"))
-        .unionByName(
-          edges.select(col("dst").as("u"), col("src").as("v"), col("weight")))
-        .groupBy("u", "v").agg(sum("weight").as("w")), "v")
-    val labels = nodes.withColumn("l", col("node")).localCheckpoint()
-    und.join(labels.select(col("node").as("v"), col("l")).hint("shuffle_hash"),
-        Seq("v"))
-      .groupBy(col("u"), col("l")).agg(sum("w").as("sw"))
-  }
 }

@@ -157,25 +157,25 @@ class CurationOpsSpec extends SparkTestBase {
 
   test("pagerank join loop: bit-identical to the broadcast loop (strategy, not values)") {
     val a = LinkGraph.pageRankStored(spark, Sf).collect().toSeq
-    val b = LinkGraph.pageRankJoinLoop(spark, Sf).collect().toSeq
+    val b = LinkGraph.pageRankStored(spark, Sf, broadcastCeiling = 0L).collect().toSeq
     assert(a == b)
   }
 
   test("hits join loop: bit-identical to the broadcast loop (strategy, not values)") {
     val a = LinkGraph.hits(spark, Sf).collect().toSeq
-    val b = LinkGraph.hitsJoinLoop(spark, Sf).collect().toSeq
+    val b = LinkGraph.hits(spark, Sf, broadcastCeiling = 0L).collect().toSeq
     assert(a == b)
   }
 
   test("ppr join loop: bit-identical to the broadcast loop (strategy, not values)") {
     val a = LinkGraph.personalizedPageRank(spark, Sf).collect().toSeq
-    val b = LinkGraph.personalizedPageRankJoinLoop(spark, Sf).collect().toSeq
+    val b = LinkGraph.personalizedPageRank(spark, Sf, broadcastCeiling = 0L).collect().toSeq
     assert(a == b)
   }
 
   test("label prop join loop: bit-identical to the broadcast loop (strategy, not values)") {
     val a = LinkGraph.labelPropagation(spark, Sf).collect().toSeq
-    val b = LinkGraph.labelPropagationJoinLoop(spark, Sf).collect().toSeq
+    val b = LinkGraph.labelPropagation(spark, Sf, broadcastCeiling = 0L).collect().toSeq
     assert(a == b)
   }
 

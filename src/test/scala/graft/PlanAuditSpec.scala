@@ -659,66 +659,100 @@ class PlanAuditSpec extends SparkTestBase {
       _.outputPartitioning.toString.contains("RoundRobinPartitioning"))
 
   test("pagerank join loop: edges keep their pinned partitioning, only rank rows shuffle") {
-    val df = graft.operators.LinkGraph.joinLoopRoundSeam(spark, Sf)
-    val p = plan(df)
-    // node-level collects (not string matching): the cached edge frame's
-    // BUILD plan legitimately used a broadcast pre-loop and its string
-    // renders inside InMemoryRelation, but collect() does not descend
-    // into cached plans — so these assert on the per-round plan only
-    val exec = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case q => q
+    graft.operators.LinkGraph.pageRankRoundSeam(spark, Sf, broadcastCeiling = 0L) { df =>
+      val p = plan(df)
+      // node-level collects (not string matching): the cached edge frame's
+      // BUILD plan legitimately used a broadcast pre-loop and its string
+      // renders inside InMemoryRelation, but collect() does not descend
+      // into cached plans — so these assert on the per-round plan only
+      val exec = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case q => q
+      }
+      assert(exec.collect {
+        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+      }.size == 1,
+        s"past-ceiling loop must shuffle-hash join the rank frame:\n$p")
+      assert(exec.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }.isEmpty,
+        s"no broadcast join in the past-ceiling round:\n$p")
+      // exactly two exchanges: the |nodes|-row rank frame moving to the
+      // edges' pinned src-partitioning, and the dst-keyed contribution sum
+      // (map-side combined). The edge side re-uses the checkpoint's
+      // partitioning — a third exchange would mean edges re-shuffled.
+      val ex = shuffles(df)
+      assert(ex.size == 2,
+        s"exactly two exchanges (rank side + contribution sum), saw ${ex.size}:\n$p")
+      assert(!ex.exists(_.output.exists(_.name == "share")),
+        s"the edge-volume share column must never cross an exchange: " +
+          s"${ex.map(_.output.map(_.name))}")
     }
-    assert(exec.collect {
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-    }.size == 1,
-      s"past-ceiling loop must shuffle-hash join the rank frame:\n$p")
-    assert(exec.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
-    }.isEmpty,
-      s"no broadcast join in the past-ceiling round:\n$p")
-    // exactly two exchanges: the |nodes|-row rank frame moving to the
-    // edges' pinned src-partitioning, and the dst-keyed contribution sum
-    // (map-side combined). The edge side re-uses the checkpoint's
-    // partitioning — a third exchange would mean edges re-shuffled.
-    val ex = shuffles(df)
-    assert(ex.size == 2,
-      s"exactly two exchanges (rank side + contribution sum), saw ${ex.size}:\n$p")
-    assert(!ex.exists(_.output.exists(_.name == "share")),
-      s"the edge-volume share column must never cross an exchange: " +
-        s"${ex.map(_.output.map(_.name))}")
   }
 
   test("hits join loop: edges keep their pinned layout, only score rows shuffle") {
-    val df = graft.operators.LinkGraph.hitsJoinLoopRoundSeam(spark, Sf)
-    val p = plan(df)
-    val exec = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case q => q
+    graft.operators.LinkGraph.hitsRoundSeam(spark, Sf, broadcastCeiling = 0L) { df =>
+      val p = plan(df)
+      val exec = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case q => q
+      }
+      assert(exec.collect {
+        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+      }.size == 1,
+        s"past-ceiling half-step must shuffle-hash join the score frame:\n$p")
+      assert(exec.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }.isEmpty,
+        s"no broadcast join in the past-ceiling half-step:\n$p")
+      // two exchanges only: the |nodes|-row score frame moving to the
+      // edges' pinned src-partitioning, and the node-keyed fixed-point sum
+      // (map-side combined); the edge side reuses the cached layout
+      val ex = shuffles(df)
+      assert(ex.size == 2,
+        s"exactly two exchanges (score side + contribution sum), saw ${ex.size}:\n$p")
+      assert(!ex.exists(_.output.exists(_.name == "w")),
+        s"the edge-volume weight column must never cross an exchange: " +
+          s"${ex.map(_.output.map(_.name))}")
     }
-    assert(exec.collect {
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-    }.size == 1,
-      s"past-ceiling half-step must shuffle-hash join the score frame:\n$p")
-    assert(exec.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
-    }.isEmpty,
-      s"no broadcast join in the past-ceiling half-step:\n$p")
-    // two exchanges only: the |nodes|-row score frame moving to the
-    // edges' pinned src-partitioning, and the node-keyed fixed-point sum
-    // (map-side combined); the edge side reuses the cached layout
-    val ex = shuffles(df)
-    assert(ex.size == 2,
-      s"exactly two exchanges (score side + contribution sum), saw ${ex.size}:\n$p")
-    assert(!ex.exists(_.output.exists(_.name == "w")),
-      s"the edge-volume weight column must never cross an exchange: " +
-        s"${ex.map(_.output.map(_.name))}")
   }
 
   test("label prop join loop: edges keep their pinned layout, only label rows shuffle") {
-    val df = graft.operators.LinkGraph.labelPropJoinLoopRoundSeam(spark, Sf)
+    graft.operators.LinkGraph.labelPropRoundSeam(spark, Sf, broadcastCeiling = 0L) { df =>
+      val p = plan(df)
+      val exec = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case q => q
+      }
+      assert(exec.collect {
+        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+      }.size == 1,
+        s"past-ceiling vote round must shuffle-hash join the label frame:\n$p")
+      assert(exec.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }.isEmpty,
+        s"no broadcast join in the past-ceiling vote round:\n$p")
+      // two exchanges only: the |nodes|-row label frame moving to the
+      // symmetrized edges' pinned v-partitioning, and the (u,label)-keyed
+      // vote sum (map-side combined); the edge side reuses the cached layout
+      val ex = shuffles(df)
+      assert(ex.size == 2,
+        s"exactly two exchanges (label side + vote sum), saw ${ex.size}:\n$p")
+      assert(!ex.exists(_.output.exists(_.name == "w")),
+        s"the edge-volume weight column must never cross an exchange: " +
+          s"${ex.map(_.output.map(_.name))}")
+    }
+  }
+
+  /** The below-ceiling round contract shared by the three propagation
+    * seams: the |nodes|-row state is the one broadcast side, the only
+    * exchange is the node- or (u,l)-keyed sum, and the edge-volume
+    * column `edgeCol` never crosses an exchange.
+    */
+  private def assertBroadcastRound(df: org.apache.spark.sql.DataFrame, edgeCol: String): Unit = {
     val p = plan(df)
     val exec = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -726,22 +760,31 @@ class PlanAuditSpec extends SparkTestBase {
       case q => q
     }
     assert(exec.collect {
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-    }.size == 1,
-      s"past-ceiling vote round must shuffle-hash join the label frame:\n$p")
-    assert(exec.collect {
       case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+    }.size == 1,
+      s"below the ceiling the state frame must broadcast onto the edges:\n$p")
+    assert(exec.collect {
+      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
     }.isEmpty,
-      s"no broadcast join in the past-ceiling vote round:\n$p")
-    // two exchanges only: the |nodes|-row label frame moving to the
-    // symmetrized edges' pinned v-partitioning, and the (u,label)-keyed
-    // vote sum (map-side combined); the edge side reuses the cached layout
+      s"no shuffle-hash join in a below-ceiling round:\n$p")
     val ex = shuffles(df)
-    assert(ex.size == 2,
-      s"exactly two exchanges (label side + vote sum), saw ${ex.size}:\n$p")
-    assert(!ex.exists(_.output.exists(_.name == "w")),
-      s"the edge-volume weight column must never cross an exchange: " +
+    assert(ex.size == 1,
+      s"exactly one exchange (the keyed sum), saw ${ex.size}:\n$p")
+    assert(!ex.exists(_.output.exists(_.name == edgeCol)),
+      s"the edge-volume $edgeCol column must never cross an exchange: " +
         s"${ex.map(_.output.map(_.name))}")
+  }
+
+  test("pagerank broadcast round: rank frame broadcasts, edges never shuffle") {
+    graft.operators.LinkGraph.pageRankRoundSeam(spark, Sf)(assertBroadcastRound(_, "share"))
+  }
+
+  test("hits broadcast half-step: score frame broadcasts, edges never shuffle") {
+    graft.operators.LinkGraph.hitsRoundSeam(spark, Sf)(assertBroadcastRound(_, "w"))
+  }
+
+  test("label prop broadcast round: label frame broadcasts, edges never shuffle") {
+    graft.operators.LinkGraph.labelPropRoundSeam(spark, Sf)(assertBroadcastRound(_, "w"))
   }
 
   test("pca projection: wholly map-side — the only exchange is the presentation sort") {
