@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.IO
+import graft.sources.{IO, Memo}
 
 /** Benchmark decontamination for a training-data pipeline: remove (or
   * report) training documents that share a word n-gram with an evaluation /
@@ -445,15 +445,6 @@ object Decontaminate {
       .orderBy("doc_id")
   }
 
-  /** Driver cache of persisted sketches (the codebook-cache idiom): the
-    * deserialized bytes of each artifact load at most once per driver.
-    */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
-  /** Test seam: forget loaded sketches (spec isolation). */
-  private[graft] def clearBloomCache(): Unit = bloomCache.clear()
-
   /** The persisted eval-gram sketch: the serialized bloom as a one-row
     * binary part (`sketch`) and, beside it, the exact distinct-gram table
     * (`grams`) — the verify join needs it, it is eval-sized (tiny), and
@@ -497,6 +488,9 @@ object Decontaminate {
       evalPct: Int = 5,
       fpp: Double = 0.03): DataFrame = {
     val artifact = evalGramBloom(sfDir, gramWidth, evalPct, fpp)
+    // the sketch bytes load once per root and documents version (the prime seeds them)
+    val memoKey = s"bloom|${artifact.key}"
+    val docs = IO.tableIdentity(spark, s"$sfDir/documents.parquet")
     val Seq(sketch, grams) = IO.servedArtifact(spark, artifact) { root =>
       import spark.implicits._
       val evalGrams = evalGramsFrame(gramDocs(spark, sfDir, gramWidth), evalPct)
@@ -504,12 +498,11 @@ object Decontaminate {
       evalGrams.write.mode("overwrite").parquet(s"$root/grams")
       Seq(bytes).toDF("bytes").coalesce(1)
         .write.mode("overwrite").parquet(s"$root/sketch")
-      bloomCache.put(root, bytes)
+      Memo.put(memoKey, (root, docs), bytes)
     }
-    // the root embeds the params AND the table fingerprint, so it
-    // doubles as the memory-cache key
-    val bytes = bloomCache.computeIfAbsent(artifact.root(spark),
-      _ => sketch.head().getAs[Array[Byte]](0))
+    val bytes = Memo(memoKey, (artifact.root(spark), docs)) {
+      sketch.head().getAs[Array[Byte]](0)
+    }
     reportWithBloomBytes(gramDocs(spark, sfDir, gramWidth), grams, bytes, evalPct)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.sources.IO
+import graft.sources.{IO, Memo}
 
 /** Top principal component of the embedding corpus via one-pass moment
   * aggregation + bounded driver power iteration — the embedding
@@ -124,25 +124,15 @@ object Pca {
       override def outputEncoder: Encoder[MomentBuf] = Encoders.product[MomentBuf]
     }
 
-  /** Train-once cache ([[Similarity]]'s codebook idiom — deterministic
-    * training over immutable tables, so a memo hit IS the artifact).
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, TopComponent]()
-
-  /** Test seam: drop memoized components (spec isolation). */
-  private[graft] def clearCache(): Unit = cache.clear()
-
-  /** The trained (mean, component, eigenvalue) for the corpus — memoized
-    * per table path and parameter set.
+  /** The trained (mean, component, eigenvalue) for the corpus: train-once,
+    * a [[Memo]] entry per table path and parameter set under the
+    * embeddings table's file identity ([[Similarity]]'s codebook idiom).
     */
   def topComponent(spark: SparkSession, sfDir: String): TopComponent = {
-    val key = s"pca|$sfDir/embeddings.parquet|$Iters|$MomentScale|$IterScale"
-    val hit = cache.get(key)
-    if (hit != null) return hit
-    val trained = train(spark, sfDir)
-    cache.putIfAbsent(key, trained)
-    trained
+    val path = s"$sfDir/embeddings.parquet"
+    Memo(s"pca|$path|$Iters|$MomentScale|$IterScale", IO.tableIdentity(spark, path)) {
+      train(spark, sfDir)
+    }
   }
 
   private def train(spark: SparkSession, sfDir: String): TopComponent = {

@@ -217,9 +217,11 @@ object PlayStore {
 
   // ---- wiring against the reference's bundled inputs ----
 
-  /** Bundled Play-Store CSV (read-only reference checkout). */
-  val StoreCsvPath =
-    "/root/reference/src/main/resources/originals/googleplaystore.csv"
+  /** The read-only reference checkout's resources (input CSVs, golden outputs). */
+  val ReferenceResources = "/root/reference/src/main/resources"
+
+  /** Bundled Play-Store CSV. */
+  val StoreCsvPath = s"$ReferenceResources/originals/googleplaystore.csv"
 
   /** The reviews CSV is a stripped blob in the reference checkout
     * (.MISSING_LARGE_BLOBS); tests and registered queries use the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.IO
+import graft.sources.{IO, Memo}
 
 /** Distilled quality CLASSIFIER: logistic regression trained distributed
   * on rule-battery labels — the published recipe behind the fastText-style
@@ -95,65 +95,39 @@ object QualityModel {
     least(lit(1.0), greatest(lit(0.0), lit(0.25) * margin + lit(0.5)))
   }
 
-  /** Train-once memo for the 4-double model, keyed by params + the
-    * documents footer fingerprint (the codebook convention — training is
-    * deterministic, so the memo is observationally identical to
-    * retraining; a regenerated corpus misses the stale entry).
-    */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
-
-  /** Test seam: drop memoized models (spec isolation). */
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
-
   /** The trained weight vector after `iters` full-batch GD steps from
     * w=0 at learning rate `lr`. One Spark job per iteration; the model is
-    * the returned 4 doubles, memoized per corpus fingerprint (every
-    * consumer — the weights row, the scoring row, audits — pays training
-    * once per corpus version, the production contract).
+    * the returned 4 doubles, a [[Memo]] entry under the documents table's
+    * file identity: every consumer — the weights row, the scoring row,
+    * audits — pays training once per corpus version.
     */
   def trainWeights(
       spark: SparkSession,
       sfDir: String,
       iters: Int = 3,
-      lr: Double = 1.0): Seq[Double] = {
-    val docsPath = s"$sfDir/documents.parquet"
-    val key = s"lr_v1|$sfDir|$iters|$lr|" +
-      s"${IO.parquetRowCount(spark, docsPath)}:" +
-      s"${IO.parquetColumnUncompressedBytes(spark, docsPath, "text")}"
-    val hit = modelCache.get(key)
-    if (hit != null) return hit
-    val trained = trainWeightsUncached(spark, sfDir, iters, lr)
-    modelCache.putIfAbsent(key, trained)
-    trained
-  }
-
-  private def trainWeightsUncached(
-      spark: SparkSession,
-      sfDir: String,
-      iters: Int,
-      lr: Double): Seq[Double] = {
-    val f = featureFrame(spark, sfDir)
-    var w = Seq(0.0, 0.0, 0.0, 0.0)
-    for (_ <- 0 until iters) {
-      val p = sigmoid(w)
-      // no float cast needed: every input to the product is an exact or
-      // correctly-rounded double identical on all engines, so the
-      // fixed-point round sees the same value everywhere; the BIGINT sum
-      // is purely for partition-order independence
-      def gFix(xj: String): Column =
-        sum(round(((p - col("y")) * col(xj)) * lit(1000000.0), 0)
-          .cast("long"))
-      val row = f.agg(gFix("x0").as("g0"), gFix("x1").as("g1"),
-        gFix("x2").as("g2"), gFix("x3").as("g3"),
-        count(lit(1)).as("n")).collect()(0)
-      val n = row.getLong(4).toDouble
-      w = w.zipWithIndex.map { case (wj, j) =>
-        wj - lr * (row.getLong(j).toDouble / (n * 1000000.0))
+      lr: Double = 1.0): Seq[Double] =
+    Memo(s"lr_v1|$sfDir|$iters|$lr", IO.tableIdentity(spark, s"$sfDir/documents.parquet")) {
+      val f = featureFrame(spark, sfDir)
+      var w = Seq(0.0, 0.0, 0.0, 0.0)
+      for (_ <- 0 until iters) {
+        val p = sigmoid(w)
+        // no float cast needed: every input to the product is an exact or
+        // correctly-rounded double identical on all engines, so the
+        // fixed-point round sees the same value everywhere; the BIGINT sum
+        // is purely for partition-order independence
+        def gFix(xj: String): Column =
+          sum(round(((p - col("y")) * col(xj)) * lit(1000000.0), 0)
+            .cast("long"))
+        val row = f.agg(gFix("x0").as("g0"), gFix("x1").as("g1"),
+          gFix("x2").as("g2"), gFix("x3").as("g3"),
+          count(lit(1)).as("n")).collect()(0)
+        val n = row.getLong(4).toDouble
+        w = w.zipWithIndex.map { case (wj, j) =>
+          wj - lr * (row.getLong(j).toDouble / (n * 1000000.0))
+        }
       }
+      w
     }
-    w
-  }
 
   /** The model artifact as a frame: (feature, weight) — hash-oracled
     * value for value against DuckDB's unrolled-GD replay.

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.SmallestDistinctAggregator
 import graft.sources.IO
 
 /** The relational operator surface (SURVEY.md §2) exercised as named queries
@@ -948,18 +949,14 @@ object Relational {
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("item"))
       .where(col("item").isNotNull)
-      // capped basket as ONE per-user aggregation (r20): collect_set
-      // dedups, sort_array orders ascending, slice keeps the lowest
-      // maxBasket item ids — exactly the set the previous
-      // distinct + row_number(orderBy item) <= maxBasket form kept
-      // (items are distinct longs, so the per-user order has no ties
-      // and both forms keep the same lowest-id prefix; Round20OptSpec
-      // pins the frames identical on an over-cap adversarial user).
-      // One user_id exchange with partial map-side collect_set instead
-      // of the distinct exchange + the window exchange (guide §2).
+      // capped basket as ONE per-user aggregation: the lowest maxBasket
+      // distinct item ids — the set distinct + row_number(orderBy item)
+      // <= maxBasket keeps (Round20OptSpec pins it on an over-cap user) —
+      // in one user_id exchange with map-side partials (guide §2), each
+      // buffer bounded by the cap however many items one crawler touches.
       .groupBy("user_id")
-      .agg(expr(s"slice(sort_array(collect_set(item)), 1, $maxBasket)")
-        .as("items"))
+      .agg(udaf(new SmallestDistinctAggregator(maxBasket), Encoders.scalaLong)(
+        col("item")).as("items"))
       .select(col("user_id"), explode(col("items")).as("item"))
       // FOUR consumers below (item counts, user total, both pair sides) —
       // uncheckpointed, each re-paid the events scan + the distinct and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.IO
+import graft.sources.{IO, Memo}
 
 /** BM25 ranked retrieval over the documents table — the lexical-search
   * side of data curation (retrieval-based filtering, eval-set mining,
@@ -161,16 +161,6 @@ object Retrieval {
       Seq("tf" -> PostingsTfSchema, "dlen" -> PostingsDlenSchema,
         "df" -> PostingsDfSchema, "stats" -> PostingsStatsSchema), ".parquet")
 
-  /** Per-JVM memo of the query-side constants (term→df map, N, total
-    * length) keyed by artifact path — the train-once codebook idiom. The
-    * df map is vocab-bounded (Zipf-small here; a web-scale vocabulary
-    * would keep the in-plan df JOIN — the `side=None` fallback in
-    * [[bm25ScoreOverPostings]] — rather than a driver map).
-    */
-  private val sideConstantsCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, (Map[String, Long], Double, Double)]
-
   /** Vocab-size ceiling for the driver-side df map: above it the stored
     * path keeps the in-plan df JOIN (`side = None`) instead of collecting
     * the vocabulary — ~10⁶ (string, long) entries is tens of MB of driver
@@ -221,16 +211,17 @@ object Retrieval {
         .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
     }
     val root = artifact.root(spark)
+    // the query-side constants (term→df map, N, total length): ONE fixed
+    // Memo key with the root as identity, so a long-lived driver holds the
+    // most recent artifact's only (the df map is vocab-bounded; a larger
+    // vocabulary keeps the in-plan df JOIN, `side = None`)
     val side =
       if (IO.parquetRowCount(spark, s"$root/df") > DfMapTermCeiling) None
-      else Some(sideConstantsCache.getOrElseUpdate(root, {
-        // bound the memo to the most recent artifact: many corpus
-        // versions in one long-lived driver must not accumulate maps
-        sideConstantsCache.clear()
+      else Some(Memo("bm25|side", root) {
         val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val st = stats.head()
         (m, st.getDouble(0), st.getDouble(1))
-      }))
+      })
     bm25ScoreOverPostings(spark, tf, k1, b, k, dlenStored = Some(dlen), side = side)
   }
 

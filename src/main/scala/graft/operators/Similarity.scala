@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.IO
+import graft.sources.{IO, Memo}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
@@ -30,40 +30,12 @@ import graft.sources.IO
   */
 object Similarity {
 
-  /** TRAIN-ONCE cache for bounded codebook artifacts (k-means coarse
-    * quantizers, PQ sub-codebooks, residual-PQ books), keyed by
-    * (table path, every training parameter). A real user trains a
-    * codebook once and queries against it many times; before this cache
-    * every registered IVF/PQ/SemDedup query re-derived the identical
-    * artifact per invocation — 6-8 redundant full-corpus passes per call.
-    * Memoizing is sound because training is fully deterministic (fixed
-    * init, fixed iteration count, fixed-point integer accumulation — the
-    * artifact is bit-identical on every retrain of the same inputs) and
-    * the benchmark tables are immutable for the life of the driver; the
-    * production contract is the same artifact MATERIALIZED as a parquet
-    * codebook table (see SCALING.md "Train-once model artifacts").
-    *
-    * Same driver-side idiom as IO.rowCountCache. NOT computeIfAbsent:
-    * the residual-PQ trainer looks up the coarse codebook on the same
-    * map mid-train, and ConcurrentHashMap forbids that reentrancy —
-    * get/putIfAbsent instead, where a rare race merely retrains the
-    * identical artifact.
+  /** TRAIN-ONCE: each codebook (coarse, PQ, residual-PQ) is a [[Memo]] entry
+    * keyed by (table path, every training parameter) under this identity;
+    * training is deterministic (SCALING.md "Train-once model artifacts").
     */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def cachedArtifact[T <: AnyRef](key: String)(train: => T): T = {
-    val hit = codebookCache.get(key)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val trained = train
-      codebookCache.putIfAbsent(key, trained)
-      trained
-    }
-  }
-
-  /** Test seam: drop every memoized codebook (spec isolation). */
-  private[graft] def clearCodebookCache(): Unit = codebookCache.clear()
+  private def embeddingsIdentity(spark: SparkSession, sfDir: String): Any =
+    IO.tableIdentity(spark, s"$sfDir/embeddings.parquet")
 
   /** Sequential-fold dot product (deterministic double arithmetic). */
   def dot(a: Column, b: Column): Column =
@@ -596,7 +568,7 @@ object Similarity {
       sfDir: String,
       k: Int = 16,
       iters: Int = 2): Seq[(Long, Array[Double])] =
-    cachedArtifact(s"kmeans|$sfDir|$k|$iters") {
+    Memo(s"kmeans|$sfDir|$k|$iters", embeddingsIdentity(spark, sfDir)) {
       trainCodebook(corpus(spark, sfDir).select("vec_id", "v"), k, iters)
     }
 
@@ -880,14 +852,14 @@ object Similarity {
       codesPerSub: Int = 16,
       iters: Int = 1,
       dim: Int = 64): Seq[IndexedSeq[Array[Double]]] =
-    cachedArtifact(s"pq|$sfDir|$numSub|$codesPerSub|$iters|$dim") {
+    Memo(s"pq|$sfDir|$numSub|$codesPerSub|$iters|$dim", embeddingsIdentity(spark, sfDir)) {
       pqCodebooksOn(corpus(spark, sfDir).select("vec_id", "v"),
         numSub, codesPerSub, iters, dim)
     }
 
   /** PQ sub-codebooks trained on COARSE-CELL RESIDUALS (the residual
-    * IVF-PQ training input), train-once cached like the raw flavor —
-    * the coarse codebook it depends on resolves through its own cache
+    * IVF-PQ training input), train-once like the raw flavor — the
+    * coarse codebook it depends on resolves through its own memo
     * entry, so a cold driver trains coarse + residual books exactly once
     * each no matter how many queries consume them.
     */
@@ -900,8 +872,8 @@ object Similarity {
       codesPerSub: Int = 16,
       pqIters: Int = 1,
       dim: Int = 64): Seq[IndexedSeq[Array[Double]]] =
-    cachedArtifact(
-      s"pqres|$sfDir|$nlist|$coarseIters|$numSub|$codesPerSub|$pqIters|$dim") {
+    Memo(s"pqres|$sfDir|$nlist|$coarseIters|$numSub|$codesPerSub|$pqIters|$dim",
+      embeddingsIdentity(spark, sfDir)) {
       val c = corpus(spark, sfDir).select("vec_id", "v")
       val coarse = kmeansCodebook(spark, sfDir, nlist, coarseIters)
       pqCodebooksOn(residualFrame(c, coarse), numSub, codesPerSub, pqIters, dim)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Typed readers/writers for the engine's source/sink surface
@@ -195,16 +197,7 @@ object IO {
       dstDir: String,
       targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(srcDir)
-    val fs = dir.getFileSystem(conf)
-    val it = fs.listFiles(dir, true)
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) totalBytes += st.getLen
-    }
+    val totalBytes = listed(spark, srcDir)._2.map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     spark.read.parquet(srcDir)
       .coalesce(nFiles)
@@ -212,12 +205,60 @@ object IO {
     readParquet(spark, dstDir)
   }
 
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** One recursive driver listing (partitioned layouts nest files) of a
+    * table's data files, skipping `_`/`.` side files: the conf that reads
+    * them, the files, and their [[tableIdentity]].
+    */
+  private def listed(
+      spark: SparkSession,
+      path: String): (Configuration, Seq[FileStatus], Seq[(String, Long, Long)]) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(conf)
+    val it = fs.listFiles(dir, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq
+    val root = s"${fs.makeQualified(dir)}/"
+    (conf, files, files.map(st =>
+      (st.getPath.toString.stripPrefix(root), st.getLen, st.getModificationTime)).sorted)
+  }
+
+  /** A table's FILE IDENTITY: the sorted (relative path, length, mtime) of
+    * its data files — a driver listing, no job. Part-file names carry the
+    * write's UUID, so an overwrite changes it even within one millisecond.
+    */
+  def tableIdentity(spark: SparkSession, path: String): Seq[(String, Long, Long)] =
+    listed(spark, path)._3
+
+  private final case class FooterStats(rows: Long, columnBytes: Map[String, Long])
+
+  /** Row count and per-column (dotted path) uncompressed bytes of a parquet
+    * table from every footer, read once per [[tableIdentity]].
+    */
+  private def footerStats(spark: SparkSession, path: String): FooterStats = {
+    import scala.jdk.CollectionConverters._
+    val (conf, files, identity) = listed(spark, path)
+    Memo(s"footer|$path", identity) {
+      val bytes = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+      val rows = files.map { st =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try {
+          reader.getRowGroups.asScala.foreach(_.getColumns.asScala.foreach { c =>
+            bytes(c.getPath.toDotString) += c.getTotalUncompressedSize
+          })
+          reader.getRecordCount
+        } finally reader.close()
+      }.sum
+      FooterStats(rows, bytes.toMap)
+    }
+  }
 
   /** Exact row count of a parquet table from file-footer metadata — NO Spark
-    * job: the driver lists the directory once and reads each footer's record
-    * count (a few KB per file), memoized per path for the session lifetime.
+    * job: the driver lists the directory and reads each footer's record
+    * count (a few KB per file) once per table version ([[footerStats]]).
     *
     * This exists so operators that size themselves to the corpus (the
     * adaptive LSH plane count in [[graft.operators.Similarity]]) don't run a
@@ -228,32 +269,11 @@ object IO {
     * from the caller; this helper is the no-catalog fallback.
     */
   def parquetRowCount(spark: SparkSession, path: String): Long =
-    rowCountCache.computeIfAbsent(path, (p: String) => {
-      val conf = spark.sessionState.newHadoopConf()
-      val dir = new org.apache.hadoop.fs.Path(p)
-      val fs = dir.getFileSystem(conf)
-      // recursive: hive-partitioned layouts nest data files under
-      // partition directories — a flat listing would silently count 0
-      val it = fs.listFiles(dir, true)
-      var total = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try total += reader.getRecordCount finally reader.close()
-        }
-      }
-      total
-    })
-
-  private val columnBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    footerStats(spark, path).rows
 
   /** Total UNCOMPRESSED byte size of one column across a parquet table,
-    * from file-footer row-group metadata — NO Spark job, memoized per
-    * (path, column) like [[parquetRowCount]]. This is the data-derived
+    * from file-footer row-group metadata — NO Spark job, read once per
+    * table version like [[parquetRowCount]]. This is the data-derived
     * volume signal for operators whose cost tracks a column's content
     * size rather than the row count (the substring-dedup window estimate:
     * token volume ≈ text bytes, which a rows×constant heuristic gets
@@ -268,28 +288,7 @@ object IO {
       spark: SparkSession,
       path: String,
       column: String): Long =
-    columnBytesCache.computeIfAbsent(s"$path#$column", (_: String) => {
-      import scala.jdk.CollectionConverters._
-      val conf = spark.sessionState.newHadoopConf()
-      val dir = new org.apache.hadoop.fs.Path(path)
-      val fs = dir.getFileSystem(conf)
-      val it = fs.listFiles(dir, true)
-      var total = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try reader.getRowGroups.asScala.foreach { rg =>
-            rg.getColumns.asScala.foreach { c =>
-              if (c.getPath.toDotString == column) total += c.getTotalUncompressedSize
-            }
-          } finally reader.close()
-        }
-      }
-      total
-    })
+    footerStats(spark, path).columnBytes.getOrElse(column, 0L)
 
   /** Scheme-aware existence probe for a persisted artifact — resolved
     * through the Hadoop FileSystem of the path's scheme, NOT
@@ -517,8 +516,8 @@ object IO {
       column: String,
       tag: String,
       key: String): String = {
-    val fingerprint = s"${parquetRowCount(spark, dataPath)}:" +
-      s"${parquetColumnUncompressedBytes(spark, dataPath, column)}"
+    val stats = footerStats(spark, dataPath)
+    val fingerprint = s"${stats.rows}:${stats.columnBytes.getOrElse(column, 0L)}"
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$key|$fingerprint".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusPrep, Decontaminate}
+import graft.sources.Memo
 
 /** Behavior specs for decontamination, sampling, and shuffle-order
   * operators over the sf0.001 testdata.
@@ -249,7 +250,7 @@ class CorpusOpsSpec extends SparkTestBase {
   test("stored-sketch contamination report: persists once, reloads, stays row-identical") {
     val exact = Decontaminate.contaminationReport(spark, Sf, gramWidth = 4)
     // cold: no memory cache, no artifact on disk → builds and persists
-    Decontaminate.clearBloomCache()
+    Memo.clear()
     val artifact = java.nio.file.Paths.get(
       Decontaminate.evalGramBloom(Sf, 4, 5, 0.03).root(spark))
     org.apache.commons.io.FileUtils.deleteQuietly(artifact.toFile)
@@ -261,7 +262,7 @@ class CorpusOpsSpec extends SparkTestBase {
       "eval-gram table must persist beside the sketch")
     // warm from DISK only (fresh memory cache): must reload, not rebuild —
     // and still match
-    Decontaminate.clearBloomCache()
+    Memo.clear()
     val warm = Decontaminate.contaminationReportBloomStored(spark, Sf, gramWidth = 4)
     assert(warm.exceptAll(exact).isEmpty && exact.exceptAll(warm).isEmpty,
       "artifact-loaded run must equal the exact report")

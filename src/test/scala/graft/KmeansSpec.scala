@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Similarity
+import graft.sources.Memo
 
 /** Behavior specs for the k-means coarse-quantizer trainer and the
   * trained-codebook IVF path, over the sf0.001 embeddings.
@@ -19,11 +20,11 @@ class KmeansSpec extends SparkTestBase {
   }
 
   test("k-means training is deterministic across runs") {
-    Similarity.clearCodebookCache()
+    Memo.clear()
     val a = Similarity.kmeansCodebook(spark, Sf)
     // bypass the train-once cache: the determinism claim is about
     // RETRAINING producing the identical artifact, not cache identity
-    Similarity.clearCodebookCache()
+    Memo.clear()
     val b = Similarity.kmeansCodebook(spark, Sf)
     assert(a.map(_._1) == b.map(_._1))
     a.zip(b).foreach { case ((_, va), (_, vb)) =>
@@ -62,7 +63,7 @@ class KmeansSpec extends SparkTestBase {
 
   test("codebooks are train-once: a second lookup runs ZERO Spark jobs") {
     import java.util.concurrent.atomic.AtomicInteger
-    Similarity.clearCodebookCache()
+    Memo.clear()
     Similarity.kmeansCodebook(spark, Sf)
     Similarity.pqCodebooks(spark, Sf)
     Similarity.residualPqCodebooks(spark, Sf)
@@ -129,7 +130,7 @@ class KmeansSpec extends SparkTestBase {
     assert(stored.map(_.toString).toSeq == trained.map(_.toString).toSeq,
       "stored-artifact search must be row-identical to the trained path")
     // second call consumes the artifact without touching the trainer cache
-    Similarity.clearCodebookCache()
+    Memo.clear()
     val again = Similarity.ivfCosineTopKStored(spark, Sf).collect()
     assert(again.map(_.toString).toSeq == trained.map(_.toString).toSeq)
   }

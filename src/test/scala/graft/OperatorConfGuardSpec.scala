@@ -13,22 +13,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * `IO.servedArtifact`, so every one is keyed, primed, checked and healed
   * the same way. The near-dup hash families are spelled in `HashFamily`
   * only, so an oracled row and its production twin cannot hash apart.
+  * Driver-side memos go through `Memo` only, so every value derived from
+  * a table is checked against the table's files before it is reused.
   */
 class OperatorConfGuardSpec extends AnyFunSuite {
 
-  private val dirs = Seq("operators", "functions").map(d => Paths.get(s"src/main/scala/graft/$d"))
-
-  private def sources: Seq[Path] = dirs.flatMap { dir =>
+  private def sources(packages: Seq[String]): Seq[Path] = packages.flatMap { d =>
+    val dir = Paths.get(s"src/main/scala/graft/$d")
     assert(Files.isDirectory(dir), s"sources not found at ${dir.toAbsolutePath}")
     val s = Files.list(dir)
     try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
     finally s.close()
   }
 
-  private def offenders(pattern: String, allowed: Set[String]): Seq[String] = {
+  private def offenders(
+      pattern: String,
+      allowed: Set[String],
+      packages: Seq[String] = Seq("operators", "functions")): Seq[String] = {
     val re = pattern.r
     for {
-      f <- sources if !allowed(f.getFileName.toString)
+      f <- sources(packages) if !allowed(f.getFileName.toString)
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if re.findFirstIn(line).isDefined
     } yield s"${f.getFileName}:${i + 1}: ${line.trim}"
@@ -53,5 +57,13 @@ class OperatorConfGuardSpec extends AnyFunSuite {
     val bad = offenders(
       """contentKeyedArtifactPath|artifactExists|readStamped|java\.nio\.file""", Set.empty)
     assert(bad.isEmpty, bad.mkString("artifact access outside IO.servedArtifact:\n", "\n", ""))
+  }
+
+  test("driver memos go through Memo") {
+    // task-local java.util.HashMaps inside a partition are not memos and
+    // stay allowed; a driver-lifetime concurrent map is one
+    val bad = offenders("""ConcurrentHashMap|TrieMap""", Set("Memo.scala"),
+      Seq("operators", "functions", "sources"))
+    assert(bad.isEmpty, bad.mkString("driver memos outside Memo:\n", "\n", ""))
   }
 }

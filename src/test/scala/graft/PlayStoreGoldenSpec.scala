@@ -17,7 +17,7 @@ import graft.sources.IO
   */
 class PlayStoreGoldenSpec extends SparkTestBase {
 
-  private val Res = "/root/reference/src/main/resources"
+  private val Res = PlayStore.ReferenceResources
 
   /** Copy a committed parquet part file out of its directory so Hadoop does
     * not trip over the reference's stale .crc sidecars (SURVEY.md §5.2).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
 import graft.operators.QualityModel
+import graft.sources.Memo
 
 /** Behavior specs for the distilled quality classifier: bit-determinism
   * of the trained weights (the whole point of the fixed-point gradient +
@@ -13,12 +14,12 @@ import graft.operators.QualityModel
 class QualityModelSpec extends SparkTestBase {
 
   test("trained weights are bit-identical across runs and partitionings") {
-    QualityModel.clearModelCache() // force a real retrain on both sides
+    Memo.clear() // force a real retrain on both sides
     val a = QualityModel.lrWeights(spark, Sf).collect().toSeq
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "7")
-      QualityModel.clearModelCache()
+      Memo.clear()
       val b = QualityModel.lrWeights(spark, Sf).collect().toSeq
       assert(a == b, "weight vector must not depend on partition layout")
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
