@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.registry.Registry
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
@@ -9,9 +11,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter for fast local
-    // iteration (the driver always runs the full registry)
+    // iteration (the driver always runs the full registry); an unknown
+    // name fails the run instead of dumping nothing
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
+      if (args.length > 2) Some(Registry.known(args(2).split(',').toSeq).toSet) else None
     val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A query that throws must stay VISIBLE on the scoreboard: write a

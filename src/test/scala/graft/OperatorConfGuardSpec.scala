@@ -15,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * only, so an oracled row and its production twin cannot hash apart.
   * Driver-side memos go through `Memo` only, so every value derived from
   * a table is checked against the table's files before it is reused.
+  * Registered queries are listed only by their specs under `registry/`,
+  * so no hand-kept row list can drift from the registry.
   */
 class OperatorConfGuardSpec extends AnyFunSuite {
 
@@ -65,5 +67,19 @@ class OperatorConfGuardSpec extends AnyFunSuite {
     val bad = offenders("""ConcurrentHashMap|TrieMap""", Set("Memo.scala"),
       Seq("operators", "functions", "sources"))
     assert(bad.isEmpty, bad.mkString("driver memos outside Memo:\n", "\n", ""))
+  }
+
+  test("no hand-kept query-name lists in Bench or SparkEntry") {
+    // the canary basket and Bench's own Part-5 row
+    val allowed =
+      Set("q1_pricing_summary", "q_join_agg", "w1_row_number_topk", "ps_part5_metrics")
+    val literal = "\"([a-z0-9_]+)\"".r
+    val bad = for {
+      name <- Seq("Bench.scala", "SparkEntry.scala")
+      (line, i) <- Files.readAllLines(Paths.get(s"src/main/scala/graft/$name")).asScala.zipWithIndex
+      m <- literal.findAllMatchIn(line)
+      if SparkEntry.queries.contains(m.group(1)) && !allowed(m.group(1))
+    } yield s"$name:${i + 1}: ${line.trim}"
+    assert(bad.isEmpty, bad.mkString("query names spelled outside their specs:\n", "\n", ""))
   }
 }

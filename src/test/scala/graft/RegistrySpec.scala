@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.registry.{BenchRole, Oracle, QuerySpec, Registry}
+import graft.registry.Oracle.{NoOracle, SameAs, Sql}
+
 /** Driver-contract consistency: the correctness gate compares
   * `SparkEntry.queries` dumps against `SparkEntry.oracleSql` BY NAME, so a
   * misspelled oracle key silently downgrades its query to a rows-only
@@ -51,5 +54,54 @@ class RegistrySpec extends AnyFunSuite {
     assert(actual == expected,
       s"no-oracle set drifted: unexpected=${(actual -- expected).toSeq.sorted}, " +
         s"missing=${(expected -- actual).toSeq.sorted}")
+  }
+
+  private def spec(name: String, oracle: Oracle): QuerySpec =
+    QuerySpec(name, (_, _) => null, oracle)
+
+  test("the derivation rejects a name declared twice") {
+    val twice = Seq(spec("a", Sql("SELECT 1")), spec("b", NoOracle("x")), spec("a", NoOracle("y")))
+    Seq[Seq[QuerySpec] => Any](QuerySpec.builders, QuerySpec.oracles).foreach { derive =>
+      val e = intercept[IllegalArgumentException](derive(twice))
+      assert(e.getMessage.contains("'a'"), e.getMessage)
+    }
+  }
+
+  test("a SameAs resolves only to a Sql spec, and shares its string") {
+    val primary = spec("p", Sql(new String("SELECT 1")))
+    val ok = QuerySpec.oracles(Seq(primary, spec("t", SameAs("p")), spec("n", NoOracle("r"))))
+    assert(ok.keySet == Set("p", "t"))
+    assert(ok("t") eq ok("p"))
+    for (bad <- Seq(
+        Seq(primary, spec("t", SameAs("missing"))),
+        Seq(spec("n", NoOracle("r")), spec("t", SameAs("n"))),
+        Seq(primary, spec("u", SameAs("p")), spec("t", SameAs("u"))))) {
+      val e = intercept[IllegalArgumentException](QuerySpec.oracles(bad))
+      assert(e.getMessage.contains("'t'"), e.getMessage)
+    }
+  }
+
+  test("every NoOracle reason says something") {
+    val blank = Registry.specs.collect {
+      case QuerySpec(name, _, NoOracle(reason), _) if reason.trim.isEmpty => name
+    }
+    assert(blank.isEmpty, s"NoOracle without a reason: $blank")
+  }
+
+  test("Bench's primed, headline and canary rows are all timed rows") {
+    val timed = Registry.benchRows(_.timed).toSet
+    val named = Registry.benchRows(r => r.primed || r.headline) ++ Bench.CanaryBasket
+    // Bench times its own Part-5 row from the warm-up's df_4, not through
+    // the registered builder
+    assert(named.filterNot(timed).toSet == Set(Bench.OwnRow))
+    assert(Registry.specs.find(_.name == Bench.OwnRow).map(_.bench)
+      .contains(BenchRole.HeadlineOwnTiming))
+  }
+
+  test("an unknown query name is rejected, listing every unknown name") {
+    assert(Registry.known(Seq("a4_count_star", "q_join_agg")) == Seq("a4_count_star", "q_join_agg"))
+    val e = intercept[IllegalArgumentException](
+      Registry.known(Seq("a4_count_star", "a4_count_stat", "no_such_row")))
+    assert(e.getMessage.contains("a4_count_stat, no_such_row"), e.getMessage)
   }
 }
