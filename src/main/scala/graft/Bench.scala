@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import graft.obs.RunRecord
 import graft.operators.PlayStore
 import graft.registry.Registry
 import graft.sources.IO
@@ -78,26 +79,12 @@ object Bench {
         }))
     val cases = only.fold(allCases)(keep => allCases.filter(c => keep(c._1)))
 
-    // star-contraction convergence telemetry: queries that run connected
-    // components report (rounds, final contracted edges) so round-count
-    // regressions are visible in the bench payload
-    val ccStats = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Long)]
-    // contraction action telemetry (r20): driver roundtrips per cc run,
-    // the currency of the loop-fusion claim (one action per round)
-    val ccActions = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    // pagerank build/loop split: rebuild rows report how much of their
-    // wall is edge construction vs power iteration
-    val prStats = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    // scc convergence telemetry: FW-BW sweep count per scc row, plus
-    // the Spark-action count (the driver-roundtrip currency of the
-    // loop floor) so sweeps and their per-sweep cost read together
-    val sccStats = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val sccActs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-
     // best-of-2: a single local-mode run still carries JIT/IO noise that a
-    // second pass removes; min is the steady-state number the 2x gate means
-    def timeCase(name: String, mk: () => DataFrame): (String, Either[String, Double]) = {
-        def once(): Either[String, Double] = {
+    // second pass removes; min is the steady-state number the 2x gate means.
+    // Each run captures its own run record; the row's notes are the two
+    // records merged, the second run's note replacing the first's.
+    def timeCase(name: String, mk: () => DataFrame): (String, Either[String, Double], Map[String, Long]) = {
+        def once(): (Either[String, Double], Map[String, Long]) = RunRecord.capture {
           // start each timing from a cache-free session so no query's
           // number depends on what ran before it (r3's minhash swing was
           // cache-state accumulation across the 21-query session).
@@ -121,23 +108,15 @@ object Bench {
             case e: Throwable => Left(e.getClass.getSimpleName)
           }
         }
-        operators.Cluster.lastRunStats = None
-        operators.Cluster.lastRunActions = None
-        operators.LinkGraph.lastBuildStats = None
-        operators.LinkGraph.lastSccSweeps = None
-        operators.LinkGraph.lastSccActions = None
-        val r = (once(), once()) match {
+        val (first, notes1) = once()
+        val (second, notes2) = once()
+        val r = (first, second) match {
           case (Right(a), Right(b)) => Right(math.min(a, b))
           case (Right(a), _) => Right(a)
           case (_, Right(b)) => Right(b)
           case (l, _) => l
         }
-        operators.Cluster.lastRunStats.foreach(ccStats(name) = _)
-        operators.Cluster.lastRunActions.foreach(ccActions(name) = _)
-        operators.LinkGraph.lastBuildStats.foreach(prStats(name) = _)
-        operators.LinkGraph.lastSccSweeps.foreach(sccStats(name) = _)
-        operators.LinkGraph.lastSccActions.foreach(sccActs(name) = _)
-        name -> r
+        (name, r, notes1 ++ notes2)
     }
 
     // DRIFT CANARIES, interleaved + basketed: a fixed three-query BASKET
@@ -167,8 +146,8 @@ object Bench {
         timeCase(n, () => SparkEntry.queries(n)(spark, sfDir))
           ._2.getOrElse(Double.NaN))
     val probesRaw = scala.collection.mutable.ArrayBuffer[Seq[Double]]()
-    val resultsBuf =
-      scala.collection.mutable.ArrayBuffer[(String, Either[String, Double])]()
+    val resultsBuf = scala.collection.mutable.ArrayBuffer[
+      (String, Either[String, Double], Map[String, Long])]()
     probesRaw += canary()
     cases.grouped(CanaryEvery).foreach { grp =>
       grp.foreach { case (n, mk) => resultsBuf += timeCase(n, mk) }
@@ -188,7 +167,9 @@ object Bench {
       if (keepMembers.isEmpty) Double.NaN
       else keepMembers.map(j => if (p(j).isNaN) memberMed(j) else p(j)).sum
     }
-    val results: Seq[(String, Either[String, Double])] = resultsBuf.toSeq
+    val results: Seq[(String, Either[String, Double])] =
+      resultsBuf.toSeq.map(t => t._1 -> t._2)
+    val notes: Seq[(String, Map[String, Long])] = resultsBuf.toSeq.map(t => t._1 -> t._3)
     def ms(d: Double): Double = math.round(d * 1000) / 1000.0
     // NaN-safe JSON: a failed probe (or an all-failed run) must emit
     // null, never a plausible-looking 0.0 — math.round(NaN) is 0 and a
@@ -224,21 +205,26 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, Right(s)) => s }.sum
     val errors = results.count(_._2.isLeft)
-    val cc = ccStats
-      .map { case (k, (r, e)) => s""""$k":{"cc_rounds":$r,"cc_edges":$e}""" }
-      .mkString("{", ",", "}")
-    val ccActsJ = ccActions.map { case (k, n) => s""""$k":$n""" }
-      .mkString("{", ",", "}")
-    val pr = prStats
-      .map { case (k, (b, l)) =>
-        s""""$k":{"build_sec":${math.round(b * 1000) / 1000.0},"loop_sec":${math.round(l * 1000) / 1000.0}}""" }
-      .mkString("{", ",", "}")
-    val sccJ = sccStats.map { case (k, n) => s""""$k":$n""" }
-      .mkString("{", ",", "}")
-    val sccA = sccActs.map { case (k, n) => s""""$k":$n""" }
-      .mkString("{", ",", "}")
+    // loop telemetry from the rows' run records: the per-family views
+    // (connected-components rounds and edges, the build/loop split of the
+    // graph rebuild rows, SCC sweeps, Spark actions per loop), then every
+    // row's full notes
+    def byRow(view: Map[String, Long] => Option[String]): String =
+      notes.flatMap { case (k, n) => view(n).map(v => s""""$k":$v""") }
+        .mkString("{", ",", "}")
+    def noted(key: String)(n: Map[String, Long]): Option[String] = n.get(key).map(_.toString)
+    val cc = byRow(n => for (r <- n.get(RunRecord.ClusterRounds);
+      e <- n.get(RunRecord.ClusterEdges)) yield s"""{"cc_rounds":$r,"cc_edges":$e}""")
+    val ccActsJ = byRow(noted(RunRecord.ClusterActions))
+    val pr = byRow(n => for (b <- n.get(RunRecord.GraphBuildNs);
+      l <- n.get(RunRecord.GraphLoopNs))
+      yield s"""{"build_sec":${ms(b / 1e9)},"loop_sec":${ms(l / 1e9)}}""")
+    val sccJ = byRow(noted(RunRecord.SccSweeps))
+    val sccA = byRow(noted(RunRecord.SccActions))
+    val notesJ = byRow(n => Some(n.toSeq.sorted
+      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")))
     val cpus = GraftSession.cpus
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errors,"cc":$cc,"cc_actions":$ccActsJ,"pr_split":$pr,"scc_sweeps":$sccJ,"scc_actions":$sccA,"drift":$driftJ,"drift_mean":${msJ(driftMean)},"queries_norm":$qsNorm,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errors,"cc":$cc,"cc_actions":$ccActsJ,"pr_split":$pr,"scc_sweeps":$sccJ,"scc_actions":$sccA,"notes":$notesJ,"drift":$driftJ,"drift_mean":${msJ(driftMean)},"queries_norm":$qsNorm,"sf":"$sfDir"}"""
     // The COMPLETE payload goes to a file: the harness keeps only the last
     // ~2000 chars of output, and the full per-query map (~3 KB at 78
     // queries) cannot fit — BENCH_r07's committed artifact lost its head

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{CosineSimilarityExpr, DotProductExpr, HilbertIndexExpr, MinHashSigExpr, SimHash64Expr, SortedIntersectCountExpr}
+import graft.functions.{CosineSimilarityExpr, DotProductExpr, HilbertIndexExpr, MinHashSigExpr, SimHash64Expr, SortedContainsExpr, SortedIntersectCountExpr}
 
 /** Config-installable packaging of the whole graft engine surface:
   *
@@ -13,33 +13,27 @@ import graft.functions.{CosineSimilarityExpr, DotProductExpr, HilbertIndexExpr, 
   * }}}
   *
   * injects the TopK rewrite (optimizer rule + physical strategy) and the
-  * four native expressions as SQL functions into ANY SparkSession — no
+  * native expressions as SQL functions into ANY SparkSession — no
   * call into [[GraftSession]] required, so a user's existing session
   * factory (or a Thrift/Connect server with its own builder) picks the
   * engine up from configuration alone. [[GraftSession.build]] routes
   * through this same class, keeping one definition of "what graft
-  * installs"; the per-session `register` calls there remain only as the
-  * fallback for foreign sessions handed back by getOrCreate (extensions
-  * cannot be retrofitted onto an already-built session).
+  * installs"; its [[GraftExtensions.registerMissing]] call covers only a
+  * foreign session handed back by getOrCreate (extensions cannot be
+  * retrofitted onto an already-built session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     graft.plans.TopKPerKey.install(e)
     GraftExtensions.functions.foreach { case (name, _, builder) =>
-      e.injectFunction((
-        new FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name),
-        builder))
+      e.injectFunction((new FunctionIdentifier(name), GraftExtensions.info(name), builder))
     }
   }
 }
 
 object GraftExtensions {
 
-  /** The SQL function surface: (name, usage, builder). The builders are
-    * the same shapes the companions' session-level `register` methods
-    * install.
-    */
+  /** The SQL function surface, spelled once: (name, usage, builder). */
   private[graft] val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two double arrays",
       { children: Seq[Expression] =>
@@ -76,5 +70,26 @@ object GraftExtensions {
             s"minhash_sig numPerms must be a literal int, got $other")
         }
         MinHashSigExpr(children.head, n)
+      }),
+    ("sorted_contains",
+      "sorted_contains(a, x) - whether the sorted BIGINT array a contains x",
+      { children: Seq[Expression] =>
+        require(children.size == 2, "sorted_contains takes exactly 2 arguments")
+        SortedContainsExpr(children.head, children(1))
       }))
+
+  private def info(name: String): ExpressionInfo =
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name)
+
+  /** Register every function of [[functions]] the session's registry
+    * lacks: a no-op on a session built with these extensions, the whole
+    * surface on a foreign one.
+    */
+  private[graft] def registerMissing(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, _, builder) =>
+      val id = new FunctionIdentifier(name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, info(name), builder)
+    }
+  }
 }

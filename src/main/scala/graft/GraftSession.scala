@@ -90,13 +90,7 @@ object GraftSession {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    graft.functions.CosineSimilarityExpr.register(spark)
-    graft.functions.DotProductExpr.register(spark)
-    graft.functions.SimHash64Expr.register(spark)
-    graft.functions.MinHashSigExpr.register(spark)
-    graft.functions.SortedIntersectCountExpr.register(spark)
-    graft.functions.SortedContainsExpr.register(spark)
-    graft.functions.HilbertIndexExpr.register(spark)
+    GraftExtensions.registerMissing(spark)
     spark
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.obs.RunRecord
 import graft.registry.Registry
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -22,24 +23,29 @@ object Verify {
     // DuckDB compare then reports an explicit schema/hash FAIL instead of
     // silently dropping the name — an analysis regression can never vanish
     // again) and collect every failure into errors.json.
+    // Each row runs under its own run record; its notes (loop telemetry,
+    // degraded paths) go to notes.json, keyed by row.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val notes = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Long]]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        val msg = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
-        System.err.println(s"[verify] $name failed: $msg")
-        errors(name) = msg
-        try {
-          import spark.implicits._
-          Seq(msg).toDF("err").coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
-          System.err.println(s"[verify] $name error-row write failed: ${e2.getMessage}")
+      notes(name) = RunRecord.capture {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          val msg = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
+          System.err.println(s"[verify] $name failed: $msg")
+          errors(name) = msg
+          try {
+            import spark.implicits._
+            Seq(msg).toDF("err").coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+          } catch { case e2: Throwable =>
+            System.err.println(s"[verify] $name error-row write failed: ${e2.getMessage}")
+          }
         }
-      }
+      }._2
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -59,6 +65,11 @@ object Verify {
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    val notesJson = notes.map { case (k, n) =>
+      s"${q(k)}: " + n.toSeq.sorted.map { case (nk, v) => s"${q(nk)}: $v" }
+        .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/notes.json"), notesJson)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -88,18 +87,4 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarityExpr {
-  /** Register as the SQL function `cosine_sim` so plans can reference it
-    * via expr("cosine_sim(a, b)") in any entrypoint.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarityExpr(children.head, children(1))
-      },
-      "built-in")
 }

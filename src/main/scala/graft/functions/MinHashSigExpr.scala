@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -112,21 +111,4 @@ object MinHashSigExpr {
     }
     Seq.fill(n)((next() | 1L, next()))
   }
-
-  /** Register as the SQL function `minhash_sig(hashes, numPerms)`;
-    * numPerms must be a literal integer.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "minhash_sig takes (hashes, numPerms)")
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig numPerms must be a literal int, got $other")
-        }
-        MinHashSigExpr(children.head, n)
-      },
-      "built-in")
 }

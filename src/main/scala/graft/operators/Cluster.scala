@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFamily, TextAnalysis}
+import graft.obs.RunRecord
 import graft.sources.IO
 
 /** Near-duplicate CLUSTERING: the step after pair generation that near-dup
@@ -50,24 +51,6 @@ object Cluster {
     * rather than return a half-contracted forest.
     */
   private val MaxRounds = 30
-
-  /** (rounds, final contracted edge count) of the most recent
-    * [[componentsWithRounds]] call on this driver. Bench telemetry seam:
-    * the benchmark reads it right after timing each clustering query so
-    * BENCH json can carry `cc_rounds`/`cc_edges` and round-count
-    * regressions are visible. Driver-local, last-writer-wins — fine for
-    * the sequential bench harness, not a public API.
-    */
-  @volatile private[graft] var lastRunStats: Option[(Int, Long)] = None
-
-  /** Spark ACTIONS the most recent [[componentsWithRounds]] call paid —
-    * the driver-roundtrip currency of the loop floor (the
-    * `LinkGraph.lastSccActions` convention). One action per round since
-    * the r20 fusion (the star-forest check's collect is the job that
-    * materializes the round's lazy checkpoint); the telemetry keeps the
-    * fusion honest in the bench payload.
-    */
-  @volatile private[graft] var lastRunActions: Option[Int] = None
 
   /** Connected components of the undirected graph given as an edge list.
     * Returns one (node, component) row per distinct node that appears in
@@ -153,8 +136,9 @@ object Cluster {
       .union(e.select(col("v").as("node"), col("v").as("component")))
       .groupBy("node")
       .agg(min("component").as("component"))
-    lastRunStats = Some((rounds, edgeCount))
-    lastRunActions = Some(actions)
+    RunRecord.note(RunRecord.ClusterRounds, rounds)
+    RunRecord.note(RunRecord.ClusterEdges, edgeCount)
+    RunRecord.note(RunRecord.ClusterActions, actions)
     (comp, rounds)
   }
 
@@ -176,7 +160,7 @@ object Cluster {
     * [[connectedComponents]] — parity is spec-pinned. Replaces a 6-8-job
     * contraction ladder with one collect and one tiny createDataFrame
     * when the graph is batch-bounded; records (0 rounds, edge count) in
-    * [[lastRunStats]] so bench telemetry shows which path served.
+    * the run record so bench telemetry shows which path served.
     */
   private[graft] def driverComponents(
       spark: SparkSession,
@@ -219,8 +203,9 @@ object Cluster {
     }
     val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
     parent.keySet.forEach(n => rows += ((n.longValue(), find(n))))
-    lastRunStats = Some((0, nEdges))
-    lastRunActions = Some(1) // the caller's edge collect
+    RunRecord.note(RunRecord.ClusterRounds, 0)
+    RunRecord.note(RunRecord.ClusterEdges, nEdges)
+    RunRecord.note(RunRecord.ClusterActions, 1) // the caller's edge collect
     spark.createDataFrame(rows.toSeq).toDF("node", "component")
   }
 

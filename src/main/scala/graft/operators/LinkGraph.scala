@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.obs.RunRecord
 import graft.sources.IO
 
 /** PageRank over the item-transition graph mined from the events table —
@@ -91,12 +92,6 @@ object LinkGraph {
       pageRankOver(edges, nodes, nCount, iters, d, buildT0 = t0)
     }
   }
-
-  /** (build seconds, loop seconds) of the last [[pageRankOver]] run —
-    * bench telemetry splitting a rebuild row's edge-construction cost
-    * from its iteration cost (the cc-telemetry precedent).
-    */
-  @volatile private[graft] var lastBuildStats: Option[(Double, Double)] = None
 
   /** The broadcast ceiling in NODES (not bytes): ~10⁸ (long, double) rank
     * rows ≈ 3–5 GB materialized per executor — the practical edge of
@@ -200,7 +195,10 @@ object LinkGraph {
         start = (nodes, nodes.withColumn("r", lit(1.0) / lit(n)).localCheckpoint())) {
         (pulled, dang) => lit((1.0 - d) / n) + lit(d) * (pulled + lit(dang / n))
       }
-      lastBuildStats = Some(((tLoop - t0) / 1e9, (System.nanoTime() - tLoop) / 1e9))
+      // bench telemetry splitting a rebuild row's edge-construction cost
+      // from its iteration cost
+      RunRecord.note(RunRecord.GraphBuildNs, tLoop - t0)
+      RunRecord.note(RunRecord.GraphLoopNs, System.nanoTime() - tLoop)
       ranks.select(col("node"), col("r").as("pr")).orderBy("node")
     }
   }
@@ -970,8 +968,8 @@ object LinkGraph {
   }
 
   /** Peeling core over an explicit distinct undirected (u, v) frame —
-    * the synthetic-graph test seam. Records its round count in
-    * [[lastKCoreRounds]].
+    * the synthetic-graph test seam. Notes its round count in the run
+    * record.
     */
   private[graft] def kCoreOver(und0: DataFrame, k: Int): DataFrame = {
     var und = und0.localCheckpoint()
@@ -994,17 +992,12 @@ object LinkGraph {
       rounds += 1
     }
     require(converged, s"k-core peeling did not converge in 30 rounds")
-    lastKCoreRounds = Some(rounds)
+    RunRecord.note(RunRecord.KCoreRounds, rounds)
     und.select(col("u").as("node"))
       .unionByName(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("core_degree"))
       .orderBy("node")
   }
-
-  /** Rounds of the most recent [[kCoreOver]] call on this driver — the
-    * telemetry seam the oracle-unroll-bound spec reads.
-    */
-  @volatile private[graft] var lastKCoreRounds: Option[Int] = None
 
   /** Distinct undirected (u < v) edge set of the directed weighted edge
     * artifact — weights collapse (triangle structure is unweighted) and
@@ -1115,14 +1108,14 @@ object LinkGraph {
       val bb = backboneOf(edges).select("src", "dst")
         .localCheckpoint(eager = false)
       val nn = nodes.select("node").localCheckpoint(eager = false)
-      val buildSec = (System.nanoTime() - tBuild) / 1e9
       val tLoop = System.nanoTime()
       // sccOver's FW-BW loop is internally eager (every sweep ends in
       // actions), so by return time the loop work is done — only the
       // |nodes|-row presentation window/sort stays lazy, attributed to
       // neither half. No extra materialization for the telemetry.
       val out = sccOver(bb, nn, preMaterialized = true)
-      lastBuildStats = Some((buildSec, (System.nanoTime() - tLoop) / 1e9))
+      RunRecord.note(RunRecord.GraphBuildNs, tLoop - tBuild)
+      RunRecord.note(RunRecord.GraphLoopNs, System.nanoTime() - tLoop)
       out
     }
   }
@@ -1305,14 +1298,15 @@ object LinkGraph {
     // frame is a trivial projection over the (checkpointed) nodes, so
     // the per-consumer recompute before the cache fills is free and the
     // standalone materialization roundtrip is not paid
-    var lab = nodes.select(col("node"), lit(0L).as("f"), lit(0L).as("b"))
-      .localCheckpoint(eager = false)
+    val lazySources = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var lab = checkpointLazy(
+      nodes.select(col("node"), lit(0L).as("f"), lit(0L).as("b")), lazySources)
     var sweeps = 0
     var done = false
     var openCnt = 0L
     // action telemetry: every driver roundtrip the loop pays, in the
     // currency the local-mode floor is measured in (~200 ms/action) —
-    // emitted via lastSccActions so the bench payload shows whether a
+    // noted in the run record so the bench payload shows whether a
     // slow scc row is data or roundtrip-bound
     var actions = 1 // nodes count (the lazy wraps ride later jobs)
     // Below the ceiling every per-round plan is broadcast-joins-only —
@@ -1352,10 +1346,10 @@ object LinkGraph {
       // materialization stays — recomputing a shuffle per scan would
       // cost more than the roundtrip it saves.
       val e2ck =
-        if (bcast) checkpointLazyFreshStats(e2)
+        if (bcast) checkpointLazyFreshStats(e2, lazySources)
         else { actions += 1; checkpointFreshStats(e2) }
       val (refreshed, fbActs, fbOpen) =
-        fbFixpoint(e2ck, open.select("node"), bc,
+        fbFixpoint(e2ck, open.select("node"), bc, lazySources,
           maxRounds = 25 + log2n)
       actions += fbActs
       lab =
@@ -1365,7 +1359,7 @@ object LinkGraph {
           // certificate, the old lab by its own sweep), so the next
           // consumer's recompute is a filter+union over cached blocks
           checkpointLazyFreshStats(
-            lab.where(col("f") === col("b")).unionByName(refreshed))
+            lab.where(col("f") === col("b")).unionByName(refreshed), lazySources)
       // every still-open row lives in the refreshed frame (resolved
       // rows have f = b by construction), so the fixpoint's fused
       // open-count IS lab's — the old standalone isEmpty/count reads
@@ -1377,6 +1371,8 @@ object LinkGraph {
     if (bcast)
       LoopWidth.scoped(edges.sparkSession, "spark.sql.adaptive.enabled" -> "false")(sweepLoop())
     else sweepLoop()
+    // every lazy checkpoint the loop consumes has been materialized
+    java.lang.ref.Reference.reachabilityFence(lazySources)
     // strict (the oracled exact operator): an unconverged run must be a
     // loud failure, never silently-wrong scc_ids flowing into rollups.
     // Non-strict (exploratory/huge-corpus callers): degrade instead of
@@ -1384,17 +1380,18 @@ object LinkGraph {
     // class as a provisional component id (classes only ever split
     // toward true SCCs, so provisional groups are unions of real SCCs,
     // an over-grouping never a mis-mixing across resolved components),
-    // and the remainder count is exposed via [[lastSccUnresolved]].
+    // and the remainder count is noted in the run record.
     if (strict)
       require(done,
         s"SCC FW-BW splitting did not converge in $sweepCap sweeps " +
           s"(n=$nNodes); widen maxSweeps or run strict = false")
-    else if (!done)
-      System.err.println(s"[graft] sccOver: $sweepCap sweeps hit with " +
-        "unresolved remainder; emitting provisional (f,b)-class ids")
-    lastSccUnresolved = Some(if (done) 0L else openCnt)
-    lastSccSweeps = Some(sweeps)
-    lastSccActions = Some(actions)
+    if (done) RunRecord.note(RunRecord.SccUnresolved, 0L)
+    else
+      RunRecord.degraded(RunRecord.SccUnresolved, openCnt)(
+        s"sccOver: $sweepCap sweeps hit with $openCnt unresolved nodes; " +
+          "emitting provisional (f,b)-class ids")
+    RunRecord.note(RunRecord.SccSweeps, sweeps)
+    RunRecord.note(RunRecord.SccActions, actions)
     // provisional ids live in the negative range so they can never
     // collide with a resolved min-member id (node ids are non-negative),
     // and derive INJECTIVELY from the (f,b) class — its min member, the
@@ -1451,9 +1448,27 @@ object LinkGraph {
     * a lazily checkpointed frame handed to a multi-consumer plan would
     * re-compute its lineage once per consumer racing to persist it.
     */
-  private def checkpointLazyFreshStats(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(eager = false)
-    org.apache.spark.sql.GraftSqlBridge.freshStatsFrame(ck)
+  private def checkpointLazyFreshStats(
+      df: DataFrame,
+      sources: scala.collection.mutable.Buffer[DataFrame]): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.freshStatsFrame(checkpointLazy(df, sources))
+
+  /** `df.localCheckpoint(eager = false)`, with `df` appended to the
+    * loop's `sources`, which the loop holds until its last action
+    * returns. A lazy checkpoint's first consumers can be CONCURRENT jobs
+    * (below the broadcast ceiling, the broadcast builds of the next
+    * plan); the first to finish truncates the checkpointed lineage, and
+    * with the source frame unreachable its SQL metrics could be
+    * garbage-collected while the other jobs' tasks still reported them
+    * (`Failed to update accumulator` in the driver log, and those
+    * tasks' metrics lost). Holding the source changes no plan, job or
+    * task.
+    */
+  private def checkpointLazy(
+      df: DataFrame,
+      sources: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
+    sources += df
+    df.localCheckpoint(eager = false)
   }
 
   /** One FW-BW relax+jump round as a PLAN transform — also the
@@ -1534,6 +1549,7 @@ object LinkGraph {
       e: DataFrame,
       nodes: DataFrame,
       bc: DataFrame => DataFrame,
+      lazySources: scala.collection.mutable.Buffer[DataFrame],
       maxRounds: Int = 25): (DataFrame, Int, Long) = {
     val step = sccStep(e, bc) _
     // convergence certificate: labels are per-element monotone
@@ -1559,7 +1575,7 @@ object LinkGraph {
     // LAZY checkpoints: the certificate that follows each is the action
     // that materializes it — one roundtrip per round, not two
     var m = checkpointLazyFreshStats(
-      nodes.select(col("node"), col("node").as("f"), col("node").as("b")))
+      nodes.select(col("node"), col("node").as("f"), col("node").as("b")), lazySources)
     // The INITIAL certificate is known analytically — m0 has f = b =
     // node, so (Σf, Σb) = (Σnode, Σnode) — and step preserves the node
     // set, so Σnode read off round 1's certificate equals m0's. The old
@@ -1570,7 +1586,7 @@ object LinkGraph {
     var rounds = 0
     var changed = true
     while (changed && rounds < maxRounds) {
-      m = checkpointLazyFreshStats(step(m))
+      m = checkpointLazyFreshStats(step(m), lazySources)
       val next = certificate(m)
       actions += 1
       val prev = if (rounds == 0) (next._4, next._4) else cert
@@ -1583,20 +1599,4 @@ object LinkGraph {
       s"SCC min propagation did not converge in $maxRounds rounds")
     (m, actions, openCnt)
   }
-
-  /** Sweeps of the most recent [[sccOver]] — the convergence-bound
-    * telemetry seam specs read. */
-  @volatile private[graft] var lastSccSweeps: Option[Int] = None
-
-  /** Unresolved-node count of the most recent [[sccOver]] — 0 on every
-    * converged (strict-eligible) run; > 0 only when a non-strict run
-    * hit its sweep budget and emitted provisional class ids. */
-  @volatile private[graft] var lastSccUnresolved: Option[Long] = None
-
-  /** Spark-action count of the most recent [[sccOver]] — the
-    * driver-roundtrip currency of the loop floor (~200 ms/action in
-    * local mode). Emitted next to scc_sweeps in the bench payload so a
-    * slow scc row is attributable to data or to roundtrips by reading
-    * the artifact alone. */
-  @volatile private[graft] var lastSccActions: Option[Int] = None
 }

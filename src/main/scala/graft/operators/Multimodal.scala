@@ -1396,7 +1396,7 @@ object Multimodal {
     * (`mm_dedup_decision`); under Xx they are rows-only
     * (`mm_dedup_decision_fast`), identical to the Md5 decision on the
     * spec corpus (Round18OpsSpec), and at ×N the divergence is the
-    * characterized ~2% margin-band pair set (MmScaleProbe).
+    * characterized ~2% margin-band pair set (SCALING.md).
     */
   def nearDupDecision(
       spark: SparkSession,

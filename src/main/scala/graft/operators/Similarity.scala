@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.obs.RunRecord
 import graft.sources.{IO, Memo}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
@@ -2015,20 +2016,6 @@ object Similarity {
     */
   private[graft] val MarginIvfPairBudget = 16000000L
 
-  /** Telemetry: the last IVF margin run's pre-cap candidate VOLUME (the
-    * per-cell product sum the budget is measured on) — read by the
-    * budget spec (the LinkGraph.lastSccSweeps convention). None when the
-    * run skipped the volume aggregate (see [[lastMarginIvfSkippedBound]]).
-    */
-  @volatile var lastMarginIvfCandidates: Option[Long] = None
-
-  /** Telemetry: the cheap upper bound |src probe rows| × |tgt cell rows|
-    * when it proved the budget can't engage (bound ≤ maxPairs ⇒
-    * Σ_c ns_c·nt_c ≤ (Σns)(Σnt) = bound ≤ maxPairs) and the run skipped
-    * the volume machinery entirely; None when the exact volume agg ran.
-    */
-  @volatile var lastMarginIvfSkippedBound: Option[Long] = None
-
   def marginBitextPairsIvf(
       spark: SparkSession,
       sfDir: String,
@@ -2084,11 +2071,9 @@ object Similarity {
     val bound = nEn * math.min(np, nl).toLong * (nSides - nEn)
     val (srcProbes, tgtCells) =
       if (bound <= maxPairs) {
-        lastMarginIvfCandidates = None
-        lastMarginIvfSkippedBound = Some(bound)
+        RunRecord.note(RunRecord.MarginIvfSkippedBound, bound)
         (srcProbesAll, tgtCellsAll)
       } else {
-        lastMarginIvfSkippedBound = None
         val srcProbes0 = srcProbesAll
           .localCheckpoint() // volume count + (possibly thinned) join side
         val tgtCells0 = tgtCellsAll
@@ -2099,7 +2084,7 @@ object Similarity {
           .join(tgtCells0.groupBy("cid").agg(count(lit(1)).as("nt")), "cid")
           .agg(coalesce(sum(col("ns") * col("nt")), lit(0L)))
           .head.getLong(0)
-        lastMarginIvfCandidates = Some(nPairs)
+        RunRecord.note(RunRecord.MarginIvfCandidates, nPairs)
         val thinned =
           if (nPairs <= maxPairs) srcProbes0
           else {

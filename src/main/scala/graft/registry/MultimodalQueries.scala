@@ -246,8 +246,8 @@ object MultimodalQueries {
     // dedup decision over the xxhash64 face — rows-only under the
     // mm_fingerprint_fast justification (DuckDB cannot replay
     // xxhash64); Round18OpsSpec pins both frames IDENTICAL to their
-    // Md5-family rows on the spec corpus, MmScaleProbe bounds the
-    // xN divergence to the characterized margin band
+    // Md5-family rows on the spec corpus; at xN the divergence is the
+    // characterized margin band (SCALING.md)
     QuerySpec("mm_neardup_pairs_fast", (s, d) => Multimodal.nearDupPairs(s, d, HashFamily.Xx),
       NoOracle(
         "DuckDB cannot replay xxhash64; Round18OpsSpec pins it identical to its oracled md5 " +

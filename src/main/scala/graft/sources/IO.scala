@@ -6,6 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.obs.RunRecord
+
 /** Typed readers/writers for the engine's source/sink surface
   * (SURVEY.md §2.1: S1-S3 scans, K1-K3 sinks), plus the write-then-reread
   * combinators the reference pipelines embody
@@ -495,8 +497,9 @@ object IO {
     catch {
       case drift @ (_: ArtifactDriftException |
                     _: org.apache.spark.sql.AnalysisException) =>
-        System.err.println(s"[graft] stale/foreign artifact at $root — " +
-          s"re-priming (${drift.getMessage.take(200)})")
+        RunRecord.degraded(RunRecord.ArtifactReprimed, 1L)(
+          s"stale/foreign artifact at $root — " +
+            s"re-priming (${drift.getMessage.take(200)})")
         delete()
         write(root)
         read()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashFamily
+import graft.obs.RunRecord
 import graft.operators.{Cluster, Dedup}
 
 /** Behavior specs for near-dup clustering (star-contraction connected
@@ -124,14 +125,13 @@ class ClusterSpec extends SparkTestBase {
   }
 
   test("incremental components serve below the ceiling via the driver path (telemetry)") {
-    Cluster.lastRunStats = None
-    Cluster.incrementalComponentsMd5(spark, Sf).write
-      .format("noop").mode("overwrite").save()
-    val (rounds, edges) = Cluster.lastRunStats.getOrElse(
+    val (_, notes) = RunRecord.capture(Cluster.incrementalComponentsMd5(spark, Sf).write
+      .format("noop").mode("overwrite").save())
+    val rounds = notes.getOrElse(RunRecord.ClusterRounds,
       fail("incremental components must record closure telemetry"))
     assert(rounds == 0,
       s"sf0.001's batch-bounded graph must take the driver path, got $rounds rounds")
-    assert(edges > 0, "testdata must exercise at least one batch edge")
+    assert(notes(RunRecord.ClusterEdges) > 0, "testdata must exercise at least one batch edge")
   }
 
   test("winnow components: star contraction converges within the clique-ish bound") {
@@ -139,10 +139,9 @@ class ClusterSpec extends SparkTestBase {
     // near-dup graphs are clique-ish, so the contraction (after the
     // small-star pre-shrink) must close in a couple of rounds — a jump
     // past this bound is a convergence regression, not data drift
-    Cluster.lastRunStats = None
-    Cluster.winnowComponentsMd5(spark, Sf).write
-      .format("noop").mode("overwrite").save()
-    val (rounds, _) = Cluster.lastRunStats.getOrElse(
+    val (_, notes) = RunRecord.capture(Cluster.winnowComponentsMd5(spark, Sf).write
+      .format("noop").mode("overwrite").save())
+    val rounds = notes.getOrElse(RunRecord.ClusterRounds,
       fail("winnow components must record contraction telemetry"))
     assert(rounds <= 3, s"winnow component contraction took $rounds rounds")
   }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev scratch main (the DecontamTimer precedent): print a
+/** Dev scratch main: print a
   * registered query's formatted physical plan and its wall time on any
   * sf dir — the `.explain`-and-iterate loop the build brief prescribes.
   *

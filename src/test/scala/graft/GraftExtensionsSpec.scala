@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Proves the config-only installation path: a SparkSession built with
   * `spark.sql.extensions=graft.GraftExtensions` (and NOTHING from
@@ -9,20 +10,22 @@ import org.apache.spark.sql.SparkSession
 class GraftExtensionsSpec extends SparkTestBase {
 
   /** A fresh session (shared SparkContext) whose ONLY graft surface comes
-    * from `new GraftExtensions` — none of GraftSession's per-session
-    * `register` calls run. The `spark.sql.extensions=graft.GraftExtensions`
+    * from `new GraftExtensions` — GraftSession's `registerMissing` call
+    * does not run. The `spark.sql.extensions=graft.GraftExtensions`
     * CONF-STRING route needs a fresh JVM (an existing SparkContext freezes
     * static conf, so it cannot be exercised inside the test JVM); the conf
     * route is just Spark instantiating this same zero-arg class, whose
     * contract the reflection test below pins.
     */
-  private def withExtensionSession[A](f: SparkSession => A): A = {
+  private def withExtensionSession[A](f: SparkSession => A): A =
+    withFreshSession(_.withExtensions(new GraftExtensions))(f)
+
+  private def withFreshSession[A](
+      configure: SparkSession.Builder => SparkSession.Builder)(f: SparkSession => A): A = {
     val original = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s2 = configure(SparkSession.builder()).getOrCreate()
     try f(s2)
     finally {
       SparkSession.setActiveSession(original)
@@ -45,10 +48,13 @@ class GraftExtensionsSpec extends SparkTestBase {
                   simhash64(array(1L, 3L)) AS sh,
                   minhash_sig(array(5L, 9L), 4) AS mh,
                   sorted_intersect_count(array(1L, 3L, 7L), array(3L, 5L, 7L)) AS sic,
-                  hilbert_xy2d(3L, 4L) AS hb""").collect()(0)
+                  hilbert_xy2d(3L, 4L) AS hb,
+                  sorted_contains(array(1L, 3L, 7L), 7L) AS sc,
+                  sorted_contains(array(1L, 3L, 7L), 4L) AS sc_miss""").collect()(0)
       assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
       assert(r.getDouble(1) == 11.0)
       assert(r.getInt(4) == 2)
+      assert(r.getBoolean(6) && !r.getBoolean(7))
       assert(r.getLong(5) == spark.sql("SELECT hilbert_xy2d(3L, 4L)")
         .collect()(0).getLong(0))
       // values must agree with the session-registered versions
@@ -70,6 +76,23 @@ class GraftExtensionsSpec extends SparkTestBase {
       assert(df.queryExecution.executedPlan.toString.contains("TopKPartial"),
         "extension must inject the TopK rule + strategy")
       assert(df.count() > 0)
+    }
+  }
+
+  test("registerMissing fills a foreign session and leaves an installed one alone") {
+    def infos(s: SparkSession) = GraftExtensions.functions.map { case (name, _, _) =>
+      s.sessionState.functionRegistry.lookupFunction(new FunctionIdentifier(name))
+    }
+    val before = infos(spark)
+    assert(before.forall(_.isDefined), "GraftSession must install every function")
+    GraftExtensions.registerMissing(spark)
+    assert(before.zip(infos(spark)).forall { case (a, b) => a.get eq b.get },
+      "a function the session already has must not be registered again")
+    withFreshSession(identity) { foreign =>
+      assert(infos(foreign).forall(_.isEmpty), "a plain session must start without them")
+      GraftExtensions.registerMissing(foreign)
+      assert(foreign.sql("SELECT sorted_contains(array(1L, 3L), 3L)").head().getBoolean(0))
+      assert(infos(foreign).forall(_.isDefined))
     }
   }
 }

@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Driver-side memos go through `Memo` only, so every value derived from
   * a table is checked against the table's files before it is reused.
   * Registered queries are listed only by their specs under `registry/`,
-  * so no hand-kept row list can drift from the registry.
+  * so no hand-kept row list can drift from the registry. Loop telemetry
+  * and degraded paths are notes in `obs.RunRecord`, never driver globals
+  * or console lines, so every caller reads them per run.
   */
 class OperatorConfGuardSpec extends AnyFunSuite {
 
@@ -67,6 +69,14 @@ class OperatorConfGuardSpec extends AnyFunSuite {
     val bad = offenders("""ConcurrentHashMap|TrieMap""", Set("Memo.scala"),
       Seq("operators", "functions", "sources"))
     assert(bad.isEmpty, bad.mkString("driver memos outside Memo:\n", "\n", ""))
+  }
+
+  test("loop telemetry and degraded paths go to the run record") {
+    // a driver global is last-writer-wins across queries, and a stderr
+    // line reaches no payload; `pw.println` (a PrintWriter) is file output
+    val bad = offenders("""@volatile|System\.(err|out)|(?<![.\w])println\(""", Set.empty,
+      Seq("operators", "functions", "sources"))
+    assert(bad.isEmpty, bad.mkString("globals or console output outside RunRecord:\n", "\n", ""))
   }
 
   test("no hand-kept query-name lists in Bench or SparkEntry") {

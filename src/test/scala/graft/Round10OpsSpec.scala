@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.obs.RunRecord
 import graft.operators.Pca
 
 /** Behavior specs for the round-10 operators: top-principal-component
@@ -475,9 +476,9 @@ class Round10OpsSpec extends SparkTestBase {
     }
     // testdata row: peeling must converge well under the oracle's
     // 12-round unroll (over-unrolling is a no-op, under-unrolling isn't)
-    LinkGraph.lastKCoreRounds = None
-    LinkGraph.kCoreMembers(spark, Sf).write.format("noop").mode("overwrite").save()
-    val r = LinkGraph.lastKCoreRounds.getOrElse(fail("no k-core telemetry"))
+    val (_, notes) = RunRecord.capture(
+      LinkGraph.kCoreMembers(spark, Sf).write.format("noop").mode("overwrite").save())
+    val r = notes.getOrElse(RunRecord.KCoreRounds, fail("no k-core telemetry"))
     assert(r <= 12, s"k-core took $r rounds; raise the oracle unroll")
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.obs.RunRecord
 import graft.operators.{Cluster, CorpusPrep, Events, Similarity}
 
 /** Behavior specs for the late round-11 operators: margin-based bitext
@@ -181,15 +182,15 @@ class Round11LateOpsSpec extends SparkTestBase {
       (10L, 11L), (11L, 10L),
       (3L, 10L), (20L, 1L)).toDF("src", "dst")
     val nodes = Seq(1L, 2L, 3L, 10L, 11L, 20L, 30L).toDF("node")
-    val got = operators.LinkGraph.sccOver(edges, nodes)
-      .as[(Long, Long, Long)].collect().toSet
+    val (got, notes) = RunRecord.capture(operators.LinkGraph.sccOver(edges, nodes)
+      .as[(Long, Long, Long)].collect().toSet)
     val want = Set(
       (1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L),
       (10L, 10L, 2L), (11L, 10L, 2L),
       (20L, 20L, 1L), (30L, 30L, 1L))
     assert(got == want)
-    assert(operators.LinkGraph.lastSccSweeps.exists(_ <= 5),
-      s"FW-BW should settle this chain fast, took ${operators.LinkGraph.lastSccSweeps}")
+    assert(notes.get(RunRecord.SccSweeps).exists(_ <= 5),
+      s"FW-BW should settle this chain fast, took ${notes.get(RunRecord.SccSweeps)}")
   }
 
   test("neighborhoodOver: exact reach counts on a directed path") {

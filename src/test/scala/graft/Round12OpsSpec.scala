@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
+import graft.obs.RunRecord
 import graft.operators.LinkGraph
 
 /** Behavior specs for the round-12 hardening: SCC budget scaling and
@@ -24,8 +25,8 @@ class Round12OpsSpec extends SparkTestBase {
     ).toDF("src", "dst")
     val nodes = (1L to 6L).toDF("node")
     // strict default converges and resolves exactly the two SCCs
-    val full = LinkGraph.sccOver(edges, nodes).localCheckpoint()
-    assert(LinkGraph.lastSccUnresolved.contains(0L))
+    val (full, fullNotes) = RunRecord.capture(LinkGraph.sccOver(edges, nodes).localCheckpoint())
+    assert(fullNotes.get(RunRecord.SccUnresolved).contains(0L))
     assert(full.select("scc_id").distinct().count() == 2)
     // strict with an impossible budget must be a LOUD failure
     intercept[IllegalArgumentException] {
@@ -37,10 +38,10 @@ class Round12OpsSpec extends SparkTestBase {
     // non-strict with the same budget degrades: every node still gets
     // an id, provisional ids are negative (disjoint from resolved
     // min-member ids), and the telemetry reports the remainder
-    val deg = LinkGraph.sccOver(edges, nodes, maxSweeps = 1,
-      strict = false).localCheckpoint()
+    val (deg, degNotes) = RunRecord.capture(LinkGraph.sccOver(edges, nodes, maxSweeps = 1,
+      strict = false).localCheckpoint())
     assert(deg.count() == 6, "every node must be labeled even degraded")
-    val unresolved = LinkGraph.lastSccUnresolved.get
+    val unresolved = degNotes(RunRecord.SccUnresolved)
     assert(unresolved > 0, "the starved run must report its remainder")
     assert(deg.filter(col("scc_id") < 0).count() == unresolved,
       "provisional ids must be negative and count the unresolved nodes")
@@ -58,9 +59,9 @@ class Round12OpsSpec extends SparkTestBase {
 
   test("sccOver: sweep budget scales with node count") {
     // the production entry still converges and reports clean telemetry
-    val scc = LinkGraph.sccComponents(spark, Sf)
-    assert(scc.count() > 0)
-    assert(LinkGraph.lastSccUnresolved.contains(0L),
+    val (n, notes) = RunRecord.capture(LinkGraph.sccComponents(spark, Sf).count())
+    assert(n > 0)
+    assert(notes.get(RunRecord.SccUnresolved).contains(0L),
       "the oracled corpus run must fully resolve")
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashFamily
+import graft.obs.RunRecord
 import graft.operators.{Multimodal, QualityModel, Similarity}
 
 /** Behavior specs for the round-13 hardening: the IVF margin row's pair
@@ -14,9 +15,9 @@ class Round13OpsSpec extends SparkTestBase {
   test("marginBitextPairsIvf: pair budget engages via the md5 src split") {
     val budget = 2000L
     val full = Similarity.marginBitextPairsIvf(spark, Sf).localCheckpoint()
-    val capped = Similarity.marginBitextPairsIvf(spark, Sf, maxPairs = budget)
-      .localCheckpoint()
-    val nPairs = Similarity.lastMarginIvfCandidates.get
+    val (capped, notes) = RunRecord.capture(
+      Similarity.marginBitextPairsIvf(spark, Sf, maxPairs = budget).localCheckpoint())
+    val nPairs = notes(RunRecord.MarginIvfCandidates)
     assert(nPairs > budget,
       s"sf0.001 must exceed the test budget or nothing is proven ($nPairs)")
     val nFull = full.count()

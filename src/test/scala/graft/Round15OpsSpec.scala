@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.obs.RunRecord
 import graft.operators.{Multimodal, Similarity}
 
 /** Behavior specs for the round-15 hardening: the IVF margin budget's
@@ -11,20 +12,21 @@ import graft.operators.{Multimodal, Similarity}
 class Round15OpsSpec extends SparkTestBase {
 
   test("marginBitextPairsIvf: volume machinery skipped when the cheap bound clears the budget") {
-    Similarity.marginBitextPairsIvf(spark, Sf).localCheckpoint()
+    val (_, skipped) = RunRecord.capture(
+      Similarity.marginBitextPairsIvf(spark, Sf).localCheckpoint())
     // sf0.001 sits far under the production budget: the run must prove
     // it with the count-product bound and never pay the volume agg
-    assert(Similarity.lastMarginIvfCandidates.isEmpty,
+    assert(!skipped.contains(RunRecord.MarginIvfCandidates),
       "under-bound run must not compute the exact volume")
-    val bound = Similarity.lastMarginIvfSkippedBound.get
+    val bound = skipped(RunRecord.MarginIvfSkippedBound)
     assert(bound <= Similarity.MarginIvfPairBudget,
       s"skip requires bound <= budget ($bound)")
     // a budget under the bound forces the machinery: exact volume
     // computed, and it never exceeds the bound that justified skipping
-    Similarity.marginBitextPairsIvf(spark, Sf, maxPairs = 2000L)
-      .localCheckpoint()
-    assert(Similarity.lastMarginIvfSkippedBound.isEmpty)
-    val exact = Similarity.lastMarginIvfCandidates.get
+    val (_, forced) = RunRecord.capture(
+      Similarity.marginBitextPairsIvf(spark, Sf, maxPairs = 2000L).localCheckpoint())
+    assert(!forced.contains(RunRecord.MarginIvfSkippedBound))
+    val exact = forced(RunRecord.MarginIvfCandidates)
     assert(exact <= bound,
       s"the count-product bound must dominate the exact volume ($exact > $bound)")
   }

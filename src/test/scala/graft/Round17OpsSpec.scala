@@ -35,7 +35,7 @@ class Round17OpsSpec extends SparkTestBase {
     // pairs sit near Hamming 30 under both. Pin the PAIR IDs on the
     // spec corpus; at xN ~2% of genuinely-near pairs project across
     // the threshold differently per family (byte-identical dups never
-    // can) — MmScaleProbe measures and characterizes that divergence.
+    // can) — SCALING.md records that measured divergence.
     val md5Pairs = Multimodal.nearDupPairs(spark, Sf, HashFamily.Md5)
       .select("media_a", "media_b")
     val fastPairs = Multimodal.nearDupPairs(spark, Sf, HashFamily.Xx)
