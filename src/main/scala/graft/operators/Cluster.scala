@@ -67,25 +67,21 @@ object Cluster {
   private[graft] def componentsWithRounds(
       edges: DataFrame,
       srcCol: String,
-      dstCol: String): (DataFrame, Int) = {
+      dstCol: String): (DataFrame, Int) = Materialize.loop {
     // Pre-shrink with one small-star pass before alternating: near-dup
     // graphs are clique-ish (measured at sf0.1: 178k edges over 2.7k
     // nodes), and small-star collapses that multiplicity to O(nodes) rows
     // immediately — every loop round then runs on the contracted set
     // instead of the raw pair list. smallStar orients and dedups
     // internally, so the raw selection needs no distinct of its own.
-    // LAZY checkpoint (the LinkGraph fbFixpoint convention): the
-    // star-forest check that immediately follows is the action that
-    // materializes the round's blocks inside ITS job — one driver
-    // roundtrip per round instead of two (checkpoint + check). Safe
-    // because starForestCheck scans the frame exactly ONCE (the explode
-    // form below); a second scan before the cache fills would compute
-    // every partition twice.
-    var e = smallStar(
+    // LAZY checkpoint (see Materialize.lazily), materialized by the
+    // star-forest check that follows. Safe because starForestCheck scans
+    // the frame exactly ONCE (the explode form below); a second scan
+    // before the cache fills would compute every partition twice.
+    var e = Materialize.lazily(smallStar(
       edges
         .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-        .where(col("u") =!= col("v")))
-      .localCheckpoint(eager = false)
+        .where(col("u") =!= col("v"))), freshStats = false)
     var rounds = 0
     var actions = 1 // the pre-shrink check below
     // Structural convergence test instead of a signature-equality loop: a
@@ -119,7 +115,7 @@ object Cluster {
       // the NEXT round's shuffle width tracks the contraction) AND tests
       // convergence
       val (next, (conv, cnt)) = LoopWidth.atWidth(spark, roundWidth) {
-        val n = smallStar(largeStar(e)).localCheckpoint(eager = false)
+        val n = Materialize.lazily(smallStar(largeStar(e)), freshStats = false)
         (n, starForestCheck(n))
       }
       actions += 1

@@ -28,32 +28,6 @@ import graft.sources.IO
   */
 object Dedup {
 
-  /** Row-count crossover for materializing a multi-consumed intermediate
-    * whose recompute is CHEAP per row (simhash's single fold over token
-    * hashes, the embedding-LSH fused dot products).
-    *
-    * Below it, an eager localCheckpoint costs MORE than recomputing: the
-    * checkpoint is its own job plus a block-store write and a read per
-    * consumer, all fixed overhead that dwarfs one extra codegen'd
-    * signature pass over a small input. Above it, recomputation is the
-    * dominant cost (each consumer would re-run the full pipeline over the
-    * corpus) and the checkpoint wins — the round-3 bench showed 4×
-    * signature recomputation without it. The threshold is a local-mode
-    * heuristic crossover, deliberately conservative: at 100 TB every input
-    * is far above it, so the scale path always materializes (see
-    * SCALING.md "Materialization & failure-recovery policy"). Operators
-    * with EXPENSIVE per-row recompute (minhash's shingle+permutation
-    * pipeline) skip the gate and always materialize — measured slower to
-    * recompute than to checkpoint even at 5k documents.
-    */
-  private[graft] val MaterializeThresholdRows = 200000L
-
-  /** Eager localCheckpoint when `rows` is at or above
-    * [[MaterializeThresholdRows]]; the live lineage otherwise.
-    */
-  private[operators] def materializeIfLarge(df: DataFrame, rows: Long): DataFrame =
-    if (rows >= MaterializeThresholdRows) df.localCheckpoint() else df
-
   /** Exact dedup, window form: keep the lowest-doc_id row per identical
     * text. The window key is a 192-bit composite fingerprint
     * (xxhash64 + md5) of the text, NOT the text itself: the shuffle then
@@ -523,7 +497,7 @@ object Dedup {
     // output — rowCount undersized the gate 50× right at the sf0.1 cut
     // and every clustering consumer paid the signature pass twice.
     simHashPairs(
-      materializeIfLarge(
+      Materialize.ifLarge(
         simHashBandedFrom(simHashSignatures(IO.table(spark, sfDir, "documents"), family)),
         estWindowRows(spark, sfDir)),
       maxHamming)
@@ -1095,7 +1069,7 @@ object Dedup {
     // the blocking self-join's two sides don't each re-run the text scan
     // + affix hashing (the banded-frame policy every signature family
     // applies)
-    val keyed = materializeIfLarge(
+    val keyed = Materialize.ifLarge(
       docs.select(
         col("doc_id"),
         explode(expr(
@@ -1221,7 +1195,7 @@ object Dedup {
   /** Shared tail of the span-pair pipeline over an exploded
     * (doc_id, wh) frame: df-cap, self-equi-join, per-pair count.
     */
-  private def spanPairsFromWindows(
+  private[graft] def spanPairsFromWindows(
       exploded0: DataFrame,
       maxDf: Int,
       estWindowRows: Long,
@@ -1229,7 +1203,7 @@ object Dedup {
     // consumed twice (df-cap aggregation + join-back): above the
     // materialization crossover, re-running the explode+hash pipeline
     // costs more than the checkpoint
-    val exploded = materializeIfLarge(exploded0, estWindowRows)
+    val exploded = Materialize.ifLarge(exploded0, estWindowRows)
     val keep = exploded.groupBy("wh")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)

@@ -1093,27 +1093,18 @@ object LinkGraph {
     * convention).
     */
   def sccComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    // build/loop telemetry (the pr_split convention): materialize the
-    // two graph inputs inside the pinned loop width, so the checkpointed
-    // frames carry the loop's exchange width — and the wall divides into
-    // "checkpointed graph builds" vs "the nested FW-BW fixpoint", the
-    // split the bench payload reports for the board's slowest graph row
+    // build/loop telemetry (the pr_split convention): the graph build
+    // runs inside the pinned loop width, and sccOver checkpoints both
+    // frames lazily (nodes by its own count, the backbone by the first
+    // sweep's e2 job), so the backbone window executes inside the loop's
+    // first job: build_sec reads ≈ 0 and the loop wall absorbs the build.
+    // The FW-BW loop ends every sweep in actions, so by return time the
+    // loop work is done — only the |nodes|-row presentation window/sort
+    // stays lazy, attributed to neither half.
     val tBuild = System.nanoTime()
     withStoredGraph(spark, sfDir) { (edges, nodes) =>
-      // LAZY (r20): nn is materialized by sccOver's own nodes.count(),
-      // bb by the first sweep's e2 job — two fewer standalone driver
-      // roundtrips. Note the build/loop telemetry consequence: the
-      // backbone window now executes inside the loop's first job, so
-      // build_sec reads ≈ 0 and the loop wall absorbs the build.
-      val bb = backboneOf(edges).select("src", "dst")
-        .localCheckpoint(eager = false)
-      val nn = nodes.select("node").localCheckpoint(eager = false)
       val tLoop = System.nanoTime()
-      // sccOver's FW-BW loop is internally eager (every sweep ends in
-      // actions), so by return time the loop work is done — only the
-      // |nodes|-row presentation window/sort stays lazy, attributed to
-      // neither half. No extra materialization for the telemetry.
-      val out = sccOver(bb, nn, preMaterialized = true)
+      val out = sccOver(backboneOf(edges).select("src", "dst"), nodes.select("node"))
       RunRecord.note(RunRecord.GraphBuildNs, tLoop - tBuild)
       RunRecord.note(RunRecord.GraphLoopNs, System.nanoTime() - tLoop)
       out
@@ -1273,16 +1264,11 @@ object LinkGraph {
       edges0: DataFrame,
       nodes0: DataFrame,
       maxSweeps: Int = 0,
-      strict: Boolean = true,
-      preMaterialized: Boolean = false): DataFrame = {
-    // preMaterialized: the caller already checkpointed both frames (the
-    // build/loop telemetry split) — re-checkpointing would copy blocks.
-    // The local wraps are LAZY: the count below materializes nodes, the
-    // first sweep's e2 job materializes edges — no standalone roundtrips
-    val edges = if (preMaterialized) edges0
-      else edges0.localCheckpoint(eager = false)
-    val nodes = if (preMaterialized) nodes0
-      else nodes0.localCheckpoint(eager = false)
+      strict: Boolean = true): DataFrame = Materialize.loop {
+    // LAZY wraps: the count below materializes nodes, the first sweep's
+    // e2 job materializes edges — no standalone roundtrips
+    val edges = Materialize.lazily(edges0, freshStats = false)
+    val nodes = Materialize.lazily(nodes0, freshStats = false)
     val nNodes = nodes.count()
     // Sweep/round budgets SCALE with the graph instead of being magic
     // constants (ADVICE r11): FW-BW sweep depth follows the SCC-DAG
@@ -1296,11 +1282,9 @@ object LinkGraph {
     def bc(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     // LAZY: the first sweep's e2 broadcasts materialize it — the init
     // frame is a trivial projection over the (checkpointed) nodes, so
-    // the per-consumer recompute before the cache fills is free and the
-    // standalone materialization roundtrip is not paid
-    val lazySources = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var lab = checkpointLazy(
-      nodes.select(col("node"), lit(0L).as("f"), lit(0L).as("b")), lazySources)
+    // the per-consumer recompute before the cache fills is free
+    var lab = Materialize.lazily(
+      nodes.select(col("node"), lit(0L).as("f"), lit(0L).as("b")), freshStats = false)
     var sweeps = 0
     var done = false
     var openCnt = 0L
@@ -1346,11 +1330,10 @@ object LinkGraph {
       // materialization stays — recomputing a shuffle per scan would
       // cost more than the roundtrip it saves.
       val e2ck =
-        if (bcast) checkpointLazyFreshStats(e2, lazySources)
-        else { actions += 1; checkpointFreshStats(e2) }
+        if (bcast) Materialize.lazily(e2, freshStats = true)
+        else { actions += 1; Materialize.freshStats(e2) }
       val (refreshed, fbActs, fbOpen) =
-        fbFixpoint(e2ck, open.select("node"), bc, lazySources,
-          maxRounds = 25 + log2n)
+        fbFixpoint(e2ck, open.select("node"), bc, maxRounds = 25 + log2n)
       actions += fbActs
       lab =
         if (sweeps == 0) refreshed
@@ -1358,8 +1341,8 @@ object LinkGraph {
           // LAZY: both inputs are cached (refreshed by its last
           // certificate, the old lab by its own sweep), so the next
           // consumer's recompute is a filter+union over cached blocks
-          checkpointLazyFreshStats(
-            lab.where(col("f") === col("b")).unionByName(refreshed), lazySources)
+          Materialize.lazily(
+            lab.where(col("f") === col("b")).unionByName(refreshed), freshStats = true)
       // every still-open row lives in the refreshed frame (resolved
       // rows have f = b by construction), so the fixpoint's fused
       // open-count IS lab's — the old standalone isEmpty/count reads
@@ -1371,8 +1354,6 @@ object LinkGraph {
     if (bcast)
       LoopWidth.scoped(edges.sparkSession, "spark.sql.adaptive.enabled" -> "false")(sweepLoop())
     else sweepLoop()
-    // every lazy checkpoint the loop consumes has been materialized
-    java.lang.ref.Reference.reachabilityFence(lazySources)
     // strict (the oracled exact operator): an unconverged run must be a
     // loud failure, never silently-wrong scc_ids flowing into rollups.
     // Non-strict (exploratory/huge-corpus callers): degrade instead of
@@ -1412,63 +1393,6 @@ object LinkGraph {
     labeled
       .withColumn("scc_size", count(lit(1)).over(w))
       .orderBy("node")
-  }
-
-  /** Materialize AND reset stats. `localCheckpoint` carries the child
-    * plan's ESTIMATED sizeInBytes into the LogicalRDD leaf; a join loop
-    * whose per-round plan joins the state frame k times then
-    * checkpoints compounds the estimate to ~S^(k^round) — a BigInt
-    * whose bit count grows exponentially with the round number. Past
-    * ~15 rounds the optimizer's stats products are million-bit ToomCook
-    * multiplies and PLANNING, not execution, dominates wall time
-    * (measured: sweep-2 rounds 0.4 → 4 → 17 → 78 s on a 200-edge
-    * graph). Rebuilding from the materialized RDD gives a leaf with the
-    * session-default size estimate — constant across rounds. The
-    * shallow-loop operators (PageRank ≤ 10 rounds, label-prop 3) stay
-    * on plain localCheckpoint: their compounding is thousands of bits,
-    * harmless — this matters once rounds × joins-per-round is deep.
-    */
-  private def checkpointFreshStats(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    // fresh leaf over the checkpointed InternalRows — no Row round-trip
-    // (the r17 `createDataFrame(ck.rdd, schema)` idiom deserialized and
-    // re-encoded every row once per loop round)
-    org.apache.spark.sql.GraftSqlBridge.freshStatsFrame(ck)
-  }
-
-  /** [[checkpointFreshStats]] with a LAZY checkpoint: the caller's very
-    * next action (the fixpoint's 1-row certificate) materializes and
-    * persists the blocks inside ITS job, so a loop round pays ONE
-    * driver roundtrip instead of two. Measured at sf0.1 (round 13):
-    * graph_scc actions 43 → 26, wall 4.7 → 4.5 s — local-mode job
-    * scheduling is cheap, so the win here is within noise; the fused
-    * jobs matter on a real cluster where per-job latency is tens of
-    * ms, and the honest action count is now in the bench payload
-    * either way. Only safe where an action DOES follow immediately —
-    * a lazily checkpointed frame handed to a multi-consumer plan would
-    * re-compute its lineage once per consumer racing to persist it.
-    */
-  private def checkpointLazyFreshStats(
-      df: DataFrame,
-      sources: scala.collection.mutable.Buffer[DataFrame]): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.freshStatsFrame(checkpointLazy(df, sources))
-
-  /** `df.localCheckpoint(eager = false)`, with `df` appended to the
-    * loop's `sources`, which the loop holds until its last action
-    * returns. A lazy checkpoint's first consumers can be CONCURRENT jobs
-    * (below the broadcast ceiling, the broadcast builds of the next
-    * plan); the first to finish truncates the checkpointed lineage, and
-    * with the source frame unreachable its SQL metrics could be
-    * garbage-collected while the other jobs' tasks still reported them
-    * (`Failed to update accumulator` in the driver log, and those
-    * tasks' metrics lost). Holding the source changes no plan, job or
-    * task.
-    */
-  private def checkpointLazy(
-      df: DataFrame,
-      sources: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
-    sources += df
-    df.localCheckpoint(eager = false)
   }
 
   /** One FW-BW relax+jump round as a PLAN transform — also the
@@ -1521,8 +1445,8 @@ object LinkGraph {
       spark: SparkSession,
       sfDir: String): DataFrame = {
     val (edges, nodes) = transitionGraphStored(spark, sfDir)
-    val bb = checkpointFreshStats(backboneOf(edges).select("src", "dst"))
-    val m = checkpointFreshStats(nodes.select(col("node"),
+    val bb = Materialize.freshStats(backboneOf(edges).select("src", "dst"))
+    val m = Materialize.freshStats(nodes.select(col("node"),
       col("node").as("f"), col("node").as("b")))
     sccStep(bb, broadcast)(m)
   }
@@ -1549,7 +1473,6 @@ object LinkGraph {
       e: DataFrame,
       nodes: DataFrame,
       bc: DataFrame => DataFrame,
-      lazySources: scala.collection.mutable.Buffer[DataFrame],
       maxRounds: Int = 25): (DataFrame, Int, Long) = {
     val step = sccStep(e, bc) _
     // convergence certificate: labels are per-element monotone
@@ -1573,9 +1496,9 @@ object LinkGraph {
     }
     var actions = 0
     // LAZY checkpoints: the certificate that follows each is the action
-    // that materializes it — one roundtrip per round, not two
-    var m = checkpointLazyFreshStats(
-      nodes.select(col("node"), col("node").as("f"), col("node").as("b")), lazySources)
+    // that materializes it (see Materialize.lazily)
+    var m = Materialize.lazily(
+      nodes.select(col("node"), col("node").as("f"), col("node").as("b")), freshStats = true)
     // The INITIAL certificate is known analytically — m0 has f = b =
     // node, so (Σf, Σb) = (Σnode, Σnode) — and step preserves the node
     // set, so Σnode read off round 1's certificate equals m0's. The old
@@ -1586,7 +1509,7 @@ object LinkGraph {
     var rounds = 0
     var changed = true
     while (changed && rounds < maxRounds) {
-      m = checkpointLazyFreshStats(step(m), lazySources)
+      m = Materialize.lazily(step(m), freshStats = true)
       val next = certificate(m)
       actions += 1
       val prev = if (rounds == 0) (next._4, next._4) else cert

@@ -184,7 +184,7 @@ object Similarity {
       .select(col("vec_id"),
         explode(bandedBuckets(col("v"), bands, planesPerBand, dim)).as("bucket_key"))
 
-  /** Size-adaptive materialization (see [[Dedup.materializeIfLarge]]): the
+  /** Size-adaptive materialization (see [[Materialize.ifLarge]]): the
     * banded frame feeds both sides of the candidate join, so at scale it is
     * checkpointed to avoid a second full projection pass; below the
     * threshold the checkpoint's job + block-store round-trip costs more
@@ -196,7 +196,7 @@ object Similarity {
       planesPerBand: Int,
       dim: Int,
       corpusRows: Long): DataFrame =
-    Dedup.materializeIfLarge(
+    Materialize.ifLarge(
       c.select(col("vec_id"),
         explode(bandedBuckets(col("v"), bands, planesPerBand, dim)).as("bucket_key")),
       corpusRows)
@@ -1235,7 +1235,7 @@ object Similarity {
     // materialize the assignment when large: three consumers below, and
     // above the threshold re-running the argmax scan costs more than the
     // checkpoint (same policy as the banded dedup paths)
-    val assigned = Dedup.materializeIfLarge(
+    val assigned = Materialize.ifLarge(
       assignToCodebook(c, kmeansCodebook(spark, sfDir, k, iters)),
       IO.parquetRowCount(spark, s"$sfDir/embeddings.parquet"))
     // threshold on the DOUBLE cosine in both engines (the emb_near_dup

@@ -114,12 +114,10 @@ object Tokenize {
     // session's wide-start AQE posture over a Zipf-small frame; the
     // document row count (parquet footer, no job) upper-bounds the vocab
     LoopWidth.pinned(spark,
-      IO.parquetRowCount(spark, s"$sfDir/documents.parquet")) {
-    // LAZY checkpoint (the r20 loop fusion): each round's pairCounts
-    // collect is the single consumer before the cache fills and the job
-    // that materializes the vocab — one driver roundtrip per round
-    var vocab = weightedSymbolVocab(spark, sfDir)
-      .localCheckpoint(eager = false)
+      IO.parquetRowCount(spark, s"$sfDir/documents.parquet")) { Materialize.loop {
+    // LAZY checkpoint (see Materialize.lazily): each round's pairCounts
+    // collect is the single consumer before the cache fills
+    var vocab = Materialize.lazily(weightedSymbolVocab(spark, sfDir), freshStats = false)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var round = 0
     var exhausted = false
@@ -132,8 +130,8 @@ object Tokenize {
       else {
         val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((round + 1, l, r, l + r, c))
-        vocab = vocab.select(col("wcnt"), fuseFold(col("syms"), l, r).as("syms"))
-          .localCheckpoint(eager = false)
+        vocab = Materialize.lazily(
+          vocab.select(col("wcnt"), fuseFold(col("syms"), l, r).as("syms")), freshStats = false)
         round += 1
       }
     }
@@ -141,7 +139,7 @@ object Tokenize {
     merges.result()
       .toDF("rank", "lhs", "rhs", "merged", "cnt")
       .orderBy("rank")
-  }
+  }}
 
   /** Greedy non-overlapping left-to-right fusion of (l, r) over a symbol
     * array: fold the array, replacing a trailing `l` with `l+r` when `r`
@@ -221,12 +219,10 @@ object Tokenize {
     // same width pinning as the sequential trainer: vocab-bounded rounds
     // must not schedule at the session's wide-start width
     LoopWidth.pinned(spark,
-      IO.parquetRowCount(spark, s"$sfDir/documents.parquet")) {
-    // LAZY checkpoint (the r20 loop fusion): each round's pairCounts
-    // collect is the single consumer before the cache fills and the job
-    // that materializes the vocab — one driver roundtrip per round
-    var vocab = weightedSymbolVocab(spark, sfDir)
-      .localCheckpoint(eager = false)
+      IO.parquetRowCount(spark, s"$sfDir/documents.parquet")) { Materialize.loop {
+    // LAZY checkpoint (see Materialize.lazily): each round's pairCounts
+    // collect is the single consumer before the cache fills
+    var vocab = Materialize.lazily(weightedSymbolVocab(spark, sfDir), freshStats = false)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var done = 0
     var rounds = 0
@@ -286,8 +282,8 @@ object Tokenize {
           val fusedAll = batch.foldLeft(col("syms")) {
             case (acc, (l, r, _)) => fuseFold(acc, l, r)
           }
-          vocab = vocab.select(col("wcnt"), fusedAll.as("syms"))
-            .localCheckpoint(eager = false)
+          vocab = Materialize.lazily(
+            vocab.select(col("wcnt"), fusedAll.as("syms")), freshStats = false)
         }
       }
     }
@@ -295,7 +291,7 @@ object Tokenize {
     (merges.result()
       .toDF("rank", "lhs", "rhs", "merged", "cnt")
       .orderBy("rank"), rounds)
-  }
+  }}
 
   /** Apply a trained merge table to text: segment each document's words
     * into the tokenizer's subword units and report the resulting token

@@ -7,7 +7,9 @@ import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 
-import graft.operators.LinkGraph
+import org.apache.spark.sql.functions.{broadcast, col}
+
+import graft.operators.{LinkGraph, Materialize}
 
 /** A lazily checkpointed loop frame can be materialized by CONCURRENT
   * jobs (the broadcast builds of the next round); the first to finish
@@ -62,5 +64,58 @@ class LazyCheckpointSpec extends SparkTestBase {
       LinkGraph.sccOver(edges, nodes).collect()
     }
     assert(lost == 0, s"$lost task metric updates reached a collected accumulator")
+  }
+
+  test("Materialize.lazily holds a frame that two concurrent broadcast builds read") {
+    val lost = lostAccumulatorUpdates {
+      Materialize.loop {
+        val ck = Materialize.lazily(
+          spark.range(0, 4000, 1, 8).select(col("id").as("k"), (col("id") % 7).as("v")),
+          freshStats = false)
+        spark.range(0, 4000, 1, 8).toDF("k")
+          .join(broadcast(ck), "k")
+          .join(broadcast(ck.select(col("k"), col("v").as("w"))), "k")
+          .collect()
+      }
+    }
+    assert(lost == 0, s"$lost task metric updates reached a collected accumulator")
+  }
+
+  test("Materialize.lazily outside a loop throws") {
+    val e = intercept[IllegalArgumentException] {
+      Materialize.lazily(spark.range(3).toDF(), freshStats = false)
+    }
+    assert(e.getMessage.contains("outside Materialize.loop"))
+  }
+
+  test("a nested Materialize.loop releases only its own holds") {
+    assert(Materialize.held == Nil)
+    Materialize.loop {
+      Materialize.lazily(spark.range(3).toDF(), freshStats = false)
+      assert(Materialize.held == List(1))
+      Materialize.loop {
+        Materialize.lazily(spark.range(4).toDF(), freshStats = true)
+        Materialize.lazily(spark.range(5).toDF(), freshStats = false)
+        assert(Materialize.held == List(2, 1))
+      }
+      assert(Materialize.held == List(1))
+      intercept[IllegalStateException] {
+        Materialize.loop {
+          Materialize.lazily(spark.range(6).toDF(), freshStats = false)
+          throw new IllegalStateException("loop body failed")
+        }
+      }
+      assert(Materialize.held == List(1))
+    }
+    assert(Materialize.held == Nil)
+  }
+
+  test("a stored lazy checkpoint's hold is released at the next Materialize.lazily") {
+    Materialize.loop {
+      Materialize.lazily(spark.range(3).toDF(), freshStats = false).count()
+      assert(Materialize.held == List(1))
+      Materialize.lazily(spark.range(4).toDF(), freshStats = false)
+      assert(Materialize.held == List(1))
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFamily, TextAnalysis}
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Materialize, Multimodal, Similarity}
 
 /** Behavior specs for the LLM-pipeline operators over the sf0.001 testdata. */
 class LlmOpsSpec extends SparkTestBase {
@@ -446,7 +446,7 @@ class LlmOpsSpec extends SparkTestBase {
 
   test("substring-dedup window estimate derives from text VOLUME, not row count") {
     import spark.implicits._
-    val threshold = Dedup.MaterializeThresholdRows
+    val threshold = Materialize.LargeRows
     // two fixtures, SAME row count, 1000 docs each: short docs (~10
     // tokens) vs long docs (~2400 tokens). The old rows×64 heuristic
     // reads both as 64k (< the 200k materialization threshold) and
@@ -475,6 +475,27 @@ class LlmOpsSpec extends SparkTestBase {
       s"long estimate off calibration: $estLong vs ~2.4M")
     assert(estShort >= 10L * 1000 / 3 && estShort <= 10L * 1000 * 3 * 2,
       s"short estimate off calibration: $estShort vs ~10k")
+  }
+
+  test("span-pair size gate: both sides give the same pairs, only the large side checkpoints") {
+    val windows = TextAnalysis
+      .winnowFingerprintFrame(spark.read.parquet(s"$Sf/documents.parquet"), 3, 4)
+      .withColumnRenamed("fp", "wh")
+    def run(rows: Long) = {
+      val df = Dedup.spanPairsFromWindows(windows, 50, rows, sorted = true)
+      // the windows frame is read four times (df-cap, join-back, both
+      // self-join sides): count distinct checkpointed RDDs, not leaves
+      val checkpointed = df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed => r.rdd.id
+      }
+      (df.collect().toSeq, checkpointed.distinct.size)
+    }
+    val (small, smallLeaves) = run(0L)
+    val (large, largeLeaves) = run(Materialize.LargeRows)
+    assert(small.nonEmpty, "testdata plants shared winnow windows")
+    assert(small == large)
+    assert(smallLeaves == 0, "below the gate the lineage stays live")
+    assert(largeLeaves == 1, "at the gate the windows are checkpointed once")
   }
 
   test("multimodal: header parser round-trips real PNG/JPEG/WAV/MP4 encodings") {

@@ -18,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Registered queries are listed only by their specs under `registry/`,
   * so no hand-kept row list can drift from the registry. Loop telemetry
   * and degraded paths are notes in `obs.RunRecord`, never driver globals
-  * or console lines, so every caller reads them per run.
+  * or console lines, so every caller reads them per run. Lazy, fresh-stats
+  * and size-gated checkpoints are spelled only in `Materialize`, so every
+  * lazy checkpoint is held by its loop and the size gate has one threshold.
   */
 class OperatorConfGuardSpec extends AnyFunSuite {
 
@@ -77,6 +79,12 @@ class OperatorConfGuardSpec extends AnyFunSuite {
     val bad = offenders("""@volatile|System\.(err|out)|(?<![.\w])println\(""", Set.empty,
       Seq("operators", "functions", "sources"))
     assert(bad.isEmpty, bad.mkString("globals or console output outside RunRecord:\n", "\n", ""))
+  }
+
+  test("non-plain checkpoint forms go through Materialize") {
+    val bad = offenders("""eager\s*=\s*false|freshStatsFrame|reachabilityFence|200000L""",
+      Set("Materialize.scala"), Seq("operators", "functions", "plans", "sources"))
+    assert(bad.isEmpty, bad.mkString("checkpoint forms outside Materialize:\n", "\n", ""))
   }
 
   test("no hand-kept query-name lists in Bench or SparkEntry") {
